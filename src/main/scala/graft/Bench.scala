@@ -163,15 +163,15 @@ object Bench {
     }
 
     // Distributed-regime AP row (round-7 VERDICT #1): the ONE headline
-    // row that routes through runLoop's two-exchange checkpointed
-    // dataflow — full converged loop on the 200-vec prefix (46 iters at
-    // λ=0.5 under the EXACT per-iteration convergence counter; the
-    // round-9 "37 iters" was the aliasing cadence-sampled counter
-    // firing 9 iterations early — BENCH_NOTES §16. Per-iteration cost
-    // is scheduling-dominated at 40 k message rows, which is exactly
-    // the signal: the loop's fixed overhead). Measured OUTSIDE the
-    // round-robin — at ~6 s/run it would starve every other query's
-    // window sampling if cycled. Three reps per pass (min-of-6 across
+    // row that routes through runLoop's checkpointed block-kernel loop
+    // — full converged loop on the 200-vec prefix (46 iters at λ=0.5
+    // under the EXACT per-iteration convergence counter; the round-9
+    // "37 iters" was the aliasing cadence-sampled counter firing 9
+    // iterations early — BENCH_NOTES §16. At 40 k message rows the cost
+    // is the loop's fixed overhead — init plan, chunk job dispatch —
+    // which is exactly the signal). Measured OUTSIDE the round-robin,
+    // where multi-second reps would starve every other query's window
+    // sampling. Three reps per pass (min-of-6 across
     // the two widths — round-10 VERDICT #8's min-of-N discipline for
     // the one row the round-robin never samples).
     val emb200 = Tables.embeddings(spark, sfDir).orderBy("vec_id").limit(200)
@@ -313,7 +313,7 @@ object Bench {
   }
 
   /** Distributed-AP regime record (round-6 VERDICT #5): the flagship
-    * 100 TB path — AffinityPropagation's two-exchange damped loop —
+    * 100 TB path — AffinityPropagation's distributed damped loop —
     * never appears in the default bench because every driver-visible
     * input (N ≤ 2000 at sf0.1) dispatches to the local dense kernel.
     * SPARK_GRAFT_AP_DIST=1 measures the distributed loop itself at
@@ -351,8 +351,9 @@ object Bench {
       .getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = SparkSession.builder()
       .master(s"local[$threads]")
-      // Data-sized, not fixture-sized: the dense shape shuffles 16M
-      // message rows per exchange (~0.7 GB) — 32-way is ~20 MB/task.
+      // Data-sized, not fixture-sized: the dense shape's similarity
+      // build and preference shuffle 16M rows (~0.7 GB) — 32-way is
+      // ~20 MB/task. The AP loop sizes its own partitions.
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -382,7 +383,7 @@ object Bench {
         maxIter = iters, convergenceIter = iters + 2, neighbors = m)
       require(r.iterations == iters, s"expected $iters iterations, got ${r.iterations}")
     }
-    // Warm the DISTRIBUTED path itself (similarity build + two-exchange
+    // Warm the DISTRIBUTED path itself (similarity build + block-kernel
     // loop): warming only the local kernel leaves all JIT/codegen cost
     // inside the first measured run — measured round 7: the 1-iter run
     // came out SLOWER than the 4-iter run and the delta went negative.
@@ -443,7 +444,7 @@ object Bench {
     // One CONVERGED run at the validation scale (round-9 VERDICT #2:
     // N ≥ 20 k) — N=20000, m=50, default λ/stopping. The dense shape
     // stays a per-iteration sample BY BUDGET: the loop is
-    // iteration-homogeneous (identical two-exchange plan every pass),
+    // iteration-homogeneous (identical kernel iteration every pass),
     // so unit cost × iteration count IS the converged cost; rationale
     // recorded in the JSON per the round-7 ask. Non-convergence walks
     // [FD07]'s documented remedy ladder and the record says which rung
@@ -487,7 +488,7 @@ object Bench {
     // converged loop at the recorded per-iter cost once the remedy
     // ladder reaches the rung this geometry needs.
     val (conv50, conv50Sec, conv50RunSec, conv50Jitter, conv50Lam) = convergedRun(emb(25), "N=50000")
-    val json = f"""{"metric":"ap_dist","unit":"sec","sf":"$sfDir","threads":$threads,"dense_n":$denseN,"dense_iters":4,"dense_sec":$d4%.3f,"dense_sec_per_iter":$dPer%.3f,"dense_delta_ok":${dPer > 0},"dense_budget_iters_rationale":"iteration-homogeneous loop (identical two-exchange plan every pass): unit cost x iteration count = converged cost; a converged dense N=4000 run (~50 iters at the recorded per-iter cost) adds minutes of box time for no new signal","sparse_m":50,"sparse":$sparseJson,"sparse_rows_ratio_50k_over_6k":$rowsRatio%.2f,"sparse_per_iter_ratio_50k_over_6k":$perRatio%.2f,"sparse_converged_n":20000,"sparse_converged_ladder_sec":$convSec%.3f,"sparse_converged_run_sec":$convRunSec%.3f,"sparse_converged_iters":${conv.iterations},"sparse_converged_exemplars":${conv.exemplars.size},"sparse_converged_jitter":$convJitter%.1e,"sparse_converged_damping":$convLam%.1f,"sparse_converged_50k_ladder_sec":$conv50Sec%.3f,"sparse_converged_50k_run_sec":$conv50RunSec%.3f,"sparse_converged_50k_iters":${conv50.iterations},"sparse_converged_50k_exemplars":${conv50.exemplars.size},"sparse_converged_50k_jitter":$conv50Jitter%.1e,"sparse_converged_50k_damping":$conv50Lam%.1f,"sparse_exemplar_rate_note":"the replica geometry makes the 2000 base points (N/R at R replicas) the correct count: each fixture point appears as a perturbed replica micro-cluster (1e-3 shifts, intra-replica similarity ~-1e-6 vs inter-point ~-10s), so one exemplar per replica group is the right clustering; on the SAME unreplicated N=2000 input sparse m=50 and dense agree within 2 pct (ApSpec same-input test: dense 206, exact-m50 207, bucketed 210)"}"""
+    val json = f"""{"metric":"ap_dist","unit":"sec","sf":"$sfDir","threads":$threads,"dense_n":$denseN,"dense_iters":4,"dense_sec":$d4%.3f,"dense_sec_per_iter":$dPer%.3f,"dense_delta_ok":${dPer > 0},"dense_budget_iters_rationale":"iteration-homogeneous loop (identical kernel iteration every pass): unit cost x iteration count = converged cost; a converged dense N=4000 run (~50 iters at the recorded per-iter cost) adds minutes of box time for no new signal","sparse_m":50,"sparse":$sparseJson,"sparse_rows_ratio_50k_over_6k":$rowsRatio%.2f,"sparse_per_iter_ratio_50k_over_6k":$perRatio%.2f,"sparse_converged_n":20000,"sparse_converged_ladder_sec":$convSec%.3f,"sparse_converged_run_sec":$convRunSec%.3f,"sparse_converged_iters":${conv.iterations},"sparse_converged_exemplars":${conv.exemplars.size},"sparse_converged_jitter":$convJitter%.1e,"sparse_converged_damping":$convLam%.1f,"sparse_converged_50k_ladder_sec":$conv50Sec%.3f,"sparse_converged_50k_run_sec":$conv50RunSec%.3f,"sparse_converged_50k_iters":${conv50.iterations},"sparse_converged_50k_exemplars":${conv50.exemplars.size},"sparse_converged_50k_jitter":$conv50Jitter%.1e,"sparse_converged_50k_damping":$conv50Lam%.1f,"sparse_exemplar_rate_note":"the replica geometry makes the 2000 base points (N/R at R replicas) the correct count: each fixture point appears as a perturbed replica micro-cluster (1e-3 shifts, intra-replica similarity ~-1e-6 vs inter-point ~-10s), so one exemplar per replica group is the right clustering; on the SAME unreplicated N=2000 input sparse m=50 and dense agree within 2 pct (ApSpec same-input test: dense 206, exact-m50 207, bucketed 210)"}"""
     println(json)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("ap_dist.json"), json + "\n")

@@ -41,8 +41,8 @@ private[graft] object Checkpoints {
     * sinks in round 22; measured there: 3 jobs/iter → 1). NOT for
     * corpus-sized plans (store scans, pair kernels, generation writes),
     * where adaptive coalescing and skew handling are load-bearing.
-    * Restores the previous setting in finally; like the AP loop, the
-    * flip is session-visible for the action's duration. */
+    * Restores the previous setting in finally; the flip is
+    * session-visible for the action's duration. */
   def withAqeOff[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"
     val before = spark.conf.get(key, "true")

@@ -29,7 +29,7 @@ object Graft {
   /** Full damped AP to convergence; returns (id, exemplar) — every point
     * labeled with its cluster's exemplar id, exemplars self-assigned.
     * Dispatches to the dense in-memory kernel below N=4000 and the
-    * distributed two-exchange dataflow above it.
+    * distributed block-kernel loop above it.
     *
     * `jitter` (opt-in, e.g. 1e-6) adds a deterministic hash-seeded
     * offset of that fraction of the similarity range to each pair —

@@ -1,27 +1,30 @@
 package graft.ap
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Affinity Propagation (Frey & Dueck, Science 315:972–976, 2007) as
-  * native Spark DataFrame dataflow — the Spark re-expression of the
-  * reference's MapReduce formulation (SURVEY §2.J / §3.3).
+/** Affinity Propagation (Frey & Dueck, Science 315:972–976, 2007) on
+  * Spark — the Spark re-expression of the reference's MapReduce
+  * formulation (SURVEY §2.J / §3.3).
   *
-  * The message matrices live as one Dataset of (i, k, s, r, a) rows —
-  * the Spark analog of the MapReduce (i, k, value) triples. Each
-  * iteration is exactly two exchanges, the provable minimum the
-  * MapReduce formulation also pays:
-  *   - responsibility (eq. 1) is row-local  → Window.partitionBy("i")
-  *   - availability  (eq. 2–3) is col-local → Window.partitionBy("k")
-  * Nothing is ever collected to the driver except the N-row diagonal
-  * (for convergence tracking), so the dataflow scales with cluster
+  * The message matrices are (i, k, s, r, a) rows — the Spark analog of
+  * the MapReduce (i, k, value) triples. Responsibility (eq. 1) is
+  * row-local, availability (eq. 2–3) column-local:
+  *   - as single passes they are the DataFrame window algebra
+  *     [[responsibilityPass]] / [[availabilityPass]], the operators the
+  *     `ap_responsibility` / `ap_availability` oracle keys check;
+  *   - the distributed loop ([[runLoop]]) plans ONE Catalyst layout per
+  *     solve and then iterates [[MessageBlocks]]' kernel over
+  *     partition-resident primitive blocks — an in-task permutation
+  *     between the passes on one partition, two block shuffles per
+  *     iteration on more, the minimum the MapReduce formulation pays.
+  * Nothing is ever collected to the driver except the exemplar
+  * diagonal (for convergence tracking), so the loop scales with cluster
   * parallelism; the dense N² pair set itself is AP's intrinsic cost.
-  * `localCheckpoint` truncates the growing window-plan lineage every
-  * iteration (the classic iterative-Spark failure mode, SURVEY §4.3),
-  * with the convergence-probe cadence batched adaptively (see
-  * runLoop's `checkEvery`; a dead `checkpointEvery` knob that no
-  * longer controlled anything was removed in round 12).
+  * Each generation is a `localCheckpoint`ed RDD, so lineage never grows
+  * past one convergence-check chunk (see runLoop's `checkEvery`).
   *
   * Defaults follow the public Frey–Dueck/scikit-learn convention:
   * damping 0.5, maxIter 200, convergenceIter 15, preference = median of
@@ -209,32 +212,15 @@ object AffinityPropagation {
     * the max — two partition-local window passes, one exchange. With
     * damping λ: r ← λ·r_old + (1−λ)·r_new. */
   def responsibilityPass(msgs: DataFrame, damping: Double): DataFrame = {
-    // ONE WindowExec for all three per-group values (round 22): rn, m1
-    // and m2 share the (i, a+s DESC, k) spec, differing only in frame,
-    // so a single select computes them in one buffered pass — the
-    // round-21 withColumn chain planned THREE WindowExecs (rn / m1 / m2,
-    // split by the interleaved projections), i.e. three full
-    // buffer-the-partition passes per iteration of the loop's dominant
-    // per-task cost, plus two extra analyzed intermediates per call
-    // (the loop constructs this plan every iteration — driver-side
-    // planning is a measured co-dominant cost of the n200 bench row).
-    // asum = a+s is inlined into the spec instead of projected first
-    // (same double, same comparisons). Values are bit-identical:
-    //   m1 = max(asum) over the whole group — the same aggregate, now on
-    //        the ordered spec with an explicit unbounded frame;
-    //   m2 = nth_value(asum, 2) over (asum DESC, k ASC) ≡ the old
-    //        max(asum WHERE rn > 1): rows 2..n sorted descending have
-    //        their max at row 2, and both are NULL on single-row groups.
+    // ONE WindowExec for all three per-group values: rn, m1 and m2
+    // share the (i, a+s DESC, k) spec, differing only in frame, so one
+    // select computes them in one buffered pass:
+    //   m1 = max(asum) over the whole group;
+    //   m2 = nth_value(asum, 2) over (asum DESC, k ASC) — the runner-up,
+    //        NULL on single-row groups.
     val asum = col("a") + col("s")
     val ord = Window.partitionBy("i").orderBy(asum.desc, col("k"))
     val full = ord.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    // ONE select (round 22, session 3): the window functions sit inline
-    // in the damping arithmetic — the analyzer's window extraction
-    // plans the IDENTICAL Project(Window(...)) the previous two-select
-    // form did (same spec, same frames, one WindowExec), but the loop
-    // constructs/analyzes HALF the Datasets per iteration, a measured
-    // co-dominant cost of the n200 bench row.
-    //
     // m2 = NULL on a SINGLE-ROW group (an isolated node whose only
     // supplied row is its diagonal preference): under the documented
     // sparse semantics every absent pair is s = −∞, so the subtracted
@@ -259,22 +245,10 @@ object AffinityPropagation {
     * contribution — one exchange. */
   def availabilityPass(msgs: DataFrame, damping: Double): DataFrame = {
     val wK = Window.partitionBy("k")
-    // Both column sums in ONE WindowExec (round 22): they share the
-    // bare partitionBy(k) spec and the whole-partition frame — the
-    // round-21 withColumn chain interleaved a projection between them,
-    // which planned TWO WindowExecs and buffered every k-group twice.
-    // Each sum accumulates over the identical sorted-by-k row order the
-    // two separate execs saw, so the values are bit-identical. rp is
-    // inlined (the same CASE expression in the sum and in the per-row
-    // subtraction — identical inputs, identical double). ONE select
-    // (round 22, session 3): the window sums sit inline in the damping
-    // arithmetic — same single WindowExec and one buffered pass, half
-    // the per-iteration Dataset analyses. The srp sum appears in both
-    // CASE branches and the extraction does NOT collapse the duplicate
-    // (plans/r22/ap_loop_iteration_s3.txt shows sum(_w1) twice in the
-    // one Window) — one redundant running-sum add per row, a
-    // deterministic copy of the same double, traded for a whole
-    // analysis pass per iteration.
+    // Both column sums share the bare partitionBy(k) spec and the
+    // whole-partition frame: one WindowExec, one buffered pass. The sum
+    // order within a k-group is the shuffle's fetch order, so a can
+    // differ from the loop kernel's ascending-i sum in the last ulps.
     val rp = when(col("i") === col("k"), lit(0.0)).otherwise(greatest(col("r"), lit(0.0)))
     val srp = sum(rp).over(wK)
     val rkk = sum(when(col("i") === col("k"), col("r"))).over(wK)
@@ -283,59 +257,6 @@ object AffinityPropagation {
         (lit(damping) * col("a") + lit(1.0 - damping) *
           when(col("i") === col("k"), srp)
             .otherwise(least(lit(0.0), rkk + srp - rp))).as("a"))
-  }
-
-  /** [[responsibilityPass]] re-expressed as a HASH aggregate + hash join
-    * — the loop kernel (SURVEY §4.4(a), round-8 VERDICT #1). The window
-    * form sorts the full message relation by (i, asum DESC, k) per
-    * iteration just to read off each group's max/second-max; the fused
-    * form computes exactly those three values per group with the ap_top2
-    * TypedImperativeAggregate (constant 36-byte state, partial map-side
-    * combine → the big relation crosses the wire ONCE, for the join) and
-    * joins them back SHUFFLE_HASH (the hint matters: with AQE off the
-    * planner would pick sort-merge and re-buy the sort this pass exists
-    * to remove). Values are bit-identical to the window form: the top-2
-    * order (asum DESC, k ASC) is the window's sort order, max/second-max
-    * are order-insensitive, and the damping arithmetic is the same
-    * expression tree. m2 = NULL on single-row groups, like the window's
-    * empty frame. Kept separate from [[responsibilityPass]]: the window
-    * algebra is the oracle-matched public single-pass operator; this is
-    * the loop's throughput kernel. */
-  def responsibilityPassFused(msgs: DataFrame, damping: Double): DataFrame = {
-    graft.functions.ApAggs.register(msgs.sparkSession)
-    val withAsum = msgs.withColumn("asum", col("a") + col("s"))
-    val top2 = withAsum.groupBy("i").agg(expr("ap_top2(asum, k)").as("t2"))
-    withAsum.join(top2.hint("shuffle_hash"), "i")
-      // coalesce(m2, −∞): same isolated-node fix as the window form —
-      // the two passes must stay bit-identical, including on
-      // single-row groups (round-12 review)
-      .withColumn("r",
-        lit(damping) * col("r") + lit(1.0 - damping) *
-          (col("s") - when(col("k") === col("t2.k1"),
-              coalesce(col("t2.m2"), lit(Double.NegativeInfinity)))
-            .otherwise(col("t2.m1"))))
-      .select("i", "k", "s", "r", "a")
-  }
-
-  /** [[availabilityPass]] as a hash aggregate + SHUFFLE_HASH join — the
-    * column sums are plain aggregates, so the window form's sort by k was
-    * pure overhead (WindowExec requires a sort even with no ORDER BY).
-    * Sum order differs from the sorted window (floating-point ulp-level),
-    * the same nondeterminism the window form already had across
-    * shuffle-fetch orders; the suite bounds the divergence. */
-  def availabilityPassFused(msgs: DataFrame, damping: Double): DataFrame = {
-    val withRp = msgs
-      .withColumn("rp",
-        when(col("i") === col("k"), lit(0.0)).otherwise(greatest(col("r"), lit(0.0))))
-    val sums = withRp.groupBy("k").agg(
-      sum(col("rp")).as("srp"),
-      sum(when(col("i") === col("k"), col("r"))).as("rkk"))
-    withRp.join(sums.hint("shuffle_hash"), "k")
-      .withColumn("a",
-        lit(damping) * col("a") + lit(1.0 - damping) *
-          when(col("i") === col("k"), col("srp"))
-            .otherwise(least(lit(0.0), col("rkk") + col("srp") - col("rp"))))
-      .select("i", "k", "s", "r", "a")
   }
 
   final case class Result(
@@ -366,10 +287,9 @@ object AffinityPropagation {
     lastRunCheckpoint.synchronized { Option(lastRunCheckpoint.remove(spark)) }
       .foreach(graft.Checkpoints.releaseRdds)
 
-  private def recordRunCheckpoint(spark: SparkSession, df: DataFrame): Unit = {
-    val rdds = graft.Checkpoints.checkpointRdds(df)
-    lastRunCheckpoint.synchronized { lastRunCheckpoint.put(spark, rdds); () }
-  }
+  private def recordRunCheckpoint(
+      spark: SparkSession, rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    lastRunCheckpoint.synchronized { lastRunCheckpoint.put(spark, Seq(rdd)); () }
 
   /** Test hook: is a final-generation checkpoint recorded for `spark`? */
   private[graft] def hasRunCheckpoint(spark: SparkSession): Boolean =
@@ -386,27 +306,16 @@ object AffinityPropagation {
     * one task (N=4000 → 3×16M doubles ≈ 384 MB) and the per-iteration
     * scheduling cost of the distributed loop dwarfs the arithmetic —
     * solve locally, matching single-node reference throughput. Above it,
-    * use the distributed two-exchange dataflow. */
+    * use the distributed loop. */
   val localThreshold = 4000
 
   /** Message-row ceiling for the batched convergence-check cadence
-    * (checkEvery auto mode): ≤ 4 M rows is ≤ ~200 MB per generation, so
-    * holding 6 generations during a chunk job is cheap and the saved job
-    * dispatch dominates; above it the extra live generations spill and
-    * cost more than the dispatch they save (measured, ApAbBench: dense
-    * 16 M-row generations ran ~2× SLOWER at cadence 5 than 1). */
+    * (checkEvery auto mode): below it, holding 6 generations during a
+    * chunk job is cheap and the saved job dispatch dominates; above it
+    * the extra live generations spill and cost more than the dispatch
+    * they save (measured on the Dataset-form loop: dense 16 M-row
+    * generations ran ~2× SLOWER at cadence 5 than 1). */
   val CadenceRowCap: Long = 4L << 20
-
-  /** Message-row floor for the FUSED (hash-aggregate) passes: the fused
-    * form removes the window sorts but pays 4 shuffle stages per
-    * iteration where the window form pays 2, and below ~256 k rows the
-    * per-stage scheduling (~25-50 ms on this box) outweighs a sort of
-    * that size — measured on the 40 k-row bench loop: fused+cadence ran
-    * 9.9 s where window+per-iteration ran 5.5 s. Above the floor the
-    * sort is the cost and fused wins (3.2× on the dense 16 M-row shape).
-    * Both forms compute identical responsibilities (bit-exact) and
-    * sum-order-equivalent availabilities (suite-bounded 1e-9). */
-  val FusedPassRowFloor: Long = 1L << 18
 
   /** Dispatch: local dense kernel for small N, distributed dataflow
     * beyond [[localThreshold]]. Same math and conventions either way
@@ -559,7 +468,7 @@ object AffinityPropagation {
     * distinct ids the triples are collected into the dense kernel
     * (absent pairs = −∞, the sparse-AP convention — a bounded n²
     * collect, so the default threshold is lower than the embedding
-    * path's); beyond it the distributed two-exchange loop runs directly
+    * path's); beyond it the distributed loop runs directly
     * on the triples — nothing N-sized ever reaches the driver. */
   def solveFromSimilarities(
       spark: SparkSession,
@@ -663,62 +572,46 @@ object AffinityPropagation {
     } finally all.unpersist(false)
   }
 
-  /** Per-session monitor serializing [[runLoop]]'s session-conf
-    * save/restore: two concurrent loops on one session would otherwise
-    * read each other's temporary values as "before" and leave the
-    * session with AQE off after both finish. Residual (documented):
-    * UNRELATED queries issued on the same session during a loop plan
-    * under the loop's conf — inherent to session-conf scoping; run
-    * solvers on their own session (`spark.newSession()`) to isolate. */
-  private val loopMonitors = new java.util.WeakHashMap[SparkSession, Object]()
-
-  private def loopMonitor(spark: SparkSession): Object =
-    loopMonitors.synchronized {
-      var m = loopMonitors.get(spark)
-      if (m == null) { m = new Object; loopMonitors.put(spark, m) }
-      m
-    }
-
-  /** The damped two-exchange iteration shared by [[run]] and
-    * [[solveFromSimilarities]]'s distributed regime, built from the FUSED
-    * hash-aggregate passes (no window sorts). Stops by the CLASSIC
-    * per-iteration rule at every cadence: converged when the exemplar
-    * indicator set is non-empty and unchanged across `convergenceIter`
-    * consecutive ITERATIONS (≥ convergenceIter−1 equal-to-previous
-    * increments), or at `maxIter`. The chunk's one materializing job
-    * collects the indicator diagonal of EVERY generation in the chain
-    * (not just the last), so the counter sees each iteration — a
-    * cadence-SAMPLED counter (the round-9 form) aliased: a set
-    * oscillating with period dividing the cadence looked constant at
-    * the sample points and was falsely declared converged (round-9
-    * ADVICE, medium), and its verified plateau spanned fewer than
-    * convergenceIter iterations. When the rule fires mid-chunk the loop
-    * rolls back to the firing generation — the returned state and
-    * iteration count are the ones the per-iteration loop would produce.
+  /** The damped iteration shared by [[run]] and [[solveFromSimilarities]]'s
+    * distributed regime. The one Catalyst plan per solve is the init:
+    * the (i, k, s) relation is checkpointed, counted, and laid out by
+    * [[MessageBlocks.layout]] into per-partition primitive blocks; every
+    * iteration after it is [[MessageBlocks.iterate]] over the previous
+    * generation's `RDD[MsgBlock]` — no Dataset is built, analyzed or
+    * planned inside the loop, and the caller's session conf is never
+    * touched. Stops by the CLASSIC per-iteration rule at every cadence:
+    * converged when the exemplar indicator set is non-empty and
+    * unchanged across `convergenceIter` consecutive ITERATIONS
+    * (≥ convergenceIter−1 equal-to-previous increments), or at
+    * `maxIter`. The chunk's one materializing job collects the indicator
+    * diagonal of EVERY generation in the chain (not just the last), so
+    * the counter sees each iteration — a cadence-SAMPLED counter aliased
+    * on sets oscillating with a period dividing the cadence (round-9
+    * ADVICE). When the rule fires mid-chunk the loop rolls back to the
+    * firing generation — the returned state and iteration count are the
+    * ones the per-iteration loop would produce.
     *
     * `checkEvery` exists because the convergence check is the loop's
     * MATERIALIZING action: one check per iteration forces one job per
-    * iteration, and at small N the job dispatch dominates the arithmetic
-    * (round-8 VERDICT #2: 37 jobs for the 37-iteration bench row). With
-    * cadence c, c lazily-checkpointed iterations chain into ONE job —
-    * same exchange count (the per-iteration shuffles still happen,
-    * inside the one job), 1/c of the dispatch overhead — at the price of
+    * iteration, and at small N the job dispatch dominates the
+    * arithmetic. With cadence c, c lazily-checkpointed generations chain
+    * into ONE job — 1/c of the dispatch overhead — at the price of
     * holding c+1 generations of checkpoint storage live during the
-    * chunk. That trade INVERTS with generation size, measured this
-    * round on the same session back-to-back (ApAbBench): the dense
-    * N=4000 shape (16 M rows, ~640 MB/generation) ran 3.2 s/iter at
-    * c=1 but 6.0+ s/iter at c=5 (six live generations spill), while the
-    * sparse O(N·m) shape (0.6 M rows) and the 40 k-row bench loop —
-    * where dispatch IS the cost — ran ~1.5-4× faster with c=5. So
-    * checkEvery = 0 (the default) picks the cadence from the one row
+    * chunk. checkEvery = 0 (the default) picks the cadence from the row
     * count the loop already takes: ≤ [[CadenceRowCap]] rows → 5, else 1.
+    *
+    * Loop width: one partition while the relation is under one task's
+    * worth of data (~16 MB at 48 B/row), else data-sized — floored at
+    * min(8, cluster width), capped at the width. The setting
+    * `spark.graft.ap.loopPartitions` overrides it (read, never written);
+    * the messages are bit-identical at any width.
     *
     * `autoRelease = false` keeps the final-generation checkpoint OUT of
     * the next-run release registry — for callers that CACHE the Result
     * across subsequent runs in the same session (ApQueries.fullRun):
     * the checkpoint then stays pinned for the session's life, bounded
     * and caller-owned, instead of being unpersisted out from under the
-    * cached, unrecomputable messages plan. */
+    * cached, unrecomputable messages. */
   private def runLoop(
       msgs0: DataFrame,
       damping: Double,
@@ -726,147 +619,72 @@ object AffinityPropagation {
       convergenceIter: Int,
       autoRelease: Boolean = true,
       checkEvery: Int = 0,
-      onInitMaterialized: () => Unit = () => ()): Result =
-    loopMonitor(msgs0.sparkSession).synchronized {
+      onInitMaterialized: () => Unit = () => ()): Result = {
     // a zero-iteration loop has no exemplar state to report — fail with
     // the contract instead of an NPE at Result construction
     // (round-12 review)
     require(maxIter >= 1, s"AffinityPropagation: maxIter must be >= 1, got $maxIter")
     val spark = msgs0.sparkSession
+    val sc = spark.sparkContext
     // Deterministically free the PREVIOUS run's final-generation
     // checkpoint (contract: consume an auto-released Result before the
     // next run in the same session — the contract Dedup's components
     // carry; cached Results opt out via autoRelease = false).
     releasePrevRun(spark)
 
-    // AQE OFF for the duration of the loop: the iteration plan is STATIC
-    // (two window exchanges over a fixed-partitioning relation — no
-    // joins to re-order, no skew to re-split), so adaptive execution
-    // only adds per-iteration stage-materialization jobs and re-planning
-    // round-trips (measured: 3 jobs/iter vs 1, 7.2 s vs 4.5 s for the
-    // 37-iteration N=200 run). Any coalesce decision AQE could make is
-    // iteration-invariant here — the static plan already encodes it.
-    // Restored in finally; the loop owns the session between actions.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partsKey = "spark.sql.shuffle.partitions"
-    // ap_top2 runs in ObjectHashAggregateExec, which silently falls back
-    // to SORT-based aggregation past this many distinct groups per task
-    // (default 10000 — i.e. any partition holding >10k of the N row
-    // groups would re-buy the very sort the fused pass removes). Top2
-    // state is ~48 bytes/group, so 2²² groups/task is ~200 MB — far from
-    // memory pressure at the loop's data-sized partitioning.
-    val fallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-    val aqeBefore = spark.conf.get(aqeKey, "true")
-    val partsBefore = spark.conf.get(partsKey)
-    val fallbackBefore = spark.conf.getOption(fallbackKey)
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(fallbackKey, (1 << 22).toString)
-    try {
-    var msgs = msgs0.localCheckpoint()
-    // The eager checkpoint above has materialized the init relation —
-    // upstream storage (e.g. solveFromSimilarities' sims cache) can be
-    // dropped NOW instead of after the whole loop, halving the peak
-    // storage of the largest relation on the scale path (round-9
-    // ADVICE).
+    // ONE job materializes the init checkpoint and counts its rows: the
+    // count runs on the checkpoint's own RDD, not as a Dataset action.
+    val init = msgs0.localCheckpoint(eager = false)
+    val msgRows = graft.Checkpoints.checkpointRdds(init).map(_.count()).sum
+    // The init relation is materialized — upstream storage (e.g.
+    // solveFromSimilarities' sims cache) can be dropped NOW instead of
+    // after the whole loop (round-9 ADVICE).
     onInitMaterialized()
-
-    // Data-sized loop parallelism (the workloadPartitions discipline,
-    // tuned for CPU-bound window sorts: ~16 MB per task, floored at
-    // min(8, width), capped at cluster width). With AQE off, a fixed
-    // session-wide partition count is wrong at BOTH ends: 32 partitions
-    // on the sparse O(N·m) shape ran 96 near-empty tasks per iteration
-    // (measured 2× the per-iteration wall of the coalesced form), while
-    // at 100 TB the same fixed count would under-split. AQE's coalescing
-    // would re-derive the same answer per stage per iteration; the
-    // relation's size is iteration-invariant, so ONE count job over the
-    // materialized init sizes every exchange of the whole run.
-    val dp = spark.sparkContext.defaultParallelism
-    val msgRows = msgs.count()
-    // sizeParts = 1 means the WHOLE relation is under one task's worth
-    // of data (< 16 MB): the 8-way floor then buys nothing (a window
-    // sort of ≤ ~350 k rows is sub-millisecond) while every exchange
-    // still costs a full stage dispatch — and at ~50 ms/stage the
-    // 2-exchange iteration is pure scheduling. Run SINGLE-PARTITION
-    // instead (round 22, §2.4 "remove shuffles outright"): coalesce(1)
-    // reports SinglePartition, which satisfies the window passes'
-    // ClusteredDistribution outright, so the iteration plans carry NO
-    // Exchange at all and a whole convergence-cadence chunk executes as
-    // ONE stage (plans/r22/ap_iteration_{before,after}.txt: 2 Exchange →
-    // 0). Relations at or over one task of data keep the exact previous
-    // partitioning — the floor only ever bound below 16 MB, so nothing
-    // changes at scale.
+    val dp = sc.defaultParallelism
     val sizeParts = math.min(dp, (msgRows * 48L / (16L << 20)).toInt + 1)
-    val loopParts = spark.conf.getOption("spark.graft.ap.loopPartitions")
+    val parts = spark.conf.getOption("spark.graft.ap.loopPartitions")
       .map(_.toInt)
       .getOrElse(if (sizeParts <= 1) 1 else math.max(math.min(8, dp), sizeParts))
-    spark.conf.set(partsKey, loopParts.toString)
-    // Exchange-free iteration input (see above). The coalesce wraps the
-    // CONSUMER side only — checkpoint/release lifecycles still see the
-    // unwrapped generations.
-    def prep(m: DataFrame): DataFrame = if (loopParts == 1) m.coalesce(1) else m
-
-    // Adaptive cadence (see the scaladoc trade): batch convergence
-    // checks only while c+1 generations of checkpoint storage are cheap.
     val cadence =
       if (checkEvery > 0) checkEvery
       else if (msgRows <= CadenceRowCap) 5
       else 1
-    // Adaptive pass form (see FusedPassRowFloor): stage-count-bound
-    // below the floor → window algebra; sort-CPU-bound above → fused
-    // hash aggregates.
-    val fused = msgRows > FusedPassRowFloor
-    def iterate(m: DataFrame): DataFrame =
-      if (fused) availabilityPassFused(responsibilityPassFused(prep(m), damping), damping)
-      else availabilityPass(responsibilityPass(prep(m), damping), damping)
+    val (gen0, homes) = MessageBlocks.layout(init, parts)
 
     // Classic stop: convergenceIter consecutive equal exemplar sets =
     // convergenceIter−1 equal-to-previous increments of the counter.
     // Floored at 0, NOT 1: LocalAP fires at stable ≥ convIter−1, so
     // convergenceIter ≤ 1 converges on the first non-empty set in BOTH
-    // regimes (round-10 review: the max(1, …) floor made the same
-    // input converge one iteration later above the local threshold).
+    // regimes (round-10 review).
     val neededStable = math.max(0, convergenceIter - 1)
     var lastExemplars: Set[Long] = null
     var stable = 0
     var it = 0
     var converged = false
+    var msgs = gen0.localCheckpoint()
 
     while (it < maxIter && !converged) {
-      // Chain up to `cadence` iterations, each behind its own LAZY
+      // Chain up to `cadence` generations, each behind its own LAZY
       // localCheckpoint, then ONE collect materializes the whole chain:
-      // the job computes every generation's partitions in sequence
-      // (persisting them as they stream by — each generation is a
-      // single shared RDD, so its two consumers in the next pass read
-      // one computation, and the per-iteration plan stays CONSTANT
-      // size). One job per CHUNK where the round-8 form paid one per
-      // iteration. The un-checkpointed fully-lazy form is a trap,
-      // measured round 9: each generation's plan embeds the previous
-      // one TWICE (aggregate input + join input), so c chained
-      // iterations explode into 4^c subplan copies that exchange reuse
-      // does not collapse — thousands of stages per job at c = 5.
+      // the job computes every generation's partitions in sequence,
+      // persisting each as it streams by, so the later generations and
+      // the extra union branches read one computation.
       val step = math.min(cadence, maxIter - it)
       var cur = msgs
-      val intermediates = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val intermediates = scala.collection.mutable.ArrayBuffer.empty[RDD[MsgBlock]]
       for (_ <- 1 to step) {
-        cur = iterate(cur).localCheckpoint(false)
+        cur = MessageBlocks.iterate(cur, parts, damping).localCheckpoint()
         intermediates += cur
       }
-      // The materializing action: the union of EVERY generation's
-      // exemplar-indicator diagonal, tagged by position in the chunk.
-      // The later generations' plans force the earlier ones' RDDs
-      // inside this same job, and the extra union branches then read
-      // the just-persisted partitions — so the per-iteration sets cost
-      // no extra job, only ≤ step·N tiny rows on the collect (in
-      // practice ≤ step × |exemplars|). Only those rows ever leave the
-      // cluster.
-      val tagged = intermediates.zipWithIndex.map { case (g, j) =>
-        g.filter(col("i") === col("k"))
-          .filter(col("r") + col("a") > 0)
-          .select(lit(j).as("g"), col("k"))
-      }.reduce(_ unionByName _)
-      val byGen: Map[Int, Set[Long]] = tagged.collect()
-        .groupBy(_.getInt(0))
-        .map { case (j, rows) => j -> rows.map(_.getLong(1)).toSet }
+      // The materializing action: every generation's exemplar ids,
+      // tagged by position in the chunk — only those leave the cluster.
+      val byGen: Map[Int, Set[Long]] = sc
+        .union(intermediates.zipWithIndex.map { case (g, j) =>
+          g.flatMap(b => MessageBlocks.exemplars(b).map(k => (j, k)))
+        }.toSeq)
+        .collect()
+        .groupBy(_._1)
+        .map { case (j, ks) => j -> ks.map(_._2).toSet }
       // Run the CLASSIC counter over the chunk's per-iteration sets;
       // stop at the exact generation where the rule fires.
       var stopAt = -1
@@ -883,40 +701,29 @@ object AffinityPropagation {
       val keep = if (converged) intermediates(stopAt) else intermediates.last
       // Every other generation is superseded — the previous chunk's
       // final AND the chunk's non-kept intermediates (same discipline
-      // as Dedup's fixpoints, graft.Checkpoints): without this the
-      // distributed loop pins up to maxIter × N² rows of dead
-      // checkpoint storage, a scale-killer on exactly the path that
-      // exists for scale. Peak live state is cadence+1 generations
-      // during the chunk job — the cadence's documented storage trade.
+      // as Dedup's fixpoints, graft.Checkpoints): without this the loop
+      // pins up to maxIter generations of dead checkpoint storage. The
+      // init relation and the homes are read only by generation 0.
       // Must happen AFTER the collect above: that job reads the old
       // generations to compute the new ones.
-      graft.Checkpoints.release(msgs)
-      intermediates.foreach(g => if (!(g eq keep)) graft.Checkpoints.release(g))
+      if (msgs eq gen0) { graft.Checkpoints.release(init); homes.unpersist(false) }
+      msgs.unpersist(false)
+      intermediates.foreach(g => if (!(g eq keep)) g.unpersist(false))
       msgs = keep
     }
 
-    // msgs is already a materialized checkpoint — the final generation is
-    // the one pinned RDD the Result keeps alive, registered for release
-    // at the next run's start (unless the caller owns its lifetime). The
-    // Result holds the ROW RDD + schema, not the DataFrame: a DataFrame
-    // strongly references its SparkSession, and a cached Result under a
-    // weak-keyed session registry must not (round-8 ADVICE — the exact
-    // value→key WeakHashMap caveat the local path already handles).
-    // messages rebuilds on the caller's active/default session.
+    // msgs is a materialized checkpoint — the final generation is the
+    // one pinned RDD the Result keeps alive, registered for release at
+    // the next run's start (unless the caller owns its lifetime). The
+    // Result holds the RDD, not a DataFrame: a DataFrame strongly
+    // references its SparkSession, and a cached Result under a
+    // weak-keyed session registry must not (round-8 ADVICE); messages
+    // rebuilds on the caller's active/default session.
     val finalMsgs = msgs
     if (autoRelease) recordRunCheckpoint(spark, finalMsgs)
-    val finalRows = finalMsgs.rdd
-    val finalSchema = finalMsgs.schema
-    Result(() => sessionForResult().createDataFrame(finalRows, finalSchema),
+    Result(() => sessionForResult().createDataFrame(
+        finalMsgs.flatMap(MessageBlocks.rows), MessageBlocks.schema),
       lastExemplars.toSeq.sorted, it, converged)
-    } finally {
-      spark.conf.set(aqeKey, aqeBefore)
-      spark.conf.set(partsKey, partsBefore)
-      fallbackBefore match {
-        case Some(v) => spark.conf.set(fallbackKey, v)
-        case None => spark.conf.unset(fallbackKey)
-      }
-    }
   }
 
   /** Assignment given an exemplar set: label(i) = argmax_{k∈E} s(i,k),

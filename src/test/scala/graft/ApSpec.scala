@@ -213,14 +213,19 @@ class ApSpec extends SparkSuite {
       (1L, 3L, -9.0), (3L, 1L, -9.0),
       (2L, 3L, -9.0), (3L, 2L, -9.0),
       (9L, 9L, -5.0)).toDF("i", "k", "s")
-    def exemplarsOf(threshold: Int): Seq[Long] =
-      AffinityPropagation.solveFromSimilarities(spark, sims,
+    def exemplarsOf(threshold: Int, in: org.apache.spark.sql.DataFrame = sims): Seq[Long] =
+      AffinityPropagation.solveFromSimilarities(spark, in,
         localNodeThreshold = threshold).exemplars
     val dist = exemplarsOf(0)     // forced-distributed regime
     val local = exemplarsOf(2000) // local dense kernel
     assert(dist.contains(9L), s"distributed regime dropped the isolated node: $dist")
     assert(local.contains(9L), s"local regime dropped the isolated node: $local")
     assert(dist == local, s"regimes disagree: distributed $dist vs local $local")
+    // the loop's block layout reads ids as long and similarities as
+    // double whatever numeric types the caller supplies
+    val narrow = sims.select(col("i").cast("int").as("i"), col("k").cast("int").as("k"),
+      col("s").cast("float").as("s"))
+    assert(exemplarsOf(0, narrow) == dist, "int/float input changed the distributed result")
   }
 
   test("distributed runLoop releases superseded checkpoints (≤2 pinned after 30 iterations)") {
@@ -280,21 +285,29 @@ class ApSpec extends SparkSuite {
     assert(r2.messages.count() > 0)
   }
 
-  /** Count Spark jobs started while `f` runs, waiting for the listener
-    * bus to quiesce before reading. */
-  private def jobsDuring(f: => Unit): Int = {
+  /** (SQL executions, Spark jobs) started while `f` runs, waiting for
+    * the listener bus to quiesce before reading. `onJob` also runs on
+    * every job start. */
+  private def actionsDuring(f: => Unit, onJob: () => Unit = () => ()): (Int, Int) = {
+    val execs = new java.util.concurrent.atomic.AtomicInteger
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+        onJob(); jobs.incrementAndGet(); ()
       }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            execs.incrementAndGet(); ()
+          case _ => ()
+        }
     }
     spark.sparkContext.addSparkListener(l)
     try {
       f
-      var last = -1; var cur = jobs.get
-      while (cur != last) { Thread.sleep(150); last = cur; cur = jobs.get }
-      cur
+      var last = -1; var cur = jobs.get + execs.get
+      while (cur != last) { Thread.sleep(150); last = cur; cur = jobs.get + execs.get }
+      (execs.get, jobs.get)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -307,11 +320,11 @@ class ApSpec extends SparkSuite {
     import spark.implicits._
     val triples = (for { i <- 1L to 12L; k <- 1L to 12L if i != k }
       yield (i, k, if ((i <= 6) == (k <= 6)) -1.0 else -20.0)).toDF("i", "k", "s")
-    def countJobs(iters: Int): Int = jobsDuring {
+    def countJobs(iters: Int): Int = actionsDuring {
       val r = AffinityPropagation.solveFromSimilarities(spark, triples,
         maxIter = iters, convergenceIter = iters + 1, localNodeThreshold = 0)
       assert(r.iterations == iters)
-    }
+    }._2
     val j10 = countJobs(10)
     val j20 = countJobs(20)
     assert(j20 - j10 <= 4,
@@ -347,31 +360,93 @@ class ApSpec extends SparkSuite {
     }
   }
 
-  test("fused loop passes match the window-algebra passes (r exact, a to 1e-9)") {
-    // The loop kernel (hash-aggregate top-2 + SHUFFLE_HASH join) must
-    // compute the same messages as the oracle-matched window algebra:
-    // responsibilities bit-exactly (max/second-max over the same totally
-    // ordered set, same damping expression), availabilities to float
-    // sum-order tolerance (hash-agg order vs sorted-window order).
+  test("loop kernel matches the window-algebra passes (r exact, a to 1e-9)") {
+    // One iteration of the distributed loop's block kernel must compute
+    // the same messages as the oracle-matched window algebra from the
+    // same init: responsibilities bit-exactly (top-2 over the same
+    // totally ordered set, same damping expression), availabilities to
+    // float sum-order tolerance (ascending-i sum vs the window's
+    // shuffle-fetch order).
     val emb = Tables.embeddings(spark, sf001)
     val pref = AffinityPropagation.preference(AffinityPropagation.similarities(emb))
-    def init = AffinityPropagation.init(emb, pref)
     val w = AffinityPropagation.availabilityPass(
-      AffinityPropagation.responsibilityPass(init, 0.5), 0.5)
-    val f = AffinityPropagation.availabilityPassFused(
-      AffinityPropagation.responsibilityPassFused(init, 0.5), 0.5)
+      AffinityPropagation.responsibilityPass(AffinityPropagation.init(emb, pref), 0.5), 0.5)
+    val one = AffinityPropagation.run(spark, emb, maxIter = 1, convergenceIter = 2)
+    assert(one.iterations == 1)
     val joined = w.select(col("i"), col("k"), col("r").as("rw"), col("a").as("aw"))
-      .join(f.select(col("i"), col("k"), col("r").as("rf"), col("a").as("af")),
+      .join(one.messages.select(col("i"), col("k"), col("r").as("rk"), col("a").as("ak")),
         Seq("i", "k"))
     val agg = joined.agg(
       count(lit(1)).as("n"),
-      max(abs(col("rw") - col("rf"))).as("dr"),
-      max(abs(col("aw") - col("af"))).as("da")).head()
+      max(abs(col("rw") - col("rk"))).as("dr"),
+      max(abs(col("aw") - col("ak"))).as("da")).head()
     assert(agg.getLong(0) == 500L * 500L)
     assert(agg.getDouble(1) == 0.0,
-      s"fused responsibility diverged from window algebra by ${agg.getDouble(1)}")
-    assert(agg.getDouble(2) < 1e-9,
-      s"fused availability diverged from window algebra by ${agg.getDouble(2)}")
+      s"kernel responsibility diverged from window algebra by ${agg.getDouble(1)}")
+    assert(agg.getDouble(2) <= 1e-9,
+      s"kernel availability diverged from window algebra by ${agg.getDouble(2)}")
+  }
+
+  test("loop messages, iterations and exemplars are bit-identical at 1 and 4 loop partitions") {
+    // The availability sum runs in ascending i whatever the partitioning
+    // or shuffle fetch order, so the in-task hand-off (one partition)
+    // and the block shuffles (four) must agree to the bit.
+    val emb200 = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(200)
+    def at(parts: Int) = {
+      spark.conf.set("spark.graft.ap.loopPartitions", parts.toString)
+      try {
+        val r = AffinityPropagation.run(spark, emb200)
+        val bits = r.messages.collect().map { m =>
+          (m.getLong(0), m.getLong(1)) -> Seq(2, 3, 4).map(c =>
+            java.lang.Double.doubleToRawLongBits(m.getDouble(c)))
+        }.toMap
+        (r.iterations, r.converged, r.exemplars, bits)
+      } finally spark.conf.unset("spark.graft.ap.loopPartitions")
+    }
+    val (it1, conv1, ex1, m1) = at(1)
+    val (it4, conv4, ex4, m4) = at(4)
+    assert(conv1 && it1 == it4 && conv1 == conv4, s"iterations $it1 vs $it4")
+    assert(ex1 == ex4, s"exemplars differ: $ex1 vs $ex4")
+    assert(m1.size == 200 * 200 && m1 == m4, "messages differ between 1 and 4 loop partitions")
+  }
+
+  test("the loop plans once: SQL executions do not grow with iterations, jobs only by chunks") {
+    // Every Dataset is built, analyzed and planned in the init; each
+    // iteration is RDD code over the checkpointed blocks. Ten more
+    // iterations at the default cadence (5) add exactly two chunk jobs
+    // and no SQL execution — per-iteration Dataset planning fails here.
+    val emb = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(100)
+    def actions(iters: Int): (Int, Int) = actionsDuring {
+      val r = AffinityPropagation.run(spark, emb, maxIter = iters,
+        convergenceIter = iters + 1)
+      assert(r.iterations == iters)
+    }
+    val (e10, j10) = actions(10)
+    val (e20, j20) = actions(20)
+    assert(e20 == e10, s"SQL executions grew with iterations: $e10 at 10, $e20 at 20")
+    assert(j20 - j10 == 2, s"expected 2 more chunk jobs for 10 more iterations, got ${j20 - j10}")
+  }
+
+  test("the distributed loop leaves the caller's session conf untouched") {
+    // Read on every job start of a forced-distributed loop and after it:
+    // a loop that plans under its own settings must not flip them on the
+    // caller's session, where concurrent queries would plan under them.
+    import spark.implicits._
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
+    def conf() = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    val caller = conf()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Option[String]]]()
+    val triples = (for { i <- 1L to 12L; k <- 1L to 12L if i != k }
+      yield (i, k, if ((i <= 6) == (k <= 6)) -1.0 else -20.0)).toDF("i", "k", "s")
+    val (_, jobs) = actionsDuring({
+      AffinityPropagation.solveFromSimilarities(spark, triples,
+        maxIter = 30, convergenceIter = 31, localNodeThreshold = 0)
+      ()
+    }, () => { seen.add(conf()); () })
+    seen.add(conf())
+    assert(jobs >= 6 && seen.size == jobs + 1)
+    seen.forEach(c => assert(c == caller, s"loop changed the caller's conf: $c vs $caller"))
   }
 
   test("solveFromSimilarities local regime runs ≤2 actions (probe + one collect)") {
@@ -436,15 +511,17 @@ class ApSpec extends SparkSuite {
   test("ap_dist_exemplars fixture has a comfortable diagonal margin (no near-tie flake)") {
     // round-8 ADVICE: the ap_dist_exemplars query REQUIRES exact
     // exemplar-set equality between the distributed loop and the local
-    // kernel, but availability sums are float-order-nondeterministic
-    // across shuffle fetches — a diagonal r+a within ulp noise of 0
-    // could flip the indicator between runs and fail the require
-    // intermittently. This pins the safety premise instead: on the
-    // 200-vec fixture the smallest |r+a| over the diagonal is far above
-    // any sum-order jitter (~1e-13 relative), so the exact equality the
-    // query asserts is robust. If the fixture ever moves and this
-    // margin collapses, THIS test names the cause before the query
-    // flakes.
+    // kernel. The loop's availability sums are order-deterministic
+    // (ascending i at any partitioning, so repeated runs agree), but the
+    // local kernel is separate code — its similarity, preference and
+    // message arithmetic need not match the loop's to the last ulp, and
+    // a diagonal r+a within float noise of 0 could flip the indicator
+    // between the regimes. This pins the safety premise: on the 200-vec
+    // fixture the smallest |r+a| over the diagonal is far above any
+    // float rounding difference (~1e-13 relative), so the exact
+    // equality the query asserts is robust. If the fixture ever moves
+    // and this margin collapses, THIS test names the cause before the
+    // query fails.
     val emb200 = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(200)
     val dist = AffinityPropagation.run(spark, emb200)
     assert(dist.converged)

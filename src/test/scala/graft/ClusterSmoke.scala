@@ -8,8 +8,9 @@ package graft
   * REAL executor JVMs (via SPARK_HOME) and drives the three claims the
   * 100 TB story leans on hardest: the warmed-projection read path, the
   * dedup clustering pipeline (probes + capped kernel + components), and
-  * the forced-distributed AP loop (ap_top2 aggregate, checkpoint
-  * discipline, regime equality with the local kernel).
+  * the forced-distributed AP loop (block kernel on one and on four
+  * loop partitions, checkpoint discipline, regime equality with the
+  * local kernel).
   *
   * Run as a MAIN in its own JVM (ClusterSmokeSpec forks it): a second
   * SparkContext cannot coexist with the suite's shared local[*] one. */
@@ -37,8 +38,8 @@ object ClusterSmoke {
       val clusters = SparkEntry.queries("dedup_cluster")(spark, sfDir).count()
       require(clusters > 0, "dedup_cluster returned no rows off-driver")
       // 3. forced-distributed AP must agree with the local dense kernel
-      //    — the fused loop's aggregate, hints, and checkpoint registry
-      //    all exercised with real remote executors. The 200-vec prefix
+      //    — the loop's block kernel and checkpoint registry exercised
+      //    with real remote executors. The 200-vec prefix
       //    is the same fixture ap_dist_exemplars pins (converges with a
       //    suite-checked diagonal margin; smaller prefixes have
       //    near-tie diagonals that legitimately flip on executor-order
@@ -51,6 +52,13 @@ object ClusterSmoke {
       require(dist.exemplars.nonEmpty, "distributed AP produced no exemplars")
       require(dist.exemplars == loc.exemplars,
         s"regimes disagree off-driver: dist=${dist.exemplars} loc=${loc.exemplars}")
+      // 4. the same loop forced onto four loop partitions: its two block
+      //    shuffles per iteration cross the executor JVMs
+      spark.conf.set("spark.graft.ap.loopPartitions", "4")
+      val wide = try ap.AffinityPropagation.run(spark, emb)
+        finally spark.conf.unset("spark.graft.ap.loopPartitions")
+      require(wide.converged && wide.exemplars == loc.exemplars,
+        s"4-partition loop disagrees off-driver: wide=${wide.exemplars} loc=${loc.exemplars}")
       println("CLUSTER_SMOKE_OK")
     } finally spark.stop()
   }
