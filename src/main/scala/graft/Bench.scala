@@ -201,16 +201,16 @@ object Bench {
     // ANN SERVING row (round-18 VERDICT #7: the ANN stack is the
     // likeliest 100 TB hot path and had no bench row): residual IVFADC
     // top-5 for a fixed 256-id workload against the warm-time index —
-    // per-rep cost is the QUERY side only (workload assignment,
-    // per-(query, probe) residual LUT, candidate join, rank; the
-    // ingest-side fit/encode is pqivf.json's record). Measured OUTSIDE
-    // the round-robin (the ap_dist rule — multi-second reps starve the
-    // other rows' window sampling). Deliberately NOT the full
-    // self-search: ADC pays a fixed m·k-row LUT per (query, probe), so
-    // an all-2000-query workload at fixture N is LUT-dominated
-    // (measured 19.8 s) and would clock fixture geometry, not the
-    // serving path — the 100 TB regime has N/c ≫ m·k, where the same
-    // plan is candidate-bound.
+    // per-rep cost is the QUERY side only (workload assignment, query
+    // cells, the cell-keyed ADC kernel; the ingest-side fit/encode is
+    // pqivf.json's record). Measured OUTSIDE the round-robin (the
+    // ap_dist rule — multi-second reps starve the other rows' window
+    // sampling). Deliberately NOT the full self-search: ADC pays a
+    // fixed m·k-entry LUT per (query, probe) — 16 k of them for an
+    // all-2000-query workload at fixture N, against ~125 members per
+    // cell — so it would clock fixture geometry, not the serving path:
+    // the 100 TB regime has N/c ≫ m·k, where the same kernel is
+    // candidate-bound.
     locally {
       import org.apache.spark.sql.functions.{col, xxhash64}
       val pqIdx = graft.functions.Pq.ivfPqIndexCached(

@@ -1075,8 +1075,8 @@ object Graft {
     * per-centroid residual-moment CV — picks RAW PQ on isotropic
     * corpora (where centroid subtraction and rotation remove nothing)
     * and OPQ-over-residuals everywhere clustered or heteroscedastic;
-    * measured recall equals max(parents) on all three ResidualProbe
-    * fixtures (see [[graft.functions.Pq.fitIvfPqAuto]]). Fits fresh
+    * measured recall equals max(parents) on the isotropic, clustered
+    * and heavy-tailed fixtures (see [[graft.functions.Pq.fitIvfPqAuto]]). Fits fresh
     * per call (the probe's verdict is corpus-specific, so this facade
     * does not enter the session index cache); for a repeated workload
     * on one corpus, fit once via `fitIvfPqAuto` and search with
@@ -1089,8 +1089,8 @@ object Graft {
     *
     *  - `sel < postFilterMinSel` (selective): PRE-FILTER — the
     *    predicate pushes INTO candidate generation: disallowed ids
-    *    leave the home-bucket relation before any ADC code or LUT row
-    *    is built for them (see the `allowedIds` hook on
+    *    leave the home-bucket relation before any of their codes is
+    *    built or scored (see the `allowedIds` hook on
     *    [[graft.functions.Pq.ivfAdcTopkAuto]]), and `nprobe` scales up
     *    by 1/sel (capped at `maxNprobe`) because each probed bucket now
     *    holds ~sel of its mass — at extreme selectivity this degrades

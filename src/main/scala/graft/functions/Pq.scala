@@ -23,15 +23,18 @@ import org.apache.spark.sql.functions._
   *     (dist ASC, code ASC — deterministic), re-assemble the code array
   *     with one keyed aggregate. Both aggregates hash by vec_id, so the
   *     encode pays one exchange;
-  *   - ADC distributed: the per-query lookup table (q × m·k block
-  *     distances) is itself a DataFrame; exhaustive ADC is then
-  *     baseBlocks ⋈ lut on (block, code) — an equi-join producing
-  *     exactly |q|·|base|·m rows — summed per pair and ranked with
-  *     ap_topm. This kernel is the oracle-grade EXHAUSTIVE form; the
-  *     production path is [[ivfAdcTopk]], which feeds the same rank
-  *     tail IVF bucket candidates instead of all pairs — exactly the
-  *     faiss IVFADC layering (round-11 VERDICT #3: now a wired,
-  *     tested composition, not a comment). */
+  *   - ADC distributed, two forms:
+  *       - [[adcTopk]], EXHAUSTIVE and relational — the oracle: the
+  *         per-query lookup table (q × m·k block distances) is a
+  *         DataFrame, baseBlocks ⋈ lut on (block, code) yields exactly
+  *         |q|·|base|·m rows, summed per pair in block order and ranked
+  *         with ap_topm;
+  *       - [[ivfAdcTopk]], the production path (the faiss IVFADC
+  *         layering): Catalyst builds the probing queries' cells and the
+  *         IVF cell members with their codes, and [[AdcScan]] scores
+  *         them in one cell-keyed pass over primitive arrays — each
+  *         lookup table a task-local m×k array, never a relation, and
+  *         each `adc` bit-identical to the exhaustive form's. */
 object Pq {
 
   /** codebooks(b)(c) = centroid c of block b, length `sub`. */
@@ -67,48 +70,23 @@ object Pq {
           coalesce(id.cast("string"), lit("?")))).isNull,
       vcol)
 
-  /** Normalized, deduplicated query workload — one definition for the
-    * three overloads that each hand-rolled it. distinct: a duplicated
-    * workload id would double both its candidate pairs AND its LUT
-    * rows — the join then yields k² block rows per pair and every adc
-    * comes out k²× the true distance, silently (round-12 review).
-    * Exactly ONE column (a silent columns.head pick on a wider frame
-    * would run a wrong workload), and every id must CAST to long —
-    * a cast-to-null id would broadcast-join nothing and return an
-    * empty result with no error (round-13 review). */
-  private def workloadIds(queryIds: Option[DataFrame]): Option[DataFrame] =
-    queryIds.map { q =>
-      require(q.columns.length == 1,
-        s"ivfAdcTopk: queryIds must be a single id column, got (${q.columns.mkString(", ")})")
-      val c = col(q.columns.head)
-      q.select(
-          when(assert_true(c.cast("long").isNotNull,
-            concat(lit("ivfAdcTopk: queryIds value does not cast to long: "),
-              coalesce(c.cast("string"), lit("null")))).isNull,
-            c.cast("long")).as("vec_id"))
-        .distinct()
-    }
-
-  /** Allowed-id normalization for FILTERED vector search (round-17
-    * VERDICT #3): same contract as [[workloadIds]] — exactly one
-    * long-castable id column, nulls fail loud, duplicates collapse.
-    * When present, candidate generation drops disallowed ids BEFORE any
-    * ADC scoring (the pre-filter path — predicate pushdown into the
-    * index probe); the relation joins UNBROADCAST, so a
-    * half-the-corpus filter need not fit one executor (AQE broadcasts
-    * it when it is small). */
-  private def allowedRel(allowedIds: Option[DataFrame]): Option[DataFrame] =
-    allowedIds.map { a =>
-      require(a.columns.length == 1,
-        s"ivfAdcTopk: allowedIds must be a single id column, got (${a.columns.mkString(", ")})")
-      val c = col(a.columns.head)
-      a.select(
-          when(assert_true(c.cast("long").isNotNull,
-            concat(lit("ivfAdcTopk: allowedIds value does not cast to long: "),
-              coalesce(c.cast("string"), lit("null")))).isNull,
-            c.cast("long")).as("vec_id"))
-        .distinct()
-    }
+  /** A search's id list (`queryIds` or `allowedIds`, named `param`)
+    * as one long `vec_id` column. Exactly ONE column (a silent
+    * columns.head pick on a wider frame would run a wrong workload),
+    * and every id must CAST to long — a cast-to-null id would match
+    * nothing and return an empty result with no error (round-13
+    * review). Duplicates need no distinct: the lists only semi-join
+    * ([[Workload]]). */
+  private def idList(param: String, ids: DataFrame): DataFrame = {
+    require(ids.columns.length == 1,
+      s"ivfAdcTopk: $param must be a single id column, got (${ids.columns.mkString(", ")})")
+    val c = col(ids.columns.head)
+    ids.select(
+      when(assert_true(c.cast("long").isNotNull,
+        concat(lit(s"ivfAdcTopk: $param value does not cast to long: "),
+          coalesce(c.cast("string"), lit("null")))).isNull,
+        c.cast("long")).as("vec_id"))
+  }
 
   /** Train per-block codebooks on a bounded sample. `d` must divide
     * into `m` equal blocks. Deterministic: hash-spread sample,
@@ -198,16 +176,6 @@ object Pq {
       b <- 0 until model.m
       c <- model.codebooks(b).indices
     } yield (b, c.toLong, model.codebooks(b)(c).toSeq)).toDF("b", "code", "cv")
-  }
-
-  /** The codebook as ONE row per block, entries in code order — the
-    * array form the LUT builder reduces over (round 22): m rows of
-    * k sub-vectors each, vs [[codebookDF]]'s m·k rows. */
-  private def codebookArrDF(spark: SparkSession, model: Model): DataFrame = {
-    import spark.implicits._
-    (0 until model.m)
-      .map(b => (b, model.codebooks(b).toSeq.map(_.toSeq)))
-      .toDF("b", "cbs")
   }
 
   /** Per-block code assignment: (vec_id, b, code) — the intermediate
@@ -484,9 +452,9 @@ object Pq {
     * relations every query re-derived per call — homes (vec_id, c_id)
     * and residual block codes (vec_id, b, code), both persisted
     * MEMORY_ONLY. With these in executor storage a workload query pays
-    * ONLY its own side: M-row assignment, LUT, candidate join — the
-    * per-call O(N·c) assignment and O(N·m) re-encode are gone
-    * (round-13 review: the model-only cache still re-paid both). */
+    * ONLY its own side: M-row assignment, its query cells, the ADC
+    * kernel — the per-call O(N·c) assignment and O(N·m) re-encode are
+    * gone (round-13 review: the model-only cache still re-paid both). */
   final case class IvfPqIndex(model: IvfPqModel, homes: DataFrame,
       codes: DataFrame)
 
@@ -1408,109 +1376,160 @@ object Pq {
     Some((homesNew, codesNew, drift))
   }
 
+  // ---- IVF-ADC search ---------------------------------------------------
+  //
+  // Every ivfAdcTopk overload is its family's kernel inputs
+  // (ivfAdcInputs, built by Catalyst) scored by [[AdcScan]]. Families
+  // differ only in where the members' codes come from (the stored index,
+  // or an encode of this call's corpus) and in how a query becomes its
+  // cell vector (its residual against the probed centroid, that residual
+  // rotated, or the raw query).
+
+  /** A search's query workload and allowed-id pre-filter ([[idList]]
+    * each), applied as semi joins: a duplicated id selects its rows
+    * once (round-12 review: an inner join with a duplicated workload id
+    * doubled its rows and silently scaled every adc k²×). */
+  private final class Workload(queryIds: Option[DataFrame],
+      allowedIds: Option[DataFrame]) {
+    private val qids = queryIds.map(idList("queryIds", _))
+    private val allow = allowedIds.map(idList("allowedIds", _))
+    /** The workload's rows only (every row without a workload); the
+      * workload is broadcast. */
+    def queries(df: DataFrame): DataFrame =
+      qids.fold(df)(q => df.join(broadcast(q), Seq("vec_id"), "left_semi"))
+    /** Allowed rows only — the pre-filter point: a disallowed id leaves
+      * the members before any code of it is scored. Not broadcast, so
+      * a half-the-corpus filter need not fit one executor (adaptive
+      * execution broadcasts it when it is small). */
+    def allowed(df: DataFrame): DataFrame =
+      allow.fold(df)(a => df.join(a, Seq("vec_id"), "left_semi"))
+  }
+
+  private def assignmentsOf(v: DataFrame, cents: Seq[(Long, Seq[Double])],
+      nprobe: Int): DataFrame =
+    Ivf.assignments(v, cents, nprobe, (a, b) => call_function("vec_sqdist", a, b))
+
+  /** Query cells (i, c_id, qv) — each probing query once per probed cell
+    * — from `probes` (vec_id, c_id) and the query vectors `qv` (vec_id,
+    * v). With `residual`, qv is `post` of the query's guarded residual
+    * against the cell's centroid (the residual ADC identity
+    * ‖q − x‖² ≈ ‖(q − c) − r̂ₓ‖² for x homed in c); without, `post` of
+    * the query itself. `post` gets (vector, id). */
+  private def cellsOf(qv: DataFrame, probes: DataFrame,
+      cents: Seq[(Long, Seq[Double])], residual: Boolean,
+      post: (Column, Column) => Column): DataFrame = {
+    val spark = qv.sparkSession
+    import spark.implicits._
+    val q = probes.select(col("vec_id").as("i"), col("c_id"))
+      .join(qv.select(col("vec_id").as("i"), col("v")), "i")
+    val x =
+      if (residual) q.join(broadcast(cents.toDF("c_id", "centv")), "c_id")
+        .select(col("i"), col("c_id"), guardedDiff(col("v"), col("centv"), col("i")).as("x"))
+      else q.select(col("i"), col("c_id"), col("v").as("x"))
+    x.select(col("i"), col("c_id"), post(col("x"), col("i")).as("qv"))
+  }
+
+  /** Members (c_id, vec_id, b, code): the searchable homes with their
+    * codes. */
+  private def membersOf(homes: DataFrame, codes: DataFrame): DataFrame =
+    homes.join(codes, "vec_id").select("c_id", "vec_id", "b", "code")
+
+  /** Inputs of a search over a STORED index: one assignment pass over
+    * the probing queries only; the members are the stored homes and
+    * codes. */
+  private def storedInputs(vecs: DataFrame, vecCol: String, idCol: String,
+      nprobe: Int, queryIds: Option[DataFrame], allowedIds: Option[DataFrame],
+      cents: Seq[(Long, Seq[Double])], residual: Boolean,
+      post: (Column, Column) => Column, pq: Model, homes: DataFrame,
+      codes: DataFrame): AdcScan.Inputs = {
+    ApAggs.register(vecs.sparkSession)
+    VectorExprs.register(vecs.sparkSession)
+    val w = new Workload(queryIds, allowedIds)
+    val qv = w.queries(normalize(vecs, vecCol, idCol))
+    AdcScan.Inputs(
+      cellsOf(qv, assignmentsOf(qv, cents, nprobe), cents, residual, post),
+      membersOf(w.allowed(homes), codes), pq, cents.size)
+  }
+
+  /** Inputs of a SELF-BUILDING search over the normalized corpus `v`:
+    * ONE assignment pass gives both the homes (crnk 1) and the
+    * workload's probes (crnk ≤ nprobe) — crnk 1 of the nprobe pass is
+    * bit-identical to a dedicated homes pass — and the members' codes
+    * are `encode(allowed vectors, allowed homes)`, so only allowed rows
+    * encode. */
+  private def builtInputs(v: DataFrame, nprobe: Int,
+      queryIds: Option[DataFrame], allowedIds: Option[DataFrame],
+      cents: Seq[(Long, Seq[Double])], residual: Boolean,
+      post: (Column, Column) => Column, pq: Model,
+      encode: (DataFrame, DataFrame) => DataFrame): AdcScan.Inputs = {
+    ApAggs.register(v.sparkSession)
+    VectorExprs.register(v.sparkSession)
+    val w = new Workload(queryIds, allowedIds)
+    val assigned = assignmentsOf(v, cents, nprobe)
+    val homes = w.allowed(assigned.filter(col("crnk") === 1)
+      .select(col("vec_id"), col("c_id")))
+    AdcScan.Inputs(
+      cellsOf(w.queries(v), w.queries(assigned), cents, residual, post),
+      membersOf(homes, encode(w.allowed(v), homes)), pq, cents.size)
+  }
+
   /** Rotated-residual IVFADC over a MATERIALIZED/persisted rotated
-    * index — query-side-only work, the rotated twin of the
-    * [[IvfPqIndex]] overload below: workload assignment, a residual
-    * LUT whose query residuals pass through the model's [[rotateExpr]]
-    * (the same expression tree the stored codes were encoded with),
-    * candidate join against the stored homes/codes. */
+    * index — the rotated twin of the [[IvfPqIndex]] overload below: the
+    * query residuals pass through the model's [[rotateExpr]], the same
+    * expression tree the stored codes were encoded with. */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, idx: RotatedIvfPqIndex,
       topk: Int, nprobe: Int, idCol: String, queryIds: Option[DataFrame],
-      allowedIds: Option[DataFrame]): DataFrame = {
-    val spark = vecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
+      allowedIds: Option[DataFrame]): DataFrame =
+    AdcScan.topk(ivfAdcInputs(vecs, vecCol, idx, nprobe, idCol, queryIds,
+      allowedIds), topk)
+
+  private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
+      idx: RotatedIvfPqIndex, nprobe: Int, idCol: String,
+      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs = {
     val rm = idx.model
-    val v = normalize(vecs, vecCol, idCol)
-    val qids = workloadIds(queryIds)
-    def queriesOnly(df: DataFrame): DataFrame =
-      qids.fold(df)(q => df.join(broadcast(q), "vec_id"))
-    val allow = allowedRel(allowedIds)
-    def allowedOnly(df: DataFrame): DataFrame =
-      allow.fold(df)(a => df.join(a, "vec_id"))
-    val qv = queriesOnly(v)
-    val probes = Ivf.assignments(qv, rm.cents, nprobe,
-        (a, b) => call_function("vec_sqdist", a, b))
-      .select(col("vec_id").as("i"), col("c_id"))
-    val cand = probes.join(allowedOnly(idx.homes), "c_id")
-      .filter(col("i") =!= col("vec_id"))
-      .select("i", "c_id", "vec_id")
-    adcRank(
-      adcJoinLut(cand.join(idx.codes, "vec_id"),
-        lutResidualDF(qv, probes, rm.pq, rm.cents,
-          qr => rotateExpr(qr, rm.pca, rm.basisPerm)),
-        bounded = qids.isDefined),
-      topk)
+    storedInputs(vecs, vecCol, idCol, nprobe, queryIds, allowedIds, rm.cents,
+      residual = true, (x, _) => rotateExpr(x, rm.pca, rm.basisPerm), rm.pq,
+      idx.homes, idx.codes)
   }
 
-  /** Raw flat-PQ ADC over a MATERIALIZED/persisted raw index: IVF
-    * candidates from the stored homes, raw codes against the plain
-    * per-query LUT (no centroid term — the codes quantize raw
-    * vectors, so the LUT joins on (i, b, code) without c_id). */
+  /** Raw flat-PQ ADC over a MATERIALIZED/persisted raw index: IVF cells
+    * from the stored homes, raw codes scored against the query itself
+    * (no centroid term — the codes quantize raw vectors, so a query's
+    * lookup table is the same in every cell it probes). */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, idx: RawPqIndex,
       topk: Int, nprobe: Int, idCol: String, queryIds: Option[DataFrame],
-      allowedIds: Option[DataFrame]): DataFrame = {
-    val spark = vecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
-    val v = normalize(vecs, vecCol, idCol)
-    val qids = workloadIds(queryIds)
-    def queriesOnly(df: DataFrame): DataFrame =
-      qids.fold(df)(q => df.join(broadcast(q), "vec_id"))
-    val allow = allowedRel(allowedIds)
-    def allowedOnly(df: DataFrame): DataFrame =
-      allow.fold(df)(a => df.join(a, "vec_id"))
-    val qv = queriesOnly(v)
-    val probes = Ivf.assignments(qv, idx.cents, nprobe,
-        (a, b) => call_function("vec_sqdist", a, b))
-      .select(col("vec_id").as("i"), col("c_id"))
-    // one home per point ⇒ each (query, candidate) pair meets at most
-    // once — no distinct needed (the IvfPqIndex overload's property)
-    val cand = probes.join(allowedOnly(idx.homes), "c_id")
-      .filter(col("i") =!= col("vec_id"))
-      .select("i", "vec_id")
-    adcRank(
-      cand
-        .join(idx.codes, "vec_id")
-        .join(lutDF(qv, "v", idx.pq, "vec_id"), Seq("i", "b", "code")),
-      topk)
-  }
+      allowedIds: Option[DataFrame]): DataFrame =
+    AdcScan.topk(ivfAdcInputs(vecs, vecCol, idx, nprobe, idCol, queryIds,
+      allowedIds), topk)
+
+  private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
+      idx: RawPqIndex, nprobe: Int, idCol: String,
+      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs =
+    storedInputs(vecs, vecCol, idCol, nprobe, queryIds, allowedIds, idx.cents,
+      residual = false, (x, id) => guardedVec(x, idx.pq, id), idx.pq,
+      idx.homes, idx.codes)
 
   /** Residual IVFADC over a MATERIALIZED index — the repeated-query
-    * production path: only the QUERY side computes per call (workload
-    * assignment over M rows, the residual LUT, the candidate join);
-    * the corpus-side homes and codes come from the index storage
-    * (round-13 review: the model-only cache still re-paid the O(N·c)
-    * assignment and the O(N·m) re-encode per call). Same rows as the
-    * self-building overload — assignment is per-row independent, so a
+    * production path: only the QUERY side computes per call (the
+    * workload's assignment over M rows and its cells); the corpus-side
+    * homes and codes come from the index storage (round-13 review: the
+    * model-only cache still re-paid the O(N·c) assignment and the
+    * O(N·m) re-encode per call). Same rows as the self-building
+    * overload — assignment is per-row independent, so a
     * workload-restricted pass ranks each query identically. Returns
     * (i, k_id, adc, rnk). */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, idx: IvfPqIndex, topk: Int,
       nprobe: Int, idCol: String, queryIds: Option[DataFrame],
-      allowedIds: Option[DataFrame]): DataFrame = {
-    val spark = vecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
-    val v = normalize(vecs, vecCol, idCol)
-    val qids = workloadIds(queryIds)
-    def queriesOnly(df: DataFrame): DataFrame =
-      qids.fold(df)(q => df.join(broadcast(q), "vec_id"))
-    val allow = allowedRel(allowedIds)
-    def allowedOnly(df: DataFrame): DataFrame =
-      allow.fold(df)(a => df.join(a, "vec_id"))
-    val qv = queriesOnly(v)
-    val probes = Ivf.assignments(qv, idx.model.cents, nprobe,
-        (a, b) => call_function("vec_sqdist", a, b))
-      .select(col("vec_id").as("i"), col("c_id"))
-    val cand = probes.join(allowedOnly(idx.homes), "c_id")
-      .filter(col("i") =!= col("vec_id"))
-      .select("i", "c_id", "vec_id")
-    adcRank(
-      adcJoinLut(cand.join(idx.codes, "vec_id"),
-        lutResidualDF(qv, probes, idx.model.pq, idx.model.cents),
-        bounded = qids.isDefined),
-      topk)
-  }
+      allowedIds: Option[DataFrame]): DataFrame =
+    AdcScan.topk(ivfAdcInputs(vecs, vecCol, idx, nprobe, idCol, queryIds,
+      allowedIds), topk)
+
+  private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
+      idx: IvfPqIndex, nprobe: Int, idCol: String,
+      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs =
+    storedInputs(vecs, vecCol, idCol, nprobe, queryIds, allowedIds,
+      idx.model.cents, residual = true, (x, _) => x, idx.model.pq,
+      idx.homes, idx.codes)
 
   /** Unfiltered shape of the index-tier search (pre-allowedIds callers). */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, idx: IvfPqIndex, topk: Int,
@@ -1532,110 +1551,33 @@ object Pq {
       ivfAdcTopk(v, "v", idx, shortlist, nprobe, "vec_id", queryIds), topk)
   }
 
-  /** Residual-LUT rows for a probing workload: for every (query i,
-    * probed centroid c_id) pair, the block distances from the query's
-    * residual AGAINST THAT CENTROID (qr = q − centroid(c_id)) to every
-    * codebook entry — (i, c_id, b, code, bd), |probes|·m·k rows. The
-    * residual ADC identity: ‖q − x‖² ≈ ‖(q − c) − r̂ₓ‖² for x homed in
-    * c, so the LUT is per (query, centroid), not per query — the
-    * nprobe-fold LUT growth is the textbook IVFADC cost and stays tiny
-    * next to the candidate block rows (k ≪ candidates/query at the
-    * auto centroid size). */
-  private def lutResidualDF(qv: DataFrame, probes: DataFrame,
-      model: Model, cents: Seq[(Long, Seq[Double])],
-      post: Column => Column = identity): DataFrame = {
-    val spark = qv.sparkSession
-    import spark.implicits._
-    // ARRAY form (round 22): one row per (query, probed centroid,
-    // block) carrying all k block distances in code order — k× fewer
-    // LUT rows than the per-code form, so the candidate join keys on
-    // (i, c_id, b) and reads its code's entry with element_at instead
-    // of shuffling |probes|·m·k rows through a 4-key join. Each
-    // distance is the same vec_sqdist(sv, codebook entry) the per-code
-    // row carried — values bit-identical, and [[adcRank]] sorts block
-    // contributions before summing, so the ADC totals are unchanged.
-    probes.join(qv.select(col("vec_id").as("i"), col("v")), "i")
-      .join(broadcast(cents.toDF("c_id", "centv")), "c_id")
-      .select(col("i"), col("c_id"),
-        post(guardedDiff(col("v"), col("centv"), col("i"))).as("qr"))
-      .select(col("i"), col("c_id"),
-        explode(sequence(lit(0), lit(model.m - 1))).as("b"), col("qr"))
-      .select(col("i"), col("c_id"), col("b"),
-        slice(col("qr"), col("b") * lit(model.sub) + lit(1), lit(model.sub)).as("sv"))
-      .join(broadcast(codebookArrDF(spark, model)), "b")
-      .select(col("i"), col("c_id"), col("b"),
-        transform(col("cbs"),
-          cv => call_function("vec_sqdist", col("sv"), cv)).as("bds"))
-  }
-
-  /** Attach each candidate block row's distance from the array-form
-    * LUT: join on (i, c_id, b), read entry `code` (0-based) from the
-    * per-block distance array. `bounded = true` (a workload-restricted
-    * search — queryIds present) BROADCASTS the LUT: |workload|·nprobe·m
-    * rows, so the candidate side streams with no exchange for this
-    * join at all; unbounded self-search keeps the shuffle join (the
-    * LUT is |Q|·nprobe·m rows — k× smaller than the round-21 form —
-    * but |Q| scales with the corpus there, past any broadcast cap). */
-  private def adcJoinLut(blockRows: DataFrame, lut: DataFrame,
-      bounded: Boolean): DataFrame =
-    blockRows.join(if (bounded) broadcast(lut) else lut, Seq("i", "c_id", "b"))
-      .withColumn("bd", element_at(col("bds"), (col("code") + lit(1)).cast("int")))
-      .select(col("i"), col("vec_id"), col("b"), col("bd"))
-
   /** RESIDUAL IVFADC self-search — the production composition over the
     * coupled [[IvfPqModel]] (faiss's default IVFADC layering with
-    * residual encoding, round-12 VERDICT #1). Same candidate stages as
-    * the raw-model overload (one assignment pass, probes ⋈ homes —
-    * expected nprobe·N/c pairs per query, never N²), but ADC evaluates
-    * residual codes against the per-(query, probed-centroid) residual
-    * LUT joined on (i, c_id, b, code) — c_id rides the candidate rows
-    * for free (the home join produced it). Approximation contract
-    * unchanged: candidate coverage is the IVF trade (tunable via
-    * nprobe); ADC values on surviving pairs equal the driver's
-    * residual-LUT arithmetic exactly (PqSpec pins both). Returns
-    * (i, k_id, adc, rnk). `queryIds` restricts the probing workload as
-    * in the raw overload (single id column, duplicates collapsed). */
+    * residual encoding, round-12 VERDICT #1). Same cells as the
+    * raw-model overload (one assignment pass; a query meets the members
+    * of its nprobe cells — expected nprobe·N/c per query, never N²), but
+    * the codes quantize residuals and each (query, probed cell) scores
+    * against the lookup table of the query's residual against that
+    * cell's centroid. Approximation contract unchanged: candidate
+    * coverage is the IVF trade (tunable via nprobe); ADC values on
+    * surviving pairs equal the driver's residual-LUT arithmetic exactly
+    * (PqSpec pins both). Returns (i, k_id, adc, rnk). `queryIds`
+    * restricts the probing workload as in the raw overload (single id
+    * column, duplicates collapsed). */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, im: IvfPqModel, topk: Int,
       nprobe: Int, idCol: String, queryIds: Option[DataFrame],
-      allowedIds: Option[DataFrame]): DataFrame = {
-    val spark = vecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
-    val v = normalize(vecs, vecCol, idCol)
-    val assigned = Ivf.assignments(v, im.cents, nprobe,
-      (a, b) => call_function("vec_sqdist", a, b))
-    val qids = workloadIds(queryIds)
-    def queriesOnly(df: DataFrame): DataFrame =
-      qids.fold(df)(q => df.join(broadcast(q), "vec_id"))
-    val allow = allowedRel(allowedIds)
-    def allowedOnly(df: DataFrame): DataFrame =
-      allow.fold(df)(a => df.join(a, "vec_id"))
-    val homes = assigned.filter(col("crnk") === 1)
-      .select(col("vec_id"), col("c_id"))
-    // the pre-filter point: disallowed ids leave the candidate pool
-    // HERE, before any code/LUT row is built for them
-    val candHomes = allowedOnly(homes)
-    val probes = queriesOnly(assigned)
-      .select(col("vec_id").as("i"), col("c_id"))
-    // (i, c_id, vec_id): the candidate's HOME c_id stays on the row —
-    // it is the LUT join key (which residual the pair is scored in)
-    val cand = probes.join(candHomes, "c_id")
-      .filter(col("i") =!= col("vec_id"))
-      .select("i", "c_id", "vec_id")
-    // residual codes from the SAME assignment pass's crnk = 1 rows —
-    // a second nprobe = 1 assignment would re-pay the O(N·c·d)
-    // distance stage per call (round-13 review); crnk 1 of the nprobe
-    // pass is bit-identical to a dedicated homes pass. Only candidate
-    // (allowed) rows encode — the filtered path never pays ADC prep
-    // for rows the predicate already excluded.
-    val codes = encodeBlocks(residualsFrom(v, candHomes, im.cents), "rv", im.pq)
-    adcRank(
-      adcJoinLut(cand.join(codes, "vec_id"),
-        lutResidualDF(queriesOnly(v), probes, im.pq, im.cents),
-        bounded = qids.isDefined),
-      topk)
-  }
+      allowedIds: Option[DataFrame]): DataFrame =
+    AdcScan.topk(ivfAdcInputs(vecs, vecCol, im, nprobe, idCol, queryIds,
+      allowedIds), topk)
 
+  private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
+      im: IvfPqModel, nprobe: Int, idCol: String,
+      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs = {
+    val v = normalize(vecs, vecCol, idCol)
+    builtInputs(v, nprobe, queryIds, allowedIds, im.cents, residual = true,
+      (x, _) => x, im.pq,
+      (_, homes) => encodeBlocks(residualsFrom(v, homes, im.cents), "rv", im.pq))
+  }
   /** Unfiltered shape of the residual-model search. */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, im: IvfPqModel, topk: Int,
       nprobe: Int, idCol: String, queryIds: Option[DataFrame]): DataFrame =
@@ -1712,48 +1654,29 @@ object Pq {
       fit(rot, "rv", m, k, sampleN, lloydIters))
   }
 
-  /** Rotated-residual IVFADC self-search — candidate stages identical
-    * to the residual overload (one assignment pass, probes ⋈ homes,
-    * never N²); the ADC side encodes R·(r − μ) codes and scores them
-    * against a LUT whose query residuals pass through the SAME
-    * [[rotateExpr]] (one expression tree, both sides — bit-equal by
-    * construction). Costs one extra codegen'd d×d projection per
-    * encoded/probed row over the unrotated index; no new exchange. */
+  /** Rotated-residual IVFADC self-search — cells identical to the
+    * residual overload (one assignment pass, never N²); the members
+    * encode R·(r − μ) codes and the query residuals pass through the
+    * SAME [[rotateExpr]] (one expression tree, both sides — bit-equal
+    * by construction). Costs one extra codegen'd d×d projection per
+    * encoded row and per query cell over the unrotated index. */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, rim: RotatedIvfPqModel,
       topk: Int, nprobe: Int, idCol: String,
       queryIds: Option[DataFrame],
-      allowedIds: Option[DataFrame]): DataFrame = {
-    val spark = vecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
-    val v = normalize(vecs, vecCol, idCol)
-    val assigned = Ivf.assignments(v, rim.cents, nprobe,
-      (a, b) => call_function("vec_sqdist", a, b))
-    val qids = workloadIds(queryIds)
-    def queriesOnly(df: DataFrame): DataFrame =
-      qids.fold(df)(q => df.join(broadcast(q), "vec_id"))
-    val allow = allowedRel(allowedIds)
-    def allowedOnly(df: DataFrame): DataFrame =
-      allow.fold(df)(a => df.join(a, "vec_id"))
-    val homes = assigned.filter(col("crnk") === 1)
-      .select(col("vec_id"), col("c_id"))
-    val candHomes = allowedOnly(homes)
-    val probes = queriesOnly(assigned)
-      .select(col("vec_id").as("i"), col("c_id"))
-    val cand = probes.join(candHomes, "c_id")
-      .filter(col("i") =!= col("vec_id"))
-      .select("i", "c_id", "vec_id")
-    val rotRes = residualsFrom(v, candHomes, rim.cents)
-      .select(col("vec_id"),
-        rotateExpr(col("rv"), rim.pca, rim.basisPerm).as("rv"))
-    adcRank(
-      adcJoinLut(cand.join(encodeBlocks(rotRes, "rv", rim.pq), "vec_id"),
-        lutResidualDF(queriesOnly(v), probes, rim.pq, rim.cents,
-          qr => rotateExpr(qr, rim.pca, rim.basisPerm)),
-        bounded = qids.isDefined),
-      topk)
-  }
+      allowedIds: Option[DataFrame]): DataFrame =
+    AdcScan.topk(ivfAdcInputs(vecs, vecCol, rim, nprobe, idCol, queryIds,
+      allowedIds), topk)
 
+  private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
+      rim: RotatedIvfPqModel, nprobe: Int, idCol: String,
+      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs = {
+    val v = normalize(vecs, vecCol, idCol)
+    def rotated(x: Column): Column = rotateExpr(x, rim.pca, rim.basisPerm)
+    builtInputs(v, nprobe, queryIds, allowedIds, rim.cents, residual = true,
+      (x, _) => rotated(x), rim.pq,
+      (_, homes) => encodeBlocks(residualsFrom(v, homes, rim.cents)
+        .select(col("vec_id"), rotated(col("rv")).as("rv")), "rv", rim.pq))
+  }
   /** Unfiltered shape of the rotated-residual search. */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, rim: RotatedIvfPqModel,
       topk: Int, nprobe: Int, idCol: String,
@@ -1806,71 +1729,55 @@ object Pq {
     *   2. ONE assignment pass ([[Ivf.assignments]], nprobe kept ranks):
     *      crnk 1 is each point's HOME bucket (where it is indexed),
     *      crnk 1..nprobe are the buckets it PROBES as a query;
-    *   3. candidates: probes ⋈ homes on c_id — each pair meets at most
-    *      once (one home per point), expected nprobe·N/c candidates
-    *      per query, never N²;
-    *   4. ADC: candidates ⋈ base codes by vec_id ⋈ the per-query LUT
-    *      on (i, b, code) — |cand|·m block rows, each block distance
-    *      from the |Q|·m·k LUT relation (computed once per query ×
-    *      code, amortized across candidates — the right trade whenever
-    *      candidates/query ≫ k, which c = √(8N) guarantees at scale);
-    *   5. the shared deterministic rank tail (block-ordered sums,
-    *      bounded ap_topm, ties → smaller id).
+    *   3. the kernel's inputs: query cells (one row per probing query
+    *      and probed bucket) and members (homes with their codes);
+    *   4. [[AdcScan]]: cells and members meet by bucket; each
+    *      (query, bucket) builds the query's m×k lookup table once and
+    *      scores every other member of the bucket from it (expected
+    *      nprobe·N/c candidates per query, never N²) — the right trade
+    *      whenever candidates/query ≫ k, which c = √(8N) guarantees at
+    *      scale;
+    *   5. per query, the best `topk` under (adc ASC, id ASC) — block-
+    *      ordered sums, so values equal the exhaustive kernel's.
     *
     * Approximation contract: recall loss vs [[adcTopk]] comes ONLY
     * from pairs whose home bucket the query does not probe (the
     * standard IVF trade, tunable via nprobe); ADC values on surviving
     * pairs are IDENTICAL to the exhaustive kernel's (PqSpec pins
-    * both). Exact rerank on the survivors is one join away, as with
-    * every candidate kernel in this engine. Returns
-    * (i, k_id, adc, rnk).
+    * both — at nprobe = c the rows are the exhaustive rows). Exact
+    * rerank on the survivors is one join away, as with every candidate
+    * kernel in this engine. Returns (i, k_id, adc, rnk).
     *
     * `queryIds` (optional, one long-castable column): restrict the
     * QUERY side to a workload — the corpus is still fully indexed and
-    * searched, but only those ids probe, build LUT rows, and appear as
-    * `i`. The production shape: M queries against an N-row corpus
-    * costs M·(nprobe·N/c) candidate work, not N·(…). Self-matches stay
+    * searched, but only those ids probe and appear as `i`. The
+    * production shape: M queries against an N-row corpus costs
+    * M·(nprobe·N/c) candidate work, not N·(…). Self-matches stay
     * excluded.
     *
-    * The `assigned` frame feeds two branches (homes + probes) without
-    * materialization — deliberately: the expensive distance work sits
-    * BELOW the per-vec ranking exchange in every assignment regime
-    * (map-side in the flat crossJoin; partial-aggregate in the
-    * two-level/tree ap_topm forms), so Catalyst's ReusedExchange serves
-    * the second branch from the first one's shuffle. Measured at
-    * N = 200 k (BENCH_NOTES §22): end-to-end 32.2 s ≈ the 33.5 s
-    * single-execution stage sum — no double-pay. */
+    * The assignment frame feeds both kernel inputs (homes + probes)
+    * without materialization — deliberately: the expensive distance
+    * work sits BELOW the per-vec ranking exchange in every assignment
+    * regime (map-side in the flat crossJoin; partial-aggregate in the
+    * two-level/tree ap_topm forms), and both inputs are planned as one
+    * query, so Catalyst's ReusedExchange serves the second branch from
+    * the first one's shuffle. */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, model: Model, topk: Int,
       centroids: Int = 0, nprobe: Int = 8, idCol: String = "vec_id",
       queryIds: Option[DataFrame] = None,
-      allowedIds: Option[DataFrame] = None): DataFrame = {
-    val spark = vecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
+      allowedIds: Option[DataFrame] = None): DataFrame =
+    AdcScan.topk(ivfAdcInputs(vecs, vecCol, model, centroids, nprobe, idCol,
+      queryIds, allowedIds), topk)
+
+  private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
+      model: Model, centroids: Int, nprobe: Int, idCol: String,
+      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs = {
     val v = normalize(vecs, vecCol, idCol)
     val c = if (centroids > 0) centroids else Ivf.autoCentroids(v.count())
-    val cents = Ivf.buildCentroids(v, c)
-    val assigned = Ivf.assignments(v, cents, nprobe,
-      (a, b) => call_function("vec_sqdist", a, b))
-    val qids = workloadIds(queryIds)
-    def queriesOnly(df: DataFrame): DataFrame =
-      qids.fold(df)(q => df.join(broadcast(q), "vec_id"))
-    val allow = allowedRel(allowedIds)
-    def allowedOnly(df: DataFrame): DataFrame =
-      allow.fold(df)(a => df.join(a, "vec_id"))
-    val homes = assigned.filter(col("crnk") === 1)
-      .select(col("vec_id"), col("c_id"))
-    val cand = queriesOnly(assigned).select(col("vec_id").as("i"), col("c_id"))
-      .join(allowedOnly(homes), "c_id")
-      .filter(col("i") =!= col("vec_id"))
-      .select("i", "vec_id")
-    adcRank(
-      cand
-        .join(encodeBlocks(allowedOnly(v), "v", model), "vec_id")
-        .join(lutDF(queriesOnly(v), "v", model, "vec_id"), Seq("i", "b", "code")),
-      topk)
+    builtInputs(v, nprobe, queryIds, allowedIds, Ivf.buildCentroids(v, c),
+      residual = false, (x, id) => guardedVec(x, model, id), model,
+      (allowed, _) => encodeBlocks(allowed, "v", model))
   }
-
   /** IVFADC + exact re-rank — the faiss `refine` stage completing the
     * production pipeline: an ADC-approximate shortlist from
     * [[ivfAdcTopk]] (`shortlist` ≥ topk pairs per query), then TRUE
@@ -1900,7 +1807,7 @@ object Pq {
   /** The chooser's verdict plus the trained index — a sum type because
     * the three variants have three model shapes; [[ivfAdcTopkAuto]]
     * dispatches. `explained` / `momentCv` are the probe statistics that
-    * drove the pick (surfaced for audit — ResidualProbe prints them). */
+    * drove the pick (surfaced for audit). */
   sealed trait AutoIndex {
     def explained: Double
     def momentCv: Double
@@ -1938,8 +1845,7 @@ object Pq {
     *     when explained variance alone is equivocal).
     *
     * Decision: rotated iff explained ≥ 0.15 OR momentCv ≥ 0.5.
-    * Calibration (measured via ResidualProbe on the §28 fixtures this
-    * round): isotropic explained = 0.000 with CV = 0.019; clustered
+    * Calibration (measured on the §28 fixtures, round 14): isotropic explained = 0.000 with CV = 0.019; clustered
     * explained = 0.978; zipf explained = 0.193 with CV = 0.903 — each
     * regime clears at least one threshold by a wide margin (zipf's
     * heteroscedastic tail is what the CV disjunct exists for), and the

@@ -2583,7 +2583,8 @@ object Dedup extends QueryGroup {
     // explained-variance ratio + per-centroid residual-moment CV —
     // picks raw PQ on isotropic corpora and OPQ-over-residuals on
     // clustered/heteroscedastic ones; measured recall equals
-    // max(parents) on all three ResidualProbe fixtures (this fixture
+    // max(parents) on the isotropic, clustered and heavy-tailed
+    // fixtures (this fixture
     // is isotropic, so the pick here is raw — closing BENCH_NOTES
     // §28's 0.540-vs-0.552 regression). D3-exempt like its parents;
     // PqSpec pins the pick on both regimes, the probe-stat thresholds,
@@ -2601,7 +2602,7 @@ object Dedup extends QueryGroup {
     // predicate + vector search in ONE query — label = 1 passes ~10% of
     // the corpus, so the facade's selectivity probe takes the
     // PRE-FILTER regime: disallowed ids leave the home-bucket relation
-    // before any ADC code or LUT row exists for them, and nprobe scales
+    // before any of their codes is built or scored, and nprobe scales
     // by 1/sel (capped). D3-exempt like the rest of the ANN stack
     // (chooser- and sketch-dependent); PqSpec pins recall floors vs the
     // FILTERED brute force in both regimes, GraftSpec pins the

@@ -285,32 +285,6 @@ class ApSpec extends SparkSuite {
     assert(r2.messages.count() > 0)
   }
 
-  /** (SQL executions, Spark jobs) started while `f` runs, waiting for
-    * the listener bus to quiesce before reading. `onJob` also runs on
-    * every job start. */
-  private def actionsDuring(f: => Unit, onJob: () => Unit = () => ()): (Int, Int) = {
-    val execs = new java.util.concurrent.atomic.AtomicInteger
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        onJob(); jobs.incrementAndGet(); ()
-      }
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            execs.incrementAndGet(); ()
-          case _ => ()
-        }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      var last = -1; var cur = jobs.get + execs.get
-      while (cur != last) { Thread.sleep(150); last = cur; cur = jobs.get + execs.get }
-      (execs.get, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("convergence cadence shares one materializing job across checkEvery iterations") {
     // round-7 VERDICT #1 (one job per iteration, not two) tightened by
     // round-8 VERDICT #2: the convergence collect is the ONLY

@@ -10,7 +10,8 @@ package graft
   * dedup clustering pipeline (probes + capped kernel + components), and
   * the forced-distributed AP loop (block kernel on one and on four
   * loop partitions, checkpoint discipline, regime equality with the
-  * local kernel).
+  * local kernel), and the IVF-ADC search kernel (a raw-index search at
+  * nprobe = every cell equals exhaustive ADC).
   *
   * Run as a MAIN in its own JVM (ClusterSmokeSpec forks it): a second
   * SparkContext cannot coexist with the suite's shared local[*] one. */
@@ -59,6 +60,26 @@ object ClusterSmoke {
         finally spark.conf.unset("spark.graft.ap.loopPartitions")
       require(wide.converged && wide.exemplars == loc.exemplars,
         s"4-partition loop disagrees off-driver: wide=${wide.exemplars} loc=${loc.exemplars}")
+      // 5. the IVF-ADC search kernel: its cell and merge shuffles and
+      //    task closures cross the executor JVMs. A raw-index search
+      //    probing every cell scores every pair, so its rows must be the
+      //    exhaustive relational kernel's, adc bits included
+      val vecs = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+      val pq = functions.Pq.fit(vecs, "embedding")
+      val raw = functions.Pq.rawIndexOf(vecs, "embedding", pq, centroids = 16)
+      val qids = vecs.select("vec_id").orderBy("vec_id").limit(64)
+      def bits(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+        .sortBy(t => (t._1, t._4)).toSeq
+      val searched = bits(functions.Pq.ivfAdcTopk(vecs, "embedding", raw, 5,
+        nprobe = 16, "vec_id", Some(qids), None))
+      val exhaustive = bits(functions.Pq.adcTopk(vecs.join(qids, "vec_id"), vecs,
+        "embedding", pq, 5))
+      require(searched.length == 64 * 5 && searched == exhaustive,
+        s"raw-index search disagrees with exhaustive ADC off-driver: " +
+          s"${searched.length} vs ${exhaustive.length} rows, first difference " +
+          s"${searched.zip(exhaustive).find(p => p._1 != p._2)}")
       println("CLUSTER_SMOKE_OK")
     } finally spark.stop()
   }

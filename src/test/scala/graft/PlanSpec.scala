@@ -376,52 +376,56 @@ class PlanSpec extends SparkSuite {
       s"expected exactly 1 hash exchange across the PQ encode, got $exchanges:\n$p")
   }
 
+  /** The IVF-ADC search's 100 TB shapes: neither kernel input (query
+    * cells, cell members with codes) plans a CartesianProduct, at most
+    * two nested-loop joins appear across both — the bounded broadcast
+    * centroid crossJoins of the FLAT assignment regime (c = 16 ≤ the
+    * two-level gate; a 16-row broadcast side), one assignment pass per
+    * input, which disappear past the gate where assignments switches
+    * to the ap_topm descent — and the kernel meets the inputs by cell
+    * in RDD code whose lineage holds no CartesianRDD. Returns the
+    * inputs' executed plans (cells, members). */
+  private def assertAdcKernelShape(in: graft.functions.AdcScan.Inputs): (String, String) = {
+    val Seq(cells, members) = Seq(in.cells, in.members).map { df =>
+      df.collect() // finalize the adaptive plan
+      df.queryExecution.executedPlan.toString.split("Initial Plan")(0)
+    }
+    for (p <- Seq(cells, members))
+      assert(!p.contains("CartesianProduct"), s"cartesian product in an IVFADC kernel input:\n$p")
+    val bnlj = Seq(cells, members).map(_.linesIterator.count(l =>
+      l.contains("BroadcastNestedLoopJoin") && !l.contains("Reused"))).sum
+    assert(bnlj <= 2,
+      s"$bnlj nested-loop joins — more than the two bounded centroid broadcasts:\n$cells\n$members")
+    def lineage(r: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+      r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    // CartesianRDD is private to Spark: match it, and the SQL
+    // cartesian's subclass of it, by class name
+    val cartesian = lineage(graft.functions.AdcScan.scan(in, 5)).filter(r =>
+      Iterator.iterate[Class[_]](r.getClass)(_.getSuperclass).takeWhile(_ != null)
+        .exists(_.getName == "org.apache.spark.rdd.CartesianRDD"))
+    assert(cartesian.isEmpty, s"cartesian RDD in the kernel lineage: $cartesian")
+    (cells, members)
+  }
+
   test("IVFADC composition: candidate generation and ADC are equi-joins, no cartesian") {
-    // The composed IVFADC path (round-11 VERDICT #3) must keep the
-    // 100 TB join shapes: candidates come from a c_id equi-join of
-    // probes against homes, ADC block distances from the (i, b, code)
-    // equi-join against the per-query LUT — never a CartesianProduct.
-    // The only nested-loop joins allowed are the bounded broadcast
-    // centroid crossJoins of the FLAT assignment regime (c = 16 ≤ the
-    // two-level gate; a 16-row broadcast side), which disappear past
-    // the gate where assignments switches to the ap_topm descent.
+    // The composed IVFADC path (round-11 VERDICT #3), raw codes:
+    // candidates are the members of a query's probed cells (c_id-keyed,
+    // in the kernel), never a cross product of queries and corpus.
     val emb = Tables.embeddings(spark, sf001).select("vec_id", "embedding")
     val model = graft.functions.Pq.fit(emb, "embedding")
-    val df = graft.functions.Pq.ivfAdcTopk(emb, "embedding", model, topk = 5,
-      centroids = 16, nprobe = 8)
-    df.collect() // finalize the adaptive plan
-    val p = df.queryExecution.executedPlan.toString.split("Initial Plan")(0)
-    assert(!p.contains("CartesianProduct"), s"cartesian product in IVFADC plan:\n$p")
-    val bnlj = p.linesIterator.count(l =>
-      l.contains("BroadcastNestedLoopJoin") && !l.contains("Reused"))
-    assert(bnlj <= 2,
-      s"$bnlj nested-loop joins — more than the two bounded centroid broadcasts:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"codebook join is not broadcast:\n$p")
+    assertAdcKernelShape(graft.functions.Pq.ivfAdcInputs(emb, "embedding", model,
+      centroids = 16, nprobe = 8, "vec_id", None, None))
   }
 
   test("residual IVFADC keeps the no-cartesian candidate plan") {
-    // The round-13 production path (IvfPqModel overload): candidates
-    // from the c_id equi-join, residual codes joined by vec_id, ADC
-    // from the (i, c_id, b, code) equi-join against the residual LUT —
-    // never a CartesianProduct. Allowed nested-loops: the bounded
-    // broadcast centroid crossJoins of the flat assignment regime (the
-    // query's nprobe pass + the residual encode's home pass + the LUT's
-    // probe reuse — each a 16-row broadcast side).
+    // The round-13 production path (IvfPqModel overload): the same
+    // kernel shape, and the query cells' residuals take the centroid
+    // vectors through a broadcast hash join.
     val emb = Tables.embeddings(spark, sf001).select("vec_id", "embedding")
     val im = graft.functions.Pq.fitIvfPq(emb, "embedding", centroids = 16)
-    val df = graft.functions.Pq.ivfAdcTopk(emb, "embedding", im, topk = 5,
-      nprobe = 8, idCol = "vec_id", queryIds = None)
-    df.collect() // finalize the adaptive plan
-    val p = df.queryExecution.executedPlan.toString.split("Initial Plan")(0)
-    assert(!p.contains("CartesianProduct"),
-      s"cartesian product in residual IVFADC plan:\n$p")
-    val bnlj = p.linesIterator.count(l =>
-      l.contains("BroadcastNestedLoopJoin") && !l.contains("Reused"))
-    assert(bnlj <= 3,
-      s"$bnlj nested-loop joins — more than the bounded centroid broadcasts:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"codebook/centroid joins are not broadcast:\n$p")
+    val (cells, _) = assertAdcKernelShape(graft.functions.Pq.ivfAdcInputs(emb,
+      "embedding", im, nprobe = 8, "vec_id", None, None))
+    assert(cells.contains("BroadcastHashJoin"), s"centroid join is not broadcast:\n$cells")
   }
 
   test("multi-level IVF descent: frontier never re-exchanges, vecs exchange is reused") {

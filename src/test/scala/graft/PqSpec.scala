@@ -173,6 +173,101 @@ class PqSpec extends SparkSuite {
     assert(run().sameElements(got), "IVFADC result is not deterministic")
   }
 
+  /** (i, k_id, adc bits, rnk) rows in (i, rnk) order — a bit-exact
+    * comparison key for search results. */
+  private def bits(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Int)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+      .sortBy(t => (t._1, t._4)).toSeq
+
+  private def atShufflePartitions[T](n: Int)(f: => T): T = {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try f finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
+
+  test("IVF kernel probing every cell returns the exhaustive ADC rows exactly") {
+    // nprobe = c makes every pair a candidate, and the kernel's lookup
+    // tables and block-ordered sums are the exhaustive relational
+    // kernel's arithmetic — so adc bits and rnk must be adcTopk's.
+    val model = graft.functions.Pq.fit(emb, "embedding")
+    val ivf = bits(graft.functions.Pq.ivfAdcTopk(emb, "embedding", model, 10,
+      centroids = 16, nprobe = 16))
+    val exhaustive = bits(graft.functions.Pq.adcTopk(emb, emb, "embedding", model, 10))
+    assert(ivf.length == 500 * 10, s"${ivf.length} rows")
+    val same = ivf == exhaustive
+    assert(same, s"first difference: ${ivf.zip(exhaustive).find(p => p._1 != p._2)}")
+  }
+
+  test("stored ivfpq / opq / rawpq searches are bit-identical at 1 and 4 shuffle partitions") {
+    val P = graft.functions.Pq
+    val root = java.nio.file.Files.createTempDirectory("pq-width").toString
+    val stores = Seq(
+      P.StoredIvfPq(P.ivfPqIndexCached(emb, "embedding", centroids = 16)),
+      P.StoredRotated(P.rotatedIndexOf(emb, "embedding",
+        P.fitIvfPqRotated(emb, "embedding", centroids = 16))),
+      P.StoredRaw(P.rawIndexOf(emb, "embedding", P.fit(emb, "embedding"),
+        centroids = 16)))
+    try stores.foreach { ix =>
+      val dir = s"$root/${ix.family}"
+      P.writeStoredIndex(ix, dir)
+      val stored = P.readStoredIndex(spark, dir)
+      assert(stored.family == ix.family)
+      def run(parts: Int) = atShufflePartitions(parts) {
+        bits(P.searchStoredIndex(emb, "embedding", stored, 10, nprobe = 8, "vec_id"))
+      }
+      val one = run(1)
+      val four = run(4)
+      assert(one.map(_._1).distinct.length == 500, s"${ix.family}: queries missing")
+      val same = one == four
+      assert(same, s"${ix.family}: rows differ between 1 and 4 partitions, first at " +
+        s"${one.zip(four).find(p => p._1 != p._2)}")
+    } finally graft.MarkerStore.fs(spark, root)
+      .delete(new org.apache.hadoop.fs.Path(root), true)
+  }
+
+  test("a stored code outside its codebook fails loud and names its id") {
+    import spark.implicits._
+    val ix = graft.functions.Pq.ivfPqIndexCached(emb, "embedding", centroids = 16)
+    val victim = emb.select(col("vec_id").cast("long")).orderBy("vec_id").head().getLong(0)
+    val patched = ix.copy(codes = ix.codes.withColumn("code",
+      when(col("vec_id") === victim && col("b") === 3, lit(256L)).otherwise(col("code"))))
+    val e = intercept[Exception] {
+      graft.functions.Pq.ivfAdcTopk(emb, "embedding", patched, 5, 8, "vec_id",
+        Some(Seq(victim).toDF("id"))).collect()
+    }
+    assert(e.getMessage.contains(s"code 256 outside block 3's 256-entry codebook for id $victim"),
+      s"unexpected: ${e.getMessage}")
+  }
+
+  test("a stored-index workload search runs a fixed job budget at any topk") {
+    // The search is two Catalyst inputs, planned as one query, and one
+    // kernel job, whatever topk is. A per-pair relation coming back (a
+    // candidate join, LUT rows, per-pair aggregates) adds jobs and
+    // fails this pin.
+    import spark.implicits._
+    val P = graft.functions.Pq
+    val root = java.nio.file.Files.createTempDirectory("pq-budget").toString
+    try {
+      P.writeIndex(P.ivfPqIndexCached(emb, "embedding", centroids = 16), s"$root/index")
+      emb.write.parquet(s"$root/corpus")
+      emb.select("vec_id").orderBy("vec_id").limit(64).write.parquet(s"$root/queries")
+      val corpus = spark.read.parquet(s"$root/corpus")
+      val qids = spark.read.parquet(s"$root/queries")
+      val idx = P.readIndex(spark, s"$root/index")
+      def search(k: Int): Unit = {
+        val rows = P.ivfAdcTopk(corpus, "embedding", idx, k, 8, "vec_id", Some(qids)).collect()
+        assert(rows.map(_.getLong(0)).distinct.length == 64)
+      }
+      search(5)
+      val at5 = actionsDuring(search(5))
+      val at50 = actionsDuring(search(50))
+      assert(at5 == at50, s"(SQL executions, jobs) at topk 5 $at5 != at topk 50 $at50")
+      assert(at5 == ((1, 7)), s"search budget moved: (SQL executions, jobs) = $at5")
+    } finally graft.MarkerStore.fs(spark, root)
+      .delete(new org.apache.hadoop.fs.Path(root), true)
+  }
+
   test("duplicate ids in the query workload do not scale ADC values") {
     // round-12 review: without the distinct, a workload id appearing k
     // times duplicated both its candidate pairs and its LUT rows — the
@@ -526,7 +621,7 @@ class PqSpec extends SparkSuite {
     // + #5 (a heavy-tailed mixture fixture: cluster sizes ~ Zipf s=1
     // over 32 clusters, per-cluster σ varying 0.5..3 — a few giant
     // clusters and a long tail, closer to a real embedding corpus than
-    // equal-size 10σ blobs). Measured (round-14 ResidualProbe, c=16
+    // equal-size 10σ blobs). Measured (round-14 recall probe, c=16
     // nprobe=8): zipf raw 0.331 / residual 0.346 / opq+residual 0.369
     // — the composition beats BOTH parents where spread is
     // inhomogeneous; clustered 0.783/0.805/0.824 (same ordering);
@@ -605,7 +700,7 @@ class PqSpec extends SparkSuite {
 
   test("index auto-selection: raw on isotropic, rotated on clustered, recall ≥ the picked parent's floor") {
     // round-14 VERDICT #5 — the per-corpus chooser faiss users get for
-    // free. Measured (ResidualProbe this round): isotropic probe
+    // free. Measured (round-14 recall probe): isotropic probe
     // explained=0.000 / CV=0.019 → raw (0.552, closing §28's 0.540
     // regression); clustered explained=0.978 → opq+residual (0.824);
     // zipf explained=0.193 / CV=0.903 → opq+residual (0.369). Auto
