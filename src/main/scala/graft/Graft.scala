@@ -160,7 +160,7 @@ object Graft {
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
 
   /** Incremental near-dup pairs (see
-    * [[graft.queries.Dedup.jaccardPairsIncrementalCapped]]): every
+    * [[graft.queries.Dedup.jaccardPairsHashedFrom]]'s increment mode): every
     * exact Jaccard ≥ `threshold` pair with at least one endpoint among
     * `incrementIds` — the daily-batch dedup shape, where history×history
     * never re-pairs and values stay full-corpus exact. The hot-shingle
@@ -176,9 +176,9 @@ object Graft {
     // hot-correction / hot-dominated decomposition keeps the
     // inc×corpus bucket join bounded (round-17 ADVICE #2)
     val sh = queries.Dedup.hashedShinglePlan(spark, docsOf(docs, idCol, textCol))
-    queries.Dedup.jaccardPairsIncrementalCapped(sh,
-        incrementIds.select(col(incIdCol).cast("long").as("doc_id")),
-        threshold, queries.Dedup.hotShingleProbe(sh))
+    queries.Dedup.jaccardPairsHashedFrom(sh, threshold,
+        queries.Dedup.hotShingleProbe(sh),
+        Some(incrementIds.select(col(incIdCol).cast("long").as("doc_id"))))
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("jaccard"))
   }
 

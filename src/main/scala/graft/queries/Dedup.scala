@@ -213,8 +213,10 @@ object Dedup extends QueryGroup {
     * pair-generation bucket bounded. Rows are byte-identical either way
     * (DedupSkewSpec + the dedup_jaccard_capped oracle key). */
   private[graft] def jaccardPairsHashed(s: SparkSession, docs: DataFrame,
-      threshold: Double = 0.2): DataFrame =
-    jaccardPairsHashedSkewSafe(hashedShinglePlan(s, docs), threshold)
+      threshold: Double = 0.2): DataFrame = {
+    val sh = hashedShinglePlan(s, docs)
+    jaccardPairsHashedFrom(sh, threshold, hotShingleProbe(sh))
+  }
 
   /** Every document labeled with its near-dup cluster (smallest
     * reachable doc_id over the jaccard ≥ 0.2 graph) — the shared base of
@@ -225,7 +227,7 @@ object Dedup extends QueryGroup {
   private[graft] def docClusters(s: SparkSession, dir: String): DataFrame =
     connectedComponents(
         Tables.documents(s, dir).select(col("doc_id").as("id")),
-        jaccardPairsHashedCapped(shingleSet(s, dir), 0.2, hotShinglesFor(s, dir))
+        jaccardPairsHashedFrom(shingleSet(s, dir), 0.2, hotShinglesFor(s, dir))
           .select(col("doc_a").as("id_a"), col("doc_b").as("id_b")),
         nodesComplete = true)
       .select(col("id").as("doc_id"), col("component").as("cluster"))
@@ -318,25 +320,111 @@ object Dedup extends QueryGroup {
         coalesce(col("n_contaminated_grams"), lit(0L)).as("n_contaminated_grams"))
   }
 
-  /** Jaccard ≥ threshold pairs from a hashed shingle set (which carries
-    * the per-doc set size `n` — see [[hashedShinglePlan]]) — ONE linear
-    * pipeline, no joins, no materialization: group by shingle, emit each
-    * bucket's pairs with both sizes attached → pair-count aggregate +
-    * threshold.
-    * Bucket-grouped pair generation (the minhashPairs technique) halves
-    * the shuffle volume of a shingle self-join and drops the broadcast
-    * builds; near-dup buckets are small by construction, so the
-    * within-bucket pair explode is bounded. Measured vs the join form
-    * at sf0.1: ~1.4 s → ~0.7 s (and the warmed-set form drops the
-    * explode+distinct+set-size from every rep on top of that). */
+  /** THE hashed exact-Jaccard pair kernel: Jaccard ≥ threshold pairs
+    * (doc_a < doc_b, with inter, na, nb, jaccard) from a hashed shingle
+    * set that carries the per-doc FULL set size `n` (see
+    * [[hashedShinglePlan]]). Two modes, one pair stage each:
+    *
+    *  - BATCH (`inc` = None): every pair, from [[bucketPairCounts]] — ONE
+    *    linear pipeline, no joins: group by shingle, emit each bucket's
+    *    pairs with both sizes attached, pair-count aggregate, threshold.
+    *    Bucket-grouped pair generation (the minhashPairs technique)
+    *    halves the shuffle volume of a shingle self-join and drops the
+    *    broadcast builds (measured vs the join form at sf0.1:
+    *    ~1.4 s → ~0.7 s).
+    *  - INCREMENT (`inc` = Some(doc_id relation)): every pair with at
+    *    least one endpoint in the increment, from [[incPairCounts]] —
+    *    the daily-batch dedup production runs ("dedup today's crawl
+    *    against the corpus"): O(|inc|·df) bucket work instead of
+    *    O(N·df), history×history never pairs. Values use FULL set sizes,
+    *    so the rows are exactly batch mode's rows for the pairs that touch
+    *    the increment (DedupSkewSpec and the dedup_incremental oracle
+    *    key pin it).
+    *
+    * HOT-SHINGLE CAP: with `hotIds` empty (every balanced corpus — the
+    * production entries probe with [[hotShingleProbe]]) the plan is the
+    * plain pair stage. Otherwise a shingle in more than the cap's
+    * documents would make its bucket quadratic in df (a stopword
+    * trigram at 100 TB has df in the millions), and the kernel
+    * decomposes, same rows to the byte:
+    *
+    *   1. COLD pairs: the pair stage over below-cap shingles only —
+    *      every bucket ≤ dfCap docs. `inter` is partial (cold
+    *      co-occurrences only).
+    *   2. HOT correction: each candidate pair joins both sides' hot
+    *      rows — (doc, shingle) rows of above-cap shingles, a LINEAR
+    *      relation — and the per-pair hot co-occurrence count is added,
+    *      making `inter` exact. Expansion is |candidates| × hot-shingles
+    *      -per-doc, never df².
+    *   3. HOT-DOMINATED sweep: a qualifying pair the cold stage cannot
+    *      see shares ONLY hot shingles, so inter ≤ min(h_a, h_b) and
+    *      inter ≥ τ′(n_a+n_b)/(1+τ′) force h·(1+τ′) ≥ τ′·n for BOTH
+    *      docs, where τ′ = τ − 0.00005 is the effective threshold the
+    *      rounded kernel actually applies (round-half boundary) —
+    *      both are "hot-dominated" (≥ τ′/(1+τ′) of their shingles
+    *      ultra-common; stopword-soup documents). The pair stage runs
+    *      on that sub-corpus alone — buckets there are ≤ |hd| ≤ `maxHd`
+    *      docs — with full shingle sets, so its values are exact too.
+    *      Pairs caught by both stages are identical rows; distinct()
+    *      collapses them.
+    *
+    * The union is therefore exactly the plain pair stage's output:
+    * complete (every qualifying pair shares a cold shingle or has both
+    * ends hot-dominated) with exact inter/na/nb on every emitted row. */
   private[graft] def jaccardPairsHashedFrom(sh: DataFrame,
-      threshold: Double): DataFrame =
-    withJaccard(bucketPairCounts(sh)).filter(col("jaccard") >= threshold)
+      threshold: Double, hotIds: Seq[Long] = Nil,
+      inc: Option[DataFrame] = None, maxHd: Int = 4096): DataFrame = {
+    val incIds = inc.map(_.select(col("doc_id")).distinct())
+    def pairCounts(s: DataFrame): DataFrame =
+      incIds.fold(bucketPairCounts(s))(incPairCounts(s, _))
+    def jac(pairs: DataFrame): DataFrame =
+      withJaccard(pairs).filter(col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "inter", "na", "nb", "jaccard")
+    if (hotIds.isEmpty) jac(pairCounts(sh))
+    else {
+      val shCold = sh.filter(!col("shingle").isin(hotIds: _*))
+      val shHot = sh.filter(col("shingle").isin(hotIds: _*))
+      // 1. cold candidates with partial inter
+      val cold = pairCounts(shCold)
+      // 2. exact hot co-occurrence count per candidate pair
+      val hotInter = cold.select("doc_a", "doc_b")
+        .join(shHot.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
+        .join(shHot.select(col("doc_id").as("doc_b"), col("shingle")),
+          Seq("doc_b", "shingle"))
+        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("hinter"))
+      val coldExact = cold
+        .join(hotInter, Seq("doc_a", "doc_b"), "left")
+        .withColumn("inter", col("inter") + coalesce(col("hinter"), lit(0L)))
+        .drop("hinter")
+      // 3. hot-dominated sub-corpus sweep (h·(1+τ′) ≥ τ′·n, the provable
+      //    superset of both endpoints of any pair the cold stage misses).
+      //    τ′ is the EFFECTIVE threshold at the rounding boundary: the
+      //    kernel thresholds on round(jaccard, 4) (HALF_UP), so a pair
+      //    qualifies iff its true Jaccard ≥ τ − 0.00005 — deriving the
+      //    filter from the unrounded τ let a hot-only pair sitting in
+      //    [τ−5e−5, τ) pass the plain kernel while both endpoints failed
+      //    the sweep filter, breaking byte-exact equivalence at the
+      //    boundary (round-9 ADVICE). Floored at 0 (a non-positive τ′
+      //    flips the inequality; at 0 the filter keeps every hot doc —
+      //    conservative, still a superset). In increment mode the
+      //    sweep's pair stage keeps the increment restriction.
+      val tEff = math.max(threshold - 0.00005, 0.0)
+      val hd = shHot.groupBy("doc_id")
+        .agg(count(lit(1)).as("h"), max(col("n")).as("hn"))
+        .filter(col("h") * (1.0 + tEff) >= lit(tEff) * col("hn"))
+        .select("doc_id")
+      val hdProbe = hd.limit(maxHd + 1).collect()
+      require(hdProbe.length <= maxHd,
+        s"more than $maxHd documents are hot-dominated (≥ ${tEff / (1 + tEff)} " +
+          "of their shingles are above the df cap) — this is not an outlier " +
+          "corpus; raise the cap or maxHd")
+      val sweep = jac(pairCounts(sh.join(hd, Seq("doc_id"), "left_semi")))
+      jac(coldExact).unionByName(sweep).distinct()
+    }
+  }
 
-  /** The bucket-grouped pair stage alone: (doc_a, doc_b, inter, na, nb)
-    * with inter = number of co-occurring shingles IN `sh`. Split out so
-    * the skew-safe kernel can compute a partial count over the cold
-    * shingles and correct it before thresholding. */
+  /** The bucket-grouped pair stage of batch mode: (doc_a, doc_b, inter,
+    * na, nb) with inter = number of co-occurring shingles IN `sh`. */
   private def bucketPairCounts(sh: DataFrame): DataFrame =
     sh
       .groupBy("shingle")
@@ -352,35 +440,14 @@ object Dedup extends QueryGroup {
     pairs.withColumn("jaccard",
       round(col("inter").cast("double") / (col("na") + col("nb") - col("inter")), 4))
 
-  /** INCREMENTAL exact-Jaccard pairs: every pair with at least one
-    * endpoint in the increment, at full-corpus exactness — the daily-
-    * batch dedup production actually runs ("dedup today's crawl against
-    * the corpus") where re-pairing history×history would redo
-    * yesterday's work. Pair generation joins the INCREMENT's shingle
-    * rows against the whole corpus's — O(|inc|·df) bucket work instead
-    * of O(N·df); history×history pairs never form. Jaccard values use
-    * FULL set sizes, so emitted pairs are byte-identical to the batch
-    * kernel's rows for the same pairs (the suite pins result ≡
-    * dedup_jaccard restricted to increment-touching pairs). Inc–inc
-    * pairs arrive in both orientations from the join; the
-    * (ia < ib OR ib ∉ inc) filter keeps exactly one. The hot-shingle
-    * skew guard is [[jaccardPairsIncrementalCapped]] — this uncapped
-    * form is that kernel's `hotIds = Nil` fast path (a hot shingle
-    * would otherwise explode the inc×corpus bucket join at
-    * |inc-rows-in-bucket|·df — round-17 ADVICE #2); production entries
-    * probe and route automatically. `shAll`: (doc_id, shingle, n);
-    * `incIds`: (doc_id). */
-  private[graft] def jaccardPairsIncremental(shAll: DataFrame,
-      incIds: DataFrame, threshold: Double): DataFrame =
-    jaccardPairsIncrementalCapped(shAll, incIds, threshold, Nil)
-
-  /** Increment-touching pair candidates with (partial, if `sh` is a
-    * cold subset) co-occurrence counts — the pair stage of the
-    * incremental kernel, split out like [[bucketPairCounts]] so the
-    * capped decomposition can correct a cold partial count. Carries
-    * both endpoints' FULL set sizes (na, nb) through the pair
-    * aggregate, exactly as [[bucketPairCounts]] does (round 22): `n`
-    * is a per-doc constant already on every shingle row (written by
+  /** The pair stage of increment mode: increment-touching pairs with
+    * (partial, if `sh` is a cold subset) co-occurrence counts. Pair
+    * generation joins the INCREMENT's shingle rows against every row of
+    * `sh`; inc–inc pairs arrive in both orientations from the join, and
+    * the (ia < ib OR ib ∉ inc) filter keeps exactly one. Carries both
+    * endpoints' FULL set sizes (na, nb) through the pair aggregate,
+    * exactly as [[bucketPairCounts]] does (round 22): `n` is a per-doc
+    * constant already on every shingle row (written by
     * [[hashedShinglePlan]] / the shingle store), so reading it off the
     * joined rows replaces the corpus-wide `groupBy(doc_id).max(n)`
     * aggregate the jaccard stage used to re-derive sizes with — per
@@ -404,62 +471,6 @@ object Dedup extends QueryGroup {
       .agg(count(lit(1)).as("inter"),
         max(when(col("ia") < col("ib"), col("nia")).otherwise(col("nib"))).as("na"),
         max(when(col("ia") < col("ib"), col("nib")).otherwise(col("nia"))).as("nb"))
-  }
-
-  /** [[jaccardPairsIncremental]] with the batch kernel's hot-shingle
-    * decomposition ([[jaccardPairsHashedCapped]], ported): cold pairs
-    * from below-cap buckets (every bucket ≤ dfCap docs, so the
-    * inc×corpus join is bounded), the hot co-occurrence correction per
-    * candidate (|candidates| × hot-shingles-per-doc, never df²), and
-    * the hot-dominated sweep — a qualifying pair the cold stage cannot
-    * see shares only hot shingles, forcing BOTH endpoints past the
-    * h·(1+τ′) ≥ τ′·n bound, so the plain incremental kernel over that
-    * bounded sub-corpus (with the increment restricted to it) catches
-    * every such pair at full-set exactness. Rows are byte-identical to
-    * the uncapped kernel (DedupSkewSpec pins the equivalence with a
-    * forcing cap); pairs caught twice collapse via distinct(). */
-  private[graft] def jaccardPairsIncrementalCapped(shAll: DataFrame,
-      incIds: DataFrame, threshold: Double, hotIds: Seq[Long],
-      maxHd: Int = 4096): DataFrame = {
-    val inc = incIds.select(col("doc_id")).distinct()
-    // sizes ride the pair rows (incPairCounts carries na/nb — full
-    // set sizes even on a cold subset, since `n` is the per-doc FULL
-    // count on every row): no corpus-wide size aggregate, no pair-side
-    // joins (round 22; the batch kernel has always worked this way)
-    def jac(pairs: DataFrame): DataFrame =
-      withJaccard(pairs)
-        .filter(col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    if (hotIds.isEmpty) jac(incPairCounts(shAll, inc))
-    else {
-      val shCold = shAll.filter(!col("shingle").isin(hotIds: _*))
-      val shHot = shAll.filter(col("shingle").isin(hotIds: _*))
-      val cold = incPairCounts(shCold, inc)
-      val hotInter = cold.select("doc_a", "doc_b")
-        .join(shHot.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
-        .join(shHot.select(col("doc_id").as("doc_b"), col("shingle")),
-          Seq("doc_b", "shingle"))
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("hinter"))
-      val coldExact = cold
-        .join(hotInter, Seq("doc_a", "doc_b"), "left")
-        .withColumn("inter", col("inter") + coalesce(col("hinter"), lit(0L)))
-        .drop("hinter")
-      // τ′ = effective threshold at the round-4 boundary — the same
-      // derivation (and the same reason) as the batch kernel's sweep
-      val tEff = math.max(threshold - 0.00005, 0.0)
-      val hd = shHot.groupBy("doc_id")
-        .agg(count(lit(1)).as("h"), max(col("n")).as("hn"))
-        .filter(col("h") * (1.0 + tEff) >= lit(tEff) * col("hn"))
-        .select("doc_id")
-      val hdProbe = hd.limit(maxHd + 1).collect()
-      require(hdProbe.length <= maxHd,
-        s"more than $maxHd documents are hot-dominated (≥ ${tEff / (1 + tEff)} " +
-          "of their shingles are above the df cap) — this is not an outlier " +
-          "corpus; raise the cap or maxHd")
-      val sweep = jac(incPairCounts(
-        shAll.join(hd, Seq("doc_id"), "left_semi"), inc))
-      jac(coldExact).unionByName(sweep).distinct()
-    }
   }
 
   /** Deterministic DBSCAN (Ester et al. 1996) over a precomputed
@@ -573,42 +584,6 @@ object Dedup extends QueryGroup {
     * explode). 1024 bounds any single cold bucket at ~0.5 M pairs. */
   private[graft] val HotShingleDfCap: Int = 1024
 
-  /** Exact Jaccard ≥ threshold pairs with the HOT-SHINGLE df cap — the
-    * skew-safe form of [[jaccardPairsHashedFrom]], same rows to the byte
-    * (the suite proves pair-set + value equivalence on fixtures and on a
-    * synthetic stopword corpus). A bounded probe (limit(maxHot+1), the
-    * house discipline) finds shingles with df > `dfCap`; when none exist
-    * — every balanced corpus — the plan IS the plain kernel. Otherwise:
-    *
-    *   1. COLD pairs: the bucket-pair pipeline over below-cap shingles
-    *      only — every bucket ≤ dfCap docs, so no task holds more than
-    *      dfCap²/2 pairs. `inter` is partial (cold co-occurrences only).
-    *   2. HOT correction: each candidate pair joins both sides' hot
-    *      rows — (doc, shingle) rows of above-cap shingles, a LINEAR
-    *      relation — and the per-pair hot co-occurrence count is added,
-    *      making `inter` exact. Expansion is |candidates| × hot-shingles
-    *      -per-doc, never df².
-    *   3. HOT-DOMINATED sweep: a qualifying pair the cold stage cannot
-    *      see shares ONLY hot shingles, so inter ≤ min(h_a, h_b) and
-    *      inter ≥ τ′(n_a+n_b)/(1+τ′) force h·(1+τ′) ≥ τ′·n for BOTH
-    *      docs, where τ′ = τ − 0.00005 is the effective threshold the
-    *      rounded kernel actually applies (round-half boundary) —
-    *      both are "hot-dominated" (≥ τ′/(1+τ′) of their shingles
-    *      ultra-common; stopword-soup documents). The plain kernel runs
-    *      on that sub-corpus alone — buckets there are ≤ |hd| ≤ `maxHd`
-    *      docs — with full shingle sets, so its values are exact too.
-    *      Pairs caught by both stages are identical rows; distinct()
-    *      collapses them.
-    *
-    * The union is therefore exactly the plain kernel's output: complete
-    * (every qualifying pair shares a cold shingle or has both ends
-    * hot-dominated) with exact inter/na/nb on every emitted row. */
-  private[graft] def jaccardPairsHashedSkewSafe(sh: DataFrame,
-      threshold: Double, dfCap: Int = HotShingleDfCap,
-      maxHot: Int = 1 << 16, maxHd: Int = 4096): DataFrame =
-    jaccardPairsHashedCapped(sh, threshold,
-      hotShingleProbe(sh, dfCap, maxHot), maxHd)
-
   /** Bounded probe for above-cap shingles (one job; memoizable for a
     * fixed relation — [[docClusters]] caches it per session/dir so the
     * bench's steady-state reps pay no probe). */
@@ -622,55 +597,6 @@ object Dedup extends QueryGroup {
       s"more than $maxHot shingles exceed document frequency $dfCap — this " +
         "is not an outlier vocabulary; raise dfCap or maxHot")
     hot.map(_.getLong(0)).toSeq
-  }
-
-  private[graft] def jaccardPairsHashedCapped(sh: DataFrame,
-      threshold: Double, hotIds: Seq[Long], maxHd: Int = 4096): DataFrame = {
-    if (hotIds.isEmpty) jaccardPairsHashedFrom(sh, threshold)
-    else {
-      val shCold = sh.filter(!col("shingle").isin(hotIds: _*))
-      val shHot = sh.filter(col("shingle").isin(hotIds: _*))
-      // 1. cold candidates with partial inter
-      val cold = bucketPairCounts(shCold)
-      // 2. exact hot co-occurrence count per candidate pair
-      val hotInter = cold.select("doc_a", "doc_b")
-        .join(shHot.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
-        .join(shHot.select(col("doc_id").as("doc_b"), col("shingle")),
-          Seq("doc_b", "shingle"))
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("hinter"))
-      val coldExact = cold
-        .join(hotInter, Seq("doc_a", "doc_b"), "left")
-        .withColumn("inter", col("inter") + coalesce(col("hinter"), lit(0L)))
-        .drop("hinter")
-      // 3. hot-dominated sub-corpus sweep (h·(1+τ′) ≥ τ′·n, the provable
-      //    superset of both endpoints of any pair the cold stage misses).
-      //    τ′ is the EFFECTIVE threshold at the rounding boundary: the
-      //    kernel thresholds on round(jaccard, 4) (HALF_UP), so a pair
-      //    qualifies iff its true Jaccard ≥ τ − 0.00005 — deriving the
-      //    filter from the unrounded τ let a hot-only pair sitting in
-      //    [τ−5e−5, τ) pass the plain kernel while both endpoints failed
-      //    the sweep filter, breaking byte-exact equivalence at the
-      //    boundary (round-9 ADVICE). Floored at 0 (a non-positive τ′
-      //    flips the inequality; at 0 the filter keeps every hot doc —
-      //    conservative, still a superset).
-      val tEff = math.max(threshold - 0.00005, 0.0)
-      val hd = shHot.groupBy("doc_id")
-        .agg(count(lit(1)).as("h"), max(col("n")).as("hn"))
-        .filter(col("h") * (1.0 + tEff) >= lit(tEff) * col("hn"))
-        .select("doc_id")
-      val hdProbe = hd.limit(maxHd + 1).collect()
-      require(hdProbe.length <= maxHd,
-        s"more than $maxHd documents are hot-dominated (≥ ${tEff / (1 + tEff)} " +
-          "of their shingles are above the df cap) — this is not an outlier " +
-          "corpus; raise the cap or maxHd")
-      val hdSweep = jaccardPairsHashedFrom(
-        sh.join(hd, Seq("doc_id"), "left_semi"), threshold)
-      withJaccard(coldExact).filter(col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "inter", "na", "nb", "jaccard")
-        .unionByName(
-          hdSweep.select("doc_a", "doc_b", "inter", "na", "nb", "jaccard"))
-        .distinct()
-    }
   }
 
   /** Embeddings as double vectors with L2 norms (vec_dot is the native
@@ -2123,7 +2049,7 @@ object Dedup extends QueryGroup {
     // The string-shingle self-join form stays available as the
     // letter-exact reference (jaccardPairs; ComponentsSpec baseline).
     "dedup_jaccard" -> ((s, dir) =>
-      jaccardPairsHashedCapped(shingleSet(s, dir), 0.2, hotShinglesFor(s, dir))
+      jaccardPairsHashedFrom(shingleSet(s, dir), 0.2, hotShinglesFor(s, dir))
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")),
 
@@ -2138,13 +2064,13 @@ object Dedup extends QueryGroup {
     // where pair-generation buckets stay bounded at any corpus scale.
     "dedup_jaccard_capped" -> ((s, dir) => {
       val sh = hashedShinglePlan(s, Tables.documents(s, dir))
-      jaccardPairsHashedCapped(sh, 0.2,
+      jaccardPairsHashedFrom(sh, 0.2,
           hotShingleProbe(sh, dfCap = 4), maxHd = 1 << 14)
         .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
     }),
 
-    // Incremental dedup (kernel scaladoc on [[jaccardPairsIncremental]]):
+    // Incremental dedup (increment mode of [[jaccardPairsHashedFrom]]):
     // the doc_id % 5 == 0 slice plays today's batch; every emitted pair
     // touches it, history×history never pairs, values are full-corpus
     // exact. The oracle is the BATCH pair SQL filtered to
@@ -2152,9 +2078,9 @@ object Dedup extends QueryGroup {
     // loses nothing and invents nothing.
     "dedup_incremental" -> ((s, dir) => {
       val sh = shingleSet(s, dir)
-      jaccardPairsIncrementalCapped(sh,
-          sh.select("doc_id").distinct().filter(col("doc_id") % 5 === 0),
-          0.2, hotShinglesFor(s, dir))
+      jaccardPairsHashedFrom(sh, 0.2, hotShinglesFor(s, dir),
+          Some(sh.select("doc_id").distinct().filter(col("doc_id") % 5 === 0)))
+        .select("doc_a", "doc_b", "jaccard")
         .orderBy("doc_a", "doc_b")
     }),
 
@@ -2675,7 +2601,7 @@ object Dedup extends QueryGroup {
         when(col("doc_id") % 10 < 8, "train")
           .when(col("doc_id") % 10 === 8, "val")
           .otherwise("test").as("split"))
-      val pairs = jaccardPairsHashedCapped(shingleSet(s, dir), 0.2,
+      val pairs = jaccardPairsHashedFrom(shingleSet(s, dir), 0.2,
         hotShinglesFor(s, dir))
       val und = pairs.select(col("doc_a").as("doc_id"), col("doc_b").as("other"))
         .unionByName(pairs.select(col("doc_b").as("doc_id"),

@@ -383,165 +383,190 @@ object Streams {
     * number of batch docs kept, or -1 when the high-water mark skipped
     * a re-delivered id. */
   def applyDedupBatch(batch: DataFrame, batchId: Long, targetDir: String,
-      threshold: Double = 0.2): Long = {
+      threshold: Double = 0.2): Long =
+    applyIngestBatch(batch, batchId,
+      new LexicalStore(batch.sparkSession, targetDir, threshold))
+
+  /** The one ingest-dedup transaction both sinks run; an [[IngestStore]]
+    * value supplies what differs between them. Steps, in order:
+    *
+    *  1. the high-water check: a `batchId` at or below the mark skips
+    *     without touching data;
+    *  2. FRONT OVERLAP (§2.6, round 22) under ONE AQE-off window (a
+    *     per-thunk conf flip would race the other branches' planning):
+    *     the id-hygiene probe beside the store's batch-bounded front
+    *     work. On a bad batch that work is wasted and released; the
+    *     error still precedes every write;
+    *  3. the store's candidate pairs, eager-checkpointed — they feed
+    *     the components and the stats row;
+    *  4. the shared D6 keep rule ([[dedupKeepParts]]), then the store's
+    *     keep decision (the semantic replay rule);
+    *  5. BACK OVERLAP under the store's AQE regime: the store lands the
+    *     survivors beside the `_dups` provenance sidecar (no dependency
+    *     between them once the keep relations are checkpointed);
+    *  6. ONE stats action ([[statCounts]], AQE off: every input is
+    *     batch-bounded or the written increment), then the store's
+    *     after-landing step and its last `_stats` column;
+    *  7. the `_stats` row, then the `_commits/<batchId>` marker LAST.
+    *
+    * Every checkpoint the transaction takes goes into ONE pin list,
+    * released in the one finally: a failure at any step releases
+    * exactly what already landed. */
+  private def applyIngestBatch(batch: DataFrame, batchId: Long,
+      store: IngestStore): Long = {
     val spark = batch.sparkSession
-    val committed = committedIds(spark, targetDir)
+    val t = store.targetDir
+    val committed = committedIds(spark, t)
     require(committed.nonEmpty,
-      s"dedup corpus $targetDir is not initialized - call initDedupCorpus first")
+      s"${store.label} $t is not initialized - call ${store.seedCall} first")
     if (batchId <= committed.max) return -1L
-    val corpus = readDedupCorpus(spark, targetDir)
-    val b = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    // checkpoints released in the one finally below (vars so a failure
-    // at any point releases exactly what already landed)
-    var shB: DataFrame = null
-    var pairs: DataFrame = null
-    var keepCp: DataFrame = null
-    var compCp: DataFrame = null
-    var compCorpusCp: DataFrame = null
+    val b = batch.select(col("doc_id").cast("long").as("doc_id"),
+      col(store.payload))
+    val bIds = b.select("doc_id")
+    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      val cp = df.localCheckpoint(true)
+      pins.synchronized { pins += cp }
+      cp
+    }
     try {
-      // FRONT OVERLAP (§2.6, round 22): the id-hygiene probe and the
-      // batch shingle checkpoint share no dependency — one reads corpus
-      // ids + batch ids, the other explodes batch text — so they run
-      // concurrently under ONE AQE-off window (both plans are
-      // batch-bounded; a per-thunk conf flip would race the other's
-      // planning and could restore the wrong value). On a bad batch the
-      // shingle checkpoint is wasted work, released in the finally —
-      // the error still precedes every write.
-      //
+      val corpusIds = store.open(b, batchId).select("doc_id")
       // id hygiene, ONE bounded probe (the hierFlatten union-probe
       // discipline): a batch id already in the corpus — or repeated
-      // within the batch — would merge two documents' shingle sets into
-      // one phantom doc and silently corrupt every pair downstream.
-      // The corpus side reads doc_id ONLY (column-pruned — history text
-      // is never decoded by any stage of this transaction; ~0.2% of
-      // corpus bytes per batch at the 100 TB shape, round-19 task 6)
-      // and STREAMS through a broadcast semi-join against the batch
-      // ids; ONE global-aggregate job — min(struct) names a
-      // deterministic offender and the clean path scans every partition
-      // either way (round 22).
-      //
-      // batch shingles from TEXT (the only text explode of the
-      // transaction); corpus shingles from the materialized store —
-      // identical rows to a fresh re-shingle (the store persisted
-      // exactly hashedShinglePlan's output when each survivor landed).
-      // EAGER-CHECKPOINTED (round 22): the explode+hash+distinct
-      // subtree otherwise re-executes inside every consumer of shAll
-      // (the pair kernel reads it on both bucket-join sides) plus the
-      // df probe; batch-sized storage.
-      val bad = graft.Checkpoints.withAqeOff(spark) {
-        inParallel(Seq(
-          () => corpus.select("doc_id")
-            .join(broadcast(b.select("doc_id")), Seq("doc_id"), "left_semi")
+      // within the batch — would merge two documents into one phantom
+      // doc and silently corrupt every pair downstream. The corpus side
+      // reads doc_id ONLY (column-pruned — ~8 bytes/doc at 100 TB) and
+      // STREAMS through a broadcast semi-join against the batch ids;
+      // ONE global-aggregate job — min(struct) names a deterministic
+      // offender. Checked against the COMMITTED corpus: a semantic
+      // crash retry finds its batch in the index, not the corpus.
+      val front = graft.Checkpoints.withAqeOff(spark) {
+        inParallel((() => corpusIds
+            .join(broadcast(bIds), Seq("doc_id"), "left_semi")
             .select(col("doc_id"), lit("already in the corpus").as("kind"))
             .unionByName(b.groupBy("doc_id").agg(count(lit(1)).as("c"))
               .filter(col("c") > 1)
               .select(col("doc_id"),
                 lit("repeated within the batch").as("kind")))
             .agg(min(struct(col("doc_id"), col("kind"))).as("w"))
-            .head(),
-          () => {
-            shB = graft.queries.Dedup.hashedShinglePlan(spark, b)
-              .localCheckpoint(true)
-            ()
-          })).head.asInstanceOf[org.apache.spark.sql.Row]
+            .head()) +: store.front(b, pin))
       }
+      val bad = front.head.asInstanceOf[org.apache.spark.sql.Row]
       if (!bad.isNullAt(0)) {
         val r = bad.getStruct(0)
         throw new IllegalArgumentException(
-          s"applyDedupBatch: doc_id ${r.get(0)} is ${r.getString(1)} - " +
+          s"${store.sink}: doc_id ${r.get(0)} is ${r.getString(1)} - " +
             "ingest ids must be globally unique")
       }
-      val shAll = readShingleStore(spark, targetDir).unionByName(shB)
-      // hot-shingle probe from MERGED df partials: per-increment counts
-      // (written once per batch, compacted by vacuum) plus the batch's
-      // own — sums to exactly the df the round-18 full recount measured,
-      // because every increment's shingle rows are distinct per doc
-      val dfB = shB.groupBy("shingle").agg(count(lit(1)).as("df"))
-      val dfAll = readDfStore(spark, targetDir).unionByName(dfB)
-        .groupBy("shingle").agg(sum(col("df")).as("df"))
-      val hot = hotFromDfs(dfAll)
-      // the pair relation feeds the components probe AND the stats row —
-      // eager-checkpoint so the bucket kernel executes once (released
-      // before return)
-      pairs = graft.queries.Dedup.jaccardPairsIncrementalCapped(
-          shAll, b.select("doc_id"), threshold, hot)
-        .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-        .localCheckpoint(true)
-      val (keep, comp, compCorpus) =
-        dedupKeepParts(b.select("doc_id"), corpus.select("doc_id"), pairs)
-      keepCp = keep; compCp = comp; compCorpusCp = compCorpus
-      // BACK OVERLAP (§2.6, round 22): the survivor/store write chain
-      // and the provenance sidecar share no dependency once the keep
-      // relations are checkpointed — the chain writes the increment and
-      // derives its shingle/df stores from the WRITTEN files (store ≡
-      // docs exactly, even across a crash retry), the sidecar writes
-      // the batch-graph attribution. Both branches run with AQE ON (the
-      // dups write loses its round-22 withAqeOff wrapper here: a conf
-      // flip would race the write chain's planning — its few extra
-      // adaptive stage jobs run on cores the chain leaves idle, and the
-      // serial latency they replaced is gone).
-      inParallel(Seq(
-        () => {
-          // keep is checkpointed (no size stats for AQE) and
-          // batch-bounded: broadcast it explicitly so the survivor
-          // projection never shuffles the batch
-          b.join(broadcast(keep), Seq("doc_id"), "left_semi")
-            .write.mode("overwrite").parquet(s"$targetDir/inc=$batchId")
-          graft.queries.Dedup.hashedShinglePlan(spark,
-              spark.read.schema(lexDocsSchema)
-                .parquet(s"$targetDir/inc=$batchId"))
-            .write.mode("overwrite")
-            .parquet(s"$targetDir/_shingles/inc=$batchId")
-          spark.read.schema(shingleStoreSchema)
-            .parquet(s"$targetDir/_shingles/inc=$batchId")
-            .groupBy("shingle").agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(s"$targetDir/_dfs/inc=$batchId")
-        },
-        () => {
-          // dedup PROVENANCE sidecar (round 19): every dropped batch
-          // doc mapped to the landed/kept document it duplicated — the
-          // audit trail attribution and takedown pipelines need.
-          // Component-sized work, no corpus scan; coalesce(1) keeps
-          // the sidecar a single file.
-          dupAttribution(b.select("doc_id"), compCorpus, keep, comp)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$targetDir/_dups/inc=$batchId")
-        }))
-      val landed = spark.read.schema(lexDocsSchema)
-        .parquet(s"$targetDir/inc=$batchId")
-      // observability sidecar (round-18 VERDICT #9): the numbers a
-      // production dedup sink is operated by. ONE action for all four
-      // counts (round 22 — the separate count() calls paid four job
-      // dispatches plus AQE stage jobs each): a union of global
-      // aggregates over already-built relations — no corpus scan,
-      // values identical by construction; AQE off (serial site, every
-      // input batch-bounded or a written increment).
-      val cnt = graft.Checkpoints.withAqeOff(spark) {
-        statCounts(Seq(
-          b,
-          landed,
-          comp.join(b.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-            .join(compCorpus.select(col("component")),
-              Seq("component"), "left_semi"),
+      val pairs = pin(store.pairs(b))
+      val (keepDerived, comp, compCorpus) =
+        dedupKeepParts(bIds, corpusIds, pairs, pin)
+      val keep = store.keep(bIds, keepDerived, pin)
+      def back(): Unit = inParallel(Seq(
+        // keep is checkpointed (no size stats for AQE) and batch-bounded:
+        // broadcast it so the survivor projection never shuffles the batch
+        () => store.land(b.join(broadcast(keep), Seq("doc_id"), "left_semi"),
+          batchId),
+        // dedup PROVENANCE (round 19): every dropped batch doc mapped to
+        // the landed/kept document it duplicated; component-sized work,
+        // no corpus scan; coalesce(1) keeps the sidecar a single file
+        () => dupAttribution(bIds, compCorpus, keep, comp)
+          .coalesce(1)
+          .write.mode("overwrite").parquet(s"$t/_dups/inc=$batchId")))
+      if (store.backAqeOff) graft.Checkpoints.withAqeOff(spark)(back()) else back()
+      // counts from the WRITTEN increment (store ≡ docs even across a
+      // crash retry); the kept count also gates the store's final step
+      val landed = store.landed(batchId)
+      val Seq(nBatch, n, nCorpusDup, nPairs) = graft.Checkpoints.withAqeOff(spark) {
+        statCounts(Seq(b, landed,
+          comp.join(bIds.select(col("doc_id").as("id")), Seq("id"), "left_semi")
+            .join(compCorpus.select(col("component")), Seq("component"), "left_semi"),
           pairs))
       }
-      val (nBatch, n, nCorpusDup, nPairs) = (cnt(0), cnt(1), cnt(2), cnt(3))
-      import spark.implicits._
-      Seq((batchId, nBatch, n, nCorpusDup, nBatch - n - nCorpusDup,
-          nPairs, hot.length.toLong))
-        .toDF("batch_id", "n_batch", "n_kept", "n_dropped_corpus_dup",
-          "n_dropped_within_batch", "n_pairs", "n_hot_shingles")
+      val last = store.finish(landed, n, batchId)
+      spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(batchId,
+          nBatch, n, nCorpusDup, nBatch - n - nCorpusDup, nPairs, last)),
+          StructType(Seq("batch_id", "n_batch", "n_kept", "n_dropped_corpus_dup",
+            "n_dropped_within_batch", "n_pairs")
+            .map(StructField(_, LongType, nullable = false)) :+ store.statField))
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"$targetDir/_stats/$batchId")
-      commitMarker(spark, targetDir, batchId)
+        .write.mode("overwrite").parquet(s"$t/_stats/$batchId")
+      commitMarker(spark, t, batchId)
       n
-    } finally {
-      if (pairs != null) graft.Checkpoints.release(pairs)
-      if (shB != null) graft.Checkpoints.release(shB)
-      if (keepCp != null) graft.Checkpoints.release(keepCp)
-      if (compCp != null) graft.Checkpoints.release(compCp)
-      if (compCorpusCp != null) graft.Checkpoints.release(compCorpusCp)
+    } finally pins.foreach(graft.Checkpoints.release)
+  }
+
+  /** What one ingest sink does differently inside [[applyIngestBatch]].
+    * A fresh value per call: the transaction calls the hooks in
+    * declaration order, and they may keep per-batch state for the later
+    * ones. The AQE
+    * regime of the back overlap (`backAqeOff`) and the last `_stats`
+    * column (`statField`) are constants of the store. */
+  private abstract class IngestStore(val targetDir: String, val sink: String,
+      val label: String, val seedCall: String, val payload: String,
+      val statField: StructField, val backAqeOff: Boolean) {
+    /** Driver-side setup after the high-water check; the corpus (doc_id, …). */
+    def open(b: DataFrame, batchId: Long): DataFrame
+    /** Front-overlap work beside the id-hygiene probe (AQE off). */
+    def front(b: DataFrame, pin: DataFrame => DataFrame): Seq[() => Unit]
+    /** Batch-touching candidate pairs (id_a, id_b). */
+    def pairs(b: DataFrame): DataFrame
+    /** The keep set to land, given the D6 rule's. */
+    def keep(bIds: DataFrame, derived: DataFrame,
+        pin: DataFrame => DataFrame): DataFrame = derived
+    /** Write the survivors' docs increment and the store's derived data. */
+    def land(survivors: DataFrame, batchId: Long): Unit
+    /** The written docs increment. */
+    def landed(batchId: Long): DataFrame
+    /** Work after the counts; returns the last `_stats` column's value. */
+    def finish(landed: DataFrame, n: Long, batchId: Long): Any
+  }
+
+  /** The lexical store: batch shingles checkpointed in the front
+    * overlap (the transaction's only text explode — the pair kernel
+    * reads them on both bucket-join sides, plus the df probe); corpus
+    * shingles and df partials come from the materialized stores, so
+    * history text is never decoded. The back overlap keeps AQE ON: the
+    * shingle/df store writes shuffle, and adaptive coalescing sizes
+    * their files. */
+  private final class LexicalStore(spark: SparkSession, targetDir: String,
+      threshold: Double) extends IngestStore(targetDir, "applyDedupBatch",
+        "dedup corpus", "initDedupCorpus", "text",
+        StructField("n_hot_shingles", LongType, nullable = false),
+        backAqeOff = false) {
+    private var shB: DataFrame = _
+    private var hot: Seq[Long] = Nil
+    def open(b: DataFrame, batchId: Long): DataFrame =
+      readDedupCorpus(spark, targetDir)
+    def front(b: DataFrame, pin: DataFrame => DataFrame): Seq[() => Unit] =
+      Seq(() => shB = pin(graft.queries.Dedup.hashedShinglePlan(spark, b)))
+    def pairs(b: DataFrame): DataFrame = {
+      // hot-shingle probe from MERGED df partials: per-increment counts
+      // plus the batch's own sum to exactly the df of a full recount,
+      // because every increment's shingle rows are distinct per doc
+      val dfAll = readDfStore(spark, targetDir)
+        .unionByName(shB.groupBy("shingle").agg(count(lit(1)).as("df")))
+        .groupBy("shingle").agg(sum(col("df")).as("df"))
+      hot = hotFromDfs(dfAll)
+      graft.queries.Dedup.jaccardPairsHashedFrom(
+          readShingleStore(spark, targetDir).unionByName(shB), threshold, hot,
+          Some(b.select("doc_id")))
+        .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
     }
+    def land(survivors: DataFrame, batchId: Long): Unit = {
+      // the shingle and df stores derive from the WRITTEN docs, so they
+      // equal the docs exactly, even across a crash retry
+      survivors.write.mode("overwrite").parquet(s"$targetDir/inc=$batchId")
+      val sh = s"$targetDir/_shingles/inc=$batchId"
+      graft.queries.Dedup.hashedShinglePlan(spark, landed(batchId))
+        .write.mode("overwrite").parquet(sh)
+      spark.read.schema(shingleStoreSchema).parquet(sh)
+        .groupBy("shingle").agg(count(lit(1)).as("df"))
+        .write.mode("overwrite").parquet(s"$targetDir/_dfs/inc=$batchId")
+    }
+    def landed(batchId: Long): DataFrame =
+      spark.read.schema(lexDocsSchema).parquet(s"$targetDir/inc=$batchId")
+    def finish(landed: DataFrame, n: Long, batchId: Long): Any = hot.length.toLong
   }
 
   /** (dropped doc_id → dup_of) for one batch: the smallest
@@ -554,10 +579,10 @@ object Streams {
     * provenance never re-scans the corpus. */
   private def dupAttribution(bIds: DataFrame, compCorpus: DataFrame,
       keep: DataFrame, comp: DataFrame): DataFrame = {
-    // every relation here is batch-graph-bounded and checkpointed —
-    // callers run the consuming action under withAqeOff, where the
-    // shuffle joins fold into ONE job (a broadcast hint would add a
-    // collect job per side instead)
+    // every relation here is batch-graph-bounded and checkpointed — no
+    // broadcast hints: under the semantic store's AQE-off back overlap
+    // the shuffle joins fold into ONE job (a hint would add a collect
+    // job per side instead)
     val canon = compCorpus.select(col("id"), col("component"))
       .unionByName(comp.join(keep.select(col("doc_id").as("id")),
         Seq("id"), "left_semi"))
@@ -573,10 +598,10 @@ object Streams {
     * the same `count(lit(1))` a separate `.count()` runs, so values are
     * identical; the fold replaces one job dispatch (plus AQE stage
     * jobs) PER relation with one execution for the lot. Used for the
-    * sinks' per-batch stats rows. AQE regime is the CALLER's: serial
-    * call sites wrap in `Checkpoints.withAqeOff` (batch-bounded plan,
-    * one job); call sites inside an [[inParallel]] overlap leave AQE on
-    * — a conf flip there would race the concurrent branch's planning. */
+    * sinks' per-batch stats rows, at ONE serial call site in
+    * [[applyIngestBatch]], after the back overlap has joined; that site
+    * wraps it in `Checkpoints.withAqeOff` (every input is batch-bounded
+    * or the written increment — one job). */
   private def statCounts(dfs: Seq[DataFrame]): Seq[Long] = {
     val tagged = dfs.zipWithIndex.map { case (df, i) =>
       df.agg(count(lit(1)).as("v")).select(lit(i).as("i"), col("v"))
@@ -712,9 +737,9 @@ object Streams {
   /** Semantic docs parts: (doc_id, embedding) data columns plus the
     * home-cell layout's partition columns. The embedding ELEMENT type
     * is the caller's (float for the fixture tables, double in several
-    * suites), so the per-batch hot path derives it from the batch's own
-    * schema — one writer per store means batch type ≡ stored type —
-    * while the offline readers keep inference. One schema covers EVERY
+    * suites), so the per-batch hot path takes it from one stored part's
+    * footer ([[storedEmbeddingType]]) and rejects a batch of another
+    * type, while the offline readers keep inference. One schema covers EVERY
     * part shape: partitioned parts bind ig/c_id from the directory
     * layout; flat parts (the zero-row fallbacks — writeSemanticDocs
     * only ever writes flat when empty) surface them as null data
@@ -867,269 +892,167 @@ object Streams {
     * that graph is bit-identical to the original attempt's; after a
     * refit-path crash it is best-effort (the pre-refit candidate graph
     * is gone with the old centroids), while the keep set — the datum
-    * corpus/index consistency rests on — is exact. */
+    * corpus/index consistency rests on — is exact.
+    *
+    * The batch's embedding type must be the store's (read from one
+    * stored part's footer at batch start): a mismatch fails before any
+    * write, naming both types. */
   def applySemanticDedupBatch(batch: DataFrame, batchId: Long,
-      targetDir: String, threshold: Double = 0.4, nprobe: Int = 16): Long = {
-    val spark = batch.sparkSession
+      targetDir: String, threshold: Double = 0.4, nprobe: Int = 16): Long =
+    applyIngestBatch(batch, batchId,
+      new SemanticStore(batch.sparkSession, targetDir, threshold, nprobe))
+
+  /** The semantic store. Front overlap: the replay homes probe and the
+    * ONE batch×centroid assignment checkpoint of the transaction (the
+    * pair stage consumes it twice, the probed-cell list collects it, the
+    * fresh path's survivor homes are its crnk = 1 rows). The back
+    * overlap runs AQE OFF: the layout write is EXCHANGE-FREE (both its
+    * joins broadcast, partitionBy sorts within tasks), so adaptive
+    * coalescing has nothing to coalesce. After the counts, the index
+    * append (or the drift refit) runs serially. */
+  private final class SemanticStore(spark: SparkSession, targetDir: String,
+      threshold: Double, nprobe: Int) extends IngestStore(targetDir,
+        "applySemanticDedupBatch", "semantic dedup corpus",
+        "initSemanticDedupCorpus", "embedding", StructField("index_op", StringType),
+        backAqeOff = true) {
     import graft.functions.Pq
-    val committed = committedIds(spark, targetDir)
-    require(committed.nonEmpty,
-      s"semantic dedup corpus $targetDir is not initialized - call " +
-        "initSemanticDedupCorpus first")
-    if (batchId <= committed.max) return -1L
-    val indexDir = s"$targetDir/_index"
-    val b = batch.select(col("doc_id").cast("long").as("doc_id"),
-      col("embedding"))
-    // explicit docs-store schema for every read in this transaction
-    // (round 21): one writer per store means the stored embedding type
-    // ≡ the batch's own, so inference — one footer job per part per
-    // batch — buys nothing
-    val docSchema = semDocsSchema(b.schema("embedding").dataType)
-    val corpus = readSemanticVectors(spark, targetDir, None, Some(docSchema))
-    val idx = Pq.readIndex(spark, indexDir)
-    val liveIg = graft.MarkerStore.liveGen(spark, indexDir).get._1
-    // driver-side replay mark (FS read, no jobs) — resolved before the
-    // overlap so the homes probe can be skipped outright on a marked
-    // replay
-    val incCommitted =
-      graft.MarkerStore.committedIncs(spark, indexDir).contains(batchId)
-    // expression registration on the MAIN thread, before any overlap
-    // branch touches the function registry
-    graft.functions.VectorExprs.register(spark)
-    var assigned: DataFrame = null
-    var pairs: DataFrame = null
-    var keepCp: DataFrame = null
-    var compCp: DataFrame = null
-    var compCorpusCp: DataFrame = null
-    var survHomesCp: DataFrame = null
-    try {
-      // FRONT OVERLAP (§2.6, round 22): three mutually independent
-      // batch-bounded actions — the id-hygiene probe, the replay homes
-      // probe, and the batch×centroid assignment checkpoint — run
-      // concurrently under ONE AQE-off window (a per-thunk conf flip
-      // would race the others' planning). On a bad batch the extra
-      // work is wasted and released; the error still precedes every
-      // write.
-      //
-      // id hygiene vs the COMMITTED corpus (not the index homes — a
-      // crash between the index commit and the outer marker leaves the
-      // batch in the index but not the corpus, and the retry must
-      // pass). The corpus side reads doc_id ONLY (≈ 8 bytes/doc at
-      // 100 TB) and STREAMS through a broadcast semi-join against the
-      // batch ids; ONE global-aggregate job (round 22).
-      //
-      // replay detection (the scaladoc's replay contract): homes side
-      // streams, batch ids broadcast, ONE count job — the no-replay
-      // hot path must scan every homes partition to find nothing
-      // either way.
-      //
-      // ONE batch×centroid assignment per transaction (round 22),
-      // eager-checkpointed: the pair stage consumes it twice (probe
-      // side + batch homes), the probed-cell list collects it, and the
-      // fresh path's survivor homes are its crnk = 1 rows.
-      val front = graft.Checkpoints.withAqeOff(spark) {
-        inParallel(Seq(
-          () => corpus.select("doc_id")
-            .join(broadcast(b.select("doc_id")), Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), lit("already in the corpus").as("kind"))
-            .unionByName(b.groupBy("doc_id").agg(count(lit(1)).as("c"))
-              .filter(col("c") > 1)
-              .select(col("doc_id"),
-                lit("repeated within the batch").as("kind")))
-            .agg(min(struct(col("doc_id"), col("kind"))).as("w"))
-            .head(),
-          () => incCommitted ||
-            idx.homes.select("vec_id")
-              .join(broadcast(b.select(col("doc_id").as("vec_id"))),
-                Seq("vec_id"), "left_semi")
-              .agg(count(lit(1))).head().getLong(0) > 0,
-          () => {
-            assigned = graft.functions.Ivf.assignments(
-                b.select(col("doc_id").as("vec_id"),
-                  transform(col("embedding"), _.cast("double")).as("v")),
-                idx.model.cents, nprobe,
-                (a, b2) => call_function("vec_sqdist", a, b2))
-              .localCheckpoint(true)
-            ()
-          }))
-      }
-      val bad = front(0).asInstanceOf[org.apache.spark.sql.Row]
-      if (!bad.isNullAt(0)) {
-        val r = bad.getStruct(0)
-        throw new IllegalArgumentException(
-          s"applySemanticDedupBatch: doc_id ${r.get(0)} is ${r.getString(1)} - " +
-            "ingest ids must be globally unique")
-      }
-      val indexHasBatch = front(1).asInstanceOf[Boolean]
-      pairs = semanticBatchPairs(spark, idx,
-          cells => readSemanticVectors(spark, targetDir, Some((liveIg, cells)),
-            Some(docSchema)),
-          b, threshold, nprobe, Some(assigned))
-        .localCheckpoint(true)
-      val (keepDerived, comp, compCorpus) =
-        dedupKeepParts(b.select("doc_id"), corpus.select("doc_id"), pairs)
-      keepCp = keepDerived; compCp = comp; compCorpusCp = compCorpus
-      // on a replay the index's homes are the authoritative record of
-      // the original keep decision; a recompute against a post-refit
-      // index could differ and diverge corpus from index forever
-      val keep =
-        if (indexHasBatch)
-          b.select("doc_id").join(
-            idx.homes.select(col("vec_id").as("doc_id")),
-            Seq("doc_id"), "left_semi")
-        else keepDerived
-      // keep is checkpointed (no size stats for AQE) and batch-bounded:
-      // broadcast it explicitly so the survivor projection never
-      // shuffles the batch
-      val survivors = b.join(broadcast(keep), Seq("doc_id"), "left_semi")
-      // survivor home cells for the partitioned layout: on the fresh
-      // path the crnk = 1 rows of the transaction's ONE checkpointed
-      // assignment, restricted to the kept ids (bit-identical to a
-      // dedicated homes pass — [[graft.functions.Pq.homesOf]]'s
-      // contract; round 22 — the round-21 form still ran a SECOND
-      // nprobe = 1 assignment over the survivors), eager-checkpointed
-      // so the layout write AND appendToIndex below read the same
-      // materialized rows; on the replay path the stored homes
-      // themselves
-      val survHomes =
-        if (indexHasBatch)
-          idx.homes.join(keep.select(col("doc_id").as("vec_id")),
+    private val indexDir = s"$targetDir/_index"
+    private var docSchema: StructType = _
+    private var corpus: DataFrame = _
+    private var idx: Pq.IvfPqIndex = _
+    private var liveIg = 0L
+    private var indexHasBatch = false
+    private var assigned: DataFrame = _
+    private var survHomes: DataFrame = _
+
+    def open(b: DataFrame, batchId: Long): DataFrame = {
+      // explicit docs-store schema for every read of the transaction
+      // (round 21: inference costs one footer job per part per batch),
+      // its element type the STORE's — a batch of another type fails
+      // here, before any write, instead of at a later parquet scan
+      val stored = storedEmbeddingType(spark, targetDir)
+      val batchType = b.schema("embedding").dataType
+      def elem(t: DataType) = t match { case ArrayType(e, _) => e; case o => o }
+      require(elem(batchType) == elem(stored),
+        s"$sink: the batch's embedding type ${batchType.catalogString} differs " +
+          s"from the store's ${stored.catalogString} at $targetDir")
+      docSchema = semDocsSchema(stored)
+      corpus = readSemanticVectors(spark, targetDir, None, Some(docSchema))
+      idx = Pq.readIndex(spark, indexDir)
+      liveIg = graft.MarkerStore.liveGen(spark, indexDir).get._1
+      // driver-side replay mark (FS read, no jobs): a marked replay
+      // skips the homes probe outright
+      indexHasBatch =
+        graft.MarkerStore.committedIncs(spark, indexDir).contains(batchId)
+      // expression registration on the MAIN thread, before any overlap
+      // branch touches the function registry
+      graft.functions.VectorExprs.register(spark)
+      corpus
+    }
+
+    def front(b: DataFrame, pin: DataFrame => DataFrame): Seq[() => Unit] = Seq(
+      // replay detection (the replay contract above): homes side
+      // streams, batch ids broadcast, ONE count job — the no-replay hot
+      // path must scan every homes partition to find nothing either way
+      () => indexHasBatch = indexHasBatch ||
+        idx.homes.select("vec_id")
+          .join(broadcast(b.select(col("doc_id").as("vec_id"))),
             Seq("vec_id"), "left_semi")
-        else {
-          survHomesCp = graft.Checkpoints.withAqeOff(spark) {
-            assigned.filter(col("crnk") === 1)
-              .select(col("vec_id"), col("c_id"))
-              .join(broadcast(keep.select(col("doc_id").as("vec_id"))),
-                Seq("vec_id"), "left_semi")
-              .localCheckpoint(true)
-          }
-          survHomesCp
+          .agg(count(lit(1))).head().getLong(0) > 0,
+      () => assigned = pin(graft.functions.Ivf.assignments(
+        b.select(col("doc_id").as("vec_id"),
+          transform(col("embedding"), _.cast("double")).as("v")),
+        idx.model.cents, nprobe,
+        (a, b2) => call_function("vec_sqdist", a, b2))))
+
+    def pairs(b: DataFrame): DataFrame =
+      semanticBatchPairs(spark, idx,
+        cells => readSemanticVectors(spark, targetDir, Some((liveIg, cells)),
+          Some(docSchema)),
+        b, threshold, nprobe, Some(assigned))
+
+    /** On a replay the index's homes are the authoritative record of the
+      * original keep decision (a recompute against a post-refit index
+      * could differ and diverge corpus from index forever), and the
+      * stored homes are the survivors' homes. On the fresh path the
+      * homes are the crnk = 1 rows of the ONE checkpointed assignment,
+      * restricted to the kept ids (bit-identical to a dedicated homes
+      * pass — [[graft.functions.Pq.homesOf]]'s contract), checkpointed
+      * so the layout write and the index append read the same rows. */
+    override def keep(bIds: DataFrame, derived: DataFrame,
+        pin: DataFrame => DataFrame): DataFrame =
+      if (indexHasBatch) {
+        survHomes = idx.homes.join(bIds.select(col("doc_id").as("vec_id")),
+          Seq("vec_id"), "left_semi")
+        bIds.join(idx.homes.select(col("vec_id").as("doc_id")),
+          Seq("doc_id"), "left_semi")
+      } else {
+        survHomes = graft.Checkpoints.withAqeOff(spark) {
+          pin(assigned.filter(col("crnk") === 1)
+            .select(col("vec_id"), col("c_id"))
+            .join(broadcast(derived.select(col("doc_id").as("vec_id"))),
+              Seq("vec_id"), "left_semi"))
         }
-      // BACK OVERLAP (§2.6, round 22): the home-cell layout write and
-      // the provenance+stats branch share no dependency once the keep
-      // relations are checkpointed. ALL branches run under ONE AQE-off
-      // window: every plan here is batch-bounded, and the layout write
-      // is EXCHANGE-FREE (both its joins broadcast, partitionBy sorts
-      // within tasks), so AQE's adaptive output coalescing has nothing
-      // to coalesce — unlike the lexical store writes, which keep AQE
-      // for their shuffled stores' file sizing. One outer window keeps
-      // the branches conf-race-free. The index append stays SERIAL
-      // after the join — it reads the written increment and keeps its
-      // own AQE-off moment action.
-      val par = graft.Checkpoints.withAqeOff(spark) {
-        inParallel(Seq(
-          () => {
-            writeSemanticDocs(survivors, survHomes, liveIg,
-              s"$targetDir/inc=$batchId", broadcastHomes = true)
-            ()
-          },
-          () => {
-            // provenance + observability sidecars (the lexical sink's
-            // rows, with the index decision in place of the shingle
-            // column); counts fold into ONE action (statCounts).
-            dupAttribution(b.select("doc_id"), compCorpus, keep, comp)
-              .coalesce(1)
-              .write.mode("overwrite").parquet(s"$targetDir/_dups/inc=$batchId")
-            statCounts(Seq(
-              b,
-              comp.join(b.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-                .join(compCorpus.select(col("component")),
-                  Seq("component"), "left_semi"),
-              pairs))
-          }))
+        derived
       }
-      val cnt = par(1).asInstanceOf[Seq[Long]]
-      // index maintenance from the WRITTEN rows (store ≡ docs even
-      // across a crash retry)
-      val landed = readSemanticDocsPart(spark, s"$targetDir/inc=$batchId",
-        Some(docSchema))
-      // kept count from the written files, counted BEFORE the index
-      // append (round 22): the count doubles as the append's
-      // empty-batch gate, so appendToIndex skips its own bounded
-      // emptiness/duplicate probes — the transaction already proved
-      // the batch ids distinct, absent from the corpus, and (fresh
-      // path) absent from the index
-      val n = graft.Checkpoints.withAqeOff(spark)(landed.count())
-      val indexOp =
-        if (indexHasBatch) {
-          // backfill the high-water mark a refit-path crash may have
-          // lost (gen marker landed, increment marker did not): the
-          // generation holds the rows, the increment is empty
-          // bookkeeping — data (none) before marker, as ever
-          if (!graft.MarkerStore.committedIncs(spark, indexDir)
-              .contains(batchId))
+
+    def land(survivors: DataFrame, batchId: Long): Unit =
+      writeSemanticDocs(survivors, survHomes, liveIg,
+        s"$targetDir/inc=$batchId", broadcastHomes = true)
+
+    def landed(batchId: Long): DataFrame = spark.read.schema(docSchema)
+      .parquet(s"$targetDir/inc=$batchId").select("doc_id", "embedding")
+
+    /** The index op. The kept count gates the append, so appendToIndex
+      * skips its own emptiness/duplicate probes (skipChecks): the
+      * transaction already proved the batch ids distinct, absent from
+      * the corpus and (fresh path) absent from the index. */
+    def finish(landed: DataFrame, n: Long, batchId: Long): Any =
+      if (indexHasBatch) {
+        // backfill the high-water mark a refit-path crash may have lost
+        // (gen marker landed, increment marker did not): the generation
+        // holds the rows, the increment is empty bookkeeping
+        if (!graft.MarkerStore.committedIncs(spark, indexDir).contains(batchId))
+          Pq.writeIndexIncrement(emptyHomes(spark), emptyCodes(spark),
+            indexDir, batchId)
+        "skipped"
+      } else if (n == 0) "empty"
+      else {
+        // persist=true + explicit unpersist below (round 21: the encode
+        // runs ONCE, at the drift moment, and the write reads the
+        // persisted blocks); precomputedHomes: no second assignment
+        // pass. corpusMoment from the persisted MOMENT SIDECARS (round
+        // 20): the drift test merges ≤ m·k count rows per store part
+        // instead of scanning the stored codes — this transaction never
+        // reads the codes relation at all, which the suite pins by
+        // scrambling the stored codes in place.
+        val app = Pq.appendToIndex(idx, landed, "embedding",
+          idCol = "doc_id", persist = true,
+          corpusMoment = Pq.indexMoment(spark, indexDir, idx.model.pq),
+          precomputedHomes = Some(survHomes), skipChecks = true)
+        try {
+          if (app.refitNeeded) {
+            // distribution shift: full refit over corpus + survivors as
+            // the next index generation, then an EMPTY increment for
+            // batchId advances the index high-water mark (the generation
+            // already holds the batch's vectors), so a crash retry
+            // detects ownership from the marker alone
+            Pq.writeIndex(
+              buildSemanticIndex(spark, corpus.unionByName(landed)), indexDir)
             Pq.writeIndexIncrement(emptyHomes(spark), emptyCodes(spark),
               indexDir, batchId)
-          "skipped"
-        } else if (n == 0) {
-          // nothing landed — appendToIndex's own empty-batch probe
-          // would return the same no-op; the count above already knows
-          "empty"
-        } else {
-          // persist=true + explicit unpersist below (round 21 — the
-          // persist=false form re-ran the batch encode per consumer:
-          // drift moment, then the store write; with the moment
-          // sidecar now computed from the WRITTEN bytes the encode
-          // runs ONCE, at the drift moment, and the write reads the
-          // persisted blocks). precomputedHomes: the layout write's
-          // checkpointed assignment — no second assignment pass.
-          // skipChecks (round 22): the emptiness probe is answered by
-          // n > 0 and the duplicate probes by this transaction's own
-          // guards (batch ids distinct + not in the corpus + the
-          // indexHasBatch probe found none in the stored homes).
-          // corpusMoment from the persisted MOMENT SIDECARS (round
-          // 20): the corpus side of the drift test merges ≤ m·k count
-          // rows per store part instead of scanning the stored codes —
-          // with it, this transaction never reads the codes relation
-          // at all (candidates come from homes, the rerank is exact
-          // cosine), which the suite pins by scrambling the stored
-          // codes in place.
-          val app = Pq.appendToIndex(idx, landed, "embedding",
-            idCol = "doc_id", persist = true,
-            corpusMoment = Pq.indexMoment(spark, indexDir, idx.model.pq),
-            precomputedHomes = Some(survHomes), skipChecks = true)
-          try {
-            if (app.refitNeeded) {
-              // distribution shift: full refit over corpus + survivors,
-              // persisted as the next index generation — then an EMPTY
-              // increment for batchId advances the index high-water mark
-              // (the generation already contains the batch's vectors), so
-              // a crash retry detects ownership from the marker alone
-              Pq.writeIndex(
-                buildSemanticIndex(spark, corpus.unionByName(landed)), indexDir)
-              Pq.writeIndexIncrement(emptyHomes(spark), emptyCodes(spark),
-                indexDir, batchId)
-              "refit"
-            } else if (app.incHomes.nonEmpty) {
-              Pq.writeIndexIncrement(app.incHomes.get, app.incCodes.get,
-                indexDir, batchId)
-              "appended"
-            } else "empty"
-          } finally {
-            // the release hook persist=true needs here: the increment's
-            // MEMORY_ONLY blocks are dead once the store write landed
-            app.incHomes.foreach(_.unpersist(false))
-            app.incCodes.foreach(_.unpersist(false))
-          }
+            "refit"
+          } else if (app.incHomes.nonEmpty) {
+            Pq.writeIndexIncrement(app.incHomes.get, app.incCodes.get,
+              indexDir, batchId)
+            "appended"
+          } else "empty"
+        } finally {
+          // the increment's MEMORY_ONLY blocks are dead once written
+          app.incHomes.foreach(_.unpersist(false))
+          app.incCodes.foreach(_.unpersist(false))
         }
-      val (nBatch, nCorpusDup, nPairs) = (cnt(0), cnt(1), cnt(2))
-      import spark.implicits._
-      Seq((batchId, nBatch, n, nCorpusDup, nBatch - n - nCorpusDup,
-          nPairs, indexOp))
-        .toDF("batch_id", "n_batch", "n_kept", "n_dropped_corpus_dup",
-          "n_dropped_within_batch", "n_pairs", "index_op")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$targetDir/_stats/$batchId")
-      commitMarker(spark, targetDir, batchId)
-      n
-    } finally {
-      if (pairs != null) graft.Checkpoints.release(pairs)
-      if (assigned != null) graft.Checkpoints.release(assigned)
-      if (keepCp != null) graft.Checkpoints.release(keepCp)
-      if (compCp != null) graft.Checkpoints.release(compCp)
-      if (compCorpusCp != null) graft.Checkpoints.release(compCorpusCp)
-      if (survHomesCp != null) graft.Checkpoints.release(survHomesCp)
-    }
+      }
   }
 
   /** Empty index-increment relations (the refit path's bookkeeping
@@ -1270,14 +1193,6 @@ object Streams {
         pruned.select("doc_id", "embedding")
       }, schema = schemaHint)
 
-  /** One semantic docs part (an increment or generation directory),
-    * projected to (doc_id, embedding). */
-  private def readSemanticDocsPart(spark: SparkSession, dir: String,
-      schemaHint: Option[StructType] = None): DataFrame = {
-    val r = schemaHint.map(spark.read.schema).getOrElse(spark.read)
-    r.parquet(dir).select("doc_id", "embedding")
-  }
-
   /** Write one semantic docs dataset HOME-CELL PARTITIONED:
     * `ig=<indexGen>/c_id=<homeCell>` subdirectories, where `ig` is the
     * index generation whose centroids assigned the cells — readers can
@@ -1308,18 +1223,35 @@ object Streams {
           col("c_id")).as("c_id"),
         lit(ig).as("ig"))
       .write.mode("overwrite").partitionBy("ig", "c_id").parquet(dir)
-    if (!hasParquetFile(spark, dir))
+    if (firstParquetFile(spark, dir).isEmpty)
       docs.select("doc_id", "embedding").limit(0)
         .write.mode("overwrite").parquet(dir)
   }
 
-  /** Any .parquet data file under `dir` (recursive, driver-side)? */
-  private def hasParquetFile(spark: SparkSession, dir: String): Boolean = {
+  /** The first .parquet data file under `dir` (recursive, driver-side). */
+  private def firstParquetFile(spark: SparkSession,
+      dir: String): Option[org.apache.hadoop.fs.Path] = {
     val it = fsOf(spark, dir).listFiles(new org.apache.hadoop.fs.Path(dir), true)
-    var found = false
-    while (!found && it.hasNext)
-      found = it.next().getPath.getName.endsWith(".parquet")
+    var found: Option[org.apache.hadoop.fs.Path] = None
+    while (found.isEmpty && it.hasNext)
+      found = Some(it.next().getPath).filter(_.getName.endsWith(".parquet"))
     found
+  }
+
+  /** A semantic store's embedding type, read on the driver from the
+    * footer of one stored docs part (no Spark job — a schema-inferring
+    * read would run one). Every part has a parquet file: an empty one
+    * is written flat, schema only ([[writeSemanticDocs]]). */
+  private def storedEmbeddingType(spark: SparkSession, targetDir: String): DataType = {
+    val file = storeParts(spark, targetDir, "docs", id => s"$targetDir/inc=$id")
+      .iterator.flatMap(firstParquetFile(spark, _)).next()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    try new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter().convert(
+        reader.getFooter.getFileMetaData.getSchema)("embedding").dataType
+    finally reader.close()
   }
 
   /** COMPACTION for the semantic target — the corpus generation
@@ -1383,71 +1315,52 @@ object Streams {
     * derive the drop breakdown for their stats row.
     *
     * `comp`, `keep` and `compCorpus` come back EAGER-CHECKPOINTED
+    * through `pin`, each added to the caller's pin list as it lands
     * (round-21 measurement: each sink transaction consumes them from
     * 3–4 separate actions — survivor write, provenance write,
     * drop-count stat — and the un-checkpointed subtrees re-executed
     * per action, ~35 of the lexical batch's 68 jobs; all three
     * relations are batch-graph-sized, so the pinned storage is tiny).
-    * `compCorpus` — the comp rows whose id is a corpus doc — is
-    * checkpointed too (round 22): it is the ONE subtree that scans the
-    * corpus doc_id column, and the un-checkpointed form re-ran that
-    * scan in every consumer (keep's anti-join, the drop-count stat,
-    * the provenance canon — 3 extra corpus-id scans per batch).
-    * Consumers derive the corpus-touching component set and the canon
-    * relation from it without touching the corpus again. CALLERS MUST
-    * RELEASE all three (graft.Checkpoints.release) when the
-    * transaction's actions are done — same contract as the pairs
-    * checkpoint they already hold. */
+    * `compCorpus` — the comp rows whose id is a corpus doc — is the ONE
+    * subtree that scans the corpus doc_id column (round 22): consumers
+    * derive the corpus-touching component set and the canon relation
+    * from it without touching the corpus again. */
   private def dedupKeepParts(bIds: DataFrame, corpusIds: DataFrame,
-      pairs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+      pairs: DataFrame, pin: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val spark = bIds.sparkSession
     val nodes = bIds.select(col("doc_id").as("id"))
       .unionByName(pairs.select(col("id_a").as("id")))
       .unionByName(pairs.select(col("id_b").as("id")))
       .distinct()
     // batch-graph-bounded materializations: AQE off for the checkpoint
-    // actions (graft.Checkpoints.withAqeOff — one job each instead of
-    // 2–4 stage jobs; the compCorpus plan's corpus side is a single
-    // column-pruned id scan whose join is batch-bounded). A failure
-    // AFTER a checkpoint lands releases what this call already pinned
-    // before rethrowing (round-21 ADVICE: the caller's release vars
-    // are still null then, so the blocks would leak for the session).
-    val comp = graft.Checkpoints.withAqeOff(bIds.sparkSession) {
-      graft.queries.Dedup.connectedComponents(nodes, pairs,
-          nodesComplete = true)
-        .localCheckpoint(true)
+    // actions (one job each instead of 2–4 stage jobs; the compCorpus
+    // plan's corpus side is a single column-pruned id scan whose join
+    // is batch-bounded)
+    val comp = graft.Checkpoints.withAqeOff(spark) {
+      pin(graft.queries.Dedup.connectedComponents(nodes, pairs,
+        nodesComplete = true))
     }
-    var compCorpus: DataFrame = null
-    try {
-      // corpus ids are UNIQUE (the sinks' id-hygiene invariant), so the
-      // inner join against the broadcast batch-graph side returns
-      // exactly the semi-join's rows — with the corpus id scan
-      // STREAMING through a broadcast hash join instead of being
-      // shuffled (the semi form could only broadcast its corpus side,
-      // so the planner shuffled the corpus-sized scan every batch)
-      compCorpus = graft.Checkpoints.withAqeOff(bIds.sparkSession) {
-        corpusIds.select(col("doc_id").as("id"))
-          .join(broadcast(comp), "id")
-          .select(col("id"), col("component"))
-          .localCheckpoint(true)
-      }
-      // anti-join right sides need no distinct (multiplicity is
-      // ignored); under withAqeOff the bounded shuffle joins fold into
-      // the checkpoint's one job
-      val keep = graft.Checkpoints.withAqeOff(bIds.sparkSession) {
-        comp
-          .join(bIds.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-          .join(compCorpus.select(col("component")), Seq("component"), "left_anti")
-          .groupBy("component").agg(min(col("id")).as("doc_id"))
-          .select("doc_id")
-          .localCheckpoint(true)
-      }
-      (keep, comp, compCorpus)
-    } catch {
-      case t: Throwable =>
-        graft.Checkpoints.release(comp)
-        if (compCorpus != null) graft.Checkpoints.release(compCorpus)
-        throw t
+    // corpus ids are UNIQUE (the sinks' id-hygiene invariant), so the
+    // inner join against the broadcast batch-graph side returns exactly
+    // the semi-join's rows — with the corpus id scan STREAMING through
+    // a broadcast hash join instead of being shuffled (the semi form
+    // could only broadcast its corpus side)
+    val compCorpus = graft.Checkpoints.withAqeOff(spark) {
+      pin(corpusIds.select(col("doc_id").as("id"))
+        .join(broadcast(comp), "id")
+        .select(col("id"), col("component")))
     }
+    // anti-join right sides need no distinct (multiplicity is ignored);
+    // under withAqeOff the bounded shuffle joins fold into the
+    // checkpoint's one job
+    val keep = graft.Checkpoints.withAqeOff(spark) {
+      pin(comp
+        .join(bIds.select(col("doc_id").as("id")), Seq("id"), "left_semi")
+        .join(compCorpus.select(col("component")), Seq("component"), "left_anti")
+        .groupBy("component").agg(min(col("id")).as("doc_id"))
+        .select("doc_id"))
+    }
+    (keep, comp, compCorpus)
   }
 
   /** Bounded hot-shingle probe over a MERGED df relation — the same

@@ -29,7 +29,7 @@ class DedupSkewSpec extends SparkSuite {
     // kernel exactly on a real corpus
     val hot = Dedup.hotShingleProbe(sh, dfCap = 2, maxHot = 1 << 20)
     assert(hot.nonEmpty, "forcing cap found no hot shingles — test is vacuous")
-    val capped = rows(Dedup.jaccardPairsHashedCapped(sh, 0.2, hot, maxHd = 1 << 20))
+    val capped = rows(Dedup.jaccardPairsHashedFrom(sh, 0.2, hot, maxHd = 1 << 20))
     assert(capped == plain,
       s"capped kernel diverged: missing=${(plain diff capped).take(5)} " +
         s"extra=${(capped diff plain).take(5)}")
@@ -45,16 +45,39 @@ class DedupSkewSpec extends SparkSuite {
     val sh = Dedup.hashedShinglePlan(spark, Tables.documents(spark, sf001))
     val inc = sh.select("doc_id").distinct().filter(col("doc_id") % 5 === 0)
     def pairRows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val plain = pairRows(Dedup.jaccardPairsIncremental(sh, inc, 0.2))
+      df.select("doc_a", "doc_b", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val plain = pairRows(Dedup.jaccardPairsHashedFrom(sh, 0.2, inc = Some(inc)))
     val hot = Dedup.hotShingleProbe(sh, dfCap = 2, maxHot = 1 << 20)
     assert(hot.nonEmpty, "forcing cap found no hot shingles — test is vacuous")
     val capped = pairRows(
-      Dedup.jaccardPairsIncrementalCapped(sh, inc, 0.2, hot, maxHd = 1 << 20))
+      Dedup.jaccardPairsHashedFrom(sh, 0.2, hot, Some(inc), maxHd = 1 << 20))
     assert(capped == plain,
       s"capped incremental diverged: missing=${(plain diff capped).take(5)} " +
         s"extra=${(capped diff plain).take(5)}")
     assert(plain.nonEmpty, "fixture increment produced no pairs — vacuous")
+  }
+
+  test("increment mode ≡ batch mode restricted to increment-touching pairs, uncapped and at a forcing cap") {
+    // the one hashed kernel's two pair stages must agree: every pair
+    // touching the increment, with the same inter/na/nb/jaccard, and
+    // nothing else — without a cap and with dfCap = 2, where the
+    // decomposition runs its cold / hot-correction / sweep stages in
+    // increment mode
+    val sh = Dedup.hashedShinglePlan(spark, Tables.documents(spark, sf001))
+    val inc = sh.select("doc_id").distinct().filter(col("doc_id") % 5 === 0)
+    val incIds = inc.collect().map(_.getLong(0)).toSet
+    val want = rows(Dedup.jaccardPairsHashedFrom(sh, 0.2))
+      .filter(p => incIds(p._1) || incIds(p._2))
+    assert(want.nonEmpty, "fixture increment touches no pair — vacuous")
+    def check(got: Set[(Long, Long, Long, Long, Long, Double)], mode: String): Unit =
+      assert(got == want, s"$mode increment mode diverged from batch mode: " +
+        s"missing=${(want diff got).take(5)} extra=${(got diff want).take(5)}")
+    check(rows(Dedup.jaccardPairsHashedFrom(sh, 0.2, inc = Some(inc))), "uncapped")
+    val hot = Dedup.hotShingleProbe(sh, dfCap = 2, maxHot = 1 << 20)
+    assert(hot.nonEmpty, "forcing cap found no hot shingles — test is vacuous")
+    check(rows(Dedup.jaccardPairsHashedFrom(sh, 0.2, hot, Some(inc),
+      maxHd = 1 << 20)), "capped")
   }
 
   test("minhash mega-bucket engages chain edges: linear output, components unchanged") {
@@ -110,7 +133,7 @@ class DedupSkewSpec extends SparkSuite {
     val plain = rows(Dedup.jaccardPairsHashedFrom(sh, 0.2))
     val hot = Dedup.hotShingleProbe(sh, dfCap = 8, maxHot = 1 << 20)
     assert(hot.nonEmpty, "stopword shingles were not hot at cap 8")
-    val capped = rows(Dedup.jaccardPairsHashedCapped(sh, 0.2, hot))
+    val capped = rows(Dedup.jaccardPairsHashedFrom(sh, 0.2, hot))
     assert(capped == plain,
       s"capped kernel diverged on the skew corpus: " +
         s"missing=${(plain diff capped).take(5)} extra=${(capped diff plain).take(5)}")

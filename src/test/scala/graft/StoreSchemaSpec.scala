@@ -81,6 +81,32 @@ class StoreSchemaSpec extends SparkSuite {
     } finally rm(t2)
   }
 
+  test("semantic sink: a batch whose embedding type differs from the store's fails at batch start, naming both") {
+    import spark.implicits._
+    val t = tmp("graft-schema-sem-mismatch")
+    try {
+      val docsD = (0 until 40)
+        .map(i => (i.toLong, Seq.tabulate(8)(j => (i * 8 + j).toDouble)))
+        .toDF("doc_id", "embedding")
+      graft.streaming.Streams.initSemanticDedupCorpus(docsD, t)
+      val batchF = (100 until 110)
+        .map(i => (i.toLong, Seq.tabulate(8)(j => (i * 8 - j).toFloat)))
+        .toDF("doc_id", "embedding")
+      val e = intercept[IllegalArgumentException](
+        graft.streaming.Streams.applySemanticDedupBatch(batchF, 0L, t))
+      assert(e.getMessage.contains("array<float>") &&
+        e.getMessage.contains("array<double>"), e.getMessage)
+      val fs = MarkerStore.fs(spark, t)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$t/inc=0")),
+        "the rejected batch wrote its increment")
+      assert(!MarkerStore.committedIncs(spark, t).contains(0L))
+      // the store's own type still lands
+      val batchD = batchF.select(col("doc_id"),
+        transform(col("embedding"), _.cast("double")).as("embedding"))
+      assert(graft.streaming.Streams.applySemanticDedupBatch(batchD, 0L, t) >= 0)
+    } finally rm(t)
+  }
+
   test("index store: declared homes/codes/moment schemas equal a fresh store's inferred schemas") {
     import spark.implicits._
     val t = tmp("graft-schema-ix")

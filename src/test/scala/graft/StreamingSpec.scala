@@ -740,8 +740,8 @@ class StreamingSpec extends SparkSuite {
     def rescanKeeps(corpusDocs: DataFrame, batch: DataFrame): Set[Long] = {
       val all = corpusDocs.unionByName(batch)
       val sh = Dedup.hashedShinglePlan(spark, all)
-      val pairs = Dedup.jaccardPairsIncrementalCapped(
-          sh, batch.select("doc_id"), 0.2, Dedup.hotShingleProbe(sh))
+      val pairs = Dedup.jaccardPairsHashedFrom(
+          sh, 0.2, Dedup.hotShingleProbe(sh), Some(batch.select("doc_id")))
         .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
       val nodes = batch.select(col("doc_id").as("id"))
         .unionByName(pairs.select(col("id_a").as("id")))
@@ -871,6 +871,57 @@ class StreamingSpec extends SparkSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1))
     assert(dups.length == 1030 && dups.forall(_._2 == 0L),
       "hot-cluster drops must attribute to the seed")
+  }
+
+  /** One committed batch's (SQL executions, jobs) on a fresh target
+    * seeded by `init`, then the three exit paths — commit, high-water
+    * mark skip, id-hygiene rejection — each leaving the persistent-RDD
+    * set as it found it. A rejected batch must not advance the marker.
+    * The target is deleted afterwards. */
+  private def pinBatch(prefix: String, init: String => Unit, batch: DataFrame,
+      repeated: DataFrame, apply: (DataFrame, Long, String) => Long): ((Int, Int), Long) = {
+    val target = Files.createTempDirectory(prefix).toString
+    def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    try {
+      init(target)
+      val before = persisted()
+      var n = -2L
+      val cost = actionsDuring { n = apply(batch, 0L, target) }
+      assert(n >= 0, "the pinned batch did not commit")
+      assert(persisted() == before, "a committed batch left a checkpoint pinned")
+      assert(apply(batch, 0L, target) == -1L)
+      assert(persisted() == before, "a high-water-mark skip left a checkpoint pinned")
+      val e = intercept[IllegalArgumentException](apply(repeated, 1L, target))
+      assert(e.getMessage.contains("repeated within the batch"))
+      assert(!MarkerStore.committedIncs(spark, target).contains(1L),
+        "a rejected batch advanced the marker")
+      assert(persisted() == before, "a rejected batch left a checkpoint pinned")
+      (cost, n)
+    } finally MarkerStore.fs(spark, target)
+      .delete(new org.apache.hadoop.fs.Path(target), true)
+  }
+
+  test("lexical sink: a committed batch runs a fixed action budget; every exit path releases its checkpoints") {
+    val docs = Tables.documents(spark, sf001).select("doc_id", "text")
+    val one = docs.filter(col("doc_id") % 4 === 2).orderBy("doc_id").limit(1)
+    val (cost, n) = pinBatch("graft-ingest-pin",
+      Streams.initDedupCorpus(docs.filter(col("doc_id") % 4 === 0), _),
+      docs.filter(col("doc_id") % 4 === 1), one.unionByName(one),
+      Streams.applyDedupBatch(_, _, _))
+    info(s"lexical batch: kept $n, (SQL executions, jobs) = $cost")
+    assert(cost == ((14, 35)), s"lexical per-batch budget moved: $cost")
+  }
+
+  test("semantic sink: a committed batch runs a fixed action budget; every exit path releases its checkpoints") {
+    val emb = Tables.embeddings(spark, sf001)
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    val one = emb.filter(col("doc_id") % 3 === 2).orderBy("doc_id").limit(1)
+    val (cost, n) = pinBatch("graft-sem-pin",
+      Streams.initSemanticDedupCorpus(emb.filter(col("doc_id") % 3 === 0), _),
+      emb.filter(col("doc_id") % 3 === 1), one.unionByName(one),
+      Streams.applySemanticDedupBatch(_, _, _))
+    info(s"semantic batch: kept $n, (SQL executions, jobs) = $cost")
+    assert(cost == ((22, 47)), s"semantic per-batch budget moved: $cost")
   }
 
   test("semantic ingest-dedup sink: IVF candidates + exact rerank, keep ≡ same-pair replay, recall floor, drift refit") {
