@@ -1079,8 +1079,8 @@ object Graft {
     * and heavy-tailed fixtures (see [[graft.functions.Pq.fitIvfPqAuto]]). Fits fresh
     * per call (the probe's verdict is corpus-specific, so this facade
     * does not enter the session index cache); for a repeated workload
-    * on one corpus, fit once via `fitIvfPqAuto` and search with
-    * `ivfAdcTopkAuto` directly. */
+    * on one corpus, fit once via `fitIvfPqAuto` and search its
+    * `model` with `ivfAdcTopk` directly. */
   /** FILTERED ANN search — the predicate + vector-search composition a
     * real retrieval workload runs almost every query (filter by lang /
     * source / date, then nearest neighbors among the SURVIVORS). Two
@@ -1091,7 +1091,7 @@ object Graft {
     *    predicate pushes INTO candidate generation: disallowed ids
     *    leave the home-bucket relation before any of their codes is
     *    built or scored (see the `allowedIds` hook on
-    *    [[graft.functions.Pq.ivfAdcTopkAuto]]), and `nprobe` scales up
+    *    [[graft.functions.Pq.ivfAdcTopk]]), and `nprobe` scales up
     *    by 1/sel (capped at `maxNprobe`) because each probed bucket now
     *    holds ~sel of its mass — at extreme selectivity this degrades
     *    gracefully toward an exhaustive scan OF THE ALLOWED ROWS ONLY,
@@ -1127,8 +1127,8 @@ object Graft {
     val idx = functions.Pq.fitIvfPqAuto(e, "embedding", m, pqK, centroids)
     if (sel >= postFilterMinSel) {
       val shortlist = k * math.min(4L, math.ceil(2.0 / sel).toLong).toInt
-      val raw = functions.Pq.ivfAdcTopkAuto(e, "embedding", idx, shortlist,
-        centroids, nprobe, "vec_id", queryIds)
+      val raw = functions.Pq.ivfAdcTopk(e, "embedding", idx.model, shortlist,
+        nprobe, "vec_id", queryIds)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("i").orderBy("rnk")
       raw.join(allowed.withColumnRenamed("vec_id", "k_id"), "k_id")
@@ -1138,8 +1138,8 @@ object Graft {
     } else {
       val boosted = math.min(maxNprobe.toDouble,
         math.ceil(nprobe / sel)).toInt
-      functions.Pq.ivfAdcTopkAuto(e, "embedding", idx, k, centroids,
-        boosted, "vec_id", queryIds, allowedIds = Some(allowed))
+      functions.Pq.ivfAdcTopk(e, "embedding", idx.model, k, boosted,
+        "vec_id", queryIds, Some(allowed))
     }
   }
 
@@ -1149,43 +1149,46 @@ object Graft {
       nprobe: Int = 8, queryIds: Option[DataFrame] = None): DataFrame = {
     val e = embOf(embeddings, idCol, vecCol)
     val idx = functions.Pq.fitIvfPqAuto(e, "embedding", m, pqK, centroids)
-    functions.Pq.ivfAdcTopkAuto(e, "embedding", idx, k, centroids, nprobe,
+    functions.Pq.ivfAdcTopk(e, "embedding", idx.model, k, nprobe,
       idCol = "vec_id", queryIds = queryIds)
   }
 
   /** Build and PERSIST the auto-selected ANN index for an embedding
     * column — the faiss train→write_index lifecycle on a caller
-    * DataFrame: [[graft.functions.Pq.fitIvfPqAuto]] picks the variant
-    * this corpus needs (raw flat-PQ on isotropic data, OPQ-rotated
-    * residual on clustered/heteroscedastic), the index materializes
-    * over the corpus, and the store's next generation commits behind
-    * the marker protocol. Serve it — in this session or any later one —
-    * with [[searchSimilarityIndex]]; append with the
-    * [[graft.functions.Pq]] increment API; compact with
+    * DataFrame: [[graft.functions.Pq.fitIvfPqAuto]] picks the coding
+    * this corpus needs (raw PQ on isotropic data, OPQ-rotated residual
+    * on clustered/heteroscedastic) over the centroids its probe built,
+    * [[graft.functions.Pq.indexOf]] materializes the index over the
+    * corpus, and [[graft.functions.Pq.writeIndex]] commits the store's
+    * next generation behind the marker protocol, tagged with the
+    * coding. Serve it — in this session or any later one — with
+    * [[searchSimilarityIndex]]; append with
+    * [[graft.functions.Pq.appendToIndex]] +
+    * [[graft.functions.Pq.writeIndexIncrement]]; compact with
     * [[graft.functions.Pq.vacuumIndex]]. */
   def buildSimilarityIndex(spark: SparkSession, embeddings: DataFrame,
       dir: String, idCol: String = "vec_id", vecCol: String = "embedding",
       m: Int = 8, pqK: Int = 256, centroids: Int = 0): Unit = {
     val e = embOf(embeddings, idCol, vecCol)
     val auto = functions.Pq.fitIvfPqAuto(e, "embedding", m, pqK, centroids)
-    functions.Pq.writeStoredIndex(
-      functions.Pq.indexOfAuto(auto, e, "embedding", centroids), dir)
+    functions.Pq.writeIndex(functions.Pq.indexOf(e, "embedding", auto.model), dir)
   }
 
-  /** Serve ANN top-k from a PERSISTED index directory (whatever family
-    * [[buildSimilarityIndex]] — or the Pq writers directly — stored
-    * there): the load is bounded driver reads + lazy parquet plans,
-    * ZERO fit jobs and zero corpus scans, so a fresh session answers
-    * its first query at query-side cost only. Returns
-    * (i, k_id, adc, rnk) for the query relation (optionally restricted
-    * to `queryIds`). */
+  /** Serve ANN top-k from a PERSISTED index directory, whatever coding
+    * [[buildSimilarityIndex]] — or [[graft.functions.Pq.writeIndex]]
+    * directly — stored there: [[graft.functions.Pq.readIndex]] returns
+    * the store's own coding from its meta tag, with bounded driver reads
+    * + lazy parquet plans, ZERO fit jobs and zero corpus scans, so a
+    * fresh session answers its first query at query-side cost only.
+    * Returns (i, k_id, adc, rnk) for the query relation (optionally
+    * restricted to `queryIds`). */
   def searchSimilarityIndex(spark: SparkSession, queries: DataFrame,
       dir: String, k: Int, idCol: String = "vec_id",
       vecCol: String = "embedding", nprobe: Int = 8,
       queryIds: Option[DataFrame] = None): DataFrame = {
     val q = embOf(queries, idCol, vecCol)
-    functions.Pq.searchStoredIndex(q, "embedding",
-      functions.Pq.readStoredIndex(spark, dir), k, nprobe, "vec_id", queryIds)
+    functions.Pq.ivfAdcTopk(q, "embedding",
+      functions.Pq.readIndex(spark, dir), k, nprobe, "vec_id", queryIds)
   }
 
   /** Product-quantize an embedding column: trains m per-block

@@ -381,8 +381,110 @@ object Pq {
     * 0.552 at c = 16 / nprobe = 8 (exhaustive ADC 0.644); residual
     * codes spend the same m·log₂k bits on the much tighter
     * within-bucket distribution, so quantization error — and with it
-    * the ranking loss — drops at an unchanged bit budget. */
-  final case class IvfPqModel(cents: Seq[(Long, Seq[Double])], pq: Model)
+    * the ranking loss — drops at an unchanged bit budget. Residual is
+    * the default [[Coding]]; the centroids, the codebooks and the
+    * coding are COUPLED — codes only decode against the centroid set
+    * and coding they were trained with. */
+  final case class IvfPqModel(cents: Seq[(Long, Seq[Double])], pq: Model,
+      coding: Coding = Coding.Residual)
+
+  /** What an index's codebooks quantize — the one value that decides
+    * how members are encoded, how a query becomes its vector in a
+    * probed cell, and how a store of the index is tagged on disk (meta
+    * `family`, plus the rotated coding's `rot` dataset). Every index
+    * operation (build, append, read, write, search) is one code path
+    * over this value. */
+  sealed trait Coding {
+    /** The meta `family` tag of a stored generation. */
+    private[Pq] def family: String
+    /** Member codes (vec_id, b, code) of `v`'s rows (vec_id, v), homed
+      * by `homes` (vec_id, c_id). */
+    private[Pq] def encode(v: DataFrame, homes: DataFrame, m: IvfPqModel): DataFrame
+    /** Query cells (i, c_id, qv) of `q` (i, c_id, v): each probing
+      * query's vector in each cell it probes. */
+    private[Pq] def cells(q: DataFrame, m: IvfPqModel): DataFrame
+    /** Datasets a generation of this coding stores beside the shared
+      * ones. */
+    private[Pq] def extras(spark: SparkSession): Seq[(String, DataFrame)] = Nil
+  }
+
+  object Coding {
+    /** Codes quantize r = x − centroid(home(x)); a query scores a probed
+      * cell from its residual against that cell's centroid (the
+      * residual ADC identity ‖q − x‖² ≈ ‖(q − c) − r̂ₓ‖² for x homed
+      * in c). Store family `ivfpq`. */
+    case object Residual extends Coding {
+      private[Pq] def family = "ivfpq"
+      private[Pq] def encode(v: DataFrame, homes: DataFrame, m: IvfPqModel) =
+        encodeBlocks(residualsFrom(v, homes, m.cents), "rv", m.pq)
+      private[Pq] def cells(q: DataFrame, m: IvfPqModel) =
+        centered(q, m.cents).select(col("i"), col("c_id"), col("x").as("qv"))
+    }
+
+    /** OPQ over residuals: codes quantize R·(r − μ), the residual
+      * rotated into the eigenvalue-balanced basis of the residual
+      * distribution (see [[fitIvfPqRotated]]). Both sides rotate
+      * through the same [[rotateExpr]] tree, so they are bit-equal by
+      * construction. Store family `opq`, with the rotation as `rot`. */
+    final case class Rotated(pca: Pca.Model, basisPerm: Array[Int]) extends Coding {
+      private def rotated(x: Column): Column = rotateExpr(x, pca, basisPerm)
+      private[Pq] def family = "opq"
+      private[Pq] def encode(v: DataFrame, homes: DataFrame, m: IvfPqModel) =
+        encodeBlocks(residualsFrom(v, homes, m.cents)
+          .select(col("vec_id"), rotated(col("rv")).as("rv")), "rv", m.pq)
+      private[Pq] def cells(q: DataFrame, m: IvfPqModel) =
+        centered(q, m.cents).select(col("i"), col("c_id"), rotated(col("x")).as("qv"))
+      override private[Pq] def extras(spark: SparkSession) = {
+        import spark.implicits._
+        Seq("rot" -> Seq((pca.mean.toSeq, pca.eigenvalues.toSeq,
+            basisPerm.toSeq, pca.loadings.map(_.toSeq).toSeq))
+          .toDF("mean", "eigenvalues", "perm", "loadings"))
+      }
+    }
+
+    /** Codes quantize the raw vector; the centroids only pick the cells
+      * a query probes, and a query's lookup table is the same in every
+      * cell. The auto chooser's pick on isotropic corpora. Store family
+      * `rawpq`. */
+    case object Raw extends Coding {
+      private[Pq] def family = "rawpq"
+      private[Pq] def encode(v: DataFrame, homes: DataFrame, m: IvfPqModel) =
+        encodeBlocks(v, "v", m.pq)
+      private[Pq] def cells(q: DataFrame, m: IvfPqModel) =
+        q.select(col("i"), col("c_id"), guardedVec(col("v"), m.pq, col("i")).as("qv"))
+    }
+
+    /** (i, c_id, x): each query's guarded residual against the probed
+      * cell's centroid. */
+    private def centered(q: DataFrame, cents: Seq[(Long, Seq[Double])]): DataFrame = {
+      val spark = q.sparkSession
+      import spark.implicits._
+      q.join(broadcast(cents.toDF("c_id", "centv")), "c_id")
+        .select(col("i"), col("c_id"), guardedDiff(col("v"), col("centv"), col("i")).as("x"))
+    }
+
+    /** The coding of the stored generation at `genDir` from its meta
+      * `family` tag: no tag (a store written before the tag existed)
+      * reads as residual, the only coding then; the rotated coding
+      * reads its `rot` dataset; an unknown tag fails loud. */
+    private[Pq] def load(spark: SparkSession, genDir: String,
+        family: Option[String]): Coding = family.getOrElse("ivfpq") match {
+      case "ivfpq" => Residual
+      case "rawpq" => Raw
+      case "opq" =>
+        val r = spark.read.parquet(s"$genDir/rot").head()
+        // the nested rows come back as mutable ArraySeqs — type them as
+        // the collection root, not immutable.Seq (a CCE inside map
+        // otherwise)
+        Rotated(Pca.Model(r.getSeq[Double](0).toArray,
+            r.getSeq[Double](1).toArray,
+            r.getSeq[scala.collection.Seq[Double]](3).map(_.toArray).toArray),
+          r.getSeq[Int](2).toArray)
+      case other => throw new IllegalArgumentException(
+        s"index generation $genDir has family '$other', which no coding " +
+          "reads (ivfpq, opq, rawpq)")
+    }
+  }
 
   /** Each vector's home bucket: (vec_id, c_id) via one nprobe = 1
     * assignment pass. crnk 1 of ANY nprobe is the same ranking, so a
@@ -448,13 +550,14 @@ object Pq {
       fit(residuals(v, cents), "rv", m, k, sampleN, lloydIters, "vec_id"))
   }
 
-  /** Materialized residual index: the model plus the corpus-side
-    * relations every query re-derived per call — homes (vec_id, c_id)
-    * and residual block codes (vec_id, b, code), both persisted
-    * MEMORY_ONLY. With these in executor storage a workload query pays
-    * ONLY its own side: M-row assignment, its query cells, the ADC
-    * kernel — the per-call O(N·c) assignment and O(N·m) re-encode are
-    * gone (round-13 review: the model-only cache still re-paid both). */
+  /** Materialized index: the model plus the corpus-side relations
+    * every query re-derived per call — homes (vec_id, c_id) and block
+    * codes (vec_id, b, code) in the model's coding; the session
+    * registry ([[ivfPqIndexCached]]) persists both MEMORY_ONLY. With
+    * these in executor storage a workload query pays ONLY its own
+    * side: M-row assignment, its query cells, the ADC kernel — the
+    * per-call O(N·c) assignment and O(N·m) re-encode are gone (round-13
+    * review: the model-only cache still re-paid both). */
   final case class IvfPqIndex(model: IvfPqModel, homes: DataFrame,
       codes: DataFrame)
 
@@ -624,10 +727,8 @@ object Pq {
     // index from an already-fit model: one homes pass (unavoidable —
     // the fit's own homes relation was transient)
     def fromModel(model: IvfPqModel, persist: Boolean): IvfPqIndex = {
-      val homes = persisted(homesOf(v, model.cents), persist)
-      val codes = persisted(
-        encodeBlocks(residualsFrom(v, homes, model.cents), "rv", model.pq), persist)
-      IvfPqIndex(model, homes, codes)
+      val ix = indexFrom(v, model)
+      IvfPqIndex(model, persisted(ix.homes, persist), persisted(ix.codes, persist))
     }
     // fresh build: ONE homes relation serves the residual TRAIN, the
     // persisted index side, and the codes (round-13 review: fitIvfPq
@@ -639,9 +740,7 @@ object Pq {
       val homes = persisted(homesOf(v, cents), persist)
       val model = IvfPqModel(cents,
         fit(residualsFrom(v, homes, cents), "rv", m, k))
-      val codes = persisted(
-        encodeBlocks(residualsFrom(v, homes, cents), "rv", model.pq), persist)
-      IvfPqIndex(model, homes, codes)
+      IvfPqIndex(model, homes, persisted(model.coding.encode(v, homes, model), persist))
     }
     def unpersistIx(ix: IvfPqIndex): Unit = {
       ix.homes.unpersist(false); ix.codes.unpersist(false); ()
@@ -689,6 +788,21 @@ object Pq {
     }
   }
 
+  /** The index of a fitted model over its corpus, any coding: one homes
+    * pass and one encode, both lazy — persist them, search them, or
+    * [[writeIndex]] them. */
+  def indexOf(vecs: DataFrame, vecCol: String, model: IvfPqModel,
+      idCol: String = "vec_id"): IvfPqIndex = {
+    ApAggs.register(vecs.sparkSession)
+    VectorExprs.register(vecs.sparkSession)
+    indexFrom(normalize(vecs, vecCol, idCol), model)
+  }
+
+  private def indexFrom(v: DataFrame, model: IvfPqModel): IvfPqIndex = {
+    val homes = homesOf(v, model.cents)
+    IvfPqIndex(model, homes, model.coding.encode(v, homes, model))
+  }
+
   /** [[appendToIndex]]'s outcome: the extended index when the batch is
     * within the drift bound, else `refitNeeded = true` and no index —
     * the caller refits over the full corpus ([[ivfPqIndexCached]] after
@@ -731,9 +845,10 @@ object Pq {
   /** INCREMENTAL index maintenance (round-17 VERDICT #3 — the daily
     * append that should not refit the world): encode ONLY the new
     * batch against the index's cached centroids and codebooks — one
-    * nprobe-1 assignment + one residual encode over the BATCH, the
-    * untouched corpus side rides its persisted homes/codes storage with
-    * zero new jobs — and extend the index by union. Guards:
+    * nprobe-1 assignment + one encode in the index's coding over the
+    * BATCH, the untouched corpus side rides its persisted homes/codes
+    * storage with zero new jobs — and extend the index by union.
+    * Guards:
     *
     *  - DUPLICATE ids fail loud (bounded probe): an appended id already
     *    in the index would silently double its candidacy in every
@@ -758,81 +873,128 @@ object Pq {
       persist: Boolean = true,
       corpusMoment: Option[Double] = None,
       precomputedHomes: Option[DataFrame] = None,
-      skipChecks: Boolean = false): AppendedIndex =
-    // empty-batch no-op, the union duplicate probe, and the bias-free
-    // drift estimator all live in the shared core (one recipe for the
-    // residual and rotated families — round-20, when the rotated
-    // append landed). precomputedHomes: the batch's (vec_id, c_id)
-    // nprobe=1 assignment against idx's OWN centroids when the caller
-    // already materialized it (the semantic sink's home-cell layout
-    // write) — bit-identical to the recompute, one assignment pass
-    // instead of two (round 21). skipChecks (round 22): callers that
-    // have ALREADY proved the batch non-empty, its ids distinct, and
-    // none of them indexed (the semantic sink's transaction guards —
-    // id hygiene + the indexHasBatch homes probe) skip the two bounded
-    // probe jobs; the default keeps them for every other caller.
-    appendCore(idx.homes, idx.codes, idx.model.pq, idx.model.cents,
-      newVecs, vecCol, idCol, driftBound, persist,
-      (vNew, homesNew) => encodeBlocks(
-        residualsFrom(vNew, homesNew, idx.model.cents), "rv",
-        idx.model.pq), corpusMoment, precomputedHomes, skipChecks) match {
-      case None => AppendedIndex(Some(idx), 0.0, refitNeeded = false)
-      case Some((_, _, drift)) if drift > driftBound =>
-        AppendedIndex(None, drift, refitNeeded = true)
-      case Some((homesNew, codesNew, drift)) =>
-        AppendedIndex(
-          Some(IvfPqIndex(idx.model, idx.homes.unionByName(homesNew),
-            idx.codes.unionByName(codesNew))),
-          drift, refitNeeded = false, Some(homesNew), Some(codesNew))
+      skipChecks: Boolean = false): AppendedIndex = {
+    require(driftBound >= 0, s"appendToIndex: driftBound $driftBound < 0")
+    val spark = newVecs.sparkSession
+    ApAggs.register(spark)
+    VectorExprs.register(spark)
+    val model = idx.model
+    val vNew = normalize(newVecs, vecCol, idCol)
+    // skipChecks (round 22): callers that have ALREADY proved the batch
+    // non-empty, its ids distinct, and none of them indexed (the
+    // semantic sink's transaction guards — id hygiene + the
+    // indexHasBatch homes probe) skip the two bounded probe jobs on a
+    // per-micro-batch hot path; the default keeps them for every other
+    // caller
+    if (!skipChecks) {
+      if (vNew.limit(1).collect().isEmpty)
+        return AppendedIndex(Some(idx), 0.0, refitNeeded = false)
+      // ONE global-aggregate job: the clean path scans every partition
+      // to find nothing either way, and limit(1).collect() paid
+      // executeTake's incremental sweeps for it (round 22; min(struct)
+      // also makes the named offender deterministic)
+      val dup = vNew.select("vec_id")
+        .join(idx.homes.select("vec_id"), Seq("vec_id"), "left_semi")
+        .select(col("vec_id"), lit("already indexed").as("kind"))
+        .unionByName(vNew.groupBy("vec_id").agg(count(lit(1)).as("c"))
+          .filter(col("c") > 1)
+          .select(col("vec_id"), lit("repeated within the batch").as("kind")))
+        .agg(min(struct(col("vec_id"), col("kind"))).as("w"))
+        .head()
+      if (!dup.isNullAt(0)) {
+        val r = dup.getStruct(0)
+        throw new IllegalArgumentException(
+          s"appendToIndex: id ${r.get(0)} is ${r.getString(1)} - an appended " +
+            "duplicate would double its search candidacy")
+      }
     }
+    def persisted(df: DataFrame): DataFrame =
+      if (persist) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      else df
+    // precomputedHomes: the batch's (vec_id, c_id) nprobe=1 assignment
+    // against idx's OWN centroids when the caller already materialized
+    // it (the semantic sink's home-cell layout write) — bit-identical to
+    // the recompute, one assignment pass instead of two (round 21). It
+    // is already storage-backed — persisting it again would just layer
+    // storage on storage
+    val homesNew = precomputedHomes
+      .map(_.select(col("vec_id"), col("c_id")))
+      .getOrElse(persisted(homesOf(vNew, model.cents)))
+    // the encode's homes side is BROADCAST (round 22): homesNew is
+    // always batch-bounded here (it is the NEW batch's assignment), and
+    // a materialized/persisted relation carries no size statistics, so
+    // the planner would otherwise sort-merge the batch against its own
+    // homes — two extra shuffle stages per append
+    val codesNew = persisted(model.coding.encode(vNew, broadcast(homesNew), model))
+    // corpus side from the caller's sidecar-merged value when it has
+    // one (the persisted-index hot path — see [[indexMoment]]); the
+    // batch side is always a batch-sized scan, so its materializing
+    // action runs with AQE off (graft.Checkpoints.withAqeOff — the
+    // encode plan is batch-bounded at any corpus scale). Both sides'
+    // moments are read from codes of the same coding, so a rotation
+    // cancels like the quantization bias does
+    val mOld = corpusMoment.getOrElse(codeMoment(idx.codes, model.pq))
+    val mNew = graft.Checkpoints.withAqeOff(spark) {
+      codeMoment(codesNew, model.pq)
+    }
+    val drift =
+      if (mOld > 0) math.abs(mNew - mOld) / mOld
+      else if (mNew > 0) Double.PositiveInfinity
+      else 0.0
+    if (drift > driftBound) {
+      // only release what THIS call persisted — a precomputed home
+      // relation is caller-owned storage (its checkpoint lifecycle is
+      // the caller's release contract)
+      if (persist) {
+        if (precomputedHomes.isEmpty) homesNew.unpersist(false)
+        codesNew.unpersist(false)
+      }
+      AppendedIndex(None, drift, refitNeeded = true)
+    } else
+      AppendedIndex(
+        Some(IvfPqIndex(model, idx.homes.unionByName(homesNew),
+          idx.codes.unionByName(codesNew))),
+        drift, refitNeeded = false, Some(homesNew), Some(codesNew))
+  }
 
   // ---- index persistence (round-18 VERDICT #4) -------------------------
   //
   // The faiss write_index/read_index equivalent on the engine's marker
   // protocol (graft.MarkerStore — the upsert/ingest-corpus discipline):
-  //   <dir>/gen=<g>/{meta,cents,codebooks,homes,codes}   full snapshots
-  //   <dir>/inc=<i>/{homes,codes}                        appended batches
+  //   <dir>/gen=<g>/{meta,cents,codebooks,homes,codes,moment}  snapshots
+  //   <dir>/gen=<g>/rot                   the rotated coding's rotation
+  //   <dir>/inc=<i>/{homes,codes,moment}                appended batches
   //   <dir>/_gens/<g>_<coveredMaxInc>, <dir>/_commits/<i>  markers (LAST)
-  // A fresh session readIndex()es with ZERO fit jobs — three bounded
-  // driver reads (meta row, ≤c centroid rows, m·k codebook rows) plus
-  // lazy parquet plans for homes/codes — and serves every search overload
-  // unchanged. writeIndex is itself the compaction: it snapshots the
-  // CALLER's index (typically readIndex + appendToIndex's result) as the
-  // next generation covering all committed increments, so read-plan
-  // fan-in stays (1 generation + tail) at any append count.
+  // meta carries (m, k, sub, family); the family tag is the index's
+  // [[Coding]] — `ivfpq` residual, `opq` rotated residual, `rawpq` raw.
+  // A fresh session readIndex()es with ZERO fit jobs — bounded driver
+  // reads (meta row, ≤c centroid rows, m·k codebook rows, the rotation)
+  // plus lazy parquet plans for homes/codes — and serves every search
+  // overload unchanged. writeIndex is itself the compaction: it
+  // snapshots the CALLER's index (typically readIndex + appendToIndex's
+  // result) as the next generation covering all committed increments,
+  // so read-plan fan-in stays (1 generation + tail) at any append count.
 
-  /** Persist a full index snapshot as the next generation; the
-    * generation marker commits LAST, so a crash mid-write leaves an
-    * invisible orphan the retry overwrites. Increment ids are the
-    * caller's batch sequence and must be ≥ 0 (the seed generation
-    * covers -1). */
-  def writeIndex(idx: IvfPqIndex, dir: String): Unit =
-    writeIndexFamily(idx.homes.sparkSession, dir, "ivfpq", idx.model.pq,
-      idx.model.cents, idx.homes, idx.codes)
-
-  /** The shared generation-write core of the three persisted families
-    * (`ivfpq` residual / `opq` rotated-residual / `rawpq`): meta +
-    * cents + codebooks + homes + codes under `gen=<g>/`, marker LAST.
-    * `extras` adds family-specific datasets (the rotated family's
-    * rotation). The `family` column in meta makes a wrong-family read
-    * fail LOUD — readIndex on an OPQ store would otherwise silently
-    * decode rotated codes as unrotated residuals. */
-  private def writeIndexFamily(spark: SparkSession, dir: String,
-      family: String, pq: Model, cents: Seq[(Long, Seq[Double])],
-      homes: DataFrame, codes: DataFrame,
-      extras: Seq[(String, DataFrame)] = Nil): Unit = {
+  /** Persist a full index snapshot of any coding as the next
+    * generation; the generation marker commits LAST, so a crash
+    * mid-write leaves an invisible orphan the retry overwrites.
+    * Increment ids are the caller's batch sequence and must be ≥ 0 (the
+    * seed generation covers -1). */
+  def writeIndex(idx: IvfPqIndex, dir: String): Unit = {
+    val spark = idx.homes.sparkSession
     import spark.implicits._
+    val pq = idx.model.pq
     val g = graft.MarkerStore.liveGen(spark, dir).map(_._1).getOrElse(0L) + 1
     val covered = (graft.MarkerStore.committedIncs(spark, dir) :+ -1L).max
-    Seq((pq.m, pq.k, pq.sub, family))
+    Seq((pq.m, pq.k, pq.sub, idx.model.coding.family))
       .toDF("m", "k", "sub", "family")
       .write.mode("overwrite").parquet(s"$dir/gen=$g/meta")
-    cents.toDF("c_id", "centv")
+    idx.model.cents.toDF("c_id", "centv")
       .write.mode("overwrite").parquet(s"$dir/gen=$g/cents")
     codebookDF(spark, pq)
       .write.mode("overwrite").parquet(s"$dir/gen=$g/codebooks")
-    homes.write.mode("overwrite").parquet(s"$dir/gen=$g/homes")
-    codes.write.mode("overwrite").parquet(s"$dir/gen=$g/codes")
+    idx.homes.write.mode("overwrite").parquet(s"$dir/gen=$g/homes")
+    idx.codes.write.mode("overwrite").parquet(s"$dir/gen=$g/codes")
     // sidecar from the just-WRITTEN bytes, not a re-execution of the
     // lazy codes plan (round-20 ADVICE): the plan is corpus-sized on the
     // refit/vacuum paths — a second full encode pass — and any
@@ -841,14 +1003,14 @@ object Pq {
     // sidecar ≡ stored and costs one bounded aggregate
     momentCounts(spark.read.schema(codesSchema).parquet(s"$dir/gen=$g/codes"))
       .write.mode("overwrite").parquet(s"$dir/gen=$g/moment")
-    extras.foreach { case (name, df) =>
+    idx.model.coding.extras(spark).foreach { case (name, df) =>
       df.write.mode("overwrite").parquet(s"$dir/gen=$g/$name")
     }
     graft.MarkerStore.commitGen(spark, dir, g, covered)
   }
 
   // Explicit schemas of the persisted index datasets — the exact shapes
-  // writeIndexFamily/writeIndexIncrement land (round-21 optimization:
+  // writeIndex/writeIndexIncrement land (round-21 optimization:
   // parquet reads WITHOUT a user schema pay one footer-inference job
   // per relation build, a per-micro-batch tax in the ingest sinks; the
   // parts are homogeneous by the store invariant, so the schema is
@@ -930,7 +1092,7 @@ object Pq {
     else {
       homes.write.mode("overwrite").parquet(s"$dir/inc=$incId/homes")
       codes.write.mode("overwrite").parquet(s"$dir/inc=$incId/codes")
-      // sidecar from the WRITTEN bytes — see writeIndexFamily: no third
+      // sidecar from the WRITTEN bytes — see writeIndex: no third
       // execution of the batch encode, sidecar ≡ stored by construction
       momentCounts(spark.read.schema(codesSchema).parquet(s"$dir/inc=$incId/codes"))
         .write.mode("overwrite").parquet(s"$dir/inc=$incId/moment")
@@ -939,88 +1101,14 @@ object Pq {
     }
   }
 
-  /** Load a persisted index: the live generation's model (bounded
-    * driver reads — never a fit, never a corpus scan) plus homes/codes
-    * as the lazy union of the generation and every committed increment
-    * above its cover. The returned [[IvfPqIndex]] is NOT persisted to
-    * executor storage — callers with a repeated-query workload may
-    * .persist() homes/codes themselves (or writeIndex after appends,
-    * which re-snapshots). */
+  /** Load a persisted index of any coding: the live generation's model
+    * (bounded driver reads — never a fit, never a corpus scan; cached
+    * per generation) plus homes/codes as the lazy union of the
+    * generation and every committed increment above its cover. The
+    * returned [[IvfPqIndex]] is NOT persisted to executor storage —
+    * callers with a repeated-query workload may .persist() homes/codes
+    * themselves (or writeIndex after appends, which re-snapshots). */
   def readIndex(spark: SparkSession, dir: String): IvfPqIndex = {
-    val p = readIndexFamily(spark, dir, "ivfpq")
-    IvfPqIndex(IvfPqModel(p.cents, p.pq), p.homes, p.codes)
-  }
-
-  /** The common loaded shape of a persisted generation + tail: the
-    * driver-side model pieces plus the lazy homes/codes unions (and the
-    * generation path for family-specific extras). */
-  private final case class LoadedIndex(gen: Long, genDir: String,
-      family: String, pq: Model, cents: Seq[(Long, Seq[Double])],
-      homes: DataFrame, codes: DataFrame)
-
-  /** Driver-side model pieces of one persisted generation — the
-    * cacheable immutable part of [[LoadedIndex]] (everything except the
-    * tail-dependent homes/codes unions). */
-  private final case class LoadedModel(family: String, pq: Model,
-      cents: Seq[(Long, Seq[Double])])
-
-  /** Per-session cache of the LATEST loaded generation model per index
-    * dir (round 21): a marked generation is IMMUTABLE (writeIndexFamily
-    * lands `gen=<g>/` then the marker; vacuum only ever deletes
-    * superseded generations), so the meta/cents/codebooks driver reads
-    * — three Spark jobs plus their file listings, re-paid on every
-    * readIndex call, i.e. once per ingest micro-batch — can be reused
-    * for as long as the live generation id is unchanged. Generation
-    * resolution itself stays a per-call driver FS read (MarkerStore),
-    * so a refit/redaction/vacuum that advances the generation misses
-    * the cache and reloads. One entry per dir (the latest generation)
-    * bounds the held codebooks; the weak session key is the
-    * sessionIndexCache discipline. */
-  private val loadedModelCache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, (Long, Long, LoadedModel)]]()
-
-  private def loadedModelCacheFor(spark: SparkSession) =
-    loadedModelCache.synchronized {
-      var m = loadedModelCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, LoadedModel)]()
-        loadedModelCache.put(spark, m)
-      }
-      m
-    }
-
-  /** Test hook: drop the cached generation models for `spark`. */
-  private[graft] def invalidateLoadedModelCache(spark: SparkSession): Unit =
-    loadedModelCache.synchronized { loadedModelCache.remove(spark); () }
-
-  private def loadModel(spark: SparkSession, dir: String, g: Long): LoadedModel = {
-    val genDir = s"$dir/gen=$g"
-    val metaDf = spark.read.parquet(s"$genDir/meta")
-    val meta = metaDf.head()
-    val fam =
-      if (metaDf.schema.fieldNames.contains("family"))
-        meta.getString(metaDf.schema.fieldIndex("family"))
-      else "ivfpq"
-    val (m, k, sub) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val cents = spark.read.parquet(s"$genDir/cents")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1).toSeq
-    val cbRows = spark.read.parquet(s"$genDir/codebooks")
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
-    val codebooks = Array.tabulate(m)(b =>
-      cbRows.filter(_._1 == b).sortBy(_._2).map(_._3))
-    require(codebooks.forall(_.nonEmpty),
-      s"index $dir generation $g has an empty codebook block")
-    LoadedModel(fam, Model(m, k, sub, codebooks), cents)
-  }
-
-  /** Load the shared datasets of a persisted index generation,
-    * asserting the store's family matches the reader (`family = null`
-    * skips the check — the [[readStoredIndex]] dispatcher's probe).
-    * Pre-family stores (no `family` column in meta) read as `ivfpq` —
-    * the only family that existed before the column did. */
-  private def readIndexFamily(spark: SparkSession, dir: String,
-      family: String): LoadedIndex = {
     ApAggs.register(spark)
     VectorExprs.register(spark)
     val (gen, tail) = graft.MarkerStore.resolve(spark, dir)
@@ -1036,17 +1124,13 @@ object Pq {
     // differs, so the cache misses and reloads. One driver FS stat per
     // call — the same cost class as the generation resolution itself.
     val fp = graft.MarkerStore.genMarkerFingerprint(spark, dir, g, gen.get._2)
-    val lm = Option(cache.get(dir)) match {
+    val model = Option(cache.get(dir)) match {
       case Some((cg, cfp, m)) if cg == g && cfp == fp => m
       case _ =>
         val m = loadModel(spark, dir, g)
         cache.put(dir, (g, fp, m))
         m
     }
-    require(family == null || lm.family == family,
-      s"index $dir generation $g is family '${lm.family}', not '$family' - " +
-        "load it with its own reader (readIndex / readIndexRotated / " +
-        "readIndexRaw, or readStoredIndex to dispatch)")
     // ONE multi-path read per dataset (parts are homogeneous flat
     // parquet): a single file listing for the whole store — the
     // per-part union form cost one inference job per committed
@@ -1058,8 +1142,56 @@ object Pq {
     def unionOf(name: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
       spark.read.schema(schema).parquet(
         (Seq(s"$genDir/$name") ++ tail.map(i => s"$dir/inc=$i/$name")): _*)
-    LoadedIndex(g, genDir, lm.family, lm.pq, lm.cents,
-      unionOf("homes", homesSchema), unionOf("codes", codesSchema))
+    IvfPqIndex(model, unionOf("homes", homesSchema), unionOf("codes", codesSchema))
+  }
+
+  /** Per-session cache of the LATEST loaded generation model per index
+    * dir (round 21): a marked generation is IMMUTABLE (writeIndex
+    * lands `gen=<g>/` then the marker; vacuum only ever deletes
+    * superseded generations), so the meta/cents/codebooks (and
+    * rotation) driver reads — Spark jobs plus their file listings,
+    * re-paid on every readIndex call, i.e. once per ingest micro-batch
+    * — can be reused for as long as the live generation id is
+    * unchanged. Generation resolution itself stays a per-call driver FS
+    * read (MarkerStore), so a refit/redaction/vacuum that advances the
+    * generation misses the cache and reloads. One entry per dir (the
+    * latest generation) bounds the held codebooks; the weak session key
+    * is the sessionIndexCache discipline. */
+  private val loadedModelCache = new java.util.WeakHashMap[
+    SparkSession, java.util.concurrent.ConcurrentHashMap[String, (Long, Long, IvfPqModel)]]()
+
+  private def loadedModelCacheFor(spark: SparkSession) =
+    loadedModelCache.synchronized {
+      var m = loadedModelCache.get(spark)
+      if (m == null) {
+        m = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, IvfPqModel)]()
+        loadedModelCache.put(spark, m)
+      }
+      m
+    }
+
+  /** Test hook: drop the cached generation models for `spark`. */
+  private[graft] def invalidateLoadedModelCache(spark: SparkSession): Unit =
+    loadedModelCache.synchronized { loadedModelCache.remove(spark); () }
+
+  private def loadModel(spark: SparkSession, dir: String, g: Long): IvfPqModel = {
+    val genDir = s"$dir/gen=$g"
+    val metaDf = spark.read.parquet(s"$genDir/meta")
+    val meta = metaDf.head()
+    val family =
+      if (metaDf.columns.contains("family")) Some(meta.getAs[String]("family")) else None
+    val (m, k, sub) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
+    val coding = Coding.load(spark, genDir, family)
+    val cents = spark.read.parquet(s"$genDir/cents")
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+      .sortBy(_._1).toSeq
+    val cbRows = spark.read.parquet(s"$genDir/codebooks")
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
+    val codebooks = Array.tabulate(m)(b =>
+      cbRows.filter(_._1 == b).sortBy(_._2).map(_._3))
+    require(codebooks.forall(_.nonEmpty),
+      s"index $dir generation $g has an empty codebook block")
+    IvfPqModel(cents, Model(m, k, sub, codebooks), coding)
   }
 
   /** Retire persisted-index data a reader can no longer resolve — the
@@ -1100,290 +1232,15 @@ object Pq {
     }
   }
 
-  // ---- rotated + raw index persistence (round-19 VERDICT #2) -----------
-  //
-  // Round 19 persisted only the residual IvfPqIndex; the OPQ/rotated
-  // family that fitIvfPqAuto SELECTS on clustered/heteroscedastic
-  // corpora had no store — a fresh session serving the auto-picked
-  // index refit from scratch, exactly the cost writeIndex exists to
-  // kill. The rotated generation adds one dataset (`rot`: PCA mean +
-  // eigenvalues + loadings + the balanced block permutation) beside
-  // cents/codebooks; homes/codes/increments/vacuum are the shared
-  // protocol. The raw flat-PQ family (the auto chooser's isotropic
-  // pick) persists too, so EVERY auto verdict round-trips.
-
-  /** Materialized rotated-residual index: the model plus persisted-able
-    * homes and ROTATED residual block codes. */
-  final case class RotatedIvfPqIndex(model: RotatedIvfPqModel,
-      homes: DataFrame, codes: DataFrame)
-
-  /** Materialized raw flat-PQ index: IVF centroids for candidate
-    * generation (the same recipe the self-building raw search runs per
-    * call) plus RAW-vector block codes — no centroid subtraction, the
-    * auto chooser's isotropic-regime pick. */
-  final case class RawPqIndex(cents: Seq[(Long, Seq[Double])], pq: Model,
-      homes: DataFrame, codes: DataFrame)
-
-  /** Build the rotated index relations for a fitted model over its
-    * corpus: one homes pass + one rotated-residual encode (both lazy —
-    * persist or writeIndexRotated them). */
-  def rotatedIndexOf(vecs: DataFrame, vecCol: String, rim: RotatedIvfPqModel,
-      idCol: String = "vec_id"): RotatedIvfPqIndex = {
-    ApAggs.register(vecs.sparkSession)
-    VectorExprs.register(vecs.sparkSession)
-    val v = normalize(vecs, vecCol, idCol)
-    val homes = homesOf(v, rim.cents)
-    val rot = residualsFrom(v, homes, rim.cents)
-      .select(col("vec_id"), rotateExpr(col("rv"), rim.pca, rim.basisPerm).as("rv"))
-    RotatedIvfPqIndex(rim, homes, encodeBlocks(rot, "rv", rim.pq))
-  }
-
-  /** Build the raw index relations for a fitted flat model: centroids
-    * via the shared recipe (auto-sized unless pinned), homes, raw
-    * codes. */
-  def rawIndexOf(vecs: DataFrame, vecCol: String, model: Model,
-      centroids: Int = 0, idCol: String = "vec_id"): RawPqIndex = {
-    ApAggs.register(vecs.sparkSession)
-    VectorExprs.register(vecs.sparkSession)
-    val v = normalize(vecs, vecCol, idCol)
-    val c = if (centroids > 0) centroids else Ivf.autoCentroids(v.count())
-    val cents = Ivf.buildCentroids(v, c)
-    RawPqIndex(cents, model, homesOf(v, cents), encodeBlocks(v, "v", model))
-  }
-
-  /** [[writeIndex]] for the rotated family — same marker protocol, one
-    * extra `rot` dataset carrying the rotation, meta family = "opq" so
-    * the unrotated reader fails loud instead of silently serving
-    * rotated codes as residual ones. */
-  def writeIndexRotated(idx: RotatedIvfPqIndex, dir: String): Unit = {
-    val spark = idx.homes.sparkSession
-    import spark.implicits._
-    val rm = idx.model
-    val rot = Seq((rm.pca.mean.toSeq, rm.pca.eigenvalues.toSeq,
-        rm.basisPerm.toSeq, rm.pca.loadings.map(_.toSeq).toSeq))
-      .toDF("mean", "eigenvalues", "perm", "loadings")
-    writeIndexFamily(spark, dir, "opq", rm.pq, rm.cents, idx.homes,
-      idx.codes, Seq("rot" -> rot))
-  }
-
-  /** [[writeIndex]] for the raw flat-PQ family (meta family =
-    * "rawpq"). */
-  def writeIndexRaw(idx: RawPqIndex, dir: String): Unit =
-    writeIndexFamily(idx.homes.sparkSession, dir, "rawpq", idx.pq,
-      idx.cents, idx.homes, idx.codes)
-
-  /** [[readIndex]] for the rotated family: model pieces (including the
-    * rotation) via bounded driver reads — zero fit jobs — plus lazy
-    * homes/codes unions over generation + committed increments. */
-  def readIndexRotated(spark: SparkSession, dir: String): RotatedIvfPqIndex =
-    rotatedOf(spark, readIndexFamily(spark, dir, "opq"))
-
-  /** Assemble the rotated index from an already-loaded generation (the
-    * family-specific `rot` extra is the only additional read) — shared
-    * by [[readIndexRotated]] and [[readStoredIndex]]'s dispatcher, so
-    * the dispatcher never re-runs the full family load (round-20
-    * ADVICE #2). */
-  private def rotatedOf(spark: SparkSession, p: LoadedIndex): RotatedIvfPqIndex = {
-    val r = spark.read.parquet(s"${p.genDir}/rot").head()
-    // the nested rows come back as mutable ArraySeqs — type them as the
-    // collection root, not immutable.Seq (a CCE inside map otherwise)
-    val pca = Pca.Model(r.getSeq[Double](0).toArray,
-      r.getSeq[Double](1).toArray,
-      r.getSeq[scala.collection.Seq[Double]](3).map(_.toArray).toArray)
-    RotatedIvfPqIndex(
-      RotatedIvfPqModel(p.cents, pca, r.getSeq[Int](2).toArray, p.pq),
-      p.homes, p.codes)
-  }
-
-  /** [[readIndex]] for the raw family. */
-  def readIndexRaw(spark: SparkSession, dir: String): RawPqIndex = {
-    val p = readIndexFamily(spark, dir, "rawpq")
-    RawPqIndex(p.cents, p.pq, p.homes, p.codes)
-  }
-
-  /** [[appendToIndex]]'s outcome for the rotated family. */
-  final case class AppendedRotatedIndex(index: Option[RotatedIvfPqIndex],
-      drift: Double, refitNeeded: Boolean,
-      incHomes: Option[DataFrame] = None, incCodes: Option[DataFrame] = None)
-
-  /** [[appendToIndex]] for the rotated family: batch-only homes +
-    * rotated-residual encode, the same bias-free quantized-moment drift
-    * test (both sides' moments read from ROTATED codes, so the rotation
-    * cancels too). */
-  def appendToIndexRotated(idx: RotatedIvfPqIndex, newVecs: DataFrame,
-      vecCol: String, idCol: String = "vec_id", driftBound: Double = 0.5,
-      persist: Boolean = true,
-      corpusMoment: Option[Double] = None): AppendedRotatedIndex = {
-    val rm = idx.model
-    appendCore(idx.homes, idx.codes, rm.pq, rm.cents, newVecs, vecCol,
-      idCol, driftBound, persist,
-      (vNew, homesNew) => encodeBlocks(
-        residualsFrom(vNew, homesNew, rm.cents)
-          .select(col("vec_id"), rotateExpr(col("rv"), rm.pca, rm.basisPerm).as("rv")),
-        "rv", rm.pq), corpusMoment) match {
-      case None => AppendedRotatedIndex(Some(idx), 0.0, refitNeeded = false)
-      case Some((_, _, drift)) if drift > driftBound =>
-        AppendedRotatedIndex(None, drift, refitNeeded = true)
-      case Some((homesNew, codesNew, drift)) =>
-        AppendedRotatedIndex(
-          Some(RotatedIvfPqIndex(rm, idx.homes.unionByName(homesNew),
-            idx.codes.unionByName(codesNew))),
-          drift, refitNeeded = false, Some(homesNew), Some(codesNew))
-    }
-  }
-
-  /** One persisted index of ANY family — what [[readStoredIndex]]
-    * loads and [[searchStoredIndex]] serves, so the auto chooser's
-    * verdict survives a session restart regardless of which variant it
-    * picked. */
-  sealed trait StoredIndex { def family: String }
-  final case class StoredIvfPq(index: IvfPqIndex) extends StoredIndex {
-    def family = "ivfpq"
-  }
-  final case class StoredRotated(index: RotatedIvfPqIndex) extends StoredIndex {
-    def family = "opq"
-  }
-  final case class StoredRaw(index: RawPqIndex) extends StoredIndex {
-    def family = "rawpq"
-  }
-
-  /** Materialize the auto chooser's pick over its corpus as a
-    * persistable index: AutoRotated → the rotated index (reusing the
-    * chooser's own centroids), AutoRaw → the raw index (centroids via
-    * the shared recipe — the same per-call build the self-building raw
-    * search would pay, now paid once). */
-  def indexOfAuto(auto: AutoIndex, vecs: DataFrame, vecCol: String,
-      centroids: Int = 0, idCol: String = "vec_id"): StoredIndex = auto match {
-    case AutoRotated(rm, _, _) =>
-      StoredRotated(rotatedIndexOf(vecs, vecCol, rm, idCol))
-    case AutoRaw(m0, _, _) =>
-      StoredRaw(rawIndexOf(vecs, vecCol, m0, centroids, idCol))
-  }
-
-  /** Persist any family's index (dispatch on the variant). */
-  def writeStoredIndex(s: StoredIndex, dir: String): Unit = s match {
-    case StoredIvfPq(ix) => writeIndex(ix, dir)
-    case StoredRotated(ix) => writeIndexRotated(ix, dir)
-    case StoredRaw(ix) => writeIndexRaw(ix, dir)
-  }
-
-  /** Load a persisted index of whatever family the store holds —
-    * bounded driver reads, zero fit jobs, any family. */
-  def readStoredIndex(spark: SparkSession, dir: String): StoredIndex =
-    // one family load, results built from the probe directly (the
-    // dispatch-to-public-readers form re-ran the whole load for the
-    // opq/rawpq families — round-20 ADVICE #2)
-    readIndexFamily(spark, dir, null) match {
-      case p if p.family == "opq" => StoredRotated(rotatedOf(spark, p))
-      case p if p.family == "rawpq" =>
-        StoredRaw(RawPqIndex(p.cents, p.pq, p.homes, p.codes))
-      case p => StoredIvfPq(IvfPqIndex(IvfPqModel(p.cents, p.pq),
-        p.homes, p.codes))
-    }
-
-  /** Search a persisted index of any family — the [[ivfAdcTopkAuto]]
-    * contract over the persisted tier. */
-  def searchStoredIndex(vecs: DataFrame, vecCol: String, s: StoredIndex,
-      topk: Int, nprobe: Int = 8, idCol: String = "vec_id",
-      queryIds: Option[DataFrame] = None,
-      allowedIds: Option[DataFrame] = None): DataFrame = s match {
-    case StoredIvfPq(ix) =>
-      ivfAdcTopk(vecs, vecCol, ix, topk, nprobe, idCol, queryIds, allowedIds)
-    case StoredRotated(ix) =>
-      ivfAdcTopk(vecs, vecCol, ix, topk, nprobe, idCol, queryIds, allowedIds)
-    case StoredRaw(ix) =>
-      ivfAdcTopk(vecs, vecCol, ix, topk, nprobe, idCol, queryIds, allowedIds)
-  }
-
-  /** The shared append core (batch hygiene + encode + drift): empty
-    * batch → None (a no-op append); otherwise the batch's homes, its
-    * codes via `encode(vNew, homesNew)`, and the drift between the
-    * corpus's and the batch's quantized residual moments. The caller
-    * assembles its family's result (and decides on drift). When the
-    * drift REFUSES, the batch frames are unpersisted before return. */
-  private def appendCore(homes: DataFrame, codes: DataFrame, pq: Model,
-      cents: Seq[(Long, Seq[Double])], newVecs: DataFrame, vecCol: String,
-      idCol: String, driftBound: Double, persist: Boolean,
-      encode: (DataFrame, DataFrame) => DataFrame,
-      corpusMoment: Option[Double],
-      precomputedHomes: Option[DataFrame] = None,
-      skipChecks: Boolean = false)
-      : Option[(DataFrame, DataFrame, Double)] = {
-    require(driftBound >= 0, s"appendToIndex: driftBound $driftBound < 0")
-    val spark = newVecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
-    val vNew = normalize(newVecs, vecCol, idCol)
-    // skipChecks: the caller asserts non-empty + distinct + unindexed
-    // (see [[appendToIndex]]) — the two bounded probes below are then
-    // redundant jobs on a per-micro-batch hot path (round 22)
-    if (!skipChecks) {
-      if (vNew.limit(1).collect().isEmpty) return None
-      // ONE global-aggregate job: the clean path scans every partition
-      // to find nothing either way, and limit(1).collect() paid
-      // executeTake's incremental sweeps for it (round 22; min(struct)
-      // also makes the named offender deterministic)
-      val dup = vNew.select("vec_id")
-        .join(homes.select("vec_id"), Seq("vec_id"), "left_semi")
-        .select(col("vec_id"), lit("already indexed").as("kind"))
-        .unionByName(vNew.groupBy("vec_id").agg(count(lit(1)).as("c"))
-          .filter(col("c") > 1)
-          .select(col("vec_id"), lit("repeated within the batch").as("kind")))
-        .agg(min(struct(col("vec_id"), col("kind"))).as("w"))
-        .head()
-      if (!dup.isNullAt(0)) {
-        val r = dup.getStruct(0)
-        throw new IllegalArgumentException(
-          s"appendToIndex: id ${r.get(0)} is ${r.getString(1)} - an appended " +
-            "duplicate would double its search candidacy")
-      }
-    }
-    def persisted(df: DataFrame): DataFrame =
-      if (persist) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      else df
-    // a caller-materialized home relation (the sink's layout write) is
-    // already storage-backed — persisting it again would just layer
-    // storage on storage
-    val homesNew = precomputedHomes
-      .map(_.select(col("vec_id"), col("c_id")))
-      .getOrElse(persisted(homesOf(vNew, cents)))
-    // the encode's homes side is BROADCAST (round 22): homesNew is
-    // always batch-bounded here (it is the NEW batch's assignment), and
-    // a materialized/persisted relation carries no size statistics, so
-    // the planner would otherwise sort-merge the batch against its own
-    // homes — two extra shuffle stages per append
-    val codesNew = persisted(encode(vNew, broadcast(homesNew)))
-    // corpus side from the caller's sidecar-merged value when it has
-    // one (the persisted-index hot path — see [[indexMoment]]); the
-    // batch side is always a batch-sized scan, so its materializing
-    // action runs with AQE off (graft.Checkpoints.withAqeOff — the
-    // encode plan is batch-bounded at any corpus scale)
-    val mOld = corpusMoment.getOrElse(codeMoment(codes, pq))
-    val mNew = graft.Checkpoints.withAqeOff(spark) {
-      codeMoment(codesNew, pq)
-    }
-    val drift =
-      if (mOld > 0) math.abs(mNew - mOld) / mOld
-      else if (mNew > 0) Double.PositiveInfinity
-      else 0.0
-    if (drift > driftBound && persist) {
-      // only release what THIS call persisted — a precomputed home
-      // relation is caller-owned storage (its checkpoint lifecycle is
-      // the caller's release contract)
-      if (precomputedHomes.isEmpty) homesNew.unpersist(false)
-      codesNew.unpersist(false); ()
-    }
-    Some((homesNew, codesNew, drift))
-  }
-
   // ---- IVF-ADC search ---------------------------------------------------
   //
-  // Every ivfAdcTopk overload is its family's kernel inputs
-  // (ivfAdcInputs, built by Catalyst) scored by [[AdcScan]]. Families
-  // differ only in where the members' codes come from (the stored index,
-  // or an encode of this call's corpus) and in how a query becomes its
-  // cell vector (its residual against the probed centroid, that residual
-  // rotated, or the raw query).
+  // Every ivfAdcTopk overload is its index's or model's kernel inputs
+  // (ivfAdcInputs, built by Catalyst) scored by [[AdcScan]]. A search
+  // over a stored index takes the members' codes from the index; a
+  // self-building search encodes this call's corpus. Either way the
+  // model's [[Coding]] decides how the members are encoded and how a
+  // query becomes its cell vector (its residual against the probed
+  // centroid, that residual rotated, or the raw query).
 
   /** A search's query workload and allowed-id pre-filter ([[idList]]
     * each), applied as semi joins: a duplicated id selects its rows
@@ -1411,111 +1268,44 @@ object Pq {
 
   /** Query cells (i, c_id, qv) — each probing query once per probed cell
     * — from `probes` (vec_id, c_id) and the query vectors `qv` (vec_id,
-    * v). With `residual`, qv is `post` of the query's guarded residual
-    * against the cell's centroid (the residual ADC identity
-    * ‖q − x‖² ≈ ‖(q − c) − r̂ₓ‖² for x homed in c); without, `post` of
-    * the query itself. `post` gets (vector, id). */
-  private def cellsOf(qv: DataFrame, probes: DataFrame,
-      cents: Seq[(Long, Seq[Double])], residual: Boolean,
-      post: (Column, Column) => Column): DataFrame = {
-    val spark = qv.sparkSession
-    import spark.implicits._
-    val q = probes.select(col("vec_id").as("i"), col("c_id"))
-      .join(qv.select(col("vec_id").as("i"), col("v")), "i")
-    val x =
-      if (residual) q.join(broadcast(cents.toDF("c_id", "centv")), "c_id")
-        .select(col("i"), col("c_id"), guardedDiff(col("v"), col("centv"), col("i")).as("x"))
-      else q.select(col("i"), col("c_id"), col("v").as("x"))
-    x.select(col("i"), col("c_id"), post(col("x"), col("i")).as("qv"))
-  }
+    * v), in the model's coding. */
+  private def cellsOf(qv: DataFrame, probes: DataFrame, model: IvfPqModel): DataFrame =
+    model.coding.cells(probes.select(col("vec_id").as("i"), col("c_id"))
+      .join(qv.select(col("vec_id").as("i"), col("v")), "i"), model)
 
   /** Members (c_id, vec_id, b, code): the searchable homes with their
     * codes. */
   private def membersOf(homes: DataFrame, codes: DataFrame): DataFrame =
     homes.join(codes, "vec_id").select("c_id", "vec_id", "b", "code")
 
-  /** Inputs of a search over a STORED index: one assignment pass over
-    * the probing queries only; the members are the stored homes and
-    * codes. */
-  private def storedInputs(vecs: DataFrame, vecCol: String, idCol: String,
-      nprobe: Int, queryIds: Option[DataFrame], allowedIds: Option[DataFrame],
-      cents: Seq[(Long, Seq[Double])], residual: Boolean,
-      post: (Column, Column) => Column, pq: Model, homes: DataFrame,
-      codes: DataFrame): AdcScan.Inputs = {
-    ApAggs.register(vecs.sparkSession)
-    VectorExprs.register(vecs.sparkSession)
-    val w = new Workload(queryIds, allowedIds)
-    val qv = w.queries(normalize(vecs, vecCol, idCol))
-    AdcScan.Inputs(
-      cellsOf(qv, assignmentsOf(qv, cents, nprobe), cents, residual, post),
-      membersOf(w.allowed(homes), codes), pq, cents.size)
-  }
-
   /** Inputs of a SELF-BUILDING search over the normalized corpus `v`:
     * ONE assignment pass gives both the homes (crnk 1) and the
     * workload's probes (crnk ≤ nprobe) — crnk 1 of the nprobe pass is
     * bit-identical to a dedicated homes pass — and the members' codes
-    * are `encode(allowed vectors, allowed homes)`, so only allowed rows
-    * encode. */
+    * are the coding's encode of the allowed vectors and homes, so only
+    * allowed rows encode. */
   private def builtInputs(v: DataFrame, nprobe: Int,
       queryIds: Option[DataFrame], allowedIds: Option[DataFrame],
-      cents: Seq[(Long, Seq[Double])], residual: Boolean,
-      post: (Column, Column) => Column, pq: Model,
-      encode: (DataFrame, DataFrame) => DataFrame): AdcScan.Inputs = {
+      model: IvfPqModel): AdcScan.Inputs = {
     ApAggs.register(v.sparkSession)
     VectorExprs.register(v.sparkSession)
     val w = new Workload(queryIds, allowedIds)
-    val assigned = assignmentsOf(v, cents, nprobe)
+    val assigned = assignmentsOf(v, model.cents, nprobe)
     val homes = w.allowed(assigned.filter(col("crnk") === 1)
       .select(col("vec_id"), col("c_id")))
     AdcScan.Inputs(
-      cellsOf(w.queries(v), w.queries(assigned), cents, residual, post),
-      membersOf(homes, encode(w.allowed(v), homes)), pq, cents.size)
+      cellsOf(w.queries(v), w.queries(assigned), model),
+      membersOf(homes, model.coding.encode(w.allowed(v), homes, model)),
+      model.pq, model.cents.size)
   }
 
-  /** Rotated-residual IVFADC over a MATERIALIZED/persisted rotated
-    * index — the rotated twin of the [[IvfPqIndex]] overload below: the
-    * query residuals pass through the model's [[rotateExpr]], the same
-    * expression tree the stored codes were encoded with. */
-  def ivfAdcTopk(vecs: DataFrame, vecCol: String, idx: RotatedIvfPqIndex,
-      topk: Int, nprobe: Int, idCol: String, queryIds: Option[DataFrame],
-      allowedIds: Option[DataFrame]): DataFrame =
-    AdcScan.topk(ivfAdcInputs(vecs, vecCol, idx, nprobe, idCol, queryIds,
-      allowedIds), topk)
-
-  private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
-      idx: RotatedIvfPqIndex, nprobe: Int, idCol: String,
-      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs = {
-    val rm = idx.model
-    storedInputs(vecs, vecCol, idCol, nprobe, queryIds, allowedIds, rm.cents,
-      residual = true, (x, _) => rotateExpr(x, rm.pca, rm.basisPerm), rm.pq,
-      idx.homes, idx.codes)
-  }
-
-  /** Raw flat-PQ ADC over a MATERIALIZED/persisted raw index: IVF cells
-    * from the stored homes, raw codes scored against the query itself
-    * (no centroid term — the codes quantize raw vectors, so a query's
-    * lookup table is the same in every cell it probes). */
-  def ivfAdcTopk(vecs: DataFrame, vecCol: String, idx: RawPqIndex,
-      topk: Int, nprobe: Int, idCol: String, queryIds: Option[DataFrame],
-      allowedIds: Option[DataFrame]): DataFrame =
-    AdcScan.topk(ivfAdcInputs(vecs, vecCol, idx, nprobe, idCol, queryIds,
-      allowedIds), topk)
-
-  private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
-      idx: RawPqIndex, nprobe: Int, idCol: String,
-      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs =
-    storedInputs(vecs, vecCol, idCol, nprobe, queryIds, allowedIds, idx.cents,
-      residual = false, (x, id) => guardedVec(x, idx.pq, id), idx.pq,
-      idx.homes, idx.codes)
-
-  /** Residual IVFADC over a MATERIALIZED index — the repeated-query
-    * production path: only the QUERY side computes per call (the
-    * workload's assignment over M rows and its cells); the corpus-side
-    * homes and codes come from the index storage (round-13 review: the
-    * model-only cache still re-paid the O(N·c) assignment and the
-    * O(N·m) re-encode per call). Same rows as the self-building
-    * overload — assignment is per-row independent, so a
+  /** IVFADC over a MATERIALIZED/persisted index of any coding — the
+    * repeated-query production path: only the QUERY side computes per
+    * call (the workload's assignment over M rows and its cells); the
+    * corpus-side homes and codes come from the index storage (round-13
+    * review: the model-only cache still re-paid the O(N·c) assignment
+    * and the O(N·m) re-encode per call). Same rows as the
+    * self-building overload — assignment is per-row independent, so a
     * workload-restricted pass ranks each query identically. Returns
     * (i, k_id, adc, rnk). */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, idx: IvfPqIndex, topk: Int,
@@ -1526,44 +1316,35 @@ object Pq {
 
   private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
       idx: IvfPqIndex, nprobe: Int, idCol: String,
-      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs =
-    storedInputs(vecs, vecCol, idCol, nprobe, queryIds, allowedIds,
-      idx.model.cents, residual = true, (x, _) => x, idx.model.pq,
-      idx.homes, idx.codes)
+      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs = {
+    ApAggs.register(vecs.sparkSession)
+    VectorExprs.register(vecs.sparkSession)
+    val w = new Workload(queryIds, allowedIds)
+    val qv = w.queries(normalize(vecs, vecCol, idCol))
+    val model = idx.model
+    AdcScan.Inputs(
+      cellsOf(qv, assignmentsOf(qv, model.cents, nprobe), model),
+      membersOf(w.allowed(idx.homes), idx.codes), model.pq, model.cents.size)
+  }
 
   /** Unfiltered shape of the index-tier search (pre-allowedIds callers). */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, idx: IvfPqIndex, topk: Int,
       nprobe: Int, idCol: String, queryIds: Option[DataFrame]): DataFrame =
     ivfAdcTopk(vecs, vecCol, idx, topk, nprobe, idCol, queryIds, None)
 
-  /** [[ivfAdcRerankTopk]] over a materialized index: ADC shortlist from
-    * the indexed search, true sqdist on the shortlist pairs only. */
-  def ivfAdcRerankTopk(vecs: DataFrame, vecCol: String, idx: IvfPqIndex,
-      topk: Int, shortlist: Int, nprobe: Int, idCol: String,
-      queryIds: Option[DataFrame]): DataFrame = {
-    require(shortlist >= topk,
-      s"ivfAdcRerankTopk: shortlist=$shortlist < topk=$topk")
-    val spark = vecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
-    val v = normalize(vecs, vecCol, idCol)
-    rerankExact(v,
-      ivfAdcTopk(v, "v", idx, shortlist, nprobe, "vec_id", queryIds), topk)
-  }
-
-  /** RESIDUAL IVFADC self-search — the production composition over the
-    * coupled [[IvfPqModel]] (faiss's default IVFADC layering with
-    * residual encoding, round-12 VERDICT #1). Same cells as the
+  /** IVFADC self-search over a fitted model of any coding — the
+    * production composition (faiss's IVFADC layering; residual
+    * encoding by default, round-12 VERDICT #1). Same cells as the
     * raw-model overload (one assignment pass; a query meets the members
-    * of its nprobe cells — expected nprobe·N/c per query, never N²), but
-    * the codes quantize residuals and each (query, probed cell) scores
-    * against the lookup table of the query's residual against that
-    * cell's centroid. Approximation contract unchanged: candidate
-    * coverage is the IVF trade (tunable via nprobe); ADC values on
-    * surviving pairs equal the driver's residual-LUT arithmetic exactly
-    * (PqSpec pins both). Returns (i, k_id, adc, rnk). `queryIds`
-    * restricts the probing workload as in the raw overload (single id
-    * column, duplicates collapsed). */
+    * of its nprobe cells — expected nprobe·N/c per query, never N²);
+    * the members encode in the model's coding and each (query, probed
+    * cell) scores against the lookup table of the query's cell vector.
+    * Approximation contract unchanged: candidate coverage is the IVF
+    * trade (tunable via nprobe); ADC values on surviving pairs equal
+    * the driver's residual-LUT arithmetic exactly (PqSpec pins both).
+    * Returns (i, k_id, adc, rnk). `queryIds` restricts the probing
+    * workload as in the raw overload (single id column, duplicates
+    * collapsed). */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, im: IvfPqModel, topk: Int,
       nprobe: Int, idCol: String, queryIds: Option[DataFrame],
       allowedIds: Option[DataFrame]): DataFrame =
@@ -1572,147 +1353,13 @@ object Pq {
 
   private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
       im: IvfPqModel, nprobe: Int, idCol: String,
-      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs = {
-    val v = normalize(vecs, vecCol, idCol)
-    builtInputs(v, nprobe, queryIds, allowedIds, im.cents, residual = true,
-      (x, _) => x, im.pq,
-      (_, homes) => encodeBlocks(residualsFrom(v, homes, im.cents), "rv", im.pq))
-  }
-  /** Unfiltered shape of the residual-model search. */
+      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs =
+    builtInputs(normalize(vecs, vecCol, idCol), nprobe, queryIds, allowedIds, im)
+
+  /** Unfiltered shape of the self-building model search. */
   def ivfAdcTopk(vecs: DataFrame, vecCol: String, im: IvfPqModel, topk: Int,
       nprobe: Int, idCol: String, queryIds: Option[DataFrame]): DataFrame =
     ivfAdcTopk(vecs, vecCol, im, topk, nprobe, idCol, queryIds, None)
-
-  /** Residual-index variant with the defaults of the raw overload. */
-  def ivfAdcTopk(vecs: DataFrame, vecCol: String, im: IvfPqModel,
-      topk: Int): DataFrame =
-    ivfAdcTopk(vecs, vecCol, im, topk, nprobe = 8, idCol = "vec_id",
-      queryIds = None)
-
-  /** [[ivfAdcRerankTopk]] over the residual index: ADC shortlist from
-    * the residual [[ivfAdcTopk]], then TRUE sqdist on the shortlist
-    * pairs only, re-ranked with the same deterministic bounded tail.
-    * Returns (i, k_id, sqdist, rnk) with exact distances. */
-  def ivfAdcRerankTopk(vecs: DataFrame, vecCol: String, im: IvfPqModel,
-      topk: Int, shortlist: Int, nprobe: Int, idCol: String,
-      queryIds: Option[DataFrame]): DataFrame = {
-    require(shortlist >= topk,
-      s"ivfAdcRerankTopk: shortlist=$shortlist < topk=$topk")
-    val spark = vecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
-    val v = normalize(vecs, vecCol, idCol)
-    rerankExact(v,
-      ivfAdcTopk(v, "v", im, shortlist, nprobe, "vec_id", queryIds), topk)
-  }
-
-  /** OPQ-over-residuals: the faiss OPQ+IVFADC composition (round-13
-    * VERDICT #3) — coarse centroids exactly as [[IvfPqModel]], but the
-    * PQ quantizes ROTATED residuals: R·(r − μ_r) with R the
-    * eigenvalue-balanced orthogonal basis of the RESIDUAL distribution
-    * (not the raw vectors' — the rotation is learned on exactly the
-    * distribution the codebooks quantize, which is OPQ's point). R is
-    * orthogonal, so ‖R(qr−μ)−R(rx−μ)‖² = ‖qr−rx‖² and the ADC
-    * approximates the same original-space sqdist as the unrotated
-    * residual index; what changes is WHERE the quantization error
-    * lands — the balanced permutation equalizes the m blocks'
-    * Σ log λ so no single codebook carries the variance. */
-  final case class RotatedIvfPqModel(cents: Seq[(Long, Seq[Double])],
-      pca: Pca.Model, basisPerm: Array[Int], pq: Model)
-
-  /** Train the rotated residual index: shared centroid recipe →
-    * residual relation → PCA of the residuals → balanced permutation →
-    * standard [[fit]] on the rotated residual frame. All three learned
-    * pieces (centroids, basis, codebooks) are COUPLED — see
-    * [[RotatedIvfPqModel]]. */
-  def fitIvfPqRotated(vecs: DataFrame, vecCol: String, m: Int = 8,
-      k: Int = 256, centroids: Int = 0, sampleN: Int = 8192,
-      lloydIters: Int = 4, idCol: String = "vec_id"): RotatedIvfPqModel = {
-    val spark = vecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
-    val v = normalize(vecs, vecCol, idCol)
-    val c = if (centroids > 0) centroids else Ivf.autoCentroids(v.count())
-    val cents = Ivf.buildCentroids(v, c)
-    fitRotatedFrom(v, cents, m, k, sampleN, lloydIters)
-  }
-
-  /** The rotated-residual fit TAIL shared by [[fitIvfPqRotated]] and
-    * [[fitIvfPqAuto]] (one recipe, two entry points — review round 15:
-    * a duplicated tail would let the auto-picked index silently drift
-    * from the directly-fit one): residuals against the GIVEN centroids,
-    * PCA on the residual distribution, eigenvalue-balanced block
-    * permutation, rotated codebook fit. */
-  private def fitRotatedFrom(v: DataFrame, cents: Seq[(Long, Seq[Double])],
-      m: Int, k: Int, sampleN: Int, lloydIters: Int): RotatedIvfPqModel = {
-    val res = residuals(v, cents)
-    val pca = Pca.fit(res, "rv")
-    val perm = balancedPermutation(pca.eigenvalues, m)
-    val rot = res.select(col("vec_id"),
-      rotateExpr(col("rv"), pca, perm).as("rv"))
-    RotatedIvfPqModel(cents, pca, perm,
-      fit(rot, "rv", m, k, sampleN, lloydIters))
-  }
-
-  /** Rotated-residual IVFADC self-search — cells identical to the
-    * residual overload (one assignment pass, never N²); the members
-    * encode R·(r − μ) codes and the query residuals pass through the
-    * SAME [[rotateExpr]] (one expression tree, both sides — bit-equal
-    * by construction). Costs one extra codegen'd d×d projection per
-    * encoded row and per query cell over the unrotated index. */
-  def ivfAdcTopk(vecs: DataFrame, vecCol: String, rim: RotatedIvfPqModel,
-      topk: Int, nprobe: Int, idCol: String,
-      queryIds: Option[DataFrame],
-      allowedIds: Option[DataFrame]): DataFrame =
-    AdcScan.topk(ivfAdcInputs(vecs, vecCol, rim, nprobe, idCol, queryIds,
-      allowedIds), topk)
-
-  private[graft] def ivfAdcInputs(vecs: DataFrame, vecCol: String,
-      rim: RotatedIvfPqModel, nprobe: Int, idCol: String,
-      queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs = {
-    val v = normalize(vecs, vecCol, idCol)
-    def rotated(x: Column): Column = rotateExpr(x, rim.pca, rim.basisPerm)
-    builtInputs(v, nprobe, queryIds, allowedIds, rim.cents, residual = true,
-      (x, _) => rotated(x), rim.pq,
-      (_, homes) => encodeBlocks(residualsFrom(v, homes, rim.cents)
-        .select(col("vec_id"), rotated(col("rv")).as("rv")), "rv", rim.pq))
-  }
-  /** Unfiltered shape of the rotated-residual search. */
-  def ivfAdcTopk(vecs: DataFrame, vecCol: String, rim: RotatedIvfPqModel,
-      topk: Int, nprobe: Int, idCol: String,
-      queryIds: Option[DataFrame]): DataFrame =
-    ivfAdcTopk(vecs, vecCol, rim, topk, nprobe, idCol, queryIds, None)
-
-  /** [[ivfAdcRerankTopk]] over the rotated residual index: rotated ADC
-    * shortlist, then TRUE sqdist on the shortlist pairs only. */
-  def ivfAdcRerankTopk(vecs: DataFrame, vecCol: String,
-      rim: RotatedIvfPqModel, topk: Int, shortlist: Int, nprobe: Int,
-      idCol: String, queryIds: Option[DataFrame]): DataFrame = {
-    require(shortlist >= topk,
-      s"ivfAdcRerankTopk: shortlist=$shortlist < topk=$topk")
-    val spark = vecs.sparkSession
-    ApAggs.register(spark)
-    VectorExprs.register(spark)
-    val v = normalize(vecs, vecCol, idCol)
-    rerankExact(v,
-      ivfAdcTopk(v, "v", rim, shortlist, nprobe, "vec_id", queryIds), topk)
-  }
-
-  /** Exact re-rank tail shared by both rerank overloads: true sqdist on
-    * the shortlist pairs only, bounded ap_topm per query. */
-  private def rerankExact(v: DataFrame, shortlisted: DataFrame,
-      topk: Int): DataFrame =
-    shortlisted
-      .select(col("i"), col("k_id"))
-      .join(v.select(col("vec_id").as("k_id"), col("v").as("kv")), "k_id")
-      .join(v.select(col("vec_id").as("i"), col("v").as("qv")), "i")
-      .select(col("i"), col("k_id"),
-        (-call_function("vec_sqdist", col("qv"), col("kv"))).as("negd"))
-      .groupBy("i")
-      .agg(call_function("ap_topm", col("negd"), col("k_id"), lit(topk)).as("keep"))
-      .select(col("i"), posexplode(col("keep")).as(Seq("pos", "e")))
-      .select(col("i"), col("e.k").as("k_id"), (-col("e.s")).as("sqdist"),
-        (col("pos") + lit(1)).as("rnk"))
 
   /** RAW-model IVFADC self-search — IVF bucket candidates, then ADC of
     * the candidate pairs ONLY, with PQ codes of the RAW vectors
@@ -1774,10 +1421,10 @@ object Pq {
       queryIds: Option[DataFrame], allowedIds: Option[DataFrame]): AdcScan.Inputs = {
     val v = normalize(vecs, vecCol, idCol)
     val c = if (centroids > 0) centroids else Ivf.autoCentroids(v.count())
-    builtInputs(v, nprobe, queryIds, allowedIds, Ivf.buildCentroids(v, c),
-      residual = false, (x, id) => guardedVec(x, model, id), model,
-      (allowed, _) => encodeBlocks(allowed, "v", model))
+    builtInputs(v, nprobe, queryIds, allowedIds,
+      IvfPqModel(Ivf.buildCentroids(v, c), model, Coding.Raw))
   }
+
   /** IVFADC + exact re-rank — the faiss `refine` stage completing the
     * production pipeline: an ADC-approximate shortlist from
     * [[ivfAdcTopk]] (`shortlist` ≥ topk pairs per query), then TRUE
@@ -1790,33 +1437,105 @@ object Pq {
     * `shortlist` and `nprobe`. */
   def ivfAdcRerankTopk(vecs: DataFrame, vecCol: String, model: Model,
       topk: Int, shortlist: Int = 50, centroids: Int = 0, nprobe: Int = 8,
-      idCol: String = "vec_id", queryIds: Option[DataFrame] = None): DataFrame = {
+      idCol: String = "vec_id", queryIds: Option[DataFrame] = None): DataFrame =
+    reranked(vecs, vecCol, idCol, topk, shortlist)(v =>
+      ivfAdcTopk(v, "v", model, shortlist, centroids, nprobe, "vec_id", queryIds))
+
+  /** [[ivfAdcRerankTopk]] over a materialized index of any coding: ADC
+    * shortlist from the indexed search, true sqdist on the shortlist
+    * pairs only. */
+  def ivfAdcRerankTopk(vecs: DataFrame, vecCol: String, idx: IvfPqIndex,
+      topk: Int, shortlist: Int, nprobe: Int, idCol: String,
+      queryIds: Option[DataFrame]): DataFrame =
+    reranked(vecs, vecCol, idCol, topk, shortlist)(v =>
+      ivfAdcTopk(v, "v", idx, shortlist, nprobe, "vec_id", queryIds))
+
+  /** [[ivfAdcRerankTopk]] over a fitted model of any coding: ADC
+    * shortlist from the self-building [[ivfAdcTopk]], then TRUE sqdist
+    * on the shortlist pairs only. */
+  def ivfAdcRerankTopk(vecs: DataFrame, vecCol: String, im: IvfPqModel,
+      topk: Int, shortlist: Int, nprobe: Int, idCol: String,
+      queryIds: Option[DataFrame]): DataFrame =
+    reranked(vecs, vecCol, idCol, topk, shortlist)(v =>
+      ivfAdcTopk(v, "v", im, shortlist, nprobe, "vec_id", queryIds))
+
+  /** The exact re-rank tail of every rerank overload: the `shortlisted`
+    * (i, k_id) pairs of the normalized corpus, true sqdist on those
+    * pairs only, bounded ap_topm per query. */
+  private def reranked(vecs: DataFrame, vecCol: String, idCol: String,
+      topk: Int, shortlist: Int)(shortlisted: DataFrame => DataFrame): DataFrame = {
     require(shortlist >= topk,
       s"ivfAdcRerankTopk: shortlist=$shortlist < topk=$topk")
     val spark = vecs.sparkSession
     ApAggs.register(spark)
     VectorExprs.register(spark)
     val v = normalize(vecs, vecCol, idCol)
-    rerankExact(v,
-      ivfAdcTopk(v, "v", model, shortlist, centroids, nprobe, "vec_id", queryIds),
-      topk)
+    shortlisted(v)
+      .select(col("i"), col("k_id"))
+      .join(v.select(col("vec_id").as("k_id"), col("v").as("kv")), "k_id")
+      .join(v.select(col("vec_id").as("i"), col("v").as("qv")), "i")
+      .select(col("i"), col("k_id"),
+        (-call_function("vec_sqdist", col("qv"), col("kv"))).as("negd"))
+      .groupBy("i")
+      .agg(call_function("ap_topm", col("negd"), col("k_id"), lit(topk)).as("keep"))
+      .select(col("i"), posexplode(col("keep")).as(Seq("pos", "e")))
+      .select(col("i"), col("e.k").as("k_id"), (-col("e.s")).as("sqdist"),
+        (col("pos") + lit(1)).as("rnk"))
+  }
+
+  /** OPQ-over-residuals: the faiss OPQ+IVFADC composition (round-13
+    * VERDICT #3) — coarse centroids exactly as the residual index, but
+    * the PQ quantizes ROTATED residuals: R·(r − μ_r) with R the
+    * eigenvalue-balanced orthogonal basis of the RESIDUAL distribution
+    * (not the raw vectors' — the rotation is learned on exactly the
+    * distribution the codebooks quantize, which is OPQ's point). R is
+    * orthogonal, so ‖R(qr−μ)−R(rx−μ)‖² = ‖qr−rx‖² and the ADC
+    * approximates the same original-space sqdist as the unrotated
+    * residual index; what changes is WHERE the quantization error
+    * lands — the balanced permutation equalizes the m blocks'
+    * Σ log λ so no single codebook carries the variance. Train: shared
+    * centroid recipe → residual relation → PCA of the residuals →
+    * balanced permutation → standard [[fit]] on the rotated residual
+    * frame; the model's coding is [[Coding.Rotated]]. Costs one extra
+    * codegen'd d×d projection per encoded row and per query cell over
+    * the unrotated index. */
+  def fitIvfPqRotated(vecs: DataFrame, vecCol: String, m: Int = 8,
+      k: Int = 256, centroids: Int = 0, sampleN: Int = 8192,
+      lloydIters: Int = 4, idCol: String = "vec_id"): IvfPqModel = {
+    val spark = vecs.sparkSession
+    ApAggs.register(spark)
+    VectorExprs.register(spark)
+    val v = normalize(vecs, vecCol, idCol)
+    val c = if (centroids > 0) centroids else Ivf.autoCentroids(v.count())
+    val cents = Ivf.buildCentroids(v, c)
+    fitRotatedFrom(v, cents, m, k, sampleN, lloydIters)
+  }
+
+  /** The rotated-residual fit TAIL shared by [[fitIvfPqRotated]] and
+    * [[fitIvfPqAuto]] (one recipe, two entry points — review round 15:
+    * a duplicated tail would let the auto-picked index silently drift
+    * from the directly-fit one): residuals against the GIVEN centroids,
+    * PCA on the residual distribution, eigenvalue-balanced block
+    * permutation, rotated codebook fit. */
+  private def fitRotatedFrom(v: DataFrame, cents: Seq[(Long, Seq[Double])],
+      m: Int, k: Int, sampleN: Int, lloydIters: Int): IvfPqModel = {
+    val res = residuals(v, cents)
+    val pca = Pca.fit(res, "rv")
+    val perm = balancedPermutation(pca.eigenvalues, m)
+    val rot = res.select(col("vec_id"),
+      rotateExpr(col("rv"), pca, perm).as("rv"))
+    IvfPqModel(cents, fit(rot, "rv", m, k, sampleN, lloydIters),
+      Coding.Rotated(pca, perm))
   }
 
   // ---- index auto-selection (round-14 VERDICT #5) --------------------
 
-  /** The chooser's verdict plus the trained index — a sum type because
-    * the three variants have three model shapes; [[ivfAdcTopkAuto]]
-    * dispatches. `explained` / `momentCv` are the probe statistics that
-    * drove the pick (surfaced for audit). */
-  sealed trait AutoIndex {
-    def explained: Double
-    def momentCv: Double
-    def variant: String
-  }
-  final case class AutoRaw(model: Model, explained: Double,
-      momentCv: Double) extends AutoIndex { def variant = "raw" }
-  final case class AutoRotated(model: RotatedIvfPqModel, explained: Double,
-      momentCv: Double) extends AutoIndex { def variant = "opq+residual" }
+  /** The chooser's trained model — [[Coding.Raw]] or [[Coding.Rotated]]
+    * over the probe's own centroids — plus the probe statistics that
+    * drove the pick (`explained` / `momentCv`, surfaced for audit).
+    * Search it, index it or persist it like any [[IvfPqModel]]. */
+  final case class AutoIndex(model: IvfPqModel, explained: Double,
+      momentCv: Double)
 
   /** Fit with AUTO-SELECTED variant (round-14 VERDICT #5 — faiss users
     * get per-corpus index choice for free; BENCH_NOTES §28 measured the
@@ -1833,8 +1552,8 @@ object Pq {
     *     so residual-only is never the pick.
     *
     * Probe statistics (driver-side over the ≤ sampleN sample — the
-    * centroid relation is built once and REUSED by the rotated fit, so
-    * the probe adds no distributed pass):
+    * centroid relation is built once and REUSED by either fit and
+    * carried in the model, so the probe adds no distributed pass):
     *
     *   explained = 1 − E‖x − centroid(x)‖² / E‖x − μ‖²   (the k-means
     *     explained-variance ratio: ≈ 0 on isotropic data, → 1 on
@@ -1912,24 +1631,12 @@ object Pq {
     if (explained >= 0.15 || momentCv >= 0.5)
       // rotated fit REUSING the probe's centroids (no second build) —
       // the same tail fitIvfPqRotated runs, via the shared helper
-      AutoRotated(fitRotatedFrom(v, cents, m, k, sampleN, lloydIters),
+      AutoIndex(fitRotatedFrom(v, cents, m, k, sampleN, lloydIters),
         explained, momentCv)
     else
-      AutoRaw(fit(v, "v", m, k, sampleN, lloydIters), explained, momentCv)
-  }
-
-  /** Search through an auto-selected index — dispatches to the variant
-    * the chooser picked. Same (i, k_id, rnk) contract as every other
-    * ivfAdcTopk overload. */
-  def ivfAdcTopkAuto(vecs: DataFrame, vecCol: String, idx: AutoIndex,
-      topk: Int, centroids: Int = 0, nprobe: Int = 8,
-      idCol: String = "vec_id",
-      queryIds: Option[DataFrame] = None,
-      allowedIds: Option[DataFrame] = None): DataFrame = idx match {
-    case AutoRaw(m0, _, _) =>
-      ivfAdcTopk(vecs, vecCol, m0, topk, centroids, nprobe, idCol, queryIds,
-        allowedIds)
-    case AutoRotated(rm, _, _) =>
-      ivfAdcTopk(vecs, vecCol, rm, topk, nprobe, idCol, queryIds, allowedIds)
+      // raw codes; the probe's centroids pick the cells, so neither a
+      // search nor an index of this model rebuilds them
+      AutoIndex(IvfPqModel(cents, fit(v, "v", m, k, sampleN, lloydIters),
+        Coding.Raw), explained, momentCv)
   }
 }

@@ -2518,8 +2518,8 @@ object Dedup extends QueryGroup {
     "simsearch_pq_auto" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = graft.functions.Pq.fitIvfPqAuto(emb, "embedding", centroids = 16)
-      graft.functions.Pq.ivfAdcTopkAuto(emb, "embedding", idx, topk = 5,
-          centroids = 16, nprobe = 8, idCol = "vec_id", queryIds = None)
+      graft.functions.Pq.ivfAdcTopk(emb, "embedding", idx.model, topk = 5,
+          nprobe = 8, idCol = "vec_id", queryIds = None)
         .select(col("i"), col("k_id"), round(col("adc"), 6).as("adc"), col("rnk"))
         .orderBy("i", "rnk")
     }),

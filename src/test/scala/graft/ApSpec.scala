@@ -311,8 +311,8 @@ class ApSpec extends SparkSuite {
     // oscillating sets. The fix collects every generation's indicator
     // per chunk and rolls back to the generation where the CLASSIC rule
     // fires — so any cadence must report the exact iteration count and
-    // exemplar set of checkEvery = 1 (ApDbg measured the same on the
-    // sf0.1 200-vec prefix: 46 iterations at every cadence).
+    // exemplar set of checkEvery = 1 (a checkEvery sweep measured the
+    // same on the sf0.1 200-vec prefix: 46 iterations at every cadence).
     // The two-clique fixture is fully symmetric (all-equal in-cluster
     // similarities — every node interchangeable), so WITHOUT jitter it
     // oscillates past maxIter under the exact counter: run it jittered

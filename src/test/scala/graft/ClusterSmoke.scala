@@ -66,7 +66,12 @@ object ClusterSmoke {
       //    exhaustive relational kernel's, adc bits included
       val vecs = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
       val pq = functions.Pq.fit(vecs, "embedding")
-      val raw = functions.Pq.rawIndexOf(vecs, "embedding", pq, centroids = 16)
+      val cents = functions.Ivf.buildCentroids(vecs.select(
+        org.apache.spark.sql.functions.col("vec_id").cast("long").as("vec_id"),
+        org.apache.spark.sql.functions.transform(
+          org.apache.spark.sql.functions.col("embedding"), _.cast("double")).as("v")), 16)
+      val raw = functions.Pq.indexOf(vecs, "embedding",
+        functions.Pq.IvfPqModel(cents, pq, functions.Pq.Coding.Raw))
       val qids = vecs.select("vec_id").orderBy("vec_id").limit(64)
       def bits(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1),

@@ -1372,7 +1372,7 @@ class GraftSpec extends SparkSuite {
     val all = Tables.embeddings(spark, sf001)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val dir = java.nio.file.Files.createTempDirectory("graft-append").toString + "/emb"
+    val dir = tempDir("graft-append") + "/emb"
     Tables.embeddings(spark, sf001).filter(col("vec_id") < 400)
       .write.parquet(dir)
     val idx = Pq.ivfPqIndexCached(spark.read.parquet(dir), "embedding",
@@ -1380,11 +1380,7 @@ class GraftSpec extends SparkSuite {
     assert(idx.homes.count() == 400 && idx.codes.count() == 400 * 8)
     // the point of no return: from here the corpus exists ONLY in the
     // index's persisted homes/codes
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-      f.delete(); ()
-    }
-    deleteRec(new java.io.File(dir))
+    deleteTree(dir)
     val batch = (400L to 499L).map(i => (i, all(i).toSeq)).toDF("vec_id", "embedding")
     val res = Pq.appendToIndex(idx, batch, "embedding")
     assert(!res.refitNeeded && res.index.nonEmpty,
@@ -1470,8 +1466,8 @@ class GraftSpec extends SparkSuite {
     val all = Tables.embeddings(spark, sf001)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toMap
-    val corpusDir = java.nio.file.Files.createTempDirectory("graft-persist").toString + "/emb"
-    val idxDir = java.nio.file.Files.createTempDirectory("graft-persist-idx").toString
+    val corpusDir = tempDir("graft-persist") + "/emb"
+    val idxDir = tempDir("graft-persist-idx")
     Tables.embeddings(spark, sf001).filter(col("vec_id") < 400)
       .write.parquet(corpusDir)
     val built = Pq.ivfPqIndexCached(spark.read.parquet(corpusDir), "embedding",
@@ -1485,11 +1481,7 @@ class GraftSpec extends SparkSuite {
     val wantBuilt = search(built)
     Pq.writeIndex(built, idxDir)
     // the point of no return: the corpus exists only in the store
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-      f.delete(); ()
-    }
-    deleteRec(new java.io.File(corpusDir))
+    deleteTree(corpusDir)
     Pq.invalidateIndexCache(spark)
     val loaded = Pq.readIndex(spark, idxDir)
     assert(search(loaded) == wantBuilt,
@@ -1538,21 +1530,28 @@ class GraftSpec extends SparkSuite {
       "compacted generation diverged")
   }
 
-  test("rotated + auto index persistence: every auto verdict round-trips with zero fit jobs; wrong-family reads fail loud") {
-    // round-19 VERDICT #2: writeIndex covered only the residual family,
+  test("rotated + auto index persistence: every auto verdict round-trips with zero fit jobs; readIndex returns the store's own coding") {
+    // round-19 VERDICT #2: writeIndex covered only the residual coding,
     // so the OPQ/rotated index fitIvfPqAuto picks on clustered corpora
     // refit from scratch every fresh session. Same physical pin as the
     // residual test above: the corpus parquet is DELETED before the
     // read-back, so any load path that refits or re-encodes dies on a
-    // missing file.
+    // missing file. One reader serves every coding, so the read-back
+    // must carry the store's own coding (a rotated store read as
+    // residual would decode rotated codes as unrotated residuals) and
+    // search bit-identically to the in-memory index.
     import spark.implicits._
     import graft.functions.Pq
+    def search(q: org.apache.spark.sql.DataFrame, ix: Pq.IvfPqIndex) =
+      Pq.ivfAdcTopk(q, "embedding", ix, 5, 8, "vec_id", Some(q.select("vec_id")))
+        .collect().map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+        .toSeq.sorted
     // the clustered fixture of PqSpec's auto-selection test (64 tight
     // 10σ-separated clusters): the chooser must go rotated
     val rnd = new scala.util.Random(777)
     val centers = Array.fill(64, 64)(rnd.nextGaussian() * 10.0)
-    val clDir = java.nio.file.Files
-      .createTempDirectory("graft-rot-persist").toString + "/emb"
+    val clDir = tempDir("graft-rot-persist") + "/emb"
     (0 until 1000).map { i =>
       val c = centers(i % 64)
       (i.toLong, (0 until 64).map(j => c(j) + rnd.nextGaussian()).toSeq)
@@ -1563,82 +1562,68 @@ class GraftSpec extends SparkSuite {
     val qdf = queries.map(r => (r.getLong(0), r.getSeq[Double](1)))
       .toSeq.toDF("vec_id", "embedding").localCheckpoint(true)
     val auto = Pq.fitIvfPqAuto(corpus, "embedding", k = 32, centroids = 64)
-    assert(auto.variant == "opq+residual",
-      s"clustered corpus must pick the rotated family, got ${auto.variant}")
-    val stored = Pq.indexOfAuto(auto, corpus, "embedding", centroids = 64)
-    assert(stored.family == "opq")
-    def search(ix: Pq.StoredIndex): Seq[(Long, Long)] =
-      Pq.searchStoredIndex(qdf, "embedding", ix, 5, nprobe = 8, "vec_id",
-          queryIds = Some(qdf.select("vec_id")))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val want = search(stored)
+    val rot = auto.model.coding match {
+      case r: Pq.Coding.Rotated => r
+      case c => fail(s"clustered corpus must pick the rotated coding, got $c")
+    }
+    val stored = Pq.indexOf(corpus, "embedding", auto.model)
+    val want = search(qdf, stored)
     assert(want.nonEmpty)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-rot-persist-idx").toString
-    Pq.writeStoredIndex(stored, dir)
+    val dir = tempDir("graft-rot-persist-idx")
+    Pq.writeIndex(stored, dir)
     // the point of no return: the corpus exists only in the store
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRec))
-      f.delete(); ()
-    }
-    deleteRec(new java.io.File(clDir))
+    deleteTree(clDir)
     Pq.invalidateIndexCache(spark)
-    val loaded = Pq.readStoredIndex(spark, dir)
-    assert(loaded.family == "opq", s"family dispatch broke: ${loaded.family}")
-    assert(search(loaded) == want,
-      "read-back rotated index diverged from the in-session one")
-    // wrong-family read fails LOUD (a silent unrotated read would
-    // decode rotated codes as residual ones)
-    val boom = intercept[IllegalArgumentException] {
-      Pq.readIndex(spark, dir)
+    val loaded = Pq.readIndex(spark, dir)
+    loaded.model.coding match {
+      case r: Pq.Coding.Rotated =>
+        assert(r.basisPerm.sameElements(rot.basisPerm) &&
+          r.pca.mean.sameElements(rot.pca.mean) &&
+          r.pca.eigenvalues.sameElements(rot.pca.eigenvalues) &&
+          r.pca.loadings.zip(rot.pca.loadings).forall(p => p._1.sameElements(p._2)),
+          "read-back rotation differs from the written one")
+      case c => fail(s"an opq store read back as $c")
     }
-    assert(boom.getMessage.contains("family"), boom.getMessage)
-    // append + persisted increment on the rotated family: batch-only
+    assert(search(qdf, loaded) == want,
+      "read-back rotated index diverged from the in-session one")
+    // append + persisted increment on the rotated coding: batch-only
     // encode, the same increment/marker protocol, reads compose
-    val rix = loaded.asInstanceOf[Pq.StoredRotated].index
     val rnd2 = new scala.util.Random(778)
     val batch = (2000L until 2080L).map { i =>
       val c = centers((i % 64).toInt)
       (i, (0 until 64).map(j => c(j) + rnd2.nextGaussian()).toSeq)
     }.toDF("vec_id", "embedding")
-    val app = Pq.appendToIndexRotated(rix, batch, "embedding")
+    val app = Pq.appendToIndex(loaded, batch, "embedding")
     assert(!app.refitNeeded && app.incHomes.nonEmpty,
       s"in-distribution rotated append refused (drift=${app.drift})")
     assert(Pq.writeIndexIncrement(app.incHomes.get, app.incCodes.get, dir, 0L))
-    val reloaded = Pq.readStoredIndex(spark, dir)
-      .asInstanceOf[Pq.StoredRotated].index
+    val reloaded = Pq.readIndex(spark, dir)
     assert(reloaded.homes.count() == 1080)
-    assert(search(Pq.StoredRotated(reloaded)) ==
-      search(Pq.StoredRotated(app.index.get)),
+    assert(search(qdf, reloaded) == search(qdf, app.index.get),
       "persisted rotated increment diverged from the in-memory append")
-    // the RAW family (the chooser's isotropic pick) round-trips too —
+    // the RAW coding (the chooser's isotropic pick) round-trips too —
     // every auto verdict has a persisted tier
-    val isoDir = java.nio.file.Files
-      .createTempDirectory("graft-raw-persist").toString + "/emb"
+    val isoDir = tempDir("graft-raw-persist") + "/emb"
     Tables.embeddings(spark, sf001).write.parquet(isoDir)
     val iso = spark.read.parquet(isoDir)
     val autoIso = Pq.fitIvfPqAuto(iso, "embedding", centroids = 16)
-    assert(autoIso.variant == "raw",
-      s"isotropic corpus must pick raw, got ${autoIso.variant}")
-    val storedIso = Pq.indexOfAuto(autoIso, iso, "embedding", centroids = 16)
+    assert(autoIso.model.coding == Pq.Coding.Raw,
+      s"isotropic corpus must pick raw, got ${autoIso.model.coding}")
+    val storedIso = Pq.indexOf(iso, "embedding", autoIso.model)
     val qIso = Tables.embeddings(spark, sf001)
       .filter(col("vec_id") % 53 === 0)
       .select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("embedding"))
       .localCheckpoint(true)
-    def searchIso(ix: Pq.StoredIndex): Seq[(Long, Long)] =
-      Pq.searchStoredIndex(qIso, "embedding", ix, 5, nprobe = 8, "vec_id",
-          queryIds = Some(qIso.select("vec_id")))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val wantIso = searchIso(storedIso)
+    val wantIso = search(qIso, storedIso)
     assert(wantIso.nonEmpty)
-    val isoIdxDir = java.nio.file.Files
-      .createTempDirectory("graft-raw-persist-idx").toString
-    Pq.writeStoredIndex(storedIso, isoIdxDir)
-    deleteRec(new java.io.File(isoDir))
-    val loadedIso = Pq.readStoredIndex(spark, isoIdxDir)
-    assert(loadedIso.family == "rawpq", s"family: ${loadedIso.family}")
-    assert(searchIso(loadedIso) == wantIso,
+    val isoIdxDir = tempDir("graft-raw-persist-idx")
+    Pq.writeIndex(storedIso, isoIdxDir)
+    deleteTree(isoDir)
+    val loadedIso = Pq.readIndex(spark, isoIdxDir)
+    assert(loadedIso.model.coding == Pq.Coding.Raw,
+      s"a rawpq store read back as ${loadedIso.model.coding}")
+    assert(search(qIso, loadedIso) == wantIso,
       "read-back raw index diverged from the in-session one")
   }
 
@@ -1651,8 +1636,7 @@ class GraftSpec extends SparkSuite {
     import spark.implicits._
     val renamed = Tables.embeddings(spark, sf001)
       .select(col("vec_id").as("item"), col("embedding").as("vec"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-facade-simidx").toString
+    val dir = tempDir("graft-facade-simidx")
     Graft.buildSimilarityIndex(spark, renamed, dir,
       idCol = "item", vecCol = "vec", centroids = 16)
     val qids = (0L until 500L by 31L).toDF("item")

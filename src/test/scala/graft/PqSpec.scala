@@ -201,29 +201,29 @@ class PqSpec extends SparkSuite {
 
   test("stored ivfpq / opq / rawpq searches are bit-identical at 1 and 4 shuffle partitions") {
     val P = graft.functions.Pq
-    val root = java.nio.file.Files.createTempDirectory("pq-width").toString
+    val root = tempDir("pq-width")
     val stores = Seq(
-      P.StoredIvfPq(P.ivfPqIndexCached(emb, "embedding", centroids = 16)),
-      P.StoredRotated(P.rotatedIndexOf(emb, "embedding",
-        P.fitIvfPqRotated(emb, "embedding", centroids = 16))),
-      P.StoredRaw(P.rawIndexOf(emb, "embedding", P.fit(emb, "embedding"),
-        centroids = 16)))
-    try stores.foreach { ix =>
-      val dir = s"$root/${ix.family}"
-      P.writeStoredIndex(ix, dir)
-      val stored = P.readStoredIndex(spark, dir)
-      assert(stored.family == ix.family)
+      P.ivfPqIndexCached(emb, "embedding", centroids = 16),
+      P.indexOf(emb, "embedding", P.fitIvfPqRotated(emb, "embedding", centroids = 16)),
+      P.indexOf(emb, "embedding", P.fitIvfPqAuto(emb, "embedding", centroids = 16).model))
+    assert(stores.map(_.model.coding.getClass).distinct.length == 3,
+      s"not one store per coding: ${stores.map(_.model.coding)}")
+    stores.zipWithIndex.foreach { case (ix, n) =>
+      val dir = s"$root/$n"
+      P.writeIndex(ix, dir)
+      val stored = P.readIndex(spark, dir)
+      val coding = stored.model.coding
+      assert(coding.getClass == ix.model.coding.getClass, s"$coding read back")
       def run(parts: Int) = atShufflePartitions(parts) {
-        bits(P.searchStoredIndex(emb, "embedding", stored, 10, nprobe = 8, "vec_id"))
+        bits(P.ivfAdcTopk(emb, "embedding", stored, 10, 8, "vec_id", None))
       }
       val one = run(1)
       val four = run(4)
-      assert(one.map(_._1).distinct.length == 500, s"${ix.family}: queries missing")
+      assert(one.map(_._1).distinct.length == 500, s"$coding: queries missing")
       val same = one == four
-      assert(same, s"${ix.family}: rows differ between 1 and 4 partitions, first at " +
+      assert(same, s"$coding: rows differ between 1 and 4 partitions, first at " +
         s"${one.zip(four).find(p => p._1 != p._2)}")
-    } finally graft.MarkerStore.fs(spark, root)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    }
   }
 
   test("a stored code outside its codebook fails loud and names its id") {
@@ -247,25 +247,22 @@ class PqSpec extends SparkSuite {
     // fails this pin.
     import spark.implicits._
     val P = graft.functions.Pq
-    val root = java.nio.file.Files.createTempDirectory("pq-budget").toString
-    try {
-      P.writeIndex(P.ivfPqIndexCached(emb, "embedding", centroids = 16), s"$root/index")
-      emb.write.parquet(s"$root/corpus")
-      emb.select("vec_id").orderBy("vec_id").limit(64).write.parquet(s"$root/queries")
-      val corpus = spark.read.parquet(s"$root/corpus")
-      val qids = spark.read.parquet(s"$root/queries")
-      val idx = P.readIndex(spark, s"$root/index")
-      def search(k: Int): Unit = {
-        val rows = P.ivfAdcTopk(corpus, "embedding", idx, k, 8, "vec_id", Some(qids)).collect()
-        assert(rows.map(_.getLong(0)).distinct.length == 64)
-      }
-      search(5)
-      val at5 = actionsDuring(search(5))
-      val at50 = actionsDuring(search(50))
-      assert(at5 == at50, s"(SQL executions, jobs) at topk 5 $at5 != at topk 50 $at50")
-      assert(at5 == ((1, 7)), s"search budget moved: (SQL executions, jobs) = $at5")
-    } finally graft.MarkerStore.fs(spark, root)
-      .delete(new org.apache.hadoop.fs.Path(root), true)
+    val root = tempDir("pq-budget")
+    P.writeIndex(P.ivfPqIndexCached(emb, "embedding", centroids = 16), s"$root/index")
+    emb.write.parquet(s"$root/corpus")
+    emb.select("vec_id").orderBy("vec_id").limit(64).write.parquet(s"$root/queries")
+    val corpus = spark.read.parquet(s"$root/corpus")
+    val qids = spark.read.parquet(s"$root/queries")
+    val idx = P.readIndex(spark, s"$root/index")
+    def search(k: Int): Unit = {
+      val rows = P.ivfAdcTopk(corpus, "embedding", idx, k, 8, "vec_id", Some(qids)).collect()
+      assert(rows.map(_.getLong(0)).distinct.length == 64)
+    }
+    search(5)
+    val at5 = actionsDuring(search(5))
+    val at50 = actionsDuring(search(50))
+    assert(at5 == at50, s"(SQL executions, jobs) at topk 5 $at5 != at topk 50 $at50")
+    assert(at5 == ((1, 7)), s"search budget moved: (SQL executions, jobs) = $at5")
   }
 
   test("duplicate ids in the query workload do not scale ADC values") {
@@ -662,7 +659,8 @@ class PqSpec extends SparkSuite {
     }
     val im = graft.functions.Pq.fitIvfPq(zdocs, "embedding", centroids = 16)
     val rim = graft.functions.Pq.fitIvfPqRotated(zdocs, "embedding", centroids = 16)
-    assert(rim.basisPerm.sorted.sameElements(0 until 64),
+    val basisPerm = rim.coding.asInstanceOf[graft.functions.Pq.Coding.Rotated].basisPerm
+    assert(basisPerm.sorted.sameElements(0 until 64),
       "rotated-residual basisPerm not a permutation")
     val rRes = recall(graft.functions.Pq.ivfAdcTopk(zdocs, "embedding", im, topk,
         nprobe = 8, idCol = "vec_id", queryIds = None)
@@ -710,8 +708,8 @@ class PqSpec extends SparkSuite {
     import spark.implicits._
     val topk = 10
     val auIso = graft.functions.Pq.fitIvfPqAuto(emb, "embedding", centroids = 16)
-    assert(auIso.variant == "raw",
-      s"isotropic corpus must pick raw, got ${auIso.variant} " +
+    assert(auIso.model.coding == graft.functions.Pq.Coding.Raw,
+      s"isotropic corpus must pick raw, got ${auIso.model.coding} " +
         s"(explained=${auIso.explained}, cv=${auIso.momentCv})")
     assert(auIso.explained < 0.15 && auIso.momentCv < 0.5,
       s"isotropic probe stats crossed a threshold: ${auIso.explained}/${auIso.momentCv}")
@@ -723,8 +721,8 @@ class PqSpec extends SparkSuite {
       q -> isoRows.keys.filter(_ != q).toSeq
         .sortBy(x => (d2(isoRows(q), isoRows(x)), x)).take(topk).toSet
     }.toMap
-    val isoByQ = graft.functions.Pq.ivfAdcTopkAuto(emb, "embedding", auIso, topk,
-        centroids = 16, nprobe = 8)
+    val isoByQ = graft.functions.Pq.ivfAdcTopk(emb, "embedding", auIso.model, topk,
+        8, "vec_id", None)
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
     val isoRecalls = isoRows.keys.toSeq.sorted.map { q =>
       isoExact(q).intersect(isoByQ.getOrElse(q, Array.empty).map(_._2).toSet)
@@ -743,8 +741,8 @@ class PqSpec extends SparkSuite {
       (i.toLong, (0 until 64).map(j => c(j) + rnd.nextGaussian()).toSeq)
     }.toDF("vec_id", "embedding")
     val auCl = graft.functions.Pq.fitIvfPqAuto(cl, "embedding", k = 32, centroids = 64)
-    assert(auCl.variant == "opq+residual",
-      s"clustered corpus must pick opq+residual, got ${auCl.variant} " +
+    assert(auCl.model.coding.isInstanceOf[graft.functions.Pq.Coding.Rotated],
+      s"clustered corpus must pick opq+residual, got ${auCl.model.coding} " +
         s"(explained=${auCl.explained}, cv=${auCl.momentCv})")
     assert(auCl.explained >= 0.15,
       s"clustered explained variance ${auCl.explained} under the 0.15 threshold")
@@ -754,8 +752,8 @@ class PqSpec extends SparkSuite {
       q -> clRows.keys.filter(_ != q).toSeq
         .sortBy(x => (d2(clRows(q), clRows(x)), x)).take(topk).toSet
     }.toMap
-    val clByQ = graft.functions.Pq.ivfAdcTopkAuto(cl, "embedding", auCl, topk,
-        nprobe = 8)
+    val clByQ = graft.functions.Pq.ivfAdcTopk(cl, "embedding", auCl.model, topk,
+        8, "vec_id", None)
       .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
     val clRecalls = clRows.keys.toSeq.sorted.map { q =>
       clExact(q).intersect(clByQ.getOrElse(q, Array.empty).map(_._2).toSet)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** SURVEY §2.A (formats note): csv/json sources are supported through the
   * standard readers — round-trip the nation table through both and prove
@@ -9,7 +8,7 @@ import java.nio.file.Files
 class SourceSpec extends SparkSuite {
 
   test("csv source round-trips the nation table") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = tempDir("graft-csv")
     val nation = Tables.nation(spark, sf001)
     nation.coalesce(1).write.option("header", "true").csv(s"$dir/nation")
     val back = spark.read
@@ -21,7 +20,7 @@ class SourceSpec extends SparkSuite {
   }
 
   test("json source round-trips the supplier table") {
-    val dir = Files.createTempDirectory("graft-json").toString
+    val dir = tempDir("graft-json")
     val supplier = Tables.supplier(spark, sf001)
     supplier.coalesce(1).write.json(s"$dir/supplier")
     val back = spark.read.schema(supplier.schema).json(s"$dir/supplier")

@@ -1,13 +1,41 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base — one local session for the whole forked test JVM. */
-trait SparkSuite extends AnyFunSuite {
+trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSuite.session
   val sf001 = "/root/testdata/sf0.001"
   val sf01 = "/root/testdata/sf0.01"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** A fresh directory under the system temp dir; it and everything in
+    * it are deleted after the suite's last test. */
+  protected def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d.toString
+  }
+
+  /** Delete `path` and everything under it, if it exists. */
+  protected def deleteTree(path: String): Unit = {
+    val p = Paths.get(path)
+    if (Files.exists(p)) {
+      val all = Files.walk(p)
+      try all.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      finally all.close()
+    }
+  }
+
+  // best effort: a directory that cannot be deleted must not fail the
+  // suite whose tests already passed
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => { scala.util.Try(deleteTree(d.toString)); () })
+    finally super.afterAll()
 
   /** (SQL executions, Spark jobs) started while `f` runs, waiting for
     * the listener bus to quiesce before reading. `onJob` also runs on

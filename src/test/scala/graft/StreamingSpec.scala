@@ -14,7 +14,7 @@ class StreamingSpec extends SparkSuite {
   /** Write events as `parts` ts-ordered parquet chunks; returns dir. */
   private def replayDir(parts: Int, lateTail: Boolean = false,
       sfDir: String = sf001): String = {
-    val dir = Files.createTempDirectory("graft-replay").toString
+    val dir = tempDir("graft-replay")
     val ev = Tables.events(spark, sfDir).orderBy("ts").collect()
     val schema = Tables.events(spark, sfDir).schema
     val chunks = ev.grouped(math.ceil(ev.length.toDouble / parts).toInt).toSeq
@@ -28,7 +28,7 @@ class StreamingSpec extends SparkSuite {
       // register written files under one glob-able dir
     }
     // flatten: move part files up so the stream source sees them in order
-    val flat = Files.createTempDirectory("graft-replay-flat").toString
+    val flat = tempDir("graft-replay-flat")
     ordered.indices.foreach { idx =>
       val src = new java.io.File(s"$dir/chunk_$idx").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -101,9 +101,9 @@ class StreamingSpec extends SparkSuite {
       Seq(ev(3, 2L, "view", "2024-01-01 13:00:00")),
       Seq(ev(4, 3L, "view", "2024-01-01 16:00:00")),
       Seq(ev(5, 1L, "click", "2024-01-01 16:05:00")))
-    val flat = Files.createTempDirectory("graft-dedup-horizon").toString
+    val flat = tempDir("graft-dedup-horizon")
     chunks.zipWithIndex.foreach { case (rs, idx) =>
-      val tmp = s"${Files.createTempDirectory("graft-dedup-chunk")}/out"
+      val tmp = s"${tempDir("graft-dedup-chunk")}/out"
       spark.createDataFrame(java.util.Arrays.asList(rs: _*), Streams.eventsSchema)
         .coalesce(1).write.parquet(tmp)
       val src = new java.io.File(tmp).listFiles()
@@ -156,9 +156,9 @@ class StreamingSpec extends SparkSuite {
       Seq(ev(4, "2024-01-01 12:30:00")),
       Seq(ev(5, "2024-01-01 10:35:00"), ev(6, "2024-01-01 12:20:00")),
       Seq(ev(7, "2024-01-01 13:30:00")))
-    val flat = Files.createTempDirectory("graft-late-keep").toString
+    val flat = tempDir("graft-late-keep")
     chunks.zipWithIndex.foreach { case (rs, idx) =>
-      val tmp = s"${Files.createTempDirectory("graft-late-chunk")}/out"
+      val tmp = s"${tempDir("graft-late-chunk")}/out"
       spark.createDataFrame(java.util.Arrays.asList(rs: _*), Streams.eventsSchema)
         .coalesce(1).write.parquet(tmp)
       val src = new java.io.File(tmp).listFiles()
@@ -315,9 +315,9 @@ class StreamingSpec extends SparkSuite {
       Seq(ev(4, 2L, "2024-01-01 14:05:00")),
       Seq(ev(5, 2L, "2024-01-01 14:10:00")),
       Seq(ev(6, 1L, "2024-01-01 14:20:00")))
-    val flat = Files.createTempDirectory("graft-evict").toString
+    val flat = tempDir("graft-evict")
     chunks.zipWithIndex.foreach { case (rs, idx) =>
-      val tmp = s"${Files.createTempDirectory("graft-evict-chunk")}/out"
+      val tmp = s"${tempDir("graft-evict-chunk")}/out"
       spark.createDataFrame(java.util.Arrays.asList(rs: _*), Streams.eventsSchema)
         .coalesce(1).write.parquet(tmp)
       val src = new java.io.File(tmp).listFiles()
@@ -372,9 +372,9 @@ class StreamingSpec extends SparkSuite {
       Seq(ev(1, 1L, "2024-01-01 10:00:00"), ev(2, 2L, "2024-01-01 10:01:00")),
       Seq(ev(3, 1L, "2024-01-01 11:00:00")),
       Seq(ev(4, 1L, "2024-01-01 12:00:00"), ev(5, 2L, "2024-01-01 12:01:00")))
-    val flat = Files.createTempDirectory("graft-ttl").toString
+    val flat = tempDir("graft-ttl")
     chunks.zipWithIndex.foreach { case (rs, idx) =>
-      val tmp = s"${Files.createTempDirectory("graft-ttl-chunk")}/out"
+      val tmp = s"${tempDir("graft-ttl-chunk")}/out"
       spark.createDataFrame(java.util.Arrays.asList(rs: _*), Streams.eventsSchema)
         .coalesce(1).write.parquet(tmp)
       val src = new java.io.File(tmp).listFiles()
@@ -431,13 +431,13 @@ class StreamingSpec extends SparkSuite {
     // target must be byte-count identical; the union of batch dirs must
     // equal the source exactly.
     val dir = replayDir(parts = 4)
-    val target = Files.createTempDirectory("graft-sink").toString
+    val target = tempDir("graft-sink")
     def upsert(df: DataFrame, batchId: Long): Unit =
       df.write.mode("overwrite").parquet(s"$target/batch_id=$batchId")
     val q = Streams.eventsStream(spark, dir).writeStream
       .foreachBatch(upsert _)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-sink-ckpt").toString)
+        tempDir("graft-sink-ckpt"))
       .start()
     q.processAllAvailable(); q.stop()
     val readAll = () => spark.read
@@ -462,13 +462,13 @@ class StreamingSpec extends SparkSuite {
     import graft.queries.StreamingBatch
     // seed the versioned target, stage the two change batches as two
     // ordered source files (one micro-batch each)
-    val targetDir = Files.createTempDirectory("graft-upsert-target").toString
+    val targetDir = tempDir("graft-upsert-target")
     Streams.initUpsertTarget(StreamingBatch.upsertTarget(spark, sf001), targetDir)
-    val srcDir = Files.createTempDirectory("graft-upsert-src").toString
+    val srcDir = tempDir("graft-upsert-src")
     val batches = Seq(StreamingBatch.upsertBatch1(spark, sf001),
       StreamingBatch.upsertBatch2(spark, sf001))
     batches.zipWithIndex.foreach { case (b, idx) =>
-      val tmp = s"${Files.createTempDirectory("graft-upsert-chunk")}/out"
+      val tmp = s"${tempDir("graft-upsert-chunk")}/out"
       b.coalesce(1).write.parquet(tmp)
       val src = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -480,7 +480,7 @@ class StreamingSpec extends SparkSuite {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
     val q = Streams.upsertSink(changes, targetDir, "o_orderkey")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-upsert-ckpt").toString)
+        tempDir("graft-upsert-ckpt"))
       .start()
     q.processAllAvailable(); q.stop()
     def snapshot(): Seq[(Long, Long, Long)] =
@@ -509,7 +509,7 @@ class StreamingSpec extends SparkSuite {
 
   test("upsert vacuum: readers resolve committed bytes at every step; crash retries idempotently") {
     import graft.queries.StreamingBatch
-    val targetDir = Files.createTempDirectory("graft-vacuum-target").toString
+    val targetDir = tempDir("graft-vacuum-target")
     Streams.initUpsertTarget(StreamingBatch.upsertTarget(spark, sf001), targetDir)
     val batches = Seq(StreamingBatch.upsertBatch1(spark, sf001),
       StreamingBatch.upsertBatch2(spark, sf001))
@@ -603,7 +603,7 @@ class StreamingSpec extends SparkSuite {
     val tB = "epsilon zeta eta theta"
     val tC = "iota kappa lambda mu"
     val tD = "nu xi omicron pi"
-    val targetDir = Files.createTempDirectory("graft-ingest-dedup").toString
+    val targetDir = tempDir("graft-ingest-dedup")
     Streams.initDedupCorpus(Seq((1L, tA), (2L, tB)).toDF("doc_id", "text"),
       targetDir)
     // batch 0: 10 dups corpus doc 1 (drop); 11 and 12 are a NEW dup
@@ -690,14 +690,14 @@ class StreamingSpec extends SparkSuite {
     // batchId 0 against a pre-advanced target correctly SKIPS, exactly
     // the Delta txn-appId semantics), so the stream gets its own
     // freshly-seeded target.
-    val target2 = Files.createTempDirectory("graft-ingest-dedup2").toString
+    val target2 = tempDir("graft-ingest-dedup2")
     Streams.initDedupCorpus(Seq((1L, tA), (2L, tB)).toDF("doc_id", "text"),
       target2)
-    val streamDir = Files.createTempDirectory("graft-ingest-src").toString
+    val streamDir = tempDir("graft-ingest-src")
     Seq(Seq((40L, tA), (41L, "phi chi psi omega")),
         Seq((42L, "phi chi psi omega"), (43L, tC)))
       .zipWithIndex.foreach { case (rows, idx) =>
-        val tmp = s"${Files.createTempDirectory("graft-ingest-chunk")}/out"
+        val tmp = s"${tempDir("graft-ingest-chunk")}/out"
         rows.toDF("doc_id", "text").coalesce(1).write.parquet(tmp)
         val src = new java.io.File(tmp).listFiles()
           .filter(_.getName.endsWith(".parquet")).head
@@ -714,7 +714,7 @@ class StreamingSpec extends SparkSuite {
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
           .parquet(streamDir), target2)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ingest-ckpt").toString)
+        tempDir("graft-ingest-ckpt"))
       .start()
     q.processAllAvailable(); q.stop()
     // chunk 0: 40 dups corpus doc 1 (drop), 41 clean (keep);
@@ -732,7 +732,7 @@ class StreamingSpec extends SparkSuite {
     // genuine near-dup structure, so keeps/drops exercise every branch
     val seed = docs.filter(col("doc_id") % 4 === 0)
     val batches = (1 to 3).map(r => docs.filter(col("doc_id") % 4 === r))
-    val targetDir = Files.createTempDirectory("graft-ingest-store").toString
+    val targetDir = tempDir("graft-ingest-store")
     Streams.initDedupCorpus(seed, targetDir)
     // the RESCAN form — the round-18 body (full corpus∪batch
     // re-shingle + fresh df probe every batch) — is the oracle the
@@ -850,7 +850,7 @@ class StreamingSpec extends SparkSuite {
     // cluster around the seed and NOTHING lands. A fresh clean doc
     // then lands normally, and the stats row records the hot count.
     def mk(i: Long) = (i, s"the quick fox w$i")
-    val target = Files.createTempDirectory("graft-ingest-hot").toString
+    val target = tempDir("graft-ingest-hot")
     Streams.initDedupCorpus(Seq(mk(0)).toDF("doc_id", "text"), target)
     val batch = (1L to 1030L).map(mk).toDF("doc_id", "text")
     assert(Streams.applyDedupBatch(batch, 0L, target) == 0L,
@@ -876,29 +876,25 @@ class StreamingSpec extends SparkSuite {
   /** One committed batch's (SQL executions, jobs) on a fresh target
     * seeded by `init`, then the three exit paths — commit, high-water
     * mark skip, id-hygiene rejection — each leaving the persistent-RDD
-    * set as it found it. A rejected batch must not advance the marker.
-    * The target is deleted afterwards. */
+    * set as it found it. A rejected batch must not advance the marker. */
   private def pinBatch(prefix: String, init: String => Unit, batch: DataFrame,
       repeated: DataFrame, apply: (DataFrame, Long, String) => Long): ((Int, Int), Long) = {
-    val target = Files.createTempDirectory(prefix).toString
+    val target = tempDir(prefix)
     def persisted() = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    try {
-      init(target)
-      val before = persisted()
-      var n = -2L
-      val cost = actionsDuring { n = apply(batch, 0L, target) }
-      assert(n >= 0, "the pinned batch did not commit")
-      assert(persisted() == before, "a committed batch left a checkpoint pinned")
-      assert(apply(batch, 0L, target) == -1L)
-      assert(persisted() == before, "a high-water-mark skip left a checkpoint pinned")
-      val e = intercept[IllegalArgumentException](apply(repeated, 1L, target))
-      assert(e.getMessage.contains("repeated within the batch"))
-      assert(!MarkerStore.committedIncs(spark, target).contains(1L),
-        "a rejected batch advanced the marker")
-      assert(persisted() == before, "a rejected batch left a checkpoint pinned")
-      (cost, n)
-    } finally MarkerStore.fs(spark, target)
-      .delete(new org.apache.hadoop.fs.Path(target), true)
+    init(target)
+    val before = persisted()
+    var n = -2L
+    val cost = actionsDuring { n = apply(batch, 0L, target) }
+    assert(n >= 0, "the pinned batch did not commit")
+    assert(persisted() == before, "a committed batch left a checkpoint pinned")
+    assert(apply(batch, 0L, target) == -1L)
+    assert(persisted() == before, "a high-water-mark skip left a checkpoint pinned")
+    val e = intercept[IllegalArgumentException](apply(repeated, 1L, target))
+    assert(e.getMessage.contains("repeated within the batch"))
+    assert(!MarkerStore.committedIncs(spark, target).contains(1L),
+      "a rejected batch advanced the marker")
+    assert(persisted() == before, "a rejected batch left a checkpoint pinned")
+    (cost, n)
   }
 
   test("lexical sink: a committed batch runs a fixed action budget; every exit path releases its checkpoints") {
@@ -935,7 +931,7 @@ class StreamingSpec extends SparkSuite {
         transform(col("embedding"), _.cast("double")).as("embedding"))
     val seed = emb.filter(col("doc_id") % 3 === 0)
     val batches = (1 to 2).map(r => emb.filter(col("doc_id") % 3 === r))
-    val target = Files.createTempDirectory("graft-sem-ingest").toString
+    val target = tempDir("graft-sem-ingest")
     Streams.initSemanticDedupCorpus(seed, target)
     def corpusIds(): Set[Long] = Streams.readSemanticCorpus(spark, target)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -1099,11 +1095,11 @@ class StreamingSpec extends SparkSuite {
     // on a freshly-seeded target (batchIds restart at 0 per checkpoint
     // lineage) — final corpus must equal the direct-path result after
     // the same two batches
-    val target2 = Files.createTempDirectory("graft-sem-ingest2").toString
+    val target2 = tempDir("graft-sem-ingest2")
     Streams.initSemanticDedupCorpus(seed, target2)
-    val streamDir = Files.createTempDirectory("graft-sem-src").toString
+    val streamDir = tempDir("graft-sem-src")
     batches.zipWithIndex.foreach { case (bt, idx) =>
-      val tmp = s"${Files.createTempDirectory("graft-sem-chunk")}/out"
+      val tmp = s"${tempDir("graft-sem-chunk")}/out"
       bt.coalesce(1).write.parquet(tmp)
       val src = new java.io.File(tmp).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -1116,7 +1112,7 @@ class StreamingSpec extends SparkSuite {
           .option("maxFilesPerTrigger", "1").parquet(streamDir),
         target2, nprobe = 12)
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-sem-ckpt").toString)
+        tempDir("graft-sem-ckpt"))
       .start()
     q.processAllAvailable(); q.stop()
     val streamed = Streams.readSemanticCorpus(spark, target2)
@@ -1139,7 +1135,7 @@ class StreamingSpec extends SparkSuite {
       .select(col("vec_id").as("doc_id"),
         transform(col("embedding"), _.cast("double")).as("embedding"))
     val seed = emb.filter(col("doc_id") % 3 === 0)
-    val target = Files.createTempDirectory("graft-sem-layout").toString
+    val target = tempDir("graft-sem-layout")
     val indexDir = s"$target/_index"
     Streams.initSemanticDedupCorpus(seed, target)
     val ig = MarkerStore.liveGen(spark, indexDir).get._1
@@ -1225,7 +1221,7 @@ class StreamingSpec extends SparkSuite {
       .select(col("vec_id").as("doc_id"),
         transform(col("embedding"), _.cast("double")).as("embedding"))
     val seed = emb.filter(col("doc_id") % 3 === 0)
-    val target = Files.createTempDirectory("graft-sem-refit").toString
+    val target = tempDir("graft-sem-refit")
     val indexDir = s"$target/_index"
     Streams.initSemanticDedupCorpus(seed, target)
     def corpusIds(): Set[Long] = Streams.readSemanticCorpus(spark, target)
@@ -1294,7 +1290,7 @@ class StreamingSpec extends SparkSuite {
       .select(col("vec_id").as("doc_id"),
         transform(col("embedding"), _.cast("double")).as("embedding"))
     val seed = emb.filter(col("doc_id") % 3 === 0)
-    val target = Files.createTempDirectory("graft-sem-moment").toString
+    val target = tempDir("graft-sem-moment")
     val indexDir = s"$target/_index"
     Streams.initSemanticDedupCorpus(seed, target)
     val idx = Pq.readIndex(spark, indexDir)
@@ -1341,7 +1337,7 @@ class StreamingSpec extends SparkSuite {
         transform(col("embedding"), _.cast("double")).as("embedding"))
     val seed = emb.filter(col("doc_id") % 4 === 0)
     val batches = (1 to 3).map(r => emb.filter(col("doc_id") % 4 === r))
-    val target = Files.createTempDirectory("graft-sem-scale").toString
+    val target = tempDir("graft-sem-scale")
     val indexDir = s"$target/_index"
     Streams.initSemanticDedupCorpus(seed, target)
     val gen0 = MarkerStore.liveGen(spark, indexDir).get._1
