@@ -11,13 +11,12 @@ import org.apache.spark.sql.DataFrame
   * generations × N² rows of dead storage. */
 private[graft] object Checkpoints {
 
-  /** The checkpoint RDD(s) behind a localCheckpoint'd DataFrame. An RDD
-    * references the SparkContext but NOT the SparkSession, so a release
-    * registry may hold these STRONGLY under a session-weak key without
-    * making the entry unreclaimable — and the deterministic release then
-    * survives the result DataFrame being GC'd first (round-8 ADVICE: a
-    * WeakReference'd DataFrame value silently lapsed to the async
-    * ContextCleaner whenever the result died before the next run). */
+  /** The checkpoint RDD(s) behind a localCheckpoint'd DataFrame — what
+    * a [[SessionResources.LastRun]] slot records (as ids), so its
+    * deterministic release survives the result DataFrame being GC'd
+    * first (round-8 ADVICE: a WeakReference'd DataFrame value silently
+    * lapsed to the async ContextCleaner whenever the result died before
+    * the next run). */
   def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd

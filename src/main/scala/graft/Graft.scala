@@ -1041,7 +1041,8 @@ object Graft {
     * registry materializes the index (persisted homes + residual
     * codes) on first use, so repeated workload calls pay ONLY their
     * own query side — release the storage with
-    * [[graft.functions.Pq.invalidateIndexCache]]. */
+    * [[graft.functions.Pq.invalidateIndexCache]], or everything the
+    * session holds with [[graft.SessionResources.release]]. */
   def similarTopKPqIvf(spark: SparkSession, embeddings: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       m: Int = 8, pqK: Int = 256, centroids: Int = 0,

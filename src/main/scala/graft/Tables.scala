@@ -21,73 +21,37 @@ object Tables {
   // session. Without it every query build pays a driver-side listing +
   // schema-read job — noise at bench scale, and at 100 TB (100k+ files)
   // re-listing per query is a real cost every production catalog avoids.
-  // DataFrames are immutable plans, so sharing is safe. Weak-keyed by the
-  // session OBJECT: a stopped+GC'd session's entries vanish with it (no
-  // leak, no identityHashCode collision handing a new session DataFrames
-  // bound to a dead one — round-2 ADVICE). The DataFrames themselves are
-  // WEAKLY referenced (round-11): a DataFrame strongly reaches its
-  // session, so strong values were WeakHashMap's documented value→key
-  // pin — every session that ever loaded a table became uncollectable.
-  // A cleared ref just means the next load re-lists and re-reads the
-  // footer (the Dedup.warmedShingles discipline, Dedup.scala:629).
-  private val cache = new java.util.WeakHashMap[
-    SparkSession,
-    scala.collection.concurrent.TrieMap[(String, String),
-      java.lang.ref.WeakReference[DataFrame]]]()
+  // DataFrames are immutable plans, so sharing is safe. A session slot
+  // (see [[SessionResources]]), so a second session gets its own
+  // DataFrames. The DataFrames themselves are WEAKLY referenced
+  // (round-11): a DataFrame strongly reaches its session, so a strong
+  // value would pin every session that ever loaded a table. A cleared
+  // ref just means the next load re-lists and re-reads the footer.
+  private val loaded = SessionResources.slot[(String, String),
+    java.lang.ref.WeakReference[DataFrame]]("tables.load")
 
   // Warmed ingests (buffer-pool layouts, projections, derived rollups)
   // are held STRONGLY and by design: the ingesting session owns its
   // buffer pool — persisted executor storage must not vanish on an
-  // arbitrary GC, and it is released by session stop or [[release]].
-  // This map's values DO reach their session (the documented
-  // WeakHashMap value→key pin), so a warm-ingesting session lives until
-  // released — the explicit, bounded price of an explicit ingest; plain
-  // `load` plans never pay it.
-  private val warmed = new java.util.WeakHashMap[
-    SparkSession, scala.collection.concurrent.TrieMap[(String, String), DataFrame]]()
+  // arbitrary GC. They reach their session, so a warm-ingesting session
+  // lives until [[SessionResources.release]] unpersists them — the
+  // explicit, bounded price of an explicit ingest; plain `load` plans
+  // never pay it.
+  private val warmed = SessionResources.slot[(String, String), DataFrame](
+    "tables.warmed", (_, df) => { df.unpersist(false); () })
 
-  private def sessionCache(spark: SparkSession) = cache.synchronized {
-    var m = cache.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap
-        .empty[(String, String), java.lang.ref.WeakReference[DataFrame]]
-      cache.put(spark, m)
-    }
-    m
-  }
-
-  private def warmedCache(spark: SparkSession) = warmed.synchronized {
-    var m = warmed.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-      warmed.put(spark, m)
-    }
-    m
-  }
-
-  /** Unpersist and drop every warmed layout of `spark` — the explicit
-    * end-of-ingest-lifetime hook for long-lived multi-session services
-    * (a stopped session's executor storage dies with its context
-    * anyway; this is for releasing a LIVE session's buffer pool). */
-  def release(spark: SparkSession): Unit = {
-    val m = warmed.synchronized { Option(warmed.remove(spark)) }
-    m.foreach(_.values.foreach(_.unpersist(false)))
-  }
-
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    warmedCache(spark).get((sfDir, name)).getOrElse {
-      val m = sessionCache(spark)
-      val key = (sfDir, name)
-      m.get(key).flatMap(r => Option(r.get())) match {
-        case Some(df) => df
-        case None =>
-          val df =
-            if (name == "events") eventsUncached(spark, sfDir)
-            else spark.read.parquet(s"$sfDir/$name.parquet")
-          m.put(key, new java.lang.ref.WeakReference(df))
-          df
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val key = (sfDir, name)
+    warmed.get(spark, key)
+      .orElse(loaded.get(spark, key).flatMap(r => Option(r.get())))
+      .getOrElse {
+        val df =
+          if (name == "events") eventsUncached(spark, sfDir)
+          else spark.read.parquet(s"$sfDir/$name.parquet")
+        loaded.put(spark, key, new java.lang.ref.WeakReference(df))
+        df
       }
-    }
+  }
 
   /** Workload-sized partition count: one task per ~64 MB of input,
     * floored at min(8, cluster parallelism) so small tables still get
@@ -142,7 +106,7 @@ object Tables {
     * BEFORE the old one is dropped, so readers never recompute. */
   private def putWarm(spark: SparkSession, key: (String, String),
       df: DataFrame): Unit =
-    warmedCache(spark).put(key, df).foreach(_.unpersist(false))
+    warmed.put(spark, key, df).foreach(_.unpersist(false))
 
   /** Additional bucketed projections of already-loaded tables — the
     * C-Store/Vertica idea: one logical table, several physical sort/
@@ -165,7 +129,7 @@ object Tables {
     * with pushdown/pruning intact — same rows either way). */
   def projection(spark: SparkSession, sfDir: String,
       name: String, key: String): DataFrame =
-    warmedCache(spark).getOrElse((sfDir, s"$name#$key"), load(spark, sfDir, name))
+    warmed.get(spark, (sfDir, s"$name#$key")).getOrElse(load(spark, sfDir, name))
 
   /** events with `ts` as a TimestampType (microsecond precision, UTC). */
   def events(spark: SparkSession, sfDir: String): DataFrame =
@@ -181,8 +145,7 @@ object Tables {
     * projection computed lazily over the plain scan — identical rows,
     * one shape for Verify/tests/bench. */
   def eventsHourly(spark: SparkSession, sfDir: String): DataFrame =
-    warmedCache(spark).getOrElse((sfDir, "events#hourly"),
-      eventsHourlyPlan(spark, sfDir))
+    warmed.get(spark, (sfDir, "events#hourly")).getOrElse(eventsHourlyPlan(spark, sfDir))
 
   private def eventsHourlyPlan(spark: SparkSession, sfDir: String): DataFrame =
     events(spark, sfDir).select(
@@ -212,13 +175,13 @@ object Tables {
     * is what the cache scan will report, the in-memory `bucketBy`). */
   private[graft] def derived(spark: SparkSession, sfDir: String, name: String)
       (plan: => DataFrame): DataFrame =
-    warmedCache(spark).getOrElse((sfDir, name), plan)
+    warmed.get(spark, (sfDir, name)).getOrElse(plan)
 
   /** Is a derived projection warmed in this session's catalog? Queries
     * with a size-statistic regime switch also flip when the matching
     * ingest exists (topk_global's pre-aggregate). */
   private[graft] def hasDerived(spark: SparkSession, sfDir: String, name: String): Boolean =
-    warmedCache(spark).contains((sfDir, name))
+    warmed.get(spark, (sfDir, name)).isDefined
 
   private[graft] def warmDerived(spark: SparkSession, sfDir: String,
       name: String, plan: DataFrame): Unit = {

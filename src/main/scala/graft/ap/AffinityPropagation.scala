@@ -259,48 +259,29 @@ object AffinityPropagation {
             .otherwise(least(lit(0.0), rkk + srp - rp))).as("a"))
   }
 
+  /** `pinned`: ids of the persisted RDDs `messages` reads (a
+    * distributed run's final checkpoint), for a caller that owns their
+    * lifetime (`autoRelease = false`). */
   final case class Result(
-    messagesFn: () => DataFrame, exemplars: Seq[Long], iterations: Int, converged: Boolean) {
+    messagesFn: () => DataFrame, exemplars: Seq[Long], iterations: Int, converged: Boolean,
+    pinned: Seq[Int] = Nil) {
     /** Rebuilds on the CALLING thread's active session (falling back to
       * the default session): a Result must not strongly capture the
-      * session that ran the solve — cached Results live in weak-keyed
-      * session registries, and a captured session would make those
-      * entries unreclaimable (WeakHashMap's value→key caveat). Throws
+      * session that ran the solve — cached Results live in session
+      * slots (graft.SessionResources), and a captured session would
+      * pin those entries. Throws
       * IllegalStateException if no session is active or default. */
     def messages: DataFrame = messagesFn()
   }
 
-  /** Final-generation checkpoint RDDs of the LAST distributed run per
-    * session, released at the next run's start — the same registry
-    * discipline as Dedup's components fixpoints (round-7 ADVICE: without
-    * it, repeated runs in one session — the bench's back-to-back apDist
-    * passes — each pin a dead N²-row checkpoint). The values are the
-    * checkpoint RDDs held STRONGLY: an RDD references the SparkContext,
-    * not the SparkSession (= the weak map key), so the entry stays
-    * reclaimable — and unlike the round-8 WeakReference'd DataFrame, the
-    * deterministic release survives the Result being GC'd before the next
-    * run starts (round-8 ADVICE). */
-  private val lastRunCheckpoint = new java.util.WeakHashMap[
-    SparkSession, Seq[org.apache.spark.rdd.RDD[_]]]()
-
-  private def releasePrevRun(spark: SparkSession): Unit =
-    lastRunCheckpoint.synchronized { Option(lastRunCheckpoint.remove(spark)) }
-      .foreach(graft.Checkpoints.releaseRdds)
-
-  private def recordRunCheckpoint(
-      spark: SparkSession, rdd: org.apache.spark.rdd.RDD[_]): Unit =
-    lastRunCheckpoint.synchronized { lastRunCheckpoint.put(spark, Seq(rdd)); () }
-
-  /** Test hook: is a final-generation checkpoint recorded for `spark`? */
-  private[graft] def hasRunCheckpoint(spark: SparkSession): Boolean =
-    lastRunCheckpoint.synchronized { lastRunCheckpoint.containsKey(spark) }
-
-  /** Test hook: the recorded final-generation checkpoint RDDs. */
-  private[graft] def runCheckpointRdds(
-      spark: SparkSession): Seq[org.apache.spark.rdd.RDD[_]] =
-    lastRunCheckpoint.synchronized {
-      Option(lastRunCheckpoint.get(spark)).getOrElse(Seq.empty)
-    }
+  /** Final-generation checkpoint of the LAST distributed run per
+    * session, released at the next run's start — the same discipline as
+    * Dedup's components fixpoints (round-7 ADVICE: without it, repeated
+    * runs in one session — the bench's back-to-back apDist passes — each
+    * pin a dead N²-row checkpoint). The slot holds the RDD id, so the
+    * deterministic release survives the Result being GC'd before the
+    * next run starts (round-8 ADVICE). */
+  private val lastRun = graft.SessionResources.lastRun("ap.lastRun")
 
   /** Below this point count the dense N² message matrices fit easily in
     * one task (N=4000 → 3×16M doubles ≈ 384 MB) and the per-iteration
@@ -388,10 +369,9 @@ object AffinityPropagation {
 
   /** Message matrices of a local-kernel run as an on-demand DataFrame.
     * The closure resolves the session at CALL time instead of capturing
-    * one: a cached Result (ApQueries.runCache is weak-KEYED by the
-    * session) must not strongly reach the session object, or the weak
-    * entry can never be reclaimed — WeakHashMap's documented value→key
-    * caveat (round-7 ADVICE). */
+    * one: a cached Result (ApQueries' session memo) must not strongly
+    * reach the session object, or its weak-keyed entry could never be
+    * reclaimed (round-7 ADVICE). */
   private def localMessagesFn(ids: Array[Long], st: LocalAP.State): () => DataFrame = () => {
     val spark = sessionForResult()
     import spark.implicits._
@@ -609,8 +589,8 @@ object AffinityPropagation {
     * `autoRelease = false` keeps the final-generation checkpoint OUT of
     * the next-run release registry — for callers that CACHE the Result
     * across subsequent runs in the same session (ApQueries.fullRun):
-    * the checkpoint then stays pinned for the session's life, bounded
-    * and caller-owned, instead of being unpersisted out from under the
+    * the checkpoint (`Result.pinned`) then stays pinned until the
+    * caller frees it, instead of being unpersisted out from under the
     * cached, unrecomputable messages. */
   private def runLoop(
       msgs0: DataFrame,
@@ -630,7 +610,7 @@ object AffinityPropagation {
     // checkpoint (contract: consume an auto-released Result before the
     // next run in the same session — the contract Dedup's components
     // carry; cached Results opt out via autoRelease = false).
-    releasePrevRun(spark)
+    lastRun.release(spark)
 
     // ONE job materializes the init checkpoint and counts its rows: the
     // count runs on the checkpoint's own RDD, not as a Dataset action.
@@ -716,14 +696,14 @@ object AffinityPropagation {
     // one pinned RDD the Result keeps alive, registered for release at
     // the next run's start (unless the caller owns its lifetime). The
     // Result holds the RDD, not a DataFrame: a DataFrame strongly
-    // references its SparkSession, and a cached Result under a
-    // weak-keyed session registry must not (round-8 ADVICE); messages
+    // references its SparkSession, and a cached Result in a session
+    // slot must not (round-8 ADVICE); messages
     // rebuilds on the caller's active/default session.
     val finalMsgs = msgs
-    if (autoRelease) recordRunCheckpoint(spark, finalMsgs)
+    if (autoRelease) lastRun.record(spark, Seq(finalMsgs))
     Result(() => sessionForResult().createDataFrame(
         finalMsgs.flatMap(MessageBlocks.rows), MessageBlocks.schema),
-      lastExemplars.toSeq.sorted, it, converged)
+      lastExemplars.toSeq.sorted, it, converged, Seq(finalMsgs.id))
   }
 
   /** Assignment given an exemplar set: label(i) = argmax_{k∈E} s(i,k),

@@ -44,43 +44,11 @@ object Ann {
     * at the next call so repeated invocations (the bench's reps) hold at
     * most one index copy in storage. Safe even if an old result is
     * re-consumed afterwards: a cached (not checkpointed) RDD recomputes.
-    *
-    * WEAK-keyed with an RDD-ID value (round-10 ADVICE): a strong
-    * session key pinned one glommed index RDD per dead session for the
-    * JVM's life, and an RDD value would pin the session through its
-    * lineage closures (WeakHashMap's documented value→key caveat). An
-    * Integer carries no reference chain; the deterministic unpersist
-    * resolves it through the context's own weak-valued persistentRdds
-    * registry.
-    *
-    * Measured limit (SessLeakProbe, round 11): this Spark build pins
-    * ANY session that has executed a query — even a bare
-    * `range(10).count()` on a fresh `newSession()` is never collected —
-    * so weak keys alone cannot evict an exercised session's entry. The
-    * weak map still adds no pin of OUR own (a future Spark that frees
-    * sessions frees these entries too); the deterministic lifecycle
-    * hook for long-lived multi-session services is [[release]], and a
-    * stopped context drops the blocks regardless. */
-  private val lastIndexCache = new java.util.WeakHashMap[SparkSession, Integer]()
-
-  /** Drop `spark`'s cached index storage now — the explicit
-    * end-of-session hook for services that cycle many sessions over one
-    * context (see the cache scaladoc: Spark itself pins exercised
-    * session objects, so eviction cannot ride GC). Idempotent; safe
-    * while a returned result is still held (a cached RDD recomputes). */
-  def release(spark: SparkSession): Unit =
-    lastIndexCache.synchronized { Option(lastIndexCache.remove(spark)) }
-      .foreach { id =>
-        spark.sparkContext.getPersistentRDDs.get(id).foreach(_.unpersist(false))
-      }
-
-  /** Test hook: is an index RDD cached for `spark`? */
-  private[graft] def hasIndexCache(spark: SparkSession): Boolean =
-    lastIndexCache.synchronized { lastIndexCache.containsKey(spark) }
-
-  /** Test hook: the cached index RDD id for `spark`, if any. */
-  private[graft] def indexCacheRddId(spark: SparkSession): Option[Int] =
-    lastIndexCache.synchronized { Option(lastIndexCache.get(spark)).map(_.intValue) }
+    * A [[graft.SessionResources]] last-run slot: it holds the RDD id,
+    * never the RDD (whose lineage closures would reach the session),
+    * and [[graft.SessionResources.release]] drops a live session's
+    * copy. */
+  private val lastIndex = graft.SessionResources.lastRun("ann.lastIndex")
 
   def topkCosine(spark: SparkSession, embeddings: DataFrame, k: Int,
       maxIndexRows: Int = MaxIndexRows): DataFrame = {
@@ -97,12 +65,12 @@ object Ann {
         "kernel is the small-index path; use the IVF route (simsearch_ivf / " +
         "Graft.similarTopKIvf) for indexes this large")
 
-    release(spark)
+    lastIndex.release(spark)
     // One glommed partition = the whole index as a single array value,
     // cached in executor storage; the cartesian below hands that one
     // element to every query partition via the block manager.
     val indexGlom = vecs.rdd.coalesce(1).glom().cache()
-    lastIndexCache.synchronized { lastIndexCache.put(spark, indexGlom.id); () }
+    lastIndex.record(spark, Seq(indexGlom))
 
     vecs.rdd.cartesian(indexGlom).mapPartitions { it =>
       if (!it.hasNext) Iterator.empty

@@ -566,53 +566,34 @@ object Pq {
   // model fit PER CALL. Keyed by the canonicalized optimized plan's
   // STRING RENDERING of the NORMALIZED input (so the same data reached
   // through renamed columns still hits) plus the shape parameters.
-  // Keys are strings, NOT LogicalPlans, deliberately: a plan's leaf
-  // relations strongly reference their SparkSession, and a WeakHashMap
-  // whose VALUE map holds such keys pins its own session entry forever
-  // (the documented WeakHashMap value→key hazard the Tables cache
-  // comments spell out; round-13 review caught this one).
+  // Keys are strings, NOT LogicalPlans: a plan's leaf relations
+  // strongly reference their SparkSession, and a key that reaches its
+  // session pins the entry (round-13 review).
   //
   // Two tiers per entry, the Tables load/warm discipline:
-  //   - the MODEL (driver-side arrays — does not reach the session, so
-  //     model-only entries never pin it);
+  //   - the MODEL (driver-side arrays — does not reach the session);
   //   - optionally the MATERIALIZED index (persisted homes + codes
   //     DataFrames, built on first indexed query). These DO reach the
   //     session — the explicit, bounded price of materialized executor
-  //     storage. Release with [[invalidateIndexCache]]; a session STOP
-  //     frees the executor storage (it dies with the context) but the
-  //     DRIVER-side entry stays pinned by this value→key chain until
-  //     invalidated — the same documented trade as Tables' warmed tier
-  //     (round-13 review: "vanishes on session GC" is only true of
-  //     model-only entries).
+  //     storage, held until [[invalidateIndexCache]] or
+  //     [[graft.SessionResources.release]] unpersists it.
   private final class IndexEntry(val model: IvfPqModel) {
     @volatile var index: Option[IvfPqIndex] = None
   }
 
-  private val indexCache = new java.util.WeakHashMap[
-    SparkSession,
-    scala.collection.concurrent.TrieMap[(String, Int, Int, Int), IndexEntry]]()
-
-  private def sessionIndexCache(spark: SparkSession) = indexCache.synchronized {
-    var m = indexCache.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap
-        .empty[(String, Int, Int, Int), IndexEntry]
-      indexCache.put(spark, m)
-    }
-    m
+  private def unpersistIx(ix: IvfPqIndex): Unit = {
+    ix.homes.unpersist(false); ix.codes.unpersist(false); ()
   }
+
+  private val indexes = graft.SessionResources.slot[(String, Int, Int, Int), IndexEntry](
+    "pq.index", (_, e) => e.index.foreach(unpersistIx))
 
   /** Drop every cached index of `spark`, unpersisting any materialized
     * homes/codes storage — the refit hook for callers whose underlying
     * DATA changed under an unchanged plan (see the staleness note on
     * [[fitIvfPqCached]]), and the release hook for the index tier's
     * executor storage. */
-  def invalidateIndexCache(spark: SparkSession): Unit = {
-    val m = indexCache.synchronized { Option(indexCache.remove(spark)) }
-    m.foreach(_.values.foreach(_.index.foreach { ix =>
-      ix.homes.unpersist(false); ix.codes.unpersist(false); ()
-    }))
-  }
+  def invalidateIndexCache(spark: SparkSession): Unit = indexes.release(spark)
 
   /** Identity of the plan's leaf relations, rendered EXPLICITLY: a
     * plan's treeString shows `Relation [cols] parquet` — NO file
@@ -672,13 +653,7 @@ object Pq {
   private def cachedEntry(v: DataFrame, m: Int, k: Int,
       centroids: Int): Option[IndexEntry] =
     cacheKey(v, m, k, centroids).map { key =>
-      val cache = sessionIndexCache(v.sparkSession)
-      cache.get(key) match {
-        case Some(e) => e
-        case None =>
-          val e = new IndexEntry(fitIvfPq(v, "v", m, k, centroids))
-          cache.putIfAbsent(key, e).getOrElse(e)
-      }
+      indexes(v.sparkSession, key)(new IndexEntry(fitIvfPq(v, "v", m, k, centroids)))
     }
 
   /** [[fitIvfPq]] behind the session index registry: the first call per
@@ -726,9 +701,9 @@ object Pq {
       else df
     // index from an already-fit model: one homes pass (unavoidable —
     // the fit's own homes relation was transient)
-    def fromModel(model: IvfPqModel, persist: Boolean): IvfPqIndex = {
+    def fromModel(model: IvfPqModel): IvfPqIndex = {
       val ix = indexFrom(v, model)
-      IvfPqIndex(model, persisted(ix.homes, persist), persisted(ix.codes, persist))
+      IvfPqIndex(model, persisted(ix.homes, true), persisted(ix.codes, true))
     }
     // fresh build: ONE homes relation serves the residual TRAIN, the
     // persisted index side, and the codes (round-13 review: fitIvfPq
@@ -742,49 +717,28 @@ object Pq {
         fit(residualsFrom(v, homes, cents), "rv", m, k))
       IvfPqIndex(model, homes, persisted(model.coding.encode(v, homes, model), persist))
     }
-    def unpersistIx(ix: IvfPqIndex): Unit = {
-      ix.homes.unpersist(false); ix.codes.unpersist(false); ()
-    }
     cacheKey(v, m, k, centroids) match {
       case None => buildAll(persist = false) // unidentifiable source
       case Some(key) =>
         val spark = vecs.sparkSession
-        val cache = sessionIndexCache(spark)
-        // an invalidation racing a build REMOVES the whole per-session
-        // map from the registry without clearing it, so probing the
-        // captured `cache` alone would still see e and miss the sweep
-        // (round-13 ADVICE) — the live check re-fetches the registry's
-        // CURRENT map and requires both identities to hold before
-        // trusting the install; otherwise the builder unpersists its
-        // own frames (idempotent with the sweep's unpersist, so the
-        // race's other interleaving is safe too)
-        def stillLive(e: IndexEntry): Boolean =
-          indexCache.synchronized { indexCache.get(spark) eq cache } &&
-            cache.get(key).exists(_ eq e)
-        def installIndex(e: IndexEntry): IvfPqIndex =
-          e.index.getOrElse(e.synchronized {
-            e.index.getOrElse {
-              val ix = fromModel(e.model, persist = true)
-              e.index = Some(ix)
-              if (!stillLive(e)) unpersistIx(ix)
-              ix
-            }
-          })
-        cache.get(key) match {
-          case Some(e) => installIndex(e)
-          case None =>
-            val ix = buildAll(persist = true)
-            val e = new IndexEntry(ix.model)
-            e.index = Some(ix)
-            cache.putIfAbsent(key, e) match {
-              case None =>
-                if (!stillLive(e)) unpersistIx(ix)
-                ix
-              case Some(prior) => // lost the insert race — drop ours
-                unpersistIx(ix)
-                installIndex(prior)
-            }
+        val e = indexes(spark, key) {
+          val ix = buildAll(persist = true)
+          val e = new IndexEntry(ix.model)
+          e.index = Some(ix)
+          e
         }
+        val ix = e.index.getOrElse(e.synchronized {
+          e.index.getOrElse {
+            val ix = fromModel(e.model)
+            e.index = Some(ix)
+            ix
+          }
+        })
+        // a release racing the build dropped the entry without freeing
+        // an index installed after its sweep (round-13 ADVICE): free it
+        // here (unpersist is idempotent with the sweep's)
+        if (!indexes.holds(spark, key, e)) unpersistIx(ix)
+        ix
     }
   }
 
@@ -1115,7 +1069,6 @@ object Pq {
     require(gen.nonEmpty, s"index $dir has no committed generation")
     val g = gen.get._1
     val genDir = s"$dir/gen=$g"
-    val cache = loadedModelCacheFor(spark)
     // the STORE FINGERPRINT (gen marker mtime+length) rides the cache
     // entry alongside the generation id (round-21 ADVICE, medium): a
     // store deleted and re-created at the same path restarts gens at 1,
@@ -1124,11 +1077,11 @@ object Pq {
     // differs, so the cache misses and reloads. One driver FS stat per
     // call — the same cost class as the generation resolution itself.
     val fp = graft.MarkerStore.genMarkerFingerprint(spark, dir, g, gen.get._2)
-    val model = Option(cache.get(dir)) match {
+    val model = loadedModels.get(spark, dir) match {
       case Some((cg, cfp, m)) if cg == g && cfp == fp => m
       case _ =>
         val m = loadModel(spark, dir, g)
-        cache.put(dir, (g, fp, m))
+        loadedModels.put(spark, dir, (g, fp, m))
         m
     }
     // ONE multi-path read per dataset (parts are homogeneous flat
@@ -1155,24 +1108,9 @@ object Pq {
     * unchanged. Generation resolution itself stays a per-call driver FS
     * read (MarkerStore), so a refit/redaction/vacuum that advances the
     * generation misses the cache and reloads. One entry per dir (the
-    * latest generation) bounds the held codebooks; the weak session key
-    * is the sessionIndexCache discipline. */
-  private val loadedModelCache = new java.util.WeakHashMap[
-    SparkSession, java.util.concurrent.ConcurrentHashMap[String, (Long, Long, IvfPqModel)]]()
-
-  private def loadedModelCacheFor(spark: SparkSession) =
-    loadedModelCache.synchronized {
-      var m = loadedModelCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, IvfPqModel)]()
-        loadedModelCache.put(spark, m)
-      }
-      m
-    }
-
-  /** Test hook: drop the cached generation models for `spark`. */
-  private[graft] def invalidateLoadedModelCache(spark: SparkSession): Unit =
-    loadedModelCache.synchronized { loadedModelCache.remove(spark); () }
+    * latest generation) bounds the held codebooks. */
+  private[graft] val loadedModels =
+    graft.SessionResources.slot[String, (Long, Long, IvfPqModel)]("pq.loadedModel")
 
   private def loadModel(spark: SparkSession, dir: String, g: Long): IvfPqModel = {
     val genDir = s"$dir/gen=$g"

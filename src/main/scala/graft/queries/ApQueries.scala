@@ -4,7 +4,6 @@ import graft.{QueryGroup, Tables}
 import graft.ap.AffinityPropagation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 
 /** SURVEY §2.J — the Affinity Propagation surface (the reference's own
   * capability, Frey & Dueck 2007). Single-pass message updates are fully
@@ -20,31 +19,18 @@ object ApQueries extends QueryGroup {
 
   private def r6z(c: org.apache.spark.sql.Column) = round(c, 6) + lit(0.0)
 
-  // The full loop is referenced by three keys; run it once per (session,
-  // sf dir) — weak-keyed by the session object so a second session in the
-  // same JVM never reuses results bound to a stopped session (and dead
-  // sessions' results are GC-able).
-  private val runCache = new java.util.WeakHashMap[
-    SparkSession, TrieMap[String, AffinityPropagation.Result]]()
-  private def fullRun(s: SparkSession, dir: String): AffinityPropagation.Result = {
-    val m = runCache.synchronized {
-      var t = runCache.get(s)
-      if (t == null) { t = TrieMap.empty; runCache.put(s, t) }
-      t
-    }
-    // autoRelease = false: this Result is CACHED and re-read across
-    // later AP runs in the same session — on a distributed-regime
-    // fixture its final checkpoint must not be unpersisted out from
-    // under the cached (unrecomputable) messages plan by the next run's
-    // release pass. Pinned once per (session, dir); session-bounded.
-    // per-session monitor: a concurrent first use could run the solve
-    // TWICE and orphan the loser's pinned (autoRelease = false)
-    // checkpoint for the session's life (round-12 review)
-    m.synchronized {
-      m.getOrElseUpdate(dir, AffinityPropagation.solve(s, Tables.embeddings(s, dir),
-        autoRelease = false))
-    }
-  }
+  // The full loop is referenced by three keys; run it at most once per
+  // (session, sf dir) — a concurrent first use running the solve TWICE
+  // would orphan the loser's pinned checkpoint (round-12 review).
+  // autoRelease = false: this Result is CACHED and re-read across later
+  // AP runs in the same session — on a distributed-regime fixture its
+  // final checkpoint must not be unpersisted out from under the cached
+  // (unrecomputable) messages plan by the next run's release pass. The
+  // slot frees it with the session's other resources.
+  private val solves = graft.SessionResources.slot[String, AffinityPropagation.Result](
+    "apQueries.solve", (s, r) => graft.SessionResources.unpersist(s, r.pinned))
+  private def fullRun(s: SparkSession, dir: String): AffinityPropagation.Result =
+    solves(s, dir)(AffinityPropagation.solve(s, Tables.embeddings(s, dir), autoRelease = false))
 
   def queries: Seq[(String, Q)] = Seq(
     // Pairwise s(i,k) = −‖x_i−x_k‖² (off-diagonal).

@@ -235,21 +235,11 @@ object Dedup extends QueryGroup {
   /** [[hotShingleProbe]] over the fixture shingle set, memoized per
     * (session, dir): the probe answer is a property of the corpus, so the
     * bench's steady-state reps reuse it instead of paying a probe job
-    * each (weak-keyed by the session like ApQueries.runCache). */
-  private val hotShingleCache = new java.util.WeakHashMap[
-    SparkSession, scala.collection.concurrent.TrieMap[String, Seq[Long]]]()
+    * each. */
+  private val hotShingles = graft.SessionResources.slot[String, Seq[Long]]("dedup.hotShingles")
 
-  private def hotShinglesFor(s: SparkSession, dir: String): Seq[Long] = {
-    val m = hotShingleCache.synchronized {
-      var t = hotShingleCache.get(s)
-      if (t == null) {
-        t = scala.collection.concurrent.TrieMap.empty[String, Seq[Long]]
-        hotShingleCache.put(s, t)
-      }
-      t
-    }
-    m.getOrElseUpdate(dir, hotShingleProbe(shingleSet(s, dir)))
-  }
+  private def hotShinglesFor(s: SparkSession, dir: String): Seq[Long] =
+    hotShingles(s, dir)(hotShingleProbe(shingleSet(s, dir)))
 
   /** Representative selection given cluster labels `(doc_id, cluster)`
     * and a per-doc quality `(doc_id, q: double)`: per cluster keep the
@@ -1127,40 +1117,14 @@ object Dedup extends QueryGroup {
     * release discipline — see [[graft.Checkpoints]]). */
   private def releaseCheckpoint(df: DataFrame): Unit = graft.Checkpoints.release(df)
 
-  /** Final-generation checkpoints of the LAST distributed components run
+  /** Final-generation checkpoint of the LAST distributed components run
     * per session, released at the next run's start: the returned
     * DataFrame depends on its checkpoint (a localCheckpoint'd plan is
     * unrecomputable once unpersisted), so it cannot be freed inside the
     * call that made it — but repeated invocations in one session (the
     * bench's reps) must not accumulate one pinned checkpoint each.
-    * Contract: consume a components result before the next call.
-    * WEAK-keyed by the session (like Tables' cache and ApQueries'
-    * runCache) so a stopped session's final checkpoint entry doesn't
-    * outlive the session object — and the VALUE is a WeakReference,
-    * because the DataFrame strongly references its session (= the key):
-    * a strong value would make the weak entry unreclaimable per
-    * WeakHashMap's documented caveat (round-7 ADVICE). A cleared ref
-    * means the result became unreachable — the ContextCleaner unpersists
-    * its RDD on that path; the registry adds the deterministic release
-    * while it is still live. */
-  private val lastComponentsCheckpoint =
-    new java.util.WeakHashMap[SparkSession, java.lang.ref.WeakReference[DataFrame]]()
-
-  private def releasePrevComponents(spark: SparkSession): Unit =
-    lastComponentsCheckpoint.synchronized {
-      Option(lastComponentsCheckpoint.remove(spark))
-    }.flatMap(r => Option(r.get)).foreach(releaseCheckpoint)
-
-  private def recordComponentsCheckpoint(spark: SparkSession, df: DataFrame): Unit =
-    lastComponentsCheckpoint.synchronized {
-      lastComponentsCheckpoint.put(spark, new java.lang.ref.WeakReference(df)); ()
-    }
-
-  /** Test hook: is a final-generation checkpoint recorded for `spark`? */
-  private[graft] def hasComponentsCheckpoint(spark: SparkSession): Boolean =
-    lastComponentsCheckpoint.synchronized {
-      lastComponentsCheckpoint.containsKey(spark)
-    }
+    * Contract: consume a components result before the next call. */
+  private val lastComponents = graft.SessionResources.lastRun("dedup.lastComponents")
 
   /** Edge-count bound for the in-memory union-find regime: 2²⁰ edges ≈
     * 16 MB of id pairs on the driver — same bounded-collect discipline as
@@ -1646,31 +1610,19 @@ object Dedup extends QueryGroup {
       // previous pagerank result (or a plan derived from it) back in as
       // this call's edges, releasing first would unpersist blocks this
       // run's input checkpoints were themselves built from mid-query.
-      releasePrevPagerank(spark)
+      lastPagerank.release(spark)
       prevCk.foreach(releaseCheckpoint)
       Seq(deg, degE, nodes).foreach(releaseCheckpoint)
       if (sinks != null) releaseCheckpoint(sinks)
-      recordPagerankCheckpoint(spark, outCk)
+      lastPagerank.record(spark, graft.Checkpoints.checkpointRdds(outCk))
       outCk
     }
   }
 
   /** Final checkpoint of the LAST long-loop pagerank run per session —
-    * the [[lastComponentsCheckpoint]] pattern verbatim (same contract:
-    * consume a result before the next call; same weak-key/weak-value
-    * reasoning, see that registry's scaladoc). */
-  private val lastPagerankCheckpoint =
-    new java.util.WeakHashMap[SparkSession, java.lang.ref.WeakReference[DataFrame]]()
-
-  private def releasePrevPagerank(spark: SparkSession): Unit =
-    lastPagerankCheckpoint.synchronized {
-      Option(lastPagerankCheckpoint.remove(spark))
-    }.flatMap(r => Option(r.get)).foreach(releaseCheckpoint)
-
-  private def recordPagerankCheckpoint(spark: SparkSession, df: DataFrame): Unit =
-    lastPagerankCheckpoint.synchronized {
-      lastPagerankCheckpoint.put(spark, new java.lang.ref.WeakReference(df)); ()
-    }
+    * the [[lastComponents]] contract: consume a result before the next
+    * call. */
+  private val lastPagerank = graft.SessionResources.lastRun("dedup.lastPagerank")
 
   private val pagerankIters = 8
 
@@ -1823,7 +1775,7 @@ object Dedup extends QueryGroup {
   private[graft] def componentsStars(nodes: DataFrame, p: DataFrame,
       nodesComplete: Boolean = false): DataFrame = {
     val spark = nodes.sparkSession
-    releasePrevComponents(spark)
+    lastComponents.release(spark)
     var e = p.filter(col("u").isNotNull && col("v").isNotNull)
       .filter(col("u") =!= col("v")).distinct().localCheckpoint()
     // carry each generation's count forward — re-counting the previous
@@ -1841,7 +1793,7 @@ object Dedup extends QueryGroup {
       e = next
       eCount = nextCount
     }
-    recordComponentsCheckpoint(spark, e)
+    lastComponents.record(spark, graft.Checkpoints.checkpointRdds(e))
     val base =
       if (nodesComplete) nodes.select(col("id"))
       else nodes.select(col("id"))
@@ -1863,7 +1815,7 @@ object Dedup extends QueryGroup {
     * on this session (see [[componentsStars]]). */
   private[graft] def connectedComponentsPropagation(nodes: DataFrame, pairs: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
-    releasePrevComponents(spark)
+    lastComponents.release(spark)
     // Materialize the pair-generation pipeline ONCE: the edge list is
     // consumed forward + reversed and then on every iteration — without
     // the checkpoint the union would execute the (expensive) upstream
@@ -1898,7 +1850,7 @@ object Dedup extends QueryGroup {
     // The result depends only on the final generation's checkpoint; the
     // edge list can be released as soon as the loop exits.
     releaseCheckpoint(p)
-    prev.foreach(recordComponentsCheckpoint(spark, _))
+    prev.foreach(g => lastComponents.record(spark, graft.Checkpoints.checkpointRdds(g)))
     labels.select(col("u").as("id"), col("lbl").as("component"))
   }
 

@@ -1037,8 +1037,9 @@ object Streams {
             // batchId advances the index high-water mark (the generation
             // already holds the batch's vectors), so a crash retry
             // detects ownership from the marker alone
-            Pq.writeIndex(
-              buildSemanticIndex(spark, corpus.unionByName(landed)), indexDir)
+            val all = corpus.unionByName(landed)
+            Pq.writeIndex(Pq.indexOf(all, "embedding",
+              Pq.fitIvfPq(all, "embedding", idCol = "doc_id"), "doc_id"), indexDir)
             Pq.writeIndexIncrement(emptyHomes(spark), emptyCodes(spark),
               indexDir, batchId)
             "refit"
@@ -1134,14 +1135,16 @@ object Streams {
     * increment −1 (home-cell partitioned under its index generation)
     * and its fitted index the first persisted generation. */
   def initSemanticDedupCorpus(initial: DataFrame, targetDir: String): Unit = {
+    import graft.functions.Pq
     val spark = initial.sparkSession
     val indexDir = s"$targetDir/_index"
     val docs = initial.select(col("doc_id").cast("long").as("doc_id"),
         col("embedding"))
       .localCheckpoint(true)
     try {
-      val idx = buildSemanticIndex(spark, docs)
-      graft.functions.Pq.writeIndex(idx, indexDir)
+      val idx = Pq.indexOf(docs, "embedding",
+        Pq.fitIvfPq(docs, "embedding", idCol = "doc_id"), "doc_id")
+      Pq.writeIndex(idx, indexDir)
       writeSemanticDocs(docs, idx.homes,
         graft.MarkerStore.liveGen(spark, indexDir).get._1,
         s"$targetDir/inc=-1")
@@ -1288,21 +1291,6 @@ object Streams {
         project = df => df.select("doc_id", "embedding"),
         write = (df, dst) => writeSemanticDocs(df, idx.homes, ig, dst)),
       CorpusDataset("dups", id => s"$targetDir/_dups/inc=$id")))
-  }
-
-  /** Full residual-IVF index build over (doc_id, embedding) rows — the
-    * seed/refit path (one fit + one homes pass + one encode; the
-    * per-batch path never runs this). */
-  private def buildSemanticIndex(spark: SparkSession,
-      docs: DataFrame): graft.functions.Pq.IvfPqIndex = {
-    import graft.functions.Pq
-    val model = Pq.fitIvfPq(docs, "embedding", idCol = "doc_id")
-    val v = docs.select(col("doc_id").cast("long").as("vec_id"),
-      transform(col("embedding"), _.cast("double")).as("v"))
-    val homes = Pq.homesOf(v, model.cents)
-    val codes = Pq.encodeBlocks(
-      Pq.residualsFrom(v, homes, model.cents), "rv", model.pq)
-    Pq.IvfPqIndex(model, homes, codes)
   }
 
   /** The ingest sinks' shared D6 keep rule over a batch-touching pair

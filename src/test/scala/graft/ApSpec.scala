@@ -271,11 +271,11 @@ class ApSpec extends SparkSuite {
     // final generation when run t starts.
     val emb = Tables.embeddings(spark, sf001)
     val r1 = AffinityPropagation.run(spark, emb, maxIter = 3, convergenceIter = 4)
-    assert(AffinityPropagation.hasRunCheckpoint(spark))
-    // the registry records the checkpoint RDDs themselves (round-8
-    // ADVICE: RDDs reference the context, not the session, so strong
-    // values are safe and the release survives Result GC)
-    val pinned1 = AffinityPropagation.runCheckpointRdds(spark)
+    assert(held(spark, "ap.lastRun").nonEmpty)
+    // the registry records the checkpoint RDD ids (round-8 ADVICE: the
+    // release must survive Result GC), resolved here while persisted
+    val pinned1 = lastRunIds(spark, "ap.lastRun")
+      .flatMap(spark.sparkContext.getPersistentRDDs.get)
     assert(pinned1.nonEmpty && pinned1.forall(_.getStorageLevel.useMemory))
     assert(r1.messages.count() > 0)
     val r2 = AffinityPropagation.run(spark, emb, maxIter = 3, convergenceIter = 4)

@@ -90,18 +90,19 @@ class ComponentsSpec extends SparkSuite {
   test("components checkpoint registry is session-scoped (weak-keyed like Tables' cache)") {
     // mirror of PlanSpec's table-cache scoping test: a distributed
     // components run on a second session records ITS checkpoint without
-    // touching the base session's entry (the registry is a WeakHashMap,
-    // so a dropped session's final checkpoint is collectable with it).
+    // touching the base session's entry (one SessionResources slot per
+    // session).
     val s2 = spark.newSession()
     import s2.implicits._
-    val baseBefore = queries.Dedup.hasComponentsCheckpoint(spark)
+    def hasComponentsCheckpoint(s: org.apache.spark.sql.SparkSession) = held(s, "dedup.lastComponents").nonEmpty
+    val baseBefore = hasComponentsCheckpoint(spark)
     val nodes = (1L to 6L).toDF("id")
     val edges = Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b")
       .select(col("id_a").as("u"), col("id_b").as("v"))
     queries.Dedup.componentsStars(nodes, edges).collect()
-    assert(queries.Dedup.hasComponentsCheckpoint(s2),
+    assert(hasComponentsCheckpoint(s2),
       "distributed run did not record its final checkpoint for its session")
-    assert(queries.Dedup.hasComponentsCheckpoint(spark) == baseBefore,
+    assert(hasComponentsCheckpoint(spark) == baseBefore,
       "second session's run disturbed the base session's registry entry")
   }
 

@@ -864,31 +864,30 @@ class GraftSpec extends SparkSuite {
   test("Ann index cache releases a second session's storage on close") {
     // round-10 ADVICE: a strong session key pinned one glommed index RDD
     // per dead session for the JVM's life in a long-lived multi-session
-    // service. Measured constraint (SessLeakProbe): this Spark build
-    // pins ANY session that has executed a query — even a bare
-    // range(10).count() on a fresh newSession() never collects — so the
-    // session-close lifecycle hook must be EXPLICIT: Ann.release(s).
-    // The weak-keyed Integer-valued map adds no pin of our own on top.
+    // service. This Spark build pins ANY session that has executed a
+    // query (see SessionResources), so the session-close lifecycle hook
+    // must be EXPLICIT: SessionResources.release(s). The slot holds an
+    // RDD id and adds no pin of our own on top.
     val s2: SparkSession = spark.newSession()
     functions.Ann.topkCosine(s2,
       Tables.embeddings(s2, sf001).limit(16), 2).count()
-    assert(functions.Ann.hasIndexCache(s2),
+    assert(held(s2, "ann.lastIndex").nonEmpty,
       "fresh session's index cache entry missing")
-    val rddId = functions.Ann.indexCacheRddId(s2).get
+    val rddId = lastRunIds(s2, "ann.lastIndex").head
     assert(spark.sparkContext.getPersistentRDDs.contains(rddId),
       "second session's index RDD is not in persistent storage")
-    functions.Ann.release(s2)
-    assert(!functions.Ann.hasIndexCache(s2),
-      "index cache entry survived Ann.release")
+    SessionResources.release(s2)
+    assert(held(s2, "ann.lastIndex").isEmpty,
+      "index cache entry survived SessionResources.release")
     val after = spark.sparkContext.getPersistentRDDs.get(rddId)
     assert(after.forall(r => !r.getStorageLevel.useMemory &&
         !r.getStorageLevel.useDisk),
-      "second session's index RDD still pinned after Ann.release")
+      "second session's index RDD still pinned after SessionResources.release")
     // idempotent, and the main session's own caching is unaffected
-    functions.Ann.release(s2)
+    SessionResources.release(s2)
     functions.Ann.topkCosine(spark,
       Tables.embeddings(spark, sf001).limit(16), 2).count()
-    assert(functions.Ann.hasIndexCache(spark))
+    assert(held(spark, "ann.lastIndex").nonEmpty)
   }
 
   test("mm decode stages are byte-exact on non-ASCII and empty text") {
@@ -1483,6 +1482,7 @@ class GraftSpec extends SparkSuite {
     // the point of no return: the corpus exists only in the store
     deleteTree(corpusDir)
     Pq.invalidateIndexCache(spark)
+    assert(held(spark, "pq.index").isEmpty, "invalidateIndexCache left a session index")
     val loaded = Pq.readIndex(spark, idxDir)
     assert(search(loaded) == wantBuilt,
       "read-back index diverged from the in-session one")
@@ -1574,6 +1574,7 @@ class GraftSpec extends SparkSuite {
     // the point of no return: the corpus exists only in the store
     deleteTree(clDir)
     Pq.invalidateIndexCache(spark)
+    assert(held(spark, "pq.index").isEmpty, "invalidateIndexCache left a session index")
     val loaded = Pq.readIndex(spark, dir)
     loaded.model.coding match {
       case r: Pq.Coding.Rotated =>

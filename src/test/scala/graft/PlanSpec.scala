@@ -262,6 +262,9 @@ class PlanSpec extends SparkSuite {
     assert(a eq Tables.lineitem(spark, sf001), "cache miss within a session")
     assert(!(a eq b), "two sessions shared one cached DataFrame")
     assert(b.sparkSession eq s2, "second session's DataFrame bound to the wrong session")
+    val key = (sf001, "lineitem")
+    assert(held(spark, "tables.load").contains(key) && held(s2, "tables.load").contains(key),
+      "each session's slot must hold its own entry")
   }
 
   test("subqueries decorrelate to joins — no per-row re-execution, no BNLJ") {

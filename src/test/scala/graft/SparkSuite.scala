@@ -37,6 +37,15 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     try tempDirs.forEach(d => { scala.util.Try(deleteTree(d.toString)); () })
     finally super.afterAll()
 
+  /** `spark`'s entries in the named [[SessionResources]] slot (key →
+    * value; empty when the slot holds none). */
+  protected def held(s: SparkSession, slot: String): Map[Any, Any] =
+    SessionResources.held(s).getOrElse(slot, Map.empty)
+
+  /** The RDD ids a last-run slot holds for `s`. */
+  protected def lastRunIds(s: SparkSession, slot: String): Seq[Int] =
+    held(s, slot).values.toSeq.flatMap(_.asInstanceOf[Seq[Int]])
+
   /** (SQL executions, Spark jobs) started while `f` runs, waiting for
     * the listener bus to quiesce before reading. `onJob` also runs on
     * every job start. */

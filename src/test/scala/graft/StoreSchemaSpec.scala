@@ -154,7 +154,7 @@ class StoreSchemaSpec extends SparkSuite {
         val e = intercept[IllegalArgumentException](Pq.readIndex(spark, t))
         assert(e.getMessage.contains("'pq9'"), e.getMessage)
       }
-    } finally Pq.invalidateLoadedModelCache(spark)
+    } finally Pq.loadedModels.release(spark)
   }
 
   test("index store: a meta without a family column reads as the residual coding") {
@@ -169,7 +169,7 @@ class StoreSchemaSpec extends SparkSuite {
       assert(loaded.model.coding == Pq.Coding.Residual)
       assert(rows(vecs, loaded) == rows(vecs, ix),
         "the pre-family store's search diverged from the in-memory index")
-    } finally Pq.invalidateLoadedModelCache(spark)
+    } finally Pq.loadedModels.release(spark)
   }
 
   test("generation-model cache: a second read of an opq store runs as many jobs as an ivfpq store's") {
@@ -181,7 +181,7 @@ class StoreSchemaSpec extends SparkSuite {
     val opq = tempDir("graft-schema-opq")
     Pq.writeIndex(residualIndex(vecs), ivfpq)
     Pq.writeIndex(Pq.indexOf(vecs, "embedding", Pq.fitIvfPqRotated(vecs, "embedding")), opq)
-    Pq.invalidateLoadedModelCache(spark)
+    Pq.loadedModels.release(spark)
     try {
       def secondRead(dir: String): (Int, Int) = {
         Pq.readIndex(spark, dir)
@@ -191,6 +191,6 @@ class StoreSchemaSpec extends SparkSuite {
       val rotated = secondRead(opq)
       assert(rotated._2 == residual._2,
         s"second opq read ran ${rotated._2} jobs, the ivfpq read ${residual._2}")
-    } finally Pq.invalidateLoadedModelCache(spark)
+    } finally Pq.loadedModels.release(spark)
   }
 }
