@@ -15,16 +15,18 @@ import org.apache.spark.sql.functions._
   *   - as single passes they are the DataFrame window algebra
   *     [[responsibilityPass]] / [[availabilityPass]], the operators the
   *     `ap_responsibility` / `ap_availability` oracle keys check;
-  *   - the distributed loop ([[runLoop]]) plans ONE Catalyst layout per
-  *     solve and then iterates [[MessageBlocks]]' kernel over
-  *     partition-resident primitive blocks — an in-task permutation
-  *     between the passes on one partition, two block shuffles per
-  *     iteration on more, the minimum the MapReduce formulation pays.
-  * Nothing is ever collected to the driver except the exemplar
-  * diagonal (for convergence tracking), so the loop scales with cluster
-  * parallelism; the dense N² pair set itself is AP's intrinsic cost.
-  * Each generation is a `localCheckpoint`ed RDD, so lineage never grows
-  * past one convergence-check chunk (see runLoop's `checkEvery`).
+  *   - the distributed loop ([[runLoop]]) iterates [[MessageBlocks]]'
+  *     kernel over primitive blocks. A relation under one task's worth
+  *     of data is one block, collected once and stepped in-process on
+  *     the driver. A larger one is laid out by ONE Catalyst plan per
+  *     solve into partition-resident blocks, with two block shuffles
+  *     per iteration, the minimum the MapReduce formulation pays;
+  *     nothing of it is collected to the driver except the exemplar
+  *     diagonal (for convergence tracking), so that loop scales with
+  *     cluster parallelism, and each of its generations is a
+  *     `localCheckpoint`ed RDD, so lineage never grows past one
+  *     convergence-check chunk (see `chain`).
+  * The dense N² pair set itself is AP's intrinsic cost.
   *
   * Defaults follow the public Frey–Dueck/scikit-learn convention:
   * damping 0.5, maxIter 200, convergenceIter 15, preference = median of
@@ -259,12 +261,13 @@ object AffinityPropagation {
             .otherwise(least(lit(0.0), rkk + srp - rp))).as("a"))
   }
 
-  /** `pinned`: ids of the persisted RDDs `messages` reads (a
-    * distributed run's final checkpoint), for a caller that owns their
+  /** `trajectory`: the exemplar count after each iteration (length
+    * `iterations`). `pinned`: ids of the persisted RDDs `messages` reads
+    * (a chained run's final checkpoint), for a caller that owns their
     * lifetime (`autoRelease = false`). */
   final case class Result(
     messagesFn: () => DataFrame, exemplars: Seq[Long], iterations: Int, converged: Boolean,
-    pinned: Seq[Int] = Nil) {
+    trajectory: Seq[Int], pinned: Seq[Int] = Nil) {
     /** Rebuilds on the CALLING thread's active session (falling back to
       * the default session): a Result must not strongly capture the
       * session that ran the solve — cached Results live in session
@@ -353,8 +356,12 @@ object AffinityPropagation {
     val xs = rows.map(_.getSeq[Double](1).toArray)
     val st = LocalAP.run(ids, xs, damping, maxIter, convergenceIter, prefOverride,
       jitter)
-    Result(localMessagesFn(ids, st), st.exemplars.toSeq.sorted, st.iterations, st.converged)
+    localResult(ids, st)
   }
+
+  private def localResult(ids: Array[Long], st: LocalAP.State): Result =
+    Result(localMessagesFn(ids, st), st.exemplars.toSeq.sorted, st.iterations, st.converged,
+      st.trajectory)
 
   /** The session a deferred Result accessor builds on: the calling
     * thread's active session, else the JVM default — never a captured
@@ -384,9 +391,13 @@ object AffinityPropagation {
       .toDF("i", "k", "s", "r", "a")
   }
 
-  /** Full damped loop. Stops when the exemplar indicator set is unchanged
-    * for `convergenceIter` consecutive iterations (and non-empty), or at
-    * `maxIter`. */
+  /** Full damped loop ([[runLoop]]): in-process on the driver when the
+    * message relation fits one loop partition, else a checkpointed chain
+    * of partition-resident generations. Stops when the exemplar
+    * indicator set is unchanged for `convergenceIter` consecutive
+    * iterations (and non-empty), or at `maxIter`. `checkEvery` is the
+    * chain's convergence-check cadence (0 = auto); the in-process loop
+    * checks every iteration without a job. */
   def run(
       spark: SparkSession,
       embeddings: DataFrame,
@@ -525,7 +536,7 @@ object AffinityPropagation {
       }
       val st = LocalAP.runS(ids, s, damping, maxIter, convergenceIter,
         pref, diagProvided)
-      Result(localMessagesFn(ids, st), st.exemplars.toSeq.sorted, st.iterations, st.converged)
+      localResult(ids, st)
     } else {
       // Opt-in oscillation guard — only here: the local branch jitters
       // inside runS (same per-pair draws), and jittering before the
@@ -553,45 +564,36 @@ object AffinityPropagation {
   }
 
   /** The damped iteration shared by [[run]] and [[solveFromSimilarities]]'s
-    * distributed regime. The one Catalyst plan per solve is the init:
-    * the (i, k, s) relation is checkpointed, counted, and laid out by
-    * [[MessageBlocks.layout]] into per-partition primitive blocks; every
-    * iteration after it is [[MessageBlocks.iterate]] over the previous
-    * generation's `RDD[MsgBlock]` — no Dataset is built, analyzed or
+    * distributed regime. The init relation is checkpointed and counted
+    * in one job, and the count picks the loop width:
+    *   - one partition while the relation is under one task's worth of
+    *     data (~16 MB at 48 B/row, about dense N ≤ 590): one more job
+    *     collects it, [[MessageBlocks.block]] lays it out as one block
+    *     on the driver, and [[MessageBlocks.step]] iterates it
+    *     in-process — no further job, checkpoint or rollback;
+    *   - else data-sized, floored at min(8, cluster width) and capped at
+    *     the width: [[MessageBlocks.layout]] plans the one Catalyst
+    *     layout per solve, and [[chain]] iterates
+    *     [[MessageBlocks.iterate]] over checkpointed `RDD[MsgBlock]`
+    *     generations.
+    * The setting `spark.graft.ap.loopPartitions` overrides the width
+    * (read, never written; 1 means the driver); the messages are
+    * bit-identical at any width. No Dataset is built, analyzed or
     * planned inside the loop, and the caller's session conf is never
-    * touched. Stops by the CLASSIC per-iteration rule at every cadence:
-    * converged when the exemplar indicator set is non-empty and
-    * unchanged across `convergenceIter` consecutive ITERATIONS
-    * (≥ convergenceIter−1 equal-to-previous increments), or at
-    * `maxIter`. The chunk's one materializing job collects the indicator
-    * diagonal of EVERY generation in the chain (not just the last), so
-    * the counter sees each iteration — a cadence-SAMPLED counter aliased
-    * on sets oscillating with a period dividing the cadence (round-9
-    * ADVICE). When the rule fires mid-chunk the loop rolls back to the
-    * firing generation — the returned state and iteration count are the
-    * ones the per-iteration loop would produce.
+    * touched. Both loops stop by the CLASSIC per-iteration rule
+    * ([[StopRule]]): converged when the exemplar indicator set is
+    * non-empty and unchanged across `convergenceIter` consecutive
+    * ITERATIONS, or at `maxIter`.
     *
-    * `checkEvery` exists because the convergence check is the loop's
-    * MATERIALIZING action: one check per iteration forces one job per
-    * iteration, and at small N the job dispatch dominates the
-    * arithmetic. With cadence c, c lazily-checkpointed generations chain
-    * into ONE job — 1/c of the dispatch overhead — at the price of
-    * holding c+1 generations of checkpoint storage live during the
-    * chunk. checkEvery = 0 (the default) picks the cadence from the row
-    * count the loop already takes: ≤ [[CadenceRowCap]] rows → 5, else 1.
+    * `checkEvery` applies to the chain only: see [[chain]].
     *
-    * Loop width: one partition while the relation is under one task's
-    * worth of data (~16 MB at 48 B/row), else data-sized — floored at
-    * min(8, cluster width), capped at the width. The setting
-    * `spark.graft.ap.loopPartitions` overrides it (read, never written);
-    * the messages are bit-identical at any width.
-    *
-    * `autoRelease = false` keeps the final-generation checkpoint OUT of
-    * the next-run release registry — for callers that CACHE the Result
-    * across subsequent runs in the same session (ApQueries.fullRun):
-    * the checkpoint (`Result.pinned`) then stays pinned until the
-    * caller frees it, instead of being unpersisted out from under the
-    * cached, unrecomputable messages. */
+    * `autoRelease = false` keeps a chain's final-generation checkpoint
+    * OUT of the next-run release registry — for callers that CACHE the
+    * Result across subsequent runs in the same session
+    * (ApQueries.fullRun): the checkpoint (`Result.pinned`) then stays
+    * pinned until the caller frees it, instead of being unpersisted out
+    * from under the cached, unrecomputable messages. An in-process run
+    * pins nothing. */
   private def runLoop(
       msgs0: DataFrame,
       damping: Double,
@@ -625,20 +627,86 @@ object AffinityPropagation {
     val parts = spark.conf.getOption("spark.graft.ap.loopPartitions")
       .map(_.toInt)
       .getOrElse(if (sizeParts <= 1) 1 else math.max(math.min(8, dp), sizeParts))
-    val cadence =
-      if (checkEvery > 0) checkEvery
-      else if (msgRows <= CadenceRowCap) 5
-      else 1
-    val (gen0, homes) = MessageBlocks.layout(init, parts)
+    val rule = new StopRule(convergenceIter)
+    if (parts == 1) {
+      var b = try MessageBlocks.block(init) finally graft.Checkpoints.release(init)
+      var it = 0
+      var converged = false
+      while (it < maxIter && !converged) {
+        b = MessageBlocks.step(b, damping)
+        it += 1
+        converged = rule.fires(MessageBlocks.exemplars(b).toSet)
+      }
+      // The Result holds the block, not a DataFrame: a DataFrame
+      // strongly references its SparkSession, and a cached Result in a
+      // session slot must not (round-8 ADVICE).
+      val fin = b
+      Result(() => {
+          val s = sessionForResult()
+          s.createDataFrame(s.sparkContext.parallelize(Seq(fin), 1).flatMap(MessageBlocks.rows),
+            MessageBlocks.schema)
+        }, rule.exemplars.toSeq.sorted, it, converged, rule.trajectory.toSeq)
+    } else {
+      val cadence =
+        if (checkEvery > 0) checkEvery
+        else if (msgRows <= CadenceRowCap) 5
+        else 1
+      val (it, converged, finalMsgs) = chain(init, parts, damping, maxIter, cadence, rule)
+      // finalMsgs is a materialized checkpoint — the one pinned RDD the
+      // Result keeps alive, registered for release at the next run's
+      // start (unless the caller owns its lifetime). The Result holds
+      // the RDD, not a DataFrame (see above); messages rebuilds on the
+      // caller's active/default session.
+      if (autoRelease) lastRun.record(spark, Seq(finalMsgs))
+      Result(() => sessionForResult().createDataFrame(
+          finalMsgs.flatMap(MessageBlocks.rows), MessageBlocks.schema),
+        rule.exemplars.toSeq.sorted, it, converged, rule.trajectory.toSeq, Seq(finalMsgs.id))
+    }
+  }
 
-    // Classic stop: convergenceIter consecutive equal exemplar sets =
-    // convergenceIter−1 equal-to-previous increments of the counter.
-    // Floored at 0, NOT 1: LocalAP fires at stable ≥ convIter−1, so
-    // convergenceIter ≤ 1 converges on the first non-empty set in BOTH
-    // regimes (round-10 review).
-    val neededStable = math.max(0, convergenceIter - 1)
-    var lastExemplars: Set[Long] = null
-    var stable = 0
+  /** Classic stop: `convergenceIter` consecutive equal exemplar sets =
+    * convergenceIter−1 equal-to-previous increments of the counter,
+    * with the set non-empty. Floored at 0, NOT 1: LocalAP fires at
+    * stable ≥ convIter−1, so convergenceIter ≤ 1 converges on the first
+    * non-empty set in BOTH regimes (round-10 review). `exemplars` is the
+    * last observed set; `trajectory` its size per observed iteration. */
+  private final class StopRule(convergenceIter: Int) {
+    private val neededStable = math.max(0, convergenceIter - 1)
+    private var stable = 0
+    var exemplars: Set[Long] = null
+    val trajectory = scala.collection.mutable.ArrayBuffer.empty[Int]
+
+    /** Observe the next iteration's exemplar set; true when the rule
+      * fires on it. */
+    def fires(ex: Set[Long]): Boolean = {
+      trajectory += ex.size
+      if (ex == exemplars) stable += 1
+      else { stable = 0; exemplars = ex }
+      stable >= neededStable && ex.nonEmpty
+    }
+  }
+
+  /** The P > 1 loop: checkpointed `RDD[MsgBlock]` generations over
+    * [[MessageBlocks.layout]]'s partition-resident blocks. Returns
+    * (iterations, converged, final generation).
+    *
+    * `cadence` exists because the convergence check is the chain's
+    * MATERIALIZING action: one check per iteration forces one job per
+    * iteration. With cadence c, c lazily-checkpointed generations chain
+    * into ONE job — 1/c of the dispatch overhead — at the price of
+    * holding c+1 generations of checkpoint storage live during the
+    * chunk. `checkEvery` = 0 (the default) picks it from the row count:
+    * ≤ [[CadenceRowCap]] rows → 5, else 1. The chunk's one job collects
+    * the indicator diagonal of EVERY generation in the chain (not just
+    * the last), so the rule sees each iteration — a cadence-SAMPLED
+    * counter aliased on sets oscillating with a period dividing the
+    * cadence (round-9 ADVICE). When the rule fires mid-chunk the loop
+    * rolls back to the firing generation — the returned state and
+    * iteration count are the ones the per-iteration loop would produce. */
+  private def chain(init: DataFrame, parts: Int, damping: Double, maxIter: Int,
+      cadence: Int, rule: StopRule): (Int, Boolean, RDD[MsgBlock]) = {
+    val sc = init.sparkSession.sparkContext
+    val (gen0, homes) = MessageBlocks.layout(init, parts)
     var it = 0
     var converged = false
     var msgs = gen0.localCheckpoint()
@@ -665,15 +733,12 @@ object AffinityPropagation {
         .collect()
         .groupBy(_._1)
         .map { case (j, ks) => j -> ks.map(_._2).toSet }
-      // Run the CLASSIC counter over the chunk's per-iteration sets;
-      // stop at the exact generation where the rule fires.
+      // Run the rule over the chunk's per-iteration sets; stop at the
+      // exact generation where it fires.
       var stopAt = -1
       var j = 0
       while (j < step && stopAt < 0) {
-        val ex = byGen.getOrElse(j, Set.empty[Long])
-        if (ex == lastExemplars) stable += 1
-        else { stable = 0; lastExemplars = ex }
-        if (stable >= neededStable && ex.nonEmpty) stopAt = j
+        if (rule.fires(byGen.getOrElse(j, Set.empty[Long]))) stopAt = j
         j += 1
       }
       converged = stopAt >= 0
@@ -691,19 +756,7 @@ object AffinityPropagation {
       intermediates.foreach(g => if (!(g eq keep)) g.unpersist(false))
       msgs = keep
     }
-
-    // msgs is a materialized checkpoint — the final generation is the
-    // one pinned RDD the Result keeps alive, registered for release at
-    // the next run's start (unless the caller owns its lifetime). The
-    // Result holds the RDD, not a DataFrame: a DataFrame strongly
-    // references its SparkSession, and a cached Result in a session
-    // slot must not (round-8 ADVICE); messages
-    // rebuilds on the caller's active/default session.
-    val finalMsgs = msgs
-    if (autoRelease) lastRun.record(spark, Seq(finalMsgs))
-    Result(() => sessionForResult().createDataFrame(
-        finalMsgs.flatMap(MessageBlocks.rows), MessageBlocks.schema),
-      lastExemplars.toSeq.sorted, it, converged, Seq(finalMsgs.id))
+    (it, converged, msgs)
   }
 
   /** Assignment given an exemplar set: label(i) = argmax_{k∈E} s(i,k),

@@ -77,7 +77,8 @@ object LocalAP {
     a: Array[Array[Double]],
     exemplars: Set[Long],
     iterations: Int,
-    converged: Boolean)
+    converged: Boolean,
+    trajectory: IndexedSeq[Int])
 
   def run(
       ids: Array[Long],
@@ -134,7 +135,7 @@ object LocalAP {
     // (round-12 review; reachable via Graft.cluster on a 1-row frame)
     if (n == 1)
       return State(ids, s, Array.ofDim[Double](1, 1), Array.ofDim[Double](1, 1),
-        Set(ids(0)), 0, converged = true)
+        Set(ids(0)), 0, converged = true, IndexedSeq.empty)
     // Opt-in oscillation guard, BEFORE the preference median so the
     // whole loop (preference included) sees one consistent matrix.
     if (jitter > 0) applyJitter(ids, s, jitter)
@@ -155,6 +156,7 @@ object LocalAP {
     val r = Array.ofDim[Double](n, n)
     val a = Array.ofDim[Double](n, n)
     var last: Set[Int] = null
+    val trajectory = IndexedSeq.newBuilder[Int]
     var stable = 0
     var it = 0
     var converged = false
@@ -196,9 +198,10 @@ object LocalAP {
         k += 1
       }
       val ex = (0 until n).filter(k0 => r(k0)(k0) + a(k0)(k0) > 0).toSet
+      trajectory += ex.size
       if (ex == last) stable += 1 else { stable = 0; last = ex }
       if (stable >= convIter - 1 && ex.nonEmpty) converged = true
     }
-    State(ids, s, r, a, last.map(ids(_)), it, converged)
+    State(ids, s, r, a, last.map(ids(_)), it, converged, trajectory.result())
   }
 }

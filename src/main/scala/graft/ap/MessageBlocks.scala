@@ -40,19 +40,21 @@ private[ap] final class MsgBlock(
     val r: Array[Double], val a: Array[Double]) extends Serializable
 
 /** The distributed loop's message kernel (Frey & Dueck 2007, eq. 1–3)
-  * over partition-resident primitive blocks. One Catalyst plan builds
-  * the layout; every iteration after it is plain RDD code over arrays:
+  * over primitive blocks. At P > 1 one Catalyst plan builds the
+  * partition-resident layout and every iteration after it is plain RDD
+  * code over arrays:
   *   - responsibility: one sweep over the i-groups of each home block,
   *     the top-2 per group from [[Top2Buf]] under (a+s DESC, k ASC) —
   *     bit-identical to [[AffinityPropagation.responsibilityPass]];
   *   - availability: one sweep over the k-groups of each column side,
   *     summing max(0, r) in ascending i, so the value is the same under
   *     any partitioning or shuffle fetch order.
-  * On one partition the hand-off between the passes is the in-task
-  * `order` permutation. On P > 1 it is two shuffles per iteration, each
-  * carrying one Array[Double] per (source, destination) pair: the new
-  * responsibilities to the column owners, the availability targets back
-  * to the homes. */
+  * On one partition the block is built and stepped in-process on the
+  * driver ([[block]], [[step]]), and the hand-off between the passes is
+  * the in-block `order` permutation. On P > 1 it is two shuffles per
+  * iteration, each carrying one Array[Double] per (source, destination)
+  * pair: the new responsibilities to the column owners, the
+  * availability targets back to the homes. */
 private[ap] object MessageBlocks {
 
   val schema: StructType = StructType(Seq(
@@ -67,48 +69,74 @@ private[ap] object MessageBlocks {
   private def owner(k: Long, parts: Int): Int =
     Math.floorMod(Murmur3_x86_32.hashLong(k, 42), parts)
 
-  /** Generation 0 from an (i, k, s) relation: r = a = 0. The homes come
-    * out of one Catalyst plan (hash-partition by i, sort by (i, k)); the
-    * column sides are built from them once, through one shuffle of the
-    * (i, k) columns when `parts` > 1. Returns (generation 0, homes):
+  /** Generation 0 of a P > 1 loop from an (i, k, s) relation: r = a =
+    * 0. The homes come out of one Catalyst plan (hash-partition by i,
+    * sort by (i, k)); the column sides are built from them once, through
+    * one shuffle of the (i, k) columns. Returns (generation 0, homes):
     * the homes are lazily checkpointed because both the column sides
     * and generation 0 read them — the caller releases them once
     * generation 0 is materialized. */
   def layout(msgs: DataFrame, parts: Int): (RDD[MsgBlock], RDD[Home]) = {
-    val homes = msgs
-      .select(col("i").cast("long").as("i"), col("k").cast("long").as("k"),
-        col("s").cast("double").as("s"))
+    val homes = triples(msgs)
       .repartition(parts, col("i")).sortWithinPartitions("i", "k")
       .queryExecution.toRdd
-      .mapPartitionsWithIndex((p, rows) => Iterator(home(p, rows, parts)))
-      .localCheckpoint()
-    val ksides: RDD[KSide] =
-      if (parts == 1) homes.map(h => kside(Seq((h.i, h.k))))
-      else homes
-        .flatMap(h => h.byOwner.indices.map(q =>
-          (q, (h.part, pick(h.byOwner(q), h.i), pick(h.byOwner(q), h.k)))))
-        .partitionBy(new HashPartitioner(parts))
-        .mapPartitions { in =>
-          val pieces = in.map(_._2).toSeq.sortBy(_._1)
-          Iterator(kside(pieces.map(x => (x._2, x._3))))
-        }
-    val gen0 = homes.zipPartitions(ksides) { (hs, ks) =>
-      hs.map { h =>
-        val n = h.i.length
-        new MsgBlock(h, ks.next(), new Array[Double](n), new Array[Double](n))
+      .mapPartitionsWithIndex { (p, rows) =>
+        val (i, k, s) = columns(rows)
+        Iterator(home(p, i, k, s, parts))
       }
+      .localCheckpoint()
+    val ksides: RDD[KSide] = homes
+      .flatMap(h => h.byOwner.indices.map(q =>
+        (q, (h.part, pick(h.byOwner(q), h.i), pick(h.byOwner(q), h.k)))))
+      .partitionBy(new HashPartitioner(parts))
+      .mapPartitions { in =>
+        val pieces = in.map(_._2).toSeq.sortBy(_._1)
+        Iterator(kside(pieces.map(x => (x._2, x._3))))
+      }
+    val gen0 = homes.zipPartitions(ksides) { (hs, ks) =>
+      hs.map(h => zero(h, ks.next()))
     }
     (gen0, homes)
   }
 
-  private def home(part: Int, rows: Iterator[InternalRow], parts: Int): Home = {
+  /** Generation 0 of a one-partition loop, built in-process: one job
+    * collects the (i, k, s) relation as primitive columns, and the
+    * driver sorts them by (i, k), as [[layout]] sorts each home; r = a =
+    * 0. */
+  def block(msgs: DataFrame): MsgBlock = {
+    val cols = triples(msgs).queryExecution.toRdd
+      .mapPartitions(rows => Iterator(columns(rows))).collect()
+    val i = Array.concat(cols.map(_._1): _*)
+    val k = Array.concat(cols.map(_._2): _*)
+    val s = Array.concat(cols.map(_._3): _*)
+    val order = sortByPair(i, k)
+    val h = home(0, order.map(i), order.map(k), order.map(s), 1)
+    zero(h, kside(Seq((h.i, h.k))))
+  }
+
+  /** The relation's (i, k, s) as long, long, double, whatever numeric
+    * types the caller supplied. */
+  private def triples(msgs: DataFrame): DataFrame =
+    msgs.select(col("i").cast("long").as("i"), col("k").cast("long").as("k"),
+      col("s").cast("double").as("s"))
+
+  private def columns(rows: Iterator[InternalRow]): (Array[Long], Array[Long], Array[Double]) = {
     val is = Array.newBuilder[Long]
     val ks = Array.newBuilder[Long]
     val ss = Array.newBuilder[Double]
     rows.foreach { row =>
       is += row.getLong(0); ks += row.getLong(1); ss += row.getDouble(2)
     }
-    val i = is.result(); val k = ks.result()
+    (is.result(), ks.result(), ss.result())
+  }
+
+  private def zero(h: Home, ks: KSide): MsgBlock = {
+    val n = h.i.length
+    new MsgBlock(h, ks, new Array[Double](n), new Array[Double](n))
+  }
+
+  private def home(part: Int, i: Array[Long], k: Array[Long], s: Array[Double],
+      parts: Int): Home = {
     val n = i.length
     val diag = (0 until n).filter(j => i(j) == k(j)).toArray
     val byOwner =
@@ -119,14 +147,14 @@ private[ap] object MessageBlocks {
         while (j < n) { b(owner(k(j), parts)) += j; j += 1 }
         b.map(_.result())
       }
-    new Home(part, i, k, ss.result(), diag, byOwner)
+    new Home(part, i, k, s, diag, byOwner)
   }
 
   /** Column side over (i, k) runs given in home-partition order. */
   private def kside(runs: Seq[(Array[Long], Array[Long])]): KSide = {
     val i = Array.concat(runs.map(_._1): _*)
     val k = Array.concat(runs.map(_._2): _*)
-    val order = sortByKI(k, i)
+    val order = sortByPair(k, i)
     val ends = Array.newBuilder[Int]
     var x = 1
     while (x <= order.length) {
@@ -140,9 +168,9 @@ private[ap] object MessageBlocks {
   private def pick(rows: Array[Int], v: Array[Long]): Array[Long] = rows.map(j => v(j))
   private def pick(rows: Array[Int], v: Array[Double]): Array[Double] = rows.map(j => v(j))
 
-  /** Positions 0 until n sorted by (k, i): bottom-up merge sort over
-    * primitive index arrays. */
-  private def sortByKI(k: Array[Long], i: Array[Long]): Array[Int] = {
+  /** Positions 0 until n sorted by (k, i), k major: a stable bottom-up
+    * merge sort over primitive index arrays. */
+  private def sortByPair(k: Array[Long], i: Array[Long]): Array[Int] = {
     val n = k.length
     var src = Array.range(0, n)
     var dst = new Array[Int](n)
@@ -235,40 +263,45 @@ private[ap] object MessageBlocks {
     new MsgBlock(b.home, b.kside, r, a)
   }
 
-  /** One damped iteration: responsibilities, then availabilities. */
-  def iterate(gen: RDD[MsgBlock], parts: Int, damping: Double): RDD[MsgBlock] =
-    if (parts == 1) gen.map { b =>
+  /** One damped iteration of a one-partition block, in-process:
+    * responsibilities, then the availability targets through the
+    * in-block `order` permutation, then damping. */
+  def step(b: MsgBlock, damping: Double): MsgBlock = {
+    val r = responsibilities(b, damping)
+    next(b, r, availabilityTargets(b.kside, r), damping)
+  }
+
+  /** One damped iteration of a P > 1 loop: responsibilities, then
+    * availabilities, over two block shuffles. */
+  def iterate(gen: RDD[MsgBlock], parts: Int, damping: Double): RDD[MsgBlock] = {
+    // keys are destination partition ids, which hash to themselves
+    val route = new HashPartitioner(parts)
+    val toOwners = gen.flatMap { b =>
       val r = responsibilities(b, damping)
-      next(b, r, availabilityTargets(b.kside, r), damping)
-    } else {
-      // keys are destination partition ids, which hash to themselves
-      val route = new HashPartitioner(parts)
-      val toOwners = gen.flatMap { b =>
-        val r = responsibilities(b, damping)
-        b.home.byOwner.indices.map(q => (q, (b.home.part, pick(b.home.byOwner(q), r))))
-      }.partitionBy(route)
-      val toHomes = gen.zipPartitions(toOwners) { (bs, in) =>
-        val b = bs.next()
-        val r = Array.concat(in.map(_._2).toSeq.sortBy(_._1).map(_._2): _*)
-        val t = availabilityTargets(b.kside, r)
-        var off = 0
-        b.kside.segments.indices.iterator.map { p =>
-          val seg = java.util.Arrays.copyOfRange(t, off, off + b.kside.segments(p))
-          off += seg.length
-          (p, (b.home.part, seg))
-        }
-      }.partitionBy(route)
-      gen.zipPartitions(toHomes) { (bs, in) =>
-        val b = bs.next()
-        val t = new Array[Double](b.home.i.length)
-        in.foreach { case (_, (q, seg)) =>
-          val rows = b.home.byOwner(q)
-          var x = 0
-          while (x < rows.length) { t(rows(x)) = seg(x); x += 1 }
-        }
-        Iterator(next(b, responsibilities(b, damping), t, damping))
+      b.home.byOwner.indices.map(q => (q, (b.home.part, pick(b.home.byOwner(q), r))))
+    }.partitionBy(route)
+    val toHomes = gen.zipPartitions(toOwners) { (bs, in) =>
+      val b = bs.next()
+      val r = Array.concat(in.map(_._2).toSeq.sortBy(_._1).map(_._2): _*)
+      val t = availabilityTargets(b.kside, r)
+      var off = 0
+      b.kside.segments.indices.iterator.map { p =>
+        val seg = java.util.Arrays.copyOfRange(t, off, off + b.kside.segments(p))
+        off += seg.length
+        (p, (b.home.part, seg))
       }
+    }.partitionBy(route)
+    gen.zipPartitions(toHomes) { (bs, in) =>
+      val b = bs.next()
+      val t = new Array[Double](b.home.i.length)
+      in.foreach { case (_, (q, seg)) =>
+        val rows = b.home.byOwner(q)
+        var x = 0
+        while (x < rows.length) { t(rows(x)) = seg(x); x += 1 }
+      }
+      Iterator(next(b, responsibilities(b, damping), t, damping))
     }
+  }
 
   /** Ids of the exemplars a generation indicates: diagonal r + a > 0. */
   def exemplars(b: MsgBlock): Iterator[Long] =

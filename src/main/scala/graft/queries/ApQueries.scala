@@ -101,13 +101,13 @@ object ApQueries extends QueryGroup {
       AffinityPropagation.assign(offd, ex, s).orderBy("i")
     }),
 
-    // FORCED-distributed damped loop (round-7 VERDICT #1): the production
-    // 100 TB regime — runLoop's checkpointed block-kernel loop — under
+    // FORCED-distributed damped loop (round-7 VERDICT #1): runLoop under
     // the driver's hard per-round signal, not just the suite. run() never
     // dispatches to the local kernel (that is solve()'s job), so every
     // call routes through runLoop. The 200-vec prefix keeps the dense
-    // message relation at 40 k rows (one loop partition) and converges
-    // in 46 iterations at the default λ=0.5. The local dense kernel on the IDENTICAL input must land on
+    // message relation at 40 k rows — one loop partition, so runLoop
+    // collects the init once and steps the block kernel in-process on
+    // the driver — and converges in 46 iterations at the default λ=0.5. The local dense kernel on the IDENTICAL input must land on
     // the same exemplar set — checked here so regime divergence fails
     // loudly as a build error, not as a bare oracle hash mismatch.
     "ap_dist_exemplars" -> ((s, dir) => {

@@ -15,6 +15,12 @@ class ApSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
   }
 
+  /** `f` with the AP loop forced to `parts` loop partitions. */
+  private def atWidth[T](parts: Int)(f: => T): T = {
+    spark.conf.set("spark.graft.ap.loopPartitions", parts.toString)
+    try f finally spark.conf.unset("spark.graft.ap.loopPartitions")
+  }
+
   test("LocalAP kernel reproduces the pinned ground truth: 66 exemplars on sf0.001") {
     val res = graft.ap.LocalAP.run(embRows.map(_._1), embRows.map(_._2))
     assert(res.converged, s"did not converge in ${res.iterations} iterations")
@@ -235,54 +241,63 @@ class ApSpec extends SparkSuite {
     // maxIter × N² rows of dead pinned storage on the 100 TB path. Force
     // the distributed regime (localNodeThreshold = 0) and keep it from
     // converging early (convergenceIter > maxIter): after 30 iterations
-    // only the final generation may remain pinned.
+    // only the final generation may remain pinned. Four loop partitions:
+    // a one-partition loop runs in-process and checkpoints nothing.
     val triples = (for { i <- 1L to 12L; k <- 1L to 12L if i != k }
       yield (i, k, if ((i <= 6) == (k <= 6)) -1.0 else -20.0)).toDF("i", "k", "s")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val res = AffinityPropagation.solveFromSimilarities(spark, triples,
-      maxIter = 30, convergenceIter = 31, localNodeThreshold = 0)
-    assert(res.iterations == 30)
-    val added = spark.sparkContext.getPersistentRDDs.view
-      .filterKeys(!before.contains(_)).values.toSeq
-    assert(added.size <= 2,
-      s"expected ≤2 pinned RDDs after the loop, got ${added.size}")
-    assert(res.messages.count() == 12L * 12L) // final generation still readable
+    atWidth(4) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val res = AffinityPropagation.solveFromSimilarities(spark, triples,
+        maxIter = 30, convergenceIter = 31, localNodeThreshold = 0)
+      assert(res.iterations == 30)
+      val added = spark.sparkContext.getPersistentRDDs.view
+        .filterKeys(!before.contains(_)).values.toSeq
+      assert(added.size <= 2,
+        s"expected ≤2 pinned RDDs after the loop, got ${added.size}")
+      assert(res.messages.count() == 12L * 12L) // final generation still readable
+    }
   }
 
   test("sparse distributed runLoop releases superseded checkpoints (m=50 production path)") {
     // round-7 VERDICT #6: the release test above forces the DENSE loop;
     // the 100 TB production path is the sparse O(N·m) one — same
-    // discipline asserted on run(neighbors=Some(50)).
+    // discipline asserted on run(neighbors=Some(50)), on the chained
+    // loop (four loop partitions).
     val emb = Tables.embeddings(spark, sf001)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val res = AffinityPropagation.run(spark, emb,
-      maxIter = 12, convergenceIter = 13, neighbors = Some(50))
-    assert(res.iterations == 12)
-    val added = spark.sparkContext.getPersistentRDDs.view
-      .filterKeys(!before.contains(_)).values.toSeq
-    assert(added.size <= 2,
-      s"expected ≤2 pinned RDDs after the sparse loop, got ${added.size}")
-    assert(res.messages.count() > 0)
+    atWidth(4) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val res = AffinityPropagation.run(spark, emb,
+        maxIter = 12, convergenceIter = 13, neighbors = Some(50))
+      assert(res.iterations == 12)
+      val added = spark.sparkContext.getPersistentRDDs.view
+        .filterKeys(!before.contains(_)).values.toSeq
+      assert(added.size <= 2,
+        s"expected ≤2 pinned RDDs after the sparse loop, got ${added.size}")
+      assert(res.messages.count() > 0)
+    }
   }
 
   test("final-generation checkpoint is registered and released at the next run's start") {
     // round-7 ADVICE (medium): repeated runs in one session each pinned
     // their final checkpoint forever. The registry releases run t−1's
-    // final generation when run t starts.
+    // final generation when run t starts. Four loop partitions: only
+    // the chained loop keeps a final checkpoint.
     val emb = Tables.embeddings(spark, sf001)
-    val r1 = AffinityPropagation.run(spark, emb, maxIter = 3, convergenceIter = 4)
-    assert(held(spark, "ap.lastRun").nonEmpty)
-    // the registry records the checkpoint RDD ids (round-8 ADVICE: the
-    // release must survive Result GC), resolved here while persisted
-    val pinned1 = lastRunIds(spark, "ap.lastRun")
-      .flatMap(spark.sparkContext.getPersistentRDDs.get)
-    assert(pinned1.nonEmpty && pinned1.forall(_.getStorageLevel.useMemory))
-    assert(r1.messages.count() > 0)
-    val r2 = AffinityPropagation.run(spark, emb, maxIter = 3, convergenceIter = 4)
-    // run 1's final generation must have been unpersisted by run 2's start
-    assert(pinned1.forall(r => !r.getStorageLevel.useMemory && !r.getStorageLevel.useDisk),
-      "previous run's final checkpoint still pinned after the next run started")
-    assert(r2.messages.count() > 0)
+    atWidth(4) {
+      val r1 = AffinityPropagation.run(spark, emb, maxIter = 3, convergenceIter = 4)
+      assert(held(spark, "ap.lastRun").nonEmpty)
+      // the registry records the checkpoint RDD ids (round-8 ADVICE: the
+      // release must survive Result GC), resolved here while persisted
+      val pinned1 = lastRunIds(spark, "ap.lastRun")
+        .flatMap(spark.sparkContext.getPersistentRDDs.get)
+      assert(pinned1.nonEmpty && pinned1.forall(_.getStorageLevel.useMemory))
+      assert(r1.messages.count() > 0)
+      val r2 = AffinityPropagation.run(spark, emb, maxIter = 3, convergenceIter = 4)
+      // run 1's final generation must have been unpersisted by run 2's start
+      assert(pinned1.forall(r => !r.getStorageLevel.useMemory && !r.getStorageLevel.useDisk),
+        "previous run's final checkpoint still pinned after the next run started")
+      assert(r2.messages.count() > 0)
+    }
   }
 
   test("convergence cadence shares one materializing job across checkEvery iterations") {
@@ -290,7 +305,8 @@ class ApSpec extends SparkSuite {
     // round-8 VERDICT #2: the convergence collect is the ONLY
     // materializing action, taken every checkEvery=5 iterations — 10
     // extra iterations may add only ⌈10/5⌉ = 2 jobs (+ slack for the
-    // listener), not 10.
+    // listener), not 10. The cadence belongs to the chained loop (four
+    // loop partitions).
     import spark.implicits._
     val triples = (for { i <- 1L to 12L; k <- 1L to 12L if i != k }
       yield (i, k, if ((i <= 6) == (k <= 6)) -1.0 else -20.0)).toDF("i", "k", "s")
@@ -299,10 +315,12 @@ class ApSpec extends SparkSuite {
         maxIter = iters, convergenceIter = iters + 1, localNodeThreshold = 0)
       assert(r.iterations == iters)
     }._2
-    val j10 = countJobs(10)
-    val j20 = countJobs(20)
-    assert(j20 - j10 <= 4,
-      s"expected ≈1 job per 5 extra iterations, got ${j20 - j10} jobs for 10 extra")
+    atWidth(4) {
+      val j10 = countJobs(10)
+      val j20 = countJobs(20)
+      assert(j20 - j10 <= 4,
+        s"expected ≈1 job per 5 extra iterations, got ${j20 - j10} jobs for 10 extra")
+    }
   }
 
   test("cadence rollback stops at the same iteration as per-iteration checks") {
@@ -316,21 +334,24 @@ class ApSpec extends SparkSuite {
     // The two-clique fixture is fully symmetric (all-equal in-cluster
     // similarities — every node interchangeable), so WITHOUT jitter it
     // oscillates past maxIter under the exact counter: run it jittered
-    // (deterministic draws ⇒ every cadence sees the same matrix).
+    // (deterministic draws ⇒ every cadence sees the same matrix). The
+    // cadence belongs to the chained loop (four loop partitions).
     import spark.implicits._
     val triples = (for { i <- 1L to 12L; k <- 1L to 12L if i != k }
       yield (i, k, if ((i <= 6) == (k <= 6)) -1.0 else -20.0)).toDF("i", "k", "s")
     def solveAt(c: Int) = AffinityPropagation.solveFromSimilarities(spark, triples,
       localNodeThreshold = 0, checkEvery = c, jitter = 1e-6)
-    val base = solveAt(1)
-    assert(base.converged, s"fixture did not converge (${base.iterations} iters)")
-    for (c <- Seq(5, 7)) {
-      val r = solveAt(c)
-      assert(r.converged && r.iterations == base.iterations &&
-        r.exemplars == base.exemplars,
-        s"cadence $c diverged from per-iteration checks: " +
-          s"iters ${r.iterations} vs ${base.iterations}, " +
-          s"exemplars ${r.exemplars.size} vs ${base.exemplars.size}")
+    atWidth(4) {
+      val base = solveAt(1)
+      assert(base.converged, s"fixture did not converge (${base.iterations} iters)")
+      for (c <- Seq(5, 7)) {
+        val r = solveAt(c)
+        assert(r.converged && r.iterations == base.iterations &&
+          r.exemplars == base.exemplars,
+          s"cadence $c diverged from per-iteration checks: " +
+            s"iters ${r.iterations} vs ${base.iterations}, " +
+            s"exemplars ${r.exemplars.size} vs ${base.exemplars.size}")
+      }
     }
   }
 
@@ -389,38 +410,94 @@ class ApSpec extends SparkSuite {
     // iteration is RDD code over the checkpointed blocks. Ten more
     // iterations at the default cadence (5) add exactly two chunk jobs
     // and no SQL execution — per-iteration Dataset planning fails here.
+    // Chunks belong to the chained loop (four loop partitions).
     val emb = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(100)
     def actions(iters: Int): (Int, Int) = actionsDuring {
       val r = AffinityPropagation.run(spark, emb, maxIter = iters,
         convergenceIter = iters + 1)
       assert(r.iterations == iters)
     }
+    atWidth(4) {
+      val (e10, j10) = actions(10)
+      val (e20, j20) = actions(20)
+      assert(e20 == e10, s"SQL executions grew with iterations: $e10 at 10, $e20 at 20")
+      assert(j20 - j10 == 2, s"expected 2 more chunk jobs for 10 more iterations, got ${j20 - j10}")
+    }
+  }
+
+  test("the in-process loop: SQL executions and jobs do not grow with iterations") {
+    // A relation under one task's worth of data runs on the driver: the
+    // init is materialized and collected once, and every iteration after
+    // it is in-process array code, so ten more iterations add no job.
+    val emb = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(100)
+    def actions(iters: Int): (Int, Int) = actionsDuring {
+      val r = AffinityPropagation.run(spark, emb, maxIter = iters,
+        convergenceIter = iters + 1)
+      assert(r.iterations == iters && r.pinned.isEmpty)
+    }
     val (e10, j10) = actions(10)
     val (e20, j20) = actions(20)
     assert(e20 == e10, s"SQL executions grew with iterations: $e10 at 10, $e20 at 20")
-    assert(j20 - j10 == 2, s"expected 2 more chunk jobs for 10 more iterations, got ${j20 - j10}")
+    assert(j20 == j10, s"jobs grew with iterations: $j10 at 10, $j20 at 20")
+  }
+
+  test("an in-process solve persists nothing and leaves no last-run checkpoint") {
+    val emb = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(100)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val res = AffinityPropagation.run(spark, emb, maxIter = 12, convergenceIter = 13)
+    assert(res.iterations == 12)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"an in-process solve left persisted RDDs: $added")
+    assert(res.pinned.isEmpty, s"an in-process solve pinned ${res.pinned}")
+    assert(held(spark, "ap.lastRun").isEmpty, "an in-process solve registered a last run")
+    assert(res.messages.count() == 100L * 100L) // the final block is still readable
+  }
+
+  test("trajectory: one exemplar count per iteration, equal at 1 and 4 loop partitions") {
+    // the jittered two-clique fixture of the cadence rollback test, which
+    // converges in every regime
+    import spark.implicits._
+    val triples = (for { i <- 1L to 12L; k <- 1L to 12L if i != k }
+      yield (i, k, if ((i <= 6) == (k <= 6)) -1.0 else -20.0)).toDF("i", "k", "s")
+    def solve(localNodeThreshold: Int) = AffinityPropagation.solveFromSimilarities(spark,
+      triples, localNodeThreshold = localNodeThreshold, jitter = 1e-6)
+    val one = atWidth(1)(solve(0))
+    val four = atWidth(4)(solve(0))
+    val local = solve(2000)
+    for ((name, r) <- Seq("1 partition" -> one, "4 partitions" -> four, "LocalAP" -> local)) {
+      assert(r.converged, s"$name did not converge")
+      assert(r.trajectory.length == r.iterations,
+        s"$name: ${r.trajectory.length} counts for ${r.iterations} iterations")
+      assert(r.trajectory.last == r.exemplars.size,
+        s"$name: last count ${r.trajectory.last} vs ${r.exemplars.size} exemplars")
+    }
+    assert(one.trajectory == four.trajectory,
+      s"trajectories differ: ${one.trajectory} vs ${four.trajectory}")
   }
 
   test("the distributed loop leaves the caller's session conf untouched") {
     // Read on every job start of a forced-distributed loop and after it:
     // a loop that plans under its own settings must not flip them on the
     // caller's session, where concurrent queries would plan under them.
+    // Four loop partitions: the chained loop runs a job per chunk.
     import spark.implicits._
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions",
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
     def conf() = keys.map(k => k -> spark.conf.getOption(k)).toMap
-    val caller = conf()
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Option[String]]]()
     val triples = (for { i <- 1L to 12L; k <- 1L to 12L if i != k }
       yield (i, k, if ((i <= 6) == (k <= 6)) -1.0 else -20.0)).toDF("i", "k", "s")
-    val (_, jobs) = actionsDuring({
-      AffinityPropagation.solveFromSimilarities(spark, triples,
-        maxIter = 30, convergenceIter = 31, localNodeThreshold = 0)
-      ()
-    }, () => { seen.add(conf()); () })
-    seen.add(conf())
-    assert(jobs >= 6 && seen.size == jobs + 1)
-    seen.forEach(c => assert(c == caller, s"loop changed the caller's conf: $c vs $caller"))
+    atWidth(4) {
+      val caller = conf()
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Option[String]]]()
+      val (_, jobs) = actionsDuring({
+        AffinityPropagation.solveFromSimilarities(spark, triples,
+          maxIter = 30, convergenceIter = 31, localNodeThreshold = 0)
+        ()
+      }, () => { seen.add(conf()); () })
+      seen.add(conf())
+      assert(jobs >= 6 && seen.size == jobs + 1)
+      seen.forEach(c => assert(c == caller, s"loop changed the caller's conf: $c vs $caller"))
+    }
   }
 
   test("solveFromSimilarities local regime runs ≤2 actions (probe + one collect)") {

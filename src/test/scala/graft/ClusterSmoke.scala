@@ -8,9 +8,9 @@ package graft
   * REAL executor JVMs (via SPARK_HOME) and drives the three claims the
   * 100 TB story leans on hardest: the warmed-projection read path, the
   * dedup clustering pipeline (probes + capped kernel + components), and
-  * the forced-distributed AP loop (block kernel on one and on four
-  * loop partitions, checkpoint discipline, regime equality with the
-  * local kernel), and the IVF-ADC search kernel (a raw-index search at
+  * the forced-distributed AP loop (the block kernel in-process on one
+  * loop partition and chained over four, checkpoint discipline, regime
+  * equality with the local kernel), and the IVF-ADC search kernel (a raw-index search at
   * nprobe = every cell equals exhaustive ADC).
   *
   * Run as a MAIN in its own JVM (ClusterSmokeSpec forks it): a second
@@ -38,13 +38,14 @@ object ClusterSmoke {
       //    df-capped jaccard kernel, two-regime components
       val clusters = SparkEntry.queries("dedup_cluster")(spark, sfDir).count()
       require(clusters > 0, "dedup_cluster returned no rows off-driver")
-      // 3. forced-distributed AP must agree with the local dense kernel
-      //    — the loop's block kernel and checkpoint registry exercised
-      //    with real remote executors. The 200-vec prefix
-      //    is the same fixture ap_dist_exemplars pins (converges with a
-      //    suite-checked diagonal margin; smaller prefixes have
-      //    near-tie diagonals that legitimately flip on executor-order
-      //    float jitter).
+      // 3. forced-distributed AP must agree with the local dense kernel.
+      //    At the default width the 200-vec prefix is one loop
+      //    partition: its init relation is built and checkpointed on the
+      //    remote executors, collected once, and the block kernel steps
+      //    in-process on the driver. The prefix is the same fixture
+      //    ap_dist_exemplars pins (converges with a suite-checked
+      //    diagonal margin; smaller prefixes have near-tie diagonals
+      //    that legitimately flip on executor-order float jitter).
       val emb = Tables.embeddings(spark, sfDir).orderBy("vec_id").limit(200)
       val dist = ap.AffinityPropagation.run(spark, emb)
       val loc = ap.AffinityPropagation.runLocal(spark, emb)
@@ -53,8 +54,9 @@ object ClusterSmoke {
       require(dist.exemplars.nonEmpty, "distributed AP produced no exemplars")
       require(dist.exemplars == loc.exemplars,
         s"regimes disagree off-driver: dist=${dist.exemplars} loc=${loc.exemplars}")
-      // 4. the same loop forced onto four loop partitions: its two block
-      //    shuffles per iteration cross the executor JVMs
+      // 4. the same loop forced onto four loop partitions: the chained
+      //    loop's two block shuffles per iteration cross the executor
+      //    JVMs, and its checkpoint registry runs there
       spark.conf.set("spark.graft.ap.loopPartitions", "4")
       val wide = try ap.AffinityPropagation.run(spark, emb)
         finally spark.conf.unset("spark.graft.ap.loopPartitions")

@@ -23,8 +23,12 @@ class SessionResourcesSpec extends SparkSuite {
     val s2 = spark.newSession()
     import s2.implicits._
     val emb = Tables.embeddings(s2, sf001)
-    ap.AffinityPropagation.run(s2, emb.filter(col("vec_id") < 40),
+    // four loop partitions: a one-partition AP loop runs in-process and
+    // leaves nothing in the session
+    s2.conf.set("spark.graft.ap.loopPartitions", "4")
+    try ap.AffinityPropagation.run(s2, emb.filter(col("vec_id") < 40),
       maxIter = 3, convergenceIter = 4)
+    finally s2.conf.unset("spark.graft.ap.loopPartitions")
     queries.Dedup.componentsStars((1L to 6L).toDF("id"),
       Seq((1L, 2L), (3L, 4L)).toDF("u", "v")).collect()
     queries.Dedup.pagerankEdges(Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("u", "v"),
