@@ -316,7 +316,7 @@ object Bench {
   /** Distributed-AP regime record (round-6 VERDICT #5): the flagship
     * 100 TB path — AffinityPropagation's distributed damped loop —
     * never appears in the default bench because every driver-visible
-    * input (N ≤ 2000 at sf0.1) dispatches to the local dense kernel.
+    * input (N ≤ 2000 at sf0.1) dispatches to the local regime.
     * SPARK_GRAFT_AP_DIST=1 measures the distributed loop itself at
     * N ≥ 4000: fixture embeddings replicated with vec_id offsets (a
     * THROUGHPUT measurement — per-iteration cost is data-size-driven,
@@ -385,7 +385,7 @@ object Bench {
       require(r.iterations == iters, s"expected $iters iterations, got ${r.iterations}")
     }
     // Warm the DISTRIBUTED path itself (similarity build + block-kernel
-    // loop): warming only the local kernel leaves all JIT/codegen cost
+    // loop): warming only the local regime leaves all JIT/codegen cost
     // inside the first measured run — measured round 7: the 1-iter run
     // came out SLOWER than the 4-iter run and the delta went negative.
     runFixed(dense, 1, None)

@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   *   - as single passes they are the DataFrame window algebra
   *     [[responsibilityPass]] / [[availabilityPass]], the operators the
   *     `ap_responsibility` / `ap_availability` oracle keys check;
-  *   - the distributed loop ([[runLoop]]) iterates [[MessageBlocks]]'
-  *     kernel over primitive blocks. A relation under one task's worth
-  *     of data is one block, collected once and stepped in-process on
-  *     the driver. A larger one is laid out by ONE Catalyst plan per
+  *   - every solve iterates [[MessageBlocks]]' one kernel over
+  *     primitive blocks. Under one task's worth of data — [[solve]]'s
+  *     and [[solveFromSimilarities]]' local regimes, and a loop
+  *     ([[runLoop]]) of one partition — the rows are one block, stepped
+  *     in place on the driver ([[inProcess]]). A larger relation is laid
+  *     out by ONE Catalyst plan per
   *     solve into partition-resident blocks, with two block shuffles
   *     per iteration, the minimum the MapReduce formulation pays;
   *     nothing of it is collected to the driver except the exemplar
@@ -164,49 +166,13 @@ object AffinityPropagation {
       .distinct()
   }
 
-  /** Opt-in oscillation guard ([FD07]'s noise remedy), DataFrame side:
-    * s += jitter · scale · u(i, k), where u is [[LocalAP.jitterU]]'s
-    * deterministic pair-seeded uniform in [−0.5, 0.5) and scale is the
-    * finite off-diagonal range (max − min, fallback 1.0 when zero or
-    * empty — the all-equal case that needs the jitter most). Exact
-    * duplicates make the λ = 0.5 loop swap exemplar roles between the
-    * copies forever (measured: unperturbed replica inputs run to
-    * maxIter unconverged); the tiny asymmetric offset breaks the tie
-    * without moving any non-degenerate fixpoint (jitter ≈ 1e-6 of the
-    * similarity range). Same draw per (i, k) as the local kernel, so
-    * the two regimes stay equivalent under jitter. One extra aggregate
-    * job (the range) only when enabled; the per-row udf runs once at
-    * init, never inside the iteration. */
-  private def jitterOffd(offd: DataFrame, jitter: Double): DataFrame = {
-    val finite = offd.filter(
-      col("s") > Double.NegativeInfinity && col("s") < Double.PositiveInfinity)
-    val row = finite.agg(min(col("s")), max(col("s"))).head()
-    val scale =
-      if (row.isNullAt(0)) 1.0
-      else {
-        val range = row.getDouble(1) - row.getDouble(0)
-        if (java.lang.Double.isFinite(range) && range > 0) range else 1.0
-      }
-    val u = udf((i: Long, k: Long) => LocalAP.jitterU(i, k))
-    offd.withColumn("s",
-      when(col("s") > Double.NegativeInfinity && col("s") < Double.PositiveInfinity,
-        col("s") + lit(jitter * scale) * u(col("i"), col("k")))
-        .otherwise(col("s")))
-  }
-
-  /** Initial message state: off-diagonal similarities + diagonal
-    * preference rows, r = a = 0. */
+  /** Initial message state of the window passes: off-diagonal
+    * similarities + diagonal preference rows, r = a = 0. */
   def init(embeddings: DataFrame, pref: Double): DataFrame =
-    initFrom(similarities(embeddings), embeddings, pref)
-
-  /** Init from a caller-supplied (dense or sparse) off-diagonal set. */
-  def initFrom(offd: DataFrame, embeddings: DataFrame, pref: Double): DataFrame = {
-    val diag = embeddings.select(
-      col("vec_id").as("i"), col("vec_id").as("k"), lit(pref).as("s"))
-    offd.select("i", "k", "s").unionByName(diag)
+    similarities(embeddings).unionByName(embeddings.select(
+        col("vec_id").as("i"), col("vec_id").as("k"), lit(pref).as("s")))
       .withColumn("r", lit(0.0))
       .withColumn("a", lit(0.0))
-  }
 
   /** One responsibility update (eq. 1), row-local:
     * r(i,k) ← s(i,k) − max_{k'≠k}(a(i,k') + s(i,k')).
@@ -227,9 +193,9 @@ object AffinityPropagation {
     // supplied row is its diagonal preference): under the documented
     // sparse semantics every absent pair is s = −∞, so the subtracted
     // "best other" is −∞ and r(k,k) = +∞ — the node elects itself,
-    // exactly what the local dense kernel computes for the identical
-    // input. Leaving the NULL propagated r = NULL and silently
-    // excluded the node from every exemplar set (round-12 review).
+    // exactly what the block kernel computes for the identical input.
+    // Leaving the NULL propagated r = NULL and silently excluded the
+    // node from every exemplar set (round-12 review).
     msgs
       .select(col("i"), col("k"), col("s"),
         (lit(damping) * col("r") + lit(1.0 - damping) *
@@ -286,11 +252,11 @@ object AffinityPropagation {
     * next run starts (round-8 ADVICE). */
   private val lastRun = graft.SessionResources.lastRun("ap.lastRun")
 
-  /** Below this point count the dense N² message matrices fit easily in
-    * one task (N=4000 → 3×16M doubles ≈ 384 MB) and the per-iteration
-    * scheduling cost of the distributed loop dwarfs the arithmetic —
-    * solve locally, matching single-node reference throughput. Above it,
-    * use the distributed loop. */
+  /** At or below this point count [[solve]] runs in-process: one block
+    * of the N² message rows on the driver (N = 4000: 16 M rows, ~0.9 GB
+    * of primitive columns), where the per-iteration scheduling cost of
+    * the distributed loop would dwarf the arithmetic. Above it, the
+    * distributed loop. */
   val localThreshold = 4000
 
   /** Message-row ceiling for the batched convergence-check cadence
@@ -301,12 +267,12 @@ object AffinityPropagation {
     * generations ran ~2× SLOWER at cadence 5 than 1). */
   val CadenceRowCap: Long = 4L << 20
 
-  /** Dispatch: local dense kernel for small N, distributed dataflow
-    * beyond [[localThreshold]]. Same math and conventions either way
-    * (the test suite asserts exemplar-set equality between the paths).
-    * One Spark action total on the local path: collecting the first
-    * threshold+1 rows both answers "is N small?" and, when it is,
-    * delivers the kernel input — no separate count() job. */
+  /** Dispatch: the in-process solve ([[solveVectors]]) for small N, the
+    * distributed loop ([[run]]) beyond [[localThreshold]]. Same kernel
+    * and conventions either way (the test suite pins the two bit for
+    * bit). One Spark action total on the local path: collecting the
+    * first threshold+1 rows both answers "is N small?" and, when it is,
+    * delivers the vectors — no separate count() job. */
   def solve(
       spark: SparkSession,
       embeddings: DataFrame,
@@ -316,20 +282,17 @@ object AffinityPropagation {
       prefOverride: Option[Double] = None,
       autoRelease: Boolean = true,
       jitter: Double = 0.0): Result = {
-    val probe = embeddings
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-      .orderBy("vec_id").limit(localThreshold + 1).collect()
+    val probe = vectors(embeddings).limit(localThreshold + 1).collect()
     if (probe.length <= localThreshold)
-      runLocalRows(spark, probe, damping, maxIter, convergenceIter, prefOverride,
-        jitter)
+      solveVectors(probe.map(_.getLong(0)), probe.map(_.getSeq[Double](1).toArray),
+        damping, maxIter, convergenceIter, prefOverride, jitter)
     else
       run(spark, embeddings, damping, maxIter, convergenceIter,
         prefOverride, autoRelease = autoRelease, jitter = jitter)
   }
 
-  /** Small-N path: collect the (id, vector) rows (N×d — small), run the
-    * dense [[LocalAP]] kernel, expose the message matrices as a DataFrame
-    * on demand. */
+  /** Small-N path at any N: collect the (id, vector) rows (N×d) and
+    * solve in-process ([[solveVectors]]). */
   def runLocal(
       spark: SparkSession,
       embeddings: DataFrame,
@@ -337,31 +300,47 @@ object AffinityPropagation {
       maxIter: Int = 200,
       convergenceIter: Int = 15,
       prefOverride: Option[Double] = None,
-      jitter: Double = 0.0): Result =
-    runLocalRows(spark,
-      embeddings
-        .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-        .orderBy("vec_id").collect(),
-      damping, maxIter, convergenceIter, prefOverride, jitter)
-
-  private def runLocalRows(
-      spark: SparkSession,
-      rows: Array[org.apache.spark.sql.Row],
-      damping: Double,
-      maxIter: Int,
-      convergenceIter: Int,
-      prefOverride: Option[Double],
       jitter: Double = 0.0): Result = {
-    val ids = rows.map(_.getLong(0))
-    val xs = rows.map(_.getSeq[Double](1).toArray)
-    val st = LocalAP.run(ids, xs, damping, maxIter, convergenceIter, prefOverride,
-      jitter)
-    localResult(ids, st)
+    val rows = vectors(embeddings).collect()
+    solveVectors(rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray),
+      damping, maxIter, convergenceIter, prefOverride, jitter)
   }
 
-  private def localResult(ids: Array[Long], st: LocalAP.State): Result =
-    Result(localMessagesFn(ids, st), st.exemplars.toSeq.sorted, st.iterations, st.converged,
-      st.trajectory)
+  private def vectors(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+      .orderBy("vec_id")
+
+  /** The in-process solve over (id, vector) rows, with no Spark: s(i, k)
+    * = −‖x_i − x_k‖² by `vec_sqdist`'s left fold (the value
+    * [[similarities]] computes), emitted in (i, k) order — ascending ids
+    * need no sort — with every diagonal pending. */
+  def solveVectors(
+      ids: Array[Long],
+      xs: Array[Array[Double]],
+      damping: Double = 0.5,
+      maxIter: Int = 200,
+      convergenceIter: Int = 15,
+      prefOverride: Option[Double] = None,
+      jitter: Double = 0.0): Result = {
+    val n = ids.length
+    val rows = Math.multiplyExact(n, n)
+    val (i, k, s) = (new Array[Long](rows), new Array[Long](rows), new Array[Double](rows))
+    var j = 0
+    for (a <- 0 until n; b <- 0 until n) {
+      i(j) = ids(a); k(j) = ids(b)
+      if (a != b) {
+        val (x, y) = (xs(a), xs(b))
+        require(x.length == y.length, s"vec_sqdist: ragged vectors (${x.length} vs ${y.length})")
+        var d = 0.0
+        var t = 0
+        while (t < x.length) { val e = x(t) - y(t); d += e * e; t += 1 }
+        s(j) = -d
+      }
+      j += 1
+    }
+    inProcess(Triples(i, k, s, Array.tabulate(n)(a => a * n + a)), prefOverride, jitter,
+      damping, maxIter, convergenceIter)
+  }
 
   /** The session a deferred Result accessor builds on: the calling
     * thread's active session, else the JVM default — never a captured
@@ -373,23 +352,6 @@ object AffinityPropagation {
         "Result.messages needs an active or default SparkSession on the " +
           "calling thread — the Result deliberately does not capture the " +
           "session that ran the solve (weak-registry discipline)"))
-
-  /** Message matrices of a local-kernel run as an on-demand DataFrame.
-    * The closure resolves the session at CALL time instead of capturing
-    * one: a cached Result (ApQueries' session memo) must not strongly
-    * reach the session object, or its weak-keyed entry could never be
-    * reclaimed (round-7 ADVICE). */
-  private def localMessagesFn(ids: Array[Long], st: LocalAP.State): () => DataFrame = () => {
-    val spark = sessionForResult()
-    import spark.implicits._
-    val n = ids.length
-    spark.sparkContext
-      .parallelize(0 until n, math.max(1, n / 256))
-      .flatMap { i =>
-        (0 until n).iterator.map(k => (ids(i), ids(k), st.s(i)(k), st.r(i)(k), st.a(i)(k)))
-      }
-      .toDF("i", "k", "s", "r", "a")
-  }
 
   /** Full damped loop ([[runLoop]]): in-process on the driver when the
     * message relation fits one loop partition, else a checkpointed chain
@@ -410,23 +372,11 @@ object AffinityPropagation {
       autoRelease: Boolean = true,
       checkEvery: Int = 0,
       jitter: Double = 0.0): Result = {
-
-    val offd0raw = neighbors match {
+    val offd = neighbors match {
       case Some(m) if knnExact => sparseSimilaritiesExact(embeddings, m)
       case Some(m) => sparseSimilarities(embeddings, m)
       case None => similarities(embeddings)
     }
-    // Jittered runs CACHE the similarity build for the solve's duration:
-    // jitterOffd's min/max range aggregate is an extra full execution of
-    // the build plan (round-10 ADVICE), on top of the preference and
-    // init reads below. Storage is the same relation the loop's init
-    // checkpoint materializes; it is dropped the moment that checkpoint
-    // lands (onInitMaterialized), with the finally as the idempotent
-    // backstop — the solveFromSimilarities discipline. Unjittered runs
-    // keep the historical two-read plan (percentile + init) uncached.
-    val offd0 = if (jitter > 0) offd0raw.cache() else offd0raw
-    try {
-    val offd = if (jitter > 0) jitterOffd(offd0, jitter) else offd0
     // The preference must estimate the median of ALL pairwise
     // similarities even on the sparse path — the median of only the kept
     // top-m pairs is far too high and the loop never settles (measured:
@@ -435,17 +385,20 @@ object AffinityPropagation {
     // median is estimated from a bounded pseudo-random sample: TakeOrdered
     // by xxhash64(vec_id) — an unbiased deterministic pick (the round-1
     // orderBy(vec_id) prefix was a biased sample), O(N) heap scan, and
-    // the 1000² pair block it feeds stays bounded regardless of N.
-    val pref = prefOverride.getOrElse {
-      if (neighbors.isEmpty) preference(offd)
-      else preference(similarities(
-        embeddings.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(1000)))
-    }
-    runLoop(initFrom(offd, embeddings, pref), damping, maxIter, convergenceIter,
-      autoRelease, checkEvery,
-      onInitMaterialized = () => if (jitter > 0) { offd0.unpersist(false); () })
-    } finally { if (jitter > 0) offd0.unpersist(false); () }
+    // the 1000² pair block it feeds stays bounded regardless of N. The
+    // dense default is the median of the init's own off-diagonal rows,
+    // resolved after the init lands, so the similarity plan runs once.
+    val pref = prefOverride.orElse(neighbors.map(_ => preference(similarities(
+      embeddings.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(1000)))))
+    val diag = pending(embeddings.select(col("vec_id").as("i")))
+    runLoop(offd.select("i", "k", "s").unionByName(diag),
+      pref, jitter, damping, maxIter, convergenceIter, autoRelease, checkEvery)
   }
+
+  /** A (i, i, NULL) diagonal row per id: a diagonal pending the default
+    * preference. */
+  private def pending(ids: DataFrame): DataFrame =
+    ids.select(col("i"), col("i").as("k"), lit(null).cast("double").as("s"))
 
   /** Full AP over a caller-supplied similarity relation (i, k, s) — the
     * algorithm's native input format ([FD07] p.972: s(i,k) need not be
@@ -454,13 +407,14 @@ object AffinityPropagation {
     * ([FD07]: "the preference of point k is s(k,k)" — larger values make
     * k more likely to be chosen as an exemplar); points without a
     * diagonal row get the shared preference (prefOverride, else the
-    * exact median of the supplied off-diagonal similarities).
-    * Two-regime like [[solve]]: at or below `localNodeThreshold`
-    * distinct ids the triples are collected into the dense kernel
-    * (absent pairs = −∞, the sparse-AP convention — a bounded n²
-    * collect, so the default threshold is lower than the embedding
-    * path's); beyond it the distributed loop runs directly
-    * on the triples — nothing N-sized ever reaches the driver. */
+    * exact median of the supplied off-diagonal similarities). Absent
+    * pairs behave as s = −∞ (the sparse-AP convention), and the messages
+    * are the supplied rows plus the diagonals in either regime. Two
+    * regimes like [[solve]]: at or below `localNodeThreshold` distinct
+    * ids the triples are collected once and solved in-process (a
+    * bounded collect, so the default threshold is lower than the
+    * embedding path's); beyond it the distributed loop runs directly on
+    * the triples — nothing N-sized ever reaches the driver. */
   def solveFromSimilarities(
       spark: SparkSession,
       sims: DataFrame,
@@ -473,106 +427,50 @@ object AffinityPropagation {
       checkEvery: Int = 0,
       jitter: Double = 0.0): Result = {
     // CACHE the caller's triple relation for the duration of the solve:
-    // the regime probe, the local collect / distributed preference, and
-    // the init all read it, and for a caller-supplied EXPENSIVE plan (the
-    // facade's public entry) re-executing it per action multiplies the
-    // dominant cost (round-8 VERDICT #4: the local regime executed the
-    // sims plan 3×). Storage is bounded in the local regime (≤ threshold²
-    // triples); in the distributed regime it is the same relation the
-    // loop's init checkpoint materializes anyway, and it is unpersisted
-    // the moment that checkpoint lands (onInitMaterialized) rather than
-    // after the whole loop — the finally is the idempotent backstop.
-    val all = sims.select(col("i"), col("k"), col("s")).cache()
+    // the regime probe and the local collect / distributed init both read
+    // it, and for a caller-supplied EXPENSIVE plan (the facade's public
+    // entry) re-executing it per action multiplies the dominant cost
+    // (round-8 VERDICT #4: the local regime executed the sims plan 3×).
+    // Storage is bounded in the local regime (≤ threshold² triples); in
+    // the distributed regime it is the same relation the loop's init
+    // checkpoint materializes anyway, and it is unpersisted the moment
+    // that checkpoint lands (onInitMaterialized) rather than after the
+    // whole loop (round-9 ADVICE: holding both was a transient 2× storage
+    // peak) — the finally is the idempotent backstop.
+    val all = MessageBlocks.triples(sims).cache()
     try {
-    val offd = all.filter(col("i") =!= col("k"))
     val diag = all.filter(col("i") === col("k"))
-    val nodes = offd.select(col("i")).unionByName(offd.select(col("k").as("i")))
-      .unionByName(diag.select(col("i")))
-      .distinct()
+    val nodes = all.select(col("i")).unionByName(all.select(col("k").as("i"))).distinct()
     val probe = nodes.orderBy("i").limit(localNodeThreshold + 1).collect()
     if (probe.length <= localNodeThreshold) {
-      val ids = probe.map(_.getLong(0)) // already ascending
-      val idx = ids.zipWithIndex.toMap
-      val n = ids.length
-      val s = Array.fill(n, n)(Double.NegativeInfinity)
-      // ONE collect of the (bounded) cached triples, split driver-side —
-      // the probe job + this collect are the local regime's only actions.
-      val allRows = all.collect()
-      val offRows = allRows.filter(r => r.getLong(0) != r.getLong(1))
-      offRows.foreach { r =>
-        s(idx(r.getLong(0)))(idx(r.getLong(1))) = r.getDouble(2)
-      }
-      val diagProvided = new Array[Boolean](n)
-      allRows.filter(r => r.getLong(0) == r.getLong(1)).foreach { r =>
-        val d = idx(r.getLong(0))
-        s(d)(d) = r.getDouble(2); diagProvided(d) = true
-      }
-      // Opt-in oscillation guard, applied to the matrix BEFORE the
-      // preference median: the distributed branch's default preference
-      // medians the JITTERED off-diagonals (preference over jitterOffd's
-      // output), so the local branch must too or the same input gets an
-      // O(jitter·range)-different preference across the regime boundary
-      // (round-10 review). runS is then called with jitter = 0 — the
-      // matrix is already jittered here.
-      if (jitter > 0) LocalAP.applyJitter(ids, s, jitter)
-      // Default preference = exact median of the SUPPLIED off-diagonal
-      // triples — the same relation the distributed regime's
-      // preference(offd) computes over. LocalAP's own fallback medians the
-      // full n²−n matrix, where absent pairs are the −∞ fill: on a sparse
-      // input (an m-NN graph) that median is −∞, no exemplar can ever
-      // form, and the result degenerates — while the identical input
-      // above the threshold works. Computed in-memory from the rows
-      // already collected (no extra Spark job), matching percentile(0.5)'s
-      // even-count midpoint interpolation.
-      val pref = prefOverride.orElse {
-        if (offRows.isEmpty) None // degenerate: no off-diagonal supplied
-        else {
-          val vals = offRows.map(r => s(idx(r.getLong(0)))(idx(r.getLong(1))))
-          java.util.Arrays.sort(vals)
-          Some(
-            if (vals.length % 2 == 1) vals(vals.length / 2)
-            else (vals(vals.length / 2 - 1) + vals(vals.length / 2)) / 2.0)
-        }
-      }
-      val st = LocalAP.runS(ids, s, damping, maxIter, convergenceIter,
-        pref, diagProvided)
-      localResult(ids, st)
-    } else {
-      // Opt-in oscillation guard — only here: the local branch jitters
-      // inside runS (same per-pair draws), and jittering before the
-      // regime probe would cost its aggregate job in both regimes.
-      val offdJ = if (jitter > 0) jitterOffd(offd, jitter) else offd
-      val pref = prefOverride.getOrElse(preference(offdJ))
-      // diagonal = caller-supplied preferences + the shared default for
-      // every node without one
-      val diagDefault = nodes
-        .join(diag.select(col("i")), Seq("i"), "left_anti")
-        .select(col("i"), col("i").as("k"), lit(pref).as("s"))
-      val msgs0 = offdJ.unionByName(diag).unionByName(diagDefault)
-        .withColumn("r", lit(0.0))
-        .withColumn("a", lit(0.0))
-      // Drop the sims cache the moment the loop's eager init checkpoint
-      // has consumed it: in this regime the cached triples are the same
-      // N(·m)-sized relation the checkpoint materializes, and holding
-      // BOTH until the loop finishes was a transient 2× storage peak of
-      // the largest relation on exactly the scale path (round-9 ADVICE).
-      // The finally's unpersist is then an idempotent no-op.
-      runLoop(msgs0, damping, maxIter, convergenceIter, autoRelease, checkEvery,
+      // ONE collect of the (bounded) cached triples — the probe and this
+      // collect are the local regime's only actions. The nodes without a
+      // diagonal row get a pending one.
+      val t = MessageBlocks.collect(all)
+      val provided = t.i.indices.filter(j => t.i(j) == t.k(j)).map(t.i).toSet
+      val missing = probe.map(_.getLong(0)).filterNot(provided)
+      val n = t.i.length
+      inProcess(Triples(t.i ++ missing, t.k ++ missing, t.s ++ new Array[Double](missing.length),
+          Array.range(n, n + missing.length)),
+        prefOverride, jitter, damping, maxIter, convergenceIter)
+    } else
+      runLoop(all.unionByName(pending(nodes.join(diag.select(col("i")), Seq("i"), "left_anti"))),
+        prefOverride, jitter, damping, maxIter, convergenceIter, autoRelease, checkEvery,
         onInitMaterialized = () => all.unpersist(false))
-    }
     } finally all.unpersist(false)
   }
 
   /** The damped iteration shared by [[run]] and [[solveFromSimilarities]]'s
-    * distributed regime. The init relation is checkpointed and counted
-    * in one job, and the count picks the loop width:
+    * distributed regime. The init relation — its default-preference
+    * diagonal still pending (NULL s) — is checkpointed and counted in
+    * one job, and the count picks the loop width:
     *   - one partition while the relation is under one task's worth of
     *     data (~16 MB at 48 B/row, about dense N ≤ 590): one more job
-    *     collects it, [[MessageBlocks.block]] lays it out as one block
-    *     on the driver, and [[MessageBlocks.step]] iterates it
-    *     in-process — no further job, checkpoint or rollback;
+    *     collects it, and [[inProcess]] resolves and solves it on the
+    *     driver — no further job, checkpoint or rollback;
     *   - else data-sized, floored at min(8, cluster width) and capped at
-    *     the width: [[MessageBlocks.layout]] plans the one Catalyst
+    *     the width: [[resolved]] fills the pending diagonal over the
+    *     checkpoint, [[MessageBlocks.layout]] plans the one Catalyst
     *     layout per solve, and [[chain]] iterates
     *     [[MessageBlocks.iterate]] over checkpointed `RDD[MsgBlock]`
     *     generations.
@@ -596,11 +494,13 @@ object AffinityPropagation {
     * pins nothing. */
   private def runLoop(
       msgs0: DataFrame,
+      pref: Option[Double],
+      jitter: Double,
       damping: Double,
       maxIter: Int,
       convergenceIter: Int,
-      autoRelease: Boolean = true,
-      checkEvery: Int = 0,
+      autoRelease: Boolean,
+      checkEvery: Int,
       onInitMaterialized: () => Unit = () => ()): Result = {
     // a zero-iteration loop has no exemplar state to report — fail with
     // the contract instead of an NPE at Result construction
@@ -616,7 +516,7 @@ object AffinityPropagation {
 
     // ONE job materializes the init checkpoint and counts its rows: the
     // count runs on the checkpoint's own RDD, not as a Dataset action.
-    val init = msgs0.localCheckpoint(eager = false)
+    val init = MessageBlocks.triples(msgs0).localCheckpoint(eager = false)
     val msgRows = graft.Checkpoints.checkpointRdds(init).map(_.count()).sum
     // The init relation is materialized — upstream storage (e.g.
     // solveFromSimilarities' sims cache) can be dropped NOW instead of
@@ -627,36 +527,24 @@ object AffinityPropagation {
     val parts = spark.conf.getOption("spark.graft.ap.loopPartitions")
       .map(_.toInt)
       .getOrElse(if (sizeParts <= 1) 1 else math.max(math.min(8, dp), sizeParts))
-    val rule = new StopRule(convergenceIter)
     if (parts == 1) {
-      var b = try MessageBlocks.block(init) finally graft.Checkpoints.release(init)
-      var it = 0
-      var converged = false
-      while (it < maxIter && !converged) {
-        b = MessageBlocks.step(b, damping)
-        it += 1
-        converged = rule.fires(MessageBlocks.exemplars(b).toSet)
-      }
-      // The Result holds the block, not a DataFrame: a DataFrame
-      // strongly references its SparkSession, and a cached Result in a
-      // session slot must not (round-8 ADVICE).
-      val fin = b
-      Result(() => {
-          val s = sessionForResult()
-          s.createDataFrame(s.sparkContext.parallelize(Seq(fin), 1).flatMap(MessageBlocks.rows),
-            MessageBlocks.schema)
-        }, rule.exemplars.toSeq.sorted, it, converged, rule.trajectory.toSeq)
+      val t = try MessageBlocks.collect(init) finally graft.Checkpoints.release(init)
+      inProcess(t, pref, jitter, damping, maxIter, convergenceIter)
     } else {
       val cadence =
         if (checkEvery > 0) checkEvery
         else if (msgRows <= CadenceRowCap) 5
         else 1
-      val (it, converged, finalMsgs) = chain(init, parts, damping, maxIter, cadence, rule)
+      val rule = new StopRule(convergenceIter)
+      val (it, converged, finalMsgs) =
+        chain(resolved(init, pref, jitter), parts, damping, maxIter, cadence, rule)
       // finalMsgs is a materialized checkpoint — the one pinned RDD the
       // Result keeps alive, registered for release at the next run's
       // start (unless the caller owns its lifetime). The Result holds
-      // the RDD, not a DataFrame (see above); messages rebuilds on the
-      // caller's active/default session.
+      // the RDD, not a DataFrame: a DataFrame strongly references its
+      // SparkSession, and a cached Result in a session slot must not
+      // (round-8 ADVICE); messages rebuilds on the caller's
+      // active/default session.
       if (autoRelease) lastRun.record(spark, Seq(finalMsgs))
       Result(() => sessionForResult().createDataFrame(
           finalMsgs.flatMap(MessageBlocks.rows), MessageBlocks.schema),
@@ -664,12 +552,101 @@ object AffinityPropagation {
     }
   }
 
+  /** Opt-in oscillation guard ([FD07]'s noise remedy): s += jitter ·
+    * scale · u(i, k) on every finite off-diagonal row, where u is
+    * [[LocalAP.jitterU]]'s deterministic pair-seeded uniform in
+    * [−0.5, 0.5) and scale is the finite off-diagonal range hi − lo,
+    * falling back to 1.0 when it is zero or empty (the all-equal case
+    * that needs the jitter most). Exact duplicates make the λ = 0.5 loop
+    * swap exemplar roles between the copies forever (measured:
+    * unperturbed replica inputs run to maxIter unconverged); the tiny
+    * asymmetric offset breaks the tie without moving any non-degenerate
+    * fixpoint (jitter ≈ 1e-6 of the similarity range). Relative to the
+    * range, not to s: duplicate pairs sit at s = −0, where any
+    * multiplicative noise is still 0. */
+  private def jitterScale(lo: Double, hi: Double): Double = {
+    val range = hi - lo
+    if (java.lang.Double.isFinite(range) && range > 0) range else 1.0
+  }
+
+  /** The in-process solve every regime under one task's worth of data
+    * runs: one [[MessageBlocks.block]] on the driver, stepped in place
+    * under the [[StopRule]]. It first resolves, once and in this order,
+    * on the supplied rows: the opt-in jitter ([[jitterScale]]); the
+    * preference — `pref`, else the exact median of the off-diagonal s,
+    * interpolated at an even count as Spark's `percentile(s, 0.5)` does
+    * (0.0 when there is none: a lone point elects itself at any finite
+    * preference); then the `pending` diagonals, which take it. */
+  private def inProcess(t: Triples, pref: Option[Double], jitter: Double,
+      damping: Double, maxIter: Int, convergenceIter: Int): Result = {
+    require(maxIter >= 1, s"AffinityPropagation: maxIter must be >= 1, got $maxIter")
+    require(t.i.nonEmpty, "AffinityPropagation: empty input")
+    val Triples(i, k, s, _) = t
+    def jittered(j: Int) = i(j) != k(j) && java.lang.Double.isFinite(s(j))
+    if (jitter > 0) {
+      var lo = Double.PositiveInfinity
+      var hi = Double.NegativeInfinity
+      for (j <- s.indices) if (jittered(j)) { lo = math.min(lo, s(j)); hi = math.max(hi, s(j)) }
+      val w = jitter * jitterScale(lo, hi)
+      for (j <- s.indices) if (jittered(j)) s(j) += w * LocalAP.jitterU(i(j), k(j))
+    }
+    val p = pref.getOrElse {
+      var n = 0
+      for (j <- s.indices) if (i(j) != k(j)) n += 1
+      val v = new Array[Double](n)
+      n = 0
+      for (j <- s.indices) if (i(j) != k(j)) { v(n) = s(j); n += 1 }
+      java.util.Arrays.sort(v)
+      val h = n / 2
+      if (n == 0) 0.0 else if (n % 2 == 1) v(h) else 0.5 * v(h - 1) + 0.5 * v(h)
+    }
+    t.pending.foreach(s(_) = p)
+    val b = MessageBlocks.block(i, k, s)
+    val buf = new Array[Double](s.length)
+    val rule = new StopRule(convergenceIter)
+    var it = 0
+    var converged = false
+    while (it < maxIter && !converged) {
+      MessageBlocks.step(b, damping, buf)
+      it += 1
+      converged = rule.fires(MessageBlocks.exemplars(b).toSet)
+    }
+    // The Result holds the block, not a DataFrame (see runLoop).
+    Result(() => {
+        val ss = sessionForResult()
+        ss.createDataFrame(ss.sparkContext.parallelize(Seq(b), 1).flatMap(MessageBlocks.rows),
+          MessageBlocks.schema)
+      }, rule.exemplars.toSeq.sorted, it, converged, rule.trajectory.toSeq)
+  }
+
+  /** The chain's form of [[inProcess]]'s resolution, over the init
+    * checkpoint: the jitter's range is one aggregate (only when
+    * enabled), the default preference one more — `percentile` over the
+    * jittered off-diagonal s — and the pending diagonals take it. */
+  private def resolved(init: DataFrame, pref: Option[Double], jitter: Double): DataFrame = {
+    val offd = col("i") =!= col("k")
+    val finite = offd && col("s") > Double.NegativeInfinity && col("s") < Double.PositiveInfinity
+    val s =
+      if (jitter <= 0) col("s")
+      else {
+        val r = init.filter(finite).agg(min(col("s")), max(col("s"))).head()
+        val w = jitter * (if (r.isNullAt(0)) 1.0 else jitterScale(r.getDouble(0), r.getDouble(1)))
+        val u = udf((i: Long, k: Long) => LocalAP.jitterU(i, k))
+        when(finite, col("s") + lit(w) * u(col("i"), col("k"))).otherwise(col("s"))
+      }
+    val p = pref.getOrElse {
+      val r = init.filter(offd).select(percentile(s, lit(0.5))).head()
+      if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+    }
+    init.select(col("i"), col("k"), coalesce(s, lit(p)).as("s"))
+  }
+
   /** Classic stop: `convergenceIter` consecutive equal exemplar sets =
     * convergenceIter−1 equal-to-previous increments of the counter,
-    * with the set non-empty. Floored at 0, NOT 1: LocalAP fires at
-    * stable ≥ convIter−1, so convergenceIter ≤ 1 converges on the first
-    * non-empty set in BOTH regimes (round-10 review). `exemplars` is the
-    * last observed set; `trajectory` its size per observed iteration. */
+    * with the set non-empty. Floored at 0, NOT 1, so convergenceIter ≤ 1
+    * converges on the first non-empty set (round-10 review). `exemplars`
+    * is the last observed set; `trajectory` its size per observed
+    * iteration. */
   private final class StopRule(convergenceIter: Int) {
     private val neededStable = math.max(0, convergenceIter - 1)
     private var stable = 0

@@ -39,8 +39,13 @@ private[ap] final class MsgBlock(
     val home: Home, val kside: KSide,
     val r: Array[Double], val a: Array[Double]) extends Serializable
 
-/** The distributed loop's message kernel (Frey & Dueck 2007, eq. 1–3)
-  * over primitive blocks. At P > 1 one Catalyst plan builds the
+/** A message relation's rows as primitive columns; `pending` lists the
+  * positions of the diagonal rows that take the default preference. */
+private[ap] final case class Triples(
+    i: Array[Long], k: Array[Long], s: Array[Double], pending: Array[Int])
+
+/** AP's one message kernel (Frey & Dueck 2007, eq. 1–3), over primitive
+  * blocks. At P > 1 one Catalyst plan builds the
   * partition-resident layout and every iteration after it is plain RDD
   * code over arrays:
   *   - responsibility: one sweep over the i-groups of each home block,
@@ -49,9 +54,10 @@ private[ap] final class MsgBlock(
   *   - availability: one sweep over the k-groups of each column side,
   *     summing max(0, r) in ascending i, so the value is the same under
   *     any partitioning or shuffle fetch order.
-  * On one partition the block is built and stepped in-process on the
-  * driver ([[block]], [[step]]), and the hand-off between the passes is
-  * the in-block `order` permutation. On P > 1 it is two shuffles per
+  * Every in-process solve (the local regimes, and a loop of one
+  * partition) builds one block on the driver ([[block]]) and steps it
+  * in place ([[step]]); the hand-off between the passes is the in-block
+  * `order` permutation. On P > 1 it is two shuffles per
   * iteration, each carrying one Array[Double] per (source, destination)
   * pair: the new responsibilities to the column owners, the
   * availability targets back to the homes. */
@@ -81,8 +87,8 @@ private[ap] object MessageBlocks {
       .repartition(parts, col("i")).sortWithinPartitions("i", "k")
       .queryExecution.toRdd
       .mapPartitionsWithIndex { (p, rows) =>
-        val (i, k, s) = columns(rows)
-        Iterator(home(p, i, k, s, parts))
+        val t = columns(rows)
+        Iterator(home(p, t.i, t.k, t.s, parts))
       }
       .localCheckpoint()
     val ksides: RDD[KSide] = homes
@@ -90,8 +96,9 @@ private[ap] object MessageBlocks {
         (q, (h.part, pick(h.byOwner(q), h.i), pick(h.byOwner(q), h.k)))))
       .partitionBy(new HashPartitioner(parts))
       .mapPartitions { in =>
-        val pieces = in.map(_._2).toSeq.sortBy(_._1)
-        Iterator(kside(pieces.map(x => (x._2, x._3))))
+        val runs = in.map(_._2).toSeq.sortBy(_._1)
+        Iterator(kside(Array.concat(runs.map(_._2): _*), Array.concat(runs.map(_._3): _*),
+          runs.map(_._2.length).toArray))
       }
     val gen0 = homes.zipPartitions(ksides) { (hs, ks) =>
       hs.map(h => zero(h, ks.next()))
@@ -99,35 +106,49 @@ private[ap] object MessageBlocks {
     (gen0, homes)
   }
 
-  /** Generation 0 of a one-partition loop, built in-process: one job
-    * collects the (i, k, s) relation as primitive columns, and the
-    * driver sorts them by (i, k), as [[layout]] sorts each home; r = a =
-    * 0. */
-  def block(msgs: DataFrame): MsgBlock = {
-    val cols = triples(msgs).queryExecution.toRdd
+  /** The one block of an in-process solve, over resolved (i, k, s)
+    * columns: taken as they are when already in (i, k) order (the vector
+    * feeder emits them so), else sorted as [[layout]] sorts each home;
+    * r = a = 0. */
+  def block(i: Array[Long], k: Array[Long], s: Array[Double]): MsgBlock = {
+    var j = 1
+    while (j < i.length && (i(j - 1) < i(j) || (i(j - 1) == i(j) && k(j - 1) <= k(j)))) j += 1
+    val h =
+      if (j >= i.length) home(0, i, k, s, 1)
+      else { val o = sortByPair(i, k); home(0, o.map(i), o.map(k), o.map(s), 1) }
+    zero(h, kside(h.i, h.k, Array(h.i.length)))
+  }
+
+  /** One job collects a relation's (i, k, s) as primitive columns, with
+    * the positions of its NULL-s rows: the diagonals still waiting for
+    * the default preference. */
+  def collect(msgs: DataFrame): Triples = {
+    val parts = triples(msgs).queryExecution.toRdd
       .mapPartitions(rows => Iterator(columns(rows))).collect()
-    val i = Array.concat(cols.map(_._1): _*)
-    val k = Array.concat(cols.map(_._2): _*)
-    val s = Array.concat(cols.map(_._3): _*)
-    val order = sortByPair(i, k)
-    val h = home(0, order.map(i), order.map(k), order.map(s), 1)
-    zero(h, kside(Seq((h.i, h.k))))
+    var off = 0
+    val pending = parts.flatMap { p => val q = p.pending.map(_ + off); off += p.i.length; q }
+    Triples(Array.concat(parts.map(_.i): _*), Array.concat(parts.map(_.k): _*),
+      Array.concat(parts.map(_.s): _*), pending)
   }
 
   /** The relation's (i, k, s) as long, long, double, whatever numeric
     * types the caller supplied. */
-  private def triples(msgs: DataFrame): DataFrame =
+  def triples(msgs: DataFrame): DataFrame =
     msgs.select(col("i").cast("long").as("i"), col("k").cast("long").as("k"),
       col("s").cast("double").as("s"))
 
-  private def columns(rows: Iterator[InternalRow]): (Array[Long], Array[Long], Array[Double]) = {
+  private def columns(rows: Iterator[InternalRow]): Triples = {
     val is = Array.newBuilder[Long]
     val ks = Array.newBuilder[Long]
     val ss = Array.newBuilder[Double]
+    val pending = Array.newBuilder[Int]
+    var n = 0
     rows.foreach { row =>
       is += row.getLong(0); ks += row.getLong(1); ss += row.getDouble(2)
+      if (row.isNullAt(2)) pending += n
+      n += 1
     }
-    (is.result(), ks.result(), ss.result())
+    Triples(is.result(), ks.result(), ss.result(), pending.result())
   }
 
   private def zero(h: Home, ks: KSide): MsgBlock = {
@@ -138,22 +159,23 @@ private[ap] object MessageBlocks {
   private def home(part: Int, i: Array[Long], k: Array[Long], s: Array[Double],
       parts: Int): Home = {
     val n = i.length
-    val diag = (0 until n).filter(j => i(j) == k(j)).toArray
+    val diag = Array.newBuilder[Int]
+    var j = 0
+    while (j < n) { if (i(j) == k(j)) diag += j; j += 1 }
     val byOwner =
       if (parts == 1) Array.empty[Array[Int]]
       else {
         val b = Array.fill(parts)(Array.newBuilder[Int])
-        var j = 0
+        j = 0
         while (j < n) { b(owner(k(j), parts)) += j; j += 1 }
         b.map(_.result())
       }
-    new Home(part, i, k, s, diag, byOwner)
+    new Home(part, i, k, s, diag.result(), byOwner)
   }
 
-  /** Column side over (i, k) runs given in home-partition order. */
-  private def kside(runs: Seq[(Array[Long], Array[Long])]): KSide = {
-    val i = Array.concat(runs.map(_._1): _*)
-    val k = Array.concat(runs.map(_._2): _*)
+  /** Column side over (i, k) rows concatenated from home runs of the
+    * given lengths, in home-partition order. */
+  private def kside(i: Array[Long], k: Array[Long], segments: Array[Int]): KSide = {
     val order = sortByPair(k, i)
     val ends = Array.newBuilder[Int]
     var x = 1
@@ -161,8 +183,7 @@ private[ap] object MessageBlocks {
       if (x == order.length || k(order(x)) != k(order(x - 1))) ends += x
       x += 1
     }
-    new KSide(runs.map(_._1.length).toArray, Array.tabulate(i.length)(j => i(j) == k(j)),
-      order, ends.result())
+    new KSide(segments, Array.tabulate(i.length)(j => i(j) == k(j)), order, ends.result())
   }
 
   private def pick(rows: Array[Int], v: Array[Long]): Array[Long] = rows.map(j => v(j))
@@ -201,12 +222,13 @@ private[ap] object MessageBlocks {
     * r ← λ·r + (1−λ)·(s − max_{k'≠k}(a + s)). The argmax row of each
     * i-group subtracts the runner-up, every other row the max; the
     * runner-up of a single-row group is −∞ (an isolated node elects
-    * itself, as in the window form). */
-  private def responsibilities(b: MsgBlock, damping: Double): Array[Double] = {
+    * itself, as in the window form). Writes into `out`, which may be
+    * `b.r` itself: each row reads only its own old r. */
+  private def responsibilities(b: MsgBlock, damping: Double,
+      out: Array[Double]): Array[Double] = {
     val h = b.home
     val n = h.i.length
     val keep = 1.0 - damping
-    val out = new Array[Double](n)
     val top = new Top2Buf(0.0, 0L, 0.0, 0L, 0)
     var g = 0
     while (g < n) {
@@ -227,10 +249,11 @@ private[ap] object MessageBlocks {
   /** Undamped availability (eq. 2–3) of every row a column side owns,
     * given the rows' new responsibilities in the same concatenated
     * order: a(k,k) = Σ_{i≠k} max(0, r(i,k)); a(i,k) = min(0, r(k,k) +
-    * Σ_{i'∉{i,k}} max(0, r(i',k))). The sum runs in ascending i. */
-  private def availabilityTargets(ks: KSide, r: Array[Double]): Array[Double] = {
+    * Σ_{i'∉{i,k}} max(0, r(i',k))). The sum runs in ascending i. Writes
+    * into `out`. */
+  private def availabilityTargets(ks: KSide, r: Array[Double],
+      out: Array[Double]): Array[Double] = {
     @inline def pos(v: Double) = if (v > 0.0 || v.isNaN) v else 0.0
-    val out = new Array[Double](r.length)
     var g0 = 0
     for (e <- ks.groupEnds) {
       var srp = 0.0
@@ -254,21 +277,19 @@ private[ap] object MessageBlocks {
     out
   }
 
-  private def next(b: MsgBlock, r: Array[Double], target: Array[Double],
-      damping: Double): MsgBlock = {
+  /** a ← λ·a + (1−λ)·target, in place. */
+  private def damp(a: Array[Double], target: Array[Double], damping: Double): Unit = {
     val keep = 1.0 - damping
-    val a = new Array[Double](r.length)
     var j = 0
-    while (j < a.length) { a(j) = damping * b.a(j) + keep * target(j); j += 1 }
-    new MsgBlock(b.home, b.kside, r, a)
+    while (j < a.length) { a(j) = damping * a(j) + keep * target(j); j += 1 }
   }
 
-  /** One damped iteration of a one-partition block, in-process:
-    * responsibilities, then the availability targets through the
-    * in-block `order` permutation, then damping. */
-  def step(b: MsgBlock, damping: Double): MsgBlock = {
-    val r = responsibilities(b, damping)
-    next(b, r, availabilityTargets(b.kside, r), damping)
+  /** One damped iteration of an in-process block, in place: the new
+    * responsibilities overwrite `b.r`, then the availability targets,
+    * taken through the in-block `order` permutation into `t` (a work
+    * buffer of the block's length), damp `b.a`. */
+  def step(b: MsgBlock, damping: Double, t: Array[Double]): Unit = {
+    damp(b.a, availabilityTargets(b.kside, responsibilities(b, damping, b.r), t), damping)
   }
 
   /** One damped iteration of a P > 1 loop: responsibilities, then
@@ -277,13 +298,13 @@ private[ap] object MessageBlocks {
     // keys are destination partition ids, which hash to themselves
     val route = new HashPartitioner(parts)
     val toOwners = gen.flatMap { b =>
-      val r = responsibilities(b, damping)
+      val r = responsibilities(b, damping, new Array[Double](b.r.length))
       b.home.byOwner.indices.map(q => (q, (b.home.part, pick(b.home.byOwner(q), r))))
     }.partitionBy(route)
     val toHomes = gen.zipPartitions(toOwners) { (bs, in) =>
       val b = bs.next()
       val r = Array.concat(in.map(_._2).toSeq.sortBy(_._1).map(_._2): _*)
-      val t = availabilityTargets(b.kside, r)
+      val t = availabilityTargets(b.kside, r, new Array[Double](r.length))
       var off = 0
       b.kside.segments.indices.iterator.map { p =>
         val seg = java.util.Arrays.copyOfRange(t, off, off + b.kside.segments(p))
@@ -299,7 +320,10 @@ private[ap] object MessageBlocks {
         var x = 0
         while (x < rows.length) { t(rows(x)) = seg(x); x += 1 }
       }
-      Iterator(next(b, responsibilities(b, damping), t, damping))
+      val r = responsibilities(b, damping, new Array[Double](t.length))
+      val a = b.a.clone()
+      damp(a, t, damping)
+      Iterator(new MsgBlock(b.home, b.kside, r, a))
     }
   }
 

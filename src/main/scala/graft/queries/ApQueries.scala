@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * capability, Frey & Dueck 2007). Single-pass message updates are fully
   * oracled in DuckDB SQL (the same window algebra); the damped fixpoint
   * loop is iterative and float-compounding, so its keys are D3-exempt and
-  * pinned by the BruteForceAP test oracle instead (FIXTURES.md constants).
+  * pinned by ApSpec instead: the FIXTURES.md constants, the kernel against
+  * three iterations of these window passes, and every regime bit for bit.
   *
   * Float discipline: message values are ROUND(x,6)+0.0 — the +0.0
   * normalizes IEEE −0.0 (from rounding tiny negatives) so both engines
@@ -64,7 +65,8 @@ object ApQueries extends QueryGroup {
     }),
 
     // Full damped fixpoint loop (λ=0.5, ≤200 iters, 15-stable stop) —
-    // iterative, D3-exempt; BruteForceAP test pins exemplar counts.
+    // iterative, D3-exempt; ApSpec pins the exemplar counts. The rows are
+    // the N² pairs, diagonal included.
     "ap_damped_iterate" -> ((s, dir) =>
       fullRun(s, dir).messages
         .select(col("i"), col("k"), r6z(col("r")).as("r"), r6z(col("a")).as("a"))
@@ -103,20 +105,22 @@ object ApQueries extends QueryGroup {
 
     // FORCED-distributed damped loop (round-7 VERDICT #1): runLoop under
     // the driver's hard per-round signal, not just the suite. run() never
-    // dispatches to the local kernel (that is solve()'s job), so every
-    // call routes through runLoop. The 200-vec prefix keeps the dense
-    // message relation at 40 k rows — one loop partition, so runLoop
-    // collects the init once and steps the block kernel in-process on
-    // the driver — and converges in 46 iterations at the default λ=0.5. The local dense kernel on the IDENTICAL input must land on
-    // the same exemplar set — checked here so regime divergence fails
-    // loudly as a build error, not as a bare oracle hash mismatch.
+    // takes solve()'s local path, so every call routes through runLoop.
+    // The 200-vec prefix keeps the dense message relation at 40 k rows —
+    // one loop partition, so runLoop checkpoints the init with its
+    // diagonal pending, collects it once and solves it in-process — and
+    // converges in 46 iterations at the default λ=0.5. runLocal on the
+    // IDENTICAL input (similarities and preference computed on the
+    // driver, the same block kernel) must land on the same exemplar set —
+    // checked here so regime divergence fails loudly as a build error,
+    // not as a bare oracle hash mismatch.
     "ap_dist_exemplars" -> ((s, dir) => {
       import s.implicits._
       val emb200 = Tables.embeddings(s, dir).orderBy("vec_id").limit(200)
       val dist = AffinityPropagation.run(s, emb200)
       val loc = AffinityPropagation.runLocal(s, emb200)
       require(dist.exemplars == loc.exemplars,
-        s"distributed runLoop diverged from the local kernel on the same input: " +
+        s"distributed runLoop diverged from the local regime on the same input: " +
           s"dist=${dist.exemplars.mkString(",")} loc=${loc.exemplars.mkString(",")}")
       assertPinned("ap_dist_exemplars", dir, dist.exemplars, pinnedDistExemplars)
       dist.exemplars.toDF("exemplar").orderBy("exemplar")
@@ -212,7 +216,7 @@ object ApQueries extends QueryGroup {
          |ORDER BY i""".stripMargin,
     // The distributed-regime loop is iterative (like ap_damped_iterate),
     // so its CONVERGED SET is pinned as a literal — regime equivalence
-    // (distributed ≡ local kernel) is asserted inside the query build,
+    // (distributed ≡ local regime) is asserted inside the query build,
     // and assertPinned turns literal drift into a loud build error.
     "ap_dist_exemplars" ->
       s"""SELECT exemplar FROM (
@@ -280,7 +284,7 @@ object ApQueries extends QueryGroup {
 
   /** Converged exemplar sets of the FORCED-distributed run on each
     * fixture's 200-vec prefix — the ap_dist_exemplars oracle literals.
-    * Each equals the local kernel's set on the same input (the query
+    * Each equals the local regime's set on the same input (the query
     * asserts that every run). Regenerate from the ap_dist_exemplars
     * verify dump at that sf. */
   private val pinnedDistExemplars: Seq[(String, String)] = Seq(

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{col, lit, transform, when}
   * N = 200,000 — 100 perturbed replicas of the 2000 sf0.1 base points,
   * the ap_dist fixture geometry at 4× the round-11 record scale.
   *
-  * Parameters follow the kernel probe (ApConv200Probe): a 100-way
+  * Parameters follow the kernel-scale runs of BENCH_NOTES §18: a 100-way
   * replica election needs λ=0.9 — λ=0.5/0.7 oscillate past maxIter and
   * λ=0.8 settles into a degenerate everyone-is-an-exemplar fixpoint
   * (800/800 at kernel scale), while λ=0.9 finds exactly one exemplar

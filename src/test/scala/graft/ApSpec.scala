@@ -21,20 +21,38 @@ class ApSpec extends SparkSuite {
     try f finally spark.conf.unset("spark.graft.ap.loopPartitions")
   }
 
-  test("LocalAP kernel reproduces the pinned ground truth: 66 exemplars on sf0.001") {
-    val res = graft.ap.LocalAP.run(embRows.map(_._1), embRows.map(_._2))
+  /** (i, k) → raw bits of (s, r, a) over a Result's messages. */
+  private def messageBits(r: AffinityPropagation.Result): Map[(Long, Long), Seq[Long]] =
+    r.messages.collect().map { m =>
+      (m.getLong(0), m.getLong(1)) -> Seq(2, 3, 4).map(c =>
+        java.lang.Double.doubleToRawLongBits(m.getDouble(c)))
+    }.toMap
+
+  test("in-process solve reproduces the pinned ground truth: 66 exemplars on sf0.001") {
+    val res = AffinityPropagation.solveVectors(embRows.map(_._1), embRows.map(_._2))
     assert(res.converged, s"did not converge in ${res.iterations} iterations")
     assert(res.exemplars.size == 66,
       s"expected 66 exemplars (FIXTURES.md), got ${res.exemplars.size} at iter ${res.iterations}")
   }
 
-  test("Spark AP loop matches LocalAP kernel exemplar set exactly") {
-    val brute = graft.ap.LocalAP.run(embRows.map(_._1), embRows.map(_._2))
-    val dist = AffinityPropagation.run(spark, Tables.embeddings(spark, sf001))
-    assert(dist.converged)
-    assert(dist.exemplars.toSet == brute.exemplars,
-      s"spark=${dist.exemplars.size} brute=${brute.exemplars.size} " +
-        s"symdiff=${(dist.exemplars.toSet diff brute.exemplars) ++ (brute.exemplars diff dist.exemplars.toSet)}")
+  test("solve (in-process, driver-computed s) is bit-identical to the 4-partition run on sf0.001") {
+    // The local regime computes s on the driver and its preference by a
+    // driver median; the chain takes s from vec_sqdist and the median by
+    // percentile over its init checkpoint. Every message row must agree
+    // to the bit, with the same iterations and trajectory.
+    val emb = Tables.embeddings(spark, sf001)
+    val local = AffinityPropagation.solve(spark, emb)
+    val chain = atWidth(4)(AffinityPropagation.run(spark, emb))
+    assert(local.pinned.isEmpty && chain.pinned.nonEmpty, "expected the two loop forms")
+    assert(local.converged && chain.converged)
+    assert(local.iterations == chain.iterations,
+      s"iterations ${local.iterations} vs ${chain.iterations}")
+    assert(local.trajectory == chain.trajectory, "trajectories differ")
+    assert(local.exemplars == chain.exemplars)
+    val (ml, mc) = (messageBits(local), messageBits(chain))
+    assert(ml.size == 500 * 500 && ml == mc,
+      s"${ml.size} vs ${mc.size} rows; ${ml.count { case (ik, v) => !mc.get(ik).contains(v) }} " +
+        "differ")
   }
 
   test("alternative preferences hit the pinned exemplar counts (min→33, 2·min→14)") {
@@ -46,8 +64,10 @@ class ApSpec extends SparkSuite {
       while (j < xs(a).length) { val t = xs(a)(j) - xs(b)(j); d += t * t; j += 1 }
       if (-d < minS) minS = -d
     }
-    assert(graft.ap.LocalAP.run(ids, xs, prefOverride = Some(minS)).exemplars.size == 33)
-    assert(graft.ap.LocalAP.run(ids, xs, prefOverride = Some(2 * minS)).exemplars.size == 14)
+    def exemplarsAt(pref: Double) =
+      AffinityPropagation.solveVectors(ids, xs, prefOverride = Some(pref)).exemplars.size
+    assert(exemplarsAt(minS) == 33)
+    assert(exemplarsAt(2 * minS) == 14)
   }
 
   test("sparse m-NN AP equals dense at m = N−1 and converges at m = 50") {
@@ -104,17 +124,17 @@ class ApSpec extends SparkSuite {
       (ids.result(), xs.result())
     }
     val (ids25, xs25) = fixture(25)
-    val osc = graft.ap.LocalAP.run(ids25, xs25) // λ=0.5 default
+    val osc = AffinityPropagation.solveVectors(ids25, xs25) // λ=0.5 default
     assert(!osc.converged,
       s"expected the 25-way election to oscillate at λ=0.5, converged at ${osc.iterations}")
-    val damped = graft.ap.LocalAP.run(ids25, xs25, damping = 0.7)
+    val damped = AffinityPropagation.solveVectors(ids25, xs25, damping = 0.7)
     assert(damped.converged, s"λ=0.7 did not converge in ${damped.iterations} iters")
     assert(damped.exemplars.size == 8,
       s"expected one exemplar per replica group, got ${damped.exemplars.size}")
-    assert(damped.exemplars.map(_ / 1000000L) == (0L until 8L).toSet,
+    assert(damped.exemplars.map(_ / 1000000L).toSet == (0L until 8L).toSet,
       "exemplars must cover every replica group exactly once")
     val (ids10, xs10) = fixture(10)
-    val light = graft.ap.LocalAP.run(ids10, xs10)
+    val light = AffinityPropagation.solveVectors(ids10, xs10)
     assert(light.converged && light.exemplars.size == 8,
       s"R=10 should converge at the default λ: converged=${light.converged} " +
         s"exemplars=${light.exemplars.size}")
@@ -133,13 +153,13 @@ class ApSpec extends SparkSuite {
       .select("vec_id", "embedding").orderBy("vec_id").limit(100)
     val dup = base.unionByName(
       base.select((col("vec_id") + lit(100000L)).as("vec_id"), col("embedding")))
-    // Local kernel, no jitter: the duplicated fixture must exhibit the
+    // Local regime, no jitter: the duplicated fixture must exhibit the
     // failure the guard exists for — unconverged at a generous maxIter.
     val bare = AffinityPropagation.runLocal(spark, dup, maxIter = 120)
     assert(!bare.converged,
       s"expected the duplicated fixture to oscillate without jitter, " +
         s"but it converged in ${bare.iterations} iterations")
-    // Local kernel with jitter: converges.
+    // Local regime with jitter: converges.
     val local = AffinityPropagation.runLocal(spark, dup, jitter = 1e-6)
     assert(local.converged && local.exemplars.nonEmpty,
       s"local regime did not converge with jitter (${local.iterations} iters)")
@@ -147,8 +167,8 @@ class ApSpec extends SparkSuite {
     val dist = AffinityPropagation.run(spark, dup, jitter = 1e-6)
     assert(dist.converged && dist.exemplars.nonEmpty,
       s"distributed regime did not converge with jitter (${dist.iterations} iters)")
-    // solveFromSimilarities' distributed branch (jitterOffd on supplied
-    // triples — forced via localNodeThreshold = 0): an all-equal
+    // solveFromSimilarities' distributed branch (the jitter resolved over
+    // its init checkpoint — forced via localNodeThreshold = 0): an all-equal
     // similarity matrix is the fully degenerate tie case (range 0 →
     // fallback scale 1.0); without jitter every point is
     // interchangeable, with it the loop settles.
@@ -223,7 +243,7 @@ class ApSpec extends SparkSuite {
       AffinityPropagation.solveFromSimilarities(spark, in,
         localNodeThreshold = threshold).exemplars
     val dist = exemplarsOf(0)     // forced-distributed regime
-    val local = exemplarsOf(2000) // local dense kernel
+    val local = exemplarsOf(2000) // local (in-process) regime
     assert(dist.contains(9L), s"distributed regime dropped the isolated node: $dist")
     assert(local.contains(9L), s"local regime dropped the isolated node: $local")
     assert(dist == local, s"regimes disagree: distributed $dist vs local $local")
@@ -232,6 +252,35 @@ class ApSpec extends SparkSuite {
     val narrow = sims.select(col("i").cast("int").as("i"), col("k").cast("int").as("k"),
       col("s").cast("float").as("s"))
     assert(exemplarsOf(0, narrow) == dist, "int/float input changed the distributed result")
+  }
+
+  test("solveFromSimilarities' local regime is bit-identical to the 4-partition chain") {
+    // The local regime collects the supplied triples and resolves the
+    // preference and the missing diagonals on the driver; the chain does
+    // both over its init checkpoint. Each supplied row and each diagonal
+    // must agree to the bit, with the same iterations and trajectory.
+    import spark.implicits._
+    val twoBlocks = (for { i <- 1L to 12L; k <- 1L to 12L
+      if i != k && (i <= 6) == (k <= 6) }
+      yield (i, k, -1.0 + 0.01 * i - 0.003 * k)).toDF("i", "k", "s")
+    val isolated = Seq(
+      (1L, 2L, -1.0), (2L, 1L, -1.0),
+      (1L, 3L, -9.0), (3L, 1L, -9.0),
+      (2L, 3L, -9.0), (3L, 2L, -9.0),
+      (9L, 9L, -5.0)).toDF("i", "k", "s")
+    val fixtures = Seq(("two-block", twoBlocks, 2 * 36), ("isolated-node", isolated, 10))
+    for ((name, sims, rows) <- fixtures) {
+      val local = AffinityPropagation.solveFromSimilarities(spark, sims, maxIter = 60)
+      val chain = atWidth(4)(AffinityPropagation.solveFromSimilarities(spark, sims,
+        maxIter = 60, localNodeThreshold = 0))
+      assert(local.pinned.isEmpty && chain.pinned.nonEmpty, s"$name: expected the two loop forms")
+      assert(local.iterations == chain.iterations && local.converged == chain.converged,
+        s"$name: iterations ${local.iterations} vs ${chain.iterations}")
+      assert(local.trajectory == chain.trajectory, s"$name: trajectories differ")
+      assert(local.exemplars == chain.exemplars, s"$name: exemplars differ")
+      val (ml, mc) = (messageBits(local), messageBits(chain))
+      assert(ml.size == rows && ml == mc, s"$name: messages differ (${ml.size} vs ${mc.size} rows)")
+    }
   }
 
   test("distributed runLoop releases superseded checkpoints (≤2 pinned after 30 iterations)") {
@@ -356,30 +405,39 @@ class ApSpec extends SparkSuite {
   }
 
   test("loop kernel matches the window-algebra passes (r exact, a to 1e-9)") {
-    // One iteration of the distributed loop's block kernel must compute
-    // the same messages as the oracle-matched window algebra from the
-    // same init: responsibilities bit-exactly (top-2 over the same
+    // The loop's block kernel must compute the same messages as the
+    // DuckDB-oracled window algebra from the same init. After one
+    // iteration: responsibilities bit-exactly (top-2 over the same
     // totally ordered set, same damping expression), availabilities to
     // float sum-order tolerance (ascending-i sum vs the window's
-    // shuffle-fetch order).
+    // shuffle-fetch order). After three, both to that tolerance (the
+    // availability's last ulps feed the next responsibilities) — the
+    // independent multi-iteration reference for the one kernel.
     val emb = Tables.embeddings(spark, sf001)
     val pref = AffinityPropagation.preference(AffinityPropagation.similarities(emb))
-    val w = AffinityPropagation.availabilityPass(
-      AffinityPropagation.responsibilityPass(AffinityPropagation.init(emb, pref), 0.5), 0.5)
-    val one = AffinityPropagation.run(spark, emb, maxIter = 1, convergenceIter = 2)
-    assert(one.iterations == 1)
-    val joined = w.select(col("i"), col("k"), col("r").as("rw"), col("a").as("aw"))
-      .join(one.messages.select(col("i"), col("k"), col("r").as("rk"), col("a").as("ak")),
-        Seq("i", "k"))
-    val agg = joined.agg(
-      count(lit(1)).as("n"),
-      max(abs(col("rw") - col("rk"))).as("dr"),
-      max(abs(col("aw") - col("ak"))).as("da")).head()
-    assert(agg.getLong(0) == 500L * 500L)
-    assert(agg.getDouble(1) == 0.0,
-      s"kernel responsibility diverged from window algebra by ${agg.getDouble(1)}")
-    assert(agg.getDouble(2) <= 1e-9,
-      s"kernel availability diverged from window algebra by ${agg.getDouble(2)}")
+    def passes(m: org.apache.spark.sql.DataFrame) =
+      AffinityPropagation.availabilityPass(AffinityPropagation.responsibilityPass(m, 0.5), 0.5)
+    val w1 = passes(AffinityPropagation.init(emb, pref))
+    val w3 = passes(passes(w1))
+    def gaps(w: org.apache.spark.sql.DataFrame, iters: Int) = {
+      val loop = AffinityPropagation.run(spark, emb, maxIter = iters, convergenceIter = iters + 1)
+      assert(loop.iterations == iters)
+      w.select(col("i"), col("k"), col("r").as("rw"), col("a").as("aw"))
+        .join(loop.messages.select(col("i"), col("k"), col("r").as("rk"), col("a").as("ak")),
+          Seq("i", "k"))
+        .agg(count(lit(1)), max(abs(col("rw") - col("rk"))), max(abs(col("aw") - col("ak"))))
+        .head()
+    }
+    val one = gaps(w1, 1)
+    assert(one.getLong(0) == 500L * 500L)
+    assert(one.getDouble(1) == 0.0,
+      s"kernel responsibility diverged from window algebra by ${one.getDouble(1)}")
+    assert(one.getDouble(2) <= 1e-9,
+      s"kernel availability diverged from window algebra by ${one.getDouble(2)}")
+    val three = gaps(w3, 3)
+    assert(three.getLong(0) == 500L * 500L)
+    assert(three.getDouble(1) <= 1e-9 && three.getDouble(2) <= 1e-9,
+      s"after 3 iterations: r off by ${three.getDouble(1)}, a off by ${three.getDouble(2)}")
   }
 
   test("loop messages, iterations and exemplars are bit-identical at 1 and 4 loop partitions") {
@@ -387,16 +445,9 @@ class ApSpec extends SparkSuite {
     // or shuffle fetch order, so the in-task hand-off (one partition)
     // and the block shuffles (four) must agree to the bit.
     val emb200 = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(200)
-    def at(parts: Int) = {
-      spark.conf.set("spark.graft.ap.loopPartitions", parts.toString)
-      try {
-        val r = AffinityPropagation.run(spark, emb200)
-        val bits = r.messages.collect().map { m =>
-          (m.getLong(0), m.getLong(1)) -> Seq(2, 3, 4).map(c =>
-            java.lang.Double.doubleToRawLongBits(m.getDouble(c)))
-        }.toMap
-        (r.iterations, r.converged, r.exemplars, bits)
-      } finally spark.conf.unset("spark.graft.ap.loopPartitions")
+    def at(parts: Int) = atWidth(parts) {
+      val r = AffinityPropagation.run(spark, emb200)
+      (r.iterations, r.converged, r.exemplars, messageBits(r))
     }
     val (it1, conv1, ex1, m1) = at(1)
     val (it4, conv4, ex4, m4) = at(4)
@@ -464,7 +515,7 @@ class ApSpec extends SparkSuite {
     val one = atWidth(1)(solve(0))
     val four = atWidth(4)(solve(0))
     val local = solve(2000)
-    for ((name, r) <- Seq("1 partition" -> one, "4 partitions" -> four, "LocalAP" -> local)) {
+    for ((name, r) <- Seq("1 partition" -> one, "4 partitions" -> four, "in-process" -> local)) {
       assert(r.converged, s"$name did not converge")
       assert(r.trajectory.length == r.iterations,
         s"$name: ${r.trajectory.length} counts for ${r.iterations} iterations")
@@ -562,10 +613,11 @@ class ApSpec extends SparkSuite {
   test("ap_dist_exemplars fixture has a comfortable diagonal margin (no near-tie flake)") {
     // round-8 ADVICE: the ap_dist_exemplars query REQUIRES exact
     // exemplar-set equality between the distributed loop and the local
-    // kernel. The loop's availability sums are order-deterministic
+    // regime. The loop's availability sums are order-deterministic
     // (ascending i at any partitioning, so repeated runs agree), but the
-    // local kernel is separate code — its similarity, preference and
-    // message arithmetic need not match the loop's to the last ulp, and
+    // local regime computes its similarities and preference on the
+    // driver — separate code that need not match Catalyst's to the last
+    // ulp — and
     // a diagonal r+a within float noise of 0 could flip the indicator
     // between the regimes. This pins the safety premise: on the 200-vec
     // fixture the smallest |r+a| over the diagonal is far above any

@@ -10,7 +10,7 @@ package graft
   * dedup clustering pipeline (probes + capped kernel + components), and
   * the forced-distributed AP loop (the block kernel in-process on one
   * loop partition and chained over four, checkpoint discipline, regime
-  * equality with the local kernel), and the IVF-ADC search kernel (a raw-index search at
+  * equality with the local regime), and the IVF-ADC search kernel (a raw-index search at
   * nprobe = every cell equals exhaustive ADC).
   *
   * Run as a MAIN in its own JVM (ClusterSmokeSpec forks it): a second
@@ -38,7 +38,7 @@ object ClusterSmoke {
       //    df-capped jaccard kernel, two-regime components
       val clusters = SparkEntry.queries("dedup_cluster")(spark, sfDir).count()
       require(clusters > 0, "dedup_cluster returned no rows off-driver")
-      // 3. forced-distributed AP must agree with the local dense kernel.
+      // 3. forced-distributed AP must agree with the local regime.
       //    At the default width the 200-vec prefix is one loop
       //    partition: its init relation is built and checkpointed on the
       //    remote executors, collected once, and the block kernel steps

@@ -774,14 +774,11 @@ class GraftSpec extends SparkSuite {
     assert(byBlock.values.toSet == Set(Set(1L, 2L, 3L), Set(4L, 5L)))
     got.filter { case (id, ex) => id == ex }.foreach { case (id, ex) => assert(id == ex) }
 
-    // and the local dense kernel agrees exemplar-for-exemplar with the
-    // same matrix handed to LocalAP.runS directly…
-    val s = Array.fill(5, 5)(Double.NegativeInfinity)
-    triples.collect().foreach(r =>
-      s(r.getLong(0).toInt - 1)(r.getLong(1).toInt - 1) = r.getDouble(2))
-    val st = ap.LocalAP.runS(Array(1L, 2L, 3L, 4L, 5L), s)
+    // and the in-process solve of the same triples agrees
+    // exemplar-for-exemplar…
+    val st = ap.AffinityPropagation.solveFromSimilarities(spark, triples)
     val facadeExemplars = got.map(_._2).distinct.sorted
-    assert(st.exemplars.toSeq.sorted == facadeExemplars)
+    assert(st.pinned.isEmpty && st.exemplars == facadeExemplars)
 
     // …and the DISTRIBUTED regime (forced via localNodeThreshold = 0)
     // lands on the same exemplars as the kernel.
@@ -807,14 +804,10 @@ class GraftSpec extends SparkSuite {
     val got = Graft.clusterFromSimilarities(spark, triples)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(got == Seq((1L, 2L), (2L, 2L), (3L, 2L), (4L, 4L), (5L, 4L)))
-    // the dense kernel with the same matrix + provided-diagonal flags
+    // the in-process solve of the same triples, every diagonal supplied,
     // lands on the same exemplars
-    val s = Array.fill(5, 5)(Double.NegativeInfinity)
-    offd.foreach { case (i, k, v) => s(i.toInt - 1)(k.toInt - 1) = v }
-    diag.foreach { case (i, _, v) => s(i.toInt - 1)(i.toInt - 1) = v }
-    val st = ap.LocalAP.runS(Array(1L, 2L, 3L, 4L, 5L), s,
-      diagProvided = Array.fill(5)(true))
-    assert(st.exemplars == Set(2L, 4L))
+    val st = ap.AffinityPropagation.solveFromSimilarities(spark, triples)
+    assert(st.pinned.isEmpty && st.exemplars == Seq(2L, 4L))
   }
 
   test("profile matches profile_columns") {
