@@ -35,6 +35,18 @@ class ApSpec extends SparkSuite {
       s"expected 66 exemplars (FIXTURES.md), got ${res.exemplars.size} at iter ${res.iterations}")
   }
 
+  test("Spark AP loop matches LocalAP kernel exemplar set exactly") {
+    // The Spark-free kernel (solveVectors, the successor of LocalAP's
+    // dense kernel) against the distributed chain at a width the other
+    // pins do not use.
+    val brute = AffinityPropagation.solveVectors(embRows.map(_._1), embRows.map(_._2))
+    val dist = atWidth(2)(AffinityPropagation.run(spark, Tables.embeddings(spark, sf001)))
+    assert(dist.pinned.nonEmpty, "expected the distributed loop")
+    assert(dist.converged && brute.converged)
+    val (d, b) = (dist.exemplars.toSet, brute.exemplars.toSet)
+    assert(d == b, s"spark=${d.size} brute=${b.size} symdiff=${(d diff b) ++ (b diff d)}")
+  }
+
   test("solve (in-process, driver-computed s) is bit-identical to the 4-partition run on sf0.001") {
     // The local regime computes s on the driver and its preference by a
     // driver median; the chain takes s from vec_sqdist and the median by
