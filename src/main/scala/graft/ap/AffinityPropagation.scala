@@ -407,9 +407,11 @@ object AffinityPropagation {
     * ([FD07]: "the preference of point k is s(k,k)" — larger values make
     * k more likely to be chosen as an exemplar); points without a
     * diagonal row get the shared preference (prefOverride, else the
-    * exact median of the supplied off-diagonal similarities). Absent
-    * pairs behave as s = −∞ (the sparse-AP convention), and the messages
-    * are the supplied rows plus the diagonals in either regime. Two
+    * exact median of the supplied off-diagonal similarities), and so
+    * does a diagonal row with NULL s. Absent pairs behave as s = −∞ (the
+    * sparse-AP convention); an off-diagonal row with NULL s is such an
+    * absent pair and is dropped. The messages are the remaining supplied
+    * rows plus the diagonals in either regime. Two
     * regimes like [[solve]]: at or below `localNodeThreshold` distinct
     * ids the triples are collected once and solved in-process (a
     * bounded collect, so the default threshold is lower than the
@@ -437,7 +439,8 @@ object AffinityPropagation {
     // that checkpoint lands (onInitMaterialized) rather than after the
     // whole loop (round-9 ADVICE: holding both was a transient 2× storage
     // peak) — the finally is the idempotent backstop.
-    val all = MessageBlocks.triples(sims).cache()
+    val all = MessageBlocks.triples(sims)
+      .filter(col("i") === col("k") || col("s").isNotNull).cache()
     try {
     val diag = all.filter(col("i") === col("k"))
     val nodes = all.select(col("i")).unionByName(all.select(col("k").as("i"))).distinct()
@@ -445,13 +448,13 @@ object AffinityPropagation {
     if (probe.length <= localNodeThreshold) {
       // ONE collect of the (bounded) cached triples — the probe and this
       // collect are the local regime's only actions. The nodes without a
-      // diagonal row get a pending one.
+      // diagonal row get a pending one, as do the NULL-s diagonals.
       val t = MessageBlocks.collect(all)
       val provided = t.i.indices.filter(j => t.i(j) == t.k(j)).map(t.i).toSet
       val missing = probe.map(_.getLong(0)).filterNot(provided)
       val n = t.i.length
       inProcess(Triples(t.i ++ missing, t.k ++ missing, t.s ++ new Array[Double](missing.length),
-          Array.range(n, n + missing.length)),
+          t.pending ++ Array.range(n, n + missing.length)),
         prefOverride, jitter, damping, maxIter, convergenceIter)
     } else
       runLoop(all.unionByName(pending(nodes.join(diag.select(col("i")), Seq("i"), "left_anti"))),
@@ -611,11 +614,12 @@ object AffinityPropagation {
       it += 1
       converged = rule.fires(MessageBlocks.exemplars(b).toSet)
     }
-    // The Result holds the block, not a DataFrame (see runLoop).
+    // The Result holds the block, not a DataFrame (see runLoop); its
+    // messages ship the block to the tasks in 64 Ki-row slices (~2.6 MB
+    // each), well under any RPC message limit at N = localThreshold.
     Result(() => {
         val ss = sessionForResult()
-        ss.createDataFrame(ss.sparkContext.parallelize(Seq(b), 1).flatMap(MessageBlocks.rows),
-          MessageBlocks.schema)
+        ss.createDataFrame(new BlockRows(ss.sparkContext, b, 1 << 16), MessageBlocks.schema)
       }, rule.exemplars.toSeq.sorted, it, converged, rule.trajectory.toSeq)
   }
 

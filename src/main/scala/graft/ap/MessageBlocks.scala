@@ -1,6 +1,6 @@
 package graft.ap
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, Partition, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -38,6 +38,33 @@ private[ap] final class KSide(
 private[ap] final class MsgBlock(
     val home: Home, val kside: KSide,
     val r: Array[Double], val a: Array[Double]) extends Serializable
+
+/** Rows [lo, hi) of an in-process block, one partition of its
+  * [[BlockRows]]. On the driver it references the block's columns; it
+  * serializes as a copy of its own range only, so a task carries one
+  * slice, never the whole block. */
+private[ap] final class BlockSlice(val index: Int,
+    i: Array[Long], k: Array[Long], s: Array[Double], r: Array[Double], a: Array[Double],
+    lo: Int, hi: Int) extends Partition {
+  def rows: Iterator[Row] = (lo until hi).iterator.map(j => Row(i(j), k(j), s(j), r(j), a(j)))
+  private def writeReplace(): AnyRef =
+    if (lo == 0 && hi == i.length) this
+    else new BlockSlice(index, i.slice(lo, hi), k.slice(lo, hi), s.slice(lo, hi),
+      r.slice(lo, hi), a.slice(lo, hi), 0, hi - lo)
+}
+
+/** An in-process block's (i, k, s, r, a) rows as an RDD of
+  * [[BlockSlice]]s of `rowsPer` rows: only the driver holds the block. */
+private[ap] final class BlockRows(sc: SparkContext, @transient b: MsgBlock, rowsPer: Int)
+    extends RDD[Row](sc, Nil) {
+  override protected def getPartitions: Array[Partition] = {
+    val n = b.r.length
+    Array.tabulate((n + rowsPer - 1) / rowsPer max 1)(p => new BlockSlice(p,
+      b.home.i, b.home.k, b.home.s, b.r, b.a, p * rowsPer, math.min(n, (p + 1) * rowsPer)))
+  }
+  override def compute(split: Partition, context: TaskContext): Iterator[Row] =
+    split.asInstanceOf[BlockSlice].rows
+}
 
 /** A message relation's rows as primitive columns; `pending` lists the
   * positions of the diagonal rows that take the default preference. */
@@ -97,8 +124,8 @@ private[ap] object MessageBlocks {
       .partitionBy(new HashPartitioner(parts))
       .mapPartitions { in =>
         val runs = in.map(_._2).toSeq.sortBy(_._1)
-        Iterator(kside(Array.concat(runs.map(_._2): _*), Array.concat(runs.map(_._3): _*),
-          runs.map(_._2.length).toArray))
+        val (i, k) = (Array.concat(runs.map(_._2): _*), Array.concat(runs.map(_._3): _*))
+        Iterator(kside(i, k, runs.map(_._2.length).toArray, sortByPair(k, i)))
       }
     val gen0 = homes.zipPartitions(ksides) { (hs, ks) =>
       hs.map(h => zero(h, ks.next()))
@@ -116,7 +143,29 @@ private[ap] object MessageBlocks {
     val h =
       if (j >= i.length) home(0, i, k, s, 1)
       else { val o = sortByPair(i, k); home(0, o.map(i), o.map(k), o.map(s), 1) }
-    zero(h, kside(h.i, h.k, Array(h.i.length)))
+    zero(h, kside(h.i, h.k, Array(h.i.length), byColumn(h.i, h.k)))
+  }
+
+  /** Positions of (i, k)-ordered rows in (k, i) order. A dense d×d
+    * block (every i-group the same d ascending columns, the vector
+    * feeder's form) is its own transpose's index, with no sort; any
+    * other block is sorted. */
+  private def byColumn(i: Array[Long], k: Array[Long]): Array[Int] = {
+    val n = k.length
+    val d = math.round(math.sqrt(n.toDouble)).toInt
+    var dense = d.toLong * d == n
+    var j = 0
+    while (dense && j < n) {
+      dense = k(j) == k(j % d) && i(j) == i(j - j % d) && (j == 0 || j >= d || k(j - 1) < k(j))
+      j += 1
+    }
+    if (!dense) sortByPair(k, i)
+    else {
+      val order = new Array[Int](n)
+      var x = 0
+      while (x < n) { order(x) = (x % d) * d + x / d; x += 1 }
+      order
+    }
   }
 
   /** One job collects a relation's (i, k, s) as primitive columns, with
@@ -174,9 +223,9 @@ private[ap] object MessageBlocks {
   }
 
   /** Column side over (i, k) rows concatenated from home runs of the
-    * given lengths, in home-partition order. */
-  private def kside(i: Array[Long], k: Array[Long], segments: Array[Int]): KSide = {
-    val order = sortByPair(k, i)
+    * given lengths, in home-partition order, given their (k, i) order. */
+  private def kside(i: Array[Long], k: Array[Long], segments: Array[Int],
+      order: Array[Int]): KSide = {
     val ends = Array.newBuilder[Int]
     var x = 1
     while (x <= order.length) {

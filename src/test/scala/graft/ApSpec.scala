@@ -280,8 +280,15 @@ class ApSpec extends SparkSuite {
       (1L, 3L, -9.0), (3L, 1L, -9.0),
       (2L, 3L, -9.0), (3L, 2L, -9.0),
       (9L, 9L, -5.0)).toDF("i", "k", "s")
-    val fixtures = Seq(("two-block", twoBlocks, 2 * 36), ("isolated-node", isolated, 10))
-    for ((name, sims, rows) <- fixtures) {
+    // NULL s: an off-diagonal NULL is an absent pair, a diagonal NULL
+    // takes the shared preference — in both regimes the same relation
+    // as two-block (as 0.0 the cross-block rows would win every row max)
+    val none = Option.empty[Double]
+    val withNulls = twoBlocks.unionByName(
+      Seq((1L, 7L, none), (7L, 1L, none), (3L, 3L, none)).toDF("i", "k", "s"))
+    val fixtures = Seq(("two-block", twoBlocks, 2 * 36), ("isolated-node", isolated, 10),
+      ("null-s", withNulls, 2 * 36))
+    val bits = for ((name, sims, rows) <- fixtures) yield {
       val local = AffinityPropagation.solveFromSimilarities(spark, sims, maxIter = 60)
       val chain = atWidth(4)(AffinityPropagation.solveFromSimilarities(spark, sims,
         maxIter = 60, localNodeThreshold = 0))
@@ -292,7 +299,9 @@ class ApSpec extends SparkSuite {
       assert(local.exemplars == chain.exemplars, s"$name: exemplars differ")
       val (ml, mc) = (messageBits(local), messageBits(chain))
       assert(ml.size == rows && ml == mc, s"$name: messages differ (${ml.size} vs ${mc.size} rows)")
+      ml
     }
+    assert(bits(2) == bits(0), "null-s: NULL rows are not read as absent pair / default preference")
   }
 
   test("distributed runLoop releases superseded checkpoints (≤2 pinned after 30 iterations)") {
