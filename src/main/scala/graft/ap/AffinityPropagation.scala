@@ -599,9 +599,7 @@ object AffinityPropagation {
       val v = new Array[Double](n)
       n = 0
       for (j <- s.indices) if (i(j) != k(j)) { v(n) = s(j); n += 1 }
-      java.util.Arrays.sort(v)
-      val h = n / 2
-      if (n == 0) 0.0 else if (n % 2 == 1) v(h) else 0.5 * v(h - 1) + 0.5 * v(h)
+      median(v)
     }
     t.pending.foreach(s(_) = p)
     val b = MessageBlocks.block(i, k, s)
@@ -621,6 +619,63 @@ object AffinityPropagation {
         val ss = sessionForResult()
         ss.createDataFrame(new BlockRows(ss.sparkContext, b, 1 << 16), MessageBlocks.schema)
       }, rule.exemplars.toSeq.sorted, it, converged, rule.trajectory.toSeq)
+  }
+
+  /** The median of `v` as the sorted array gives it — the middle
+    * element, or `0.5 * lower + 0.5 * upper` of the two middle ones at
+    * an even count (0.0 when empty) — in expected linear time: the upper
+    * middle by [[select]], the lower one as the largest element left
+    * below it. Both follow `Double.compare`'s total order, the order
+    * `Arrays.sort` puts doubles in (−0.0 before 0.0, NaN above +∞), so
+    * the value is bit-identical to the sort's. Permutes `v`. */
+  private[graft] def median(v: Array[Double]): Double = {
+    val n = v.length
+    val h = n / 2
+    if (n == 0) 0.0
+    else {
+      val upper = select(v, h)
+      if (n % 2 == 1) upper
+      else {
+        var lower = v(0)
+        for (j <- 1 until h) if (java.lang.Double.compare(v(j), lower) > 0) lower = v(j)
+        0.5 * lower + 0.5 * upper
+      }
+    }
+  }
+
+  /** The element of rank `r` in `v` under `Double.compare`'s order,
+    * leaving every lower rank in `v(0 until r)`: three-way quickselect
+    * on a median-of-three pivot, falling back to sorting the remaining
+    * range after 2·log2(n) + 8 rounds, which bounds the worst case at
+    * the sort's cost. Permutes `v`. */
+  private def select(v: Array[Double], r: Int): Double = {
+    def cmp(a: Double, b: Double) = java.lang.Double.compare(a, b)
+    def swap(a: Int, b: Int): Unit = { val t = v(a); v(a) = v(b); v(b) = t }
+    var lo = 0
+    var hi = v.length
+    var rounds = 2 * (32 - Integer.numberOfLeadingZeros(v.length)) + 8
+    while (hi - lo > 1 && rounds > 0) {
+      rounds -= 1
+      val (a, b, c) = (v(lo), v(lo + (hi - lo) / 2), v(hi - 1))
+      val p =
+        if (cmp(a, b) < 0) { if (cmp(b, c) < 0) b else if (cmp(a, c) < 0) c else a }
+        else { if (cmp(a, c) < 0) a else if (cmp(b, c) < 0) c else b }
+      // [lo, lt) < p, [lt, j) == p, [gt, hi) > p
+      var lt = lo
+      var j = lo
+      var gt = hi
+      while (j < gt) {
+        val d = cmp(v(j), p)
+        if (d < 0) { swap(lt, j); lt += 1; j += 1 }
+        else if (d > 0) { gt -= 1; swap(j, gt) }
+        else j += 1
+      }
+      if (r < lt) hi = lt
+      else if (r >= gt) lo = gt
+      else { lo = r; hi = r + 1 }
+    }
+    if (hi - lo > 1) java.util.Arrays.sort(v, lo, hi)
+    v(r)
   }
 
   /** The chain's form of [[inProcess]]'s resolution, over the init

@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
 /** Product quantization (Jégou et al., "Product Quantization for
   * Nearest Neighbor Search", PAMI 2011 — public method) over an
@@ -472,7 +474,7 @@ object Pq {
       case "ivfpq" => Residual
       case "rawpq" => Raw
       case "opq" =>
-        val r = spark.read.parquet(s"$genDir/rot").head()
+        val r = spark.read.schema(rotSchema).parquet(s"$genDir/rot").head()
         // the nested rows come back as mutable ArraySeqs — type them as
         // the collection root, not immutable.Seq (a CCE inside map
         // otherwise)
@@ -922,9 +924,10 @@ object Pq {
   // meta carries (m, k, sub, family); the family tag is the index's
   // [[Coding]] — `ivfpq` residual, `opq` rotated residual, `rawpq` raw.
   // A fresh session readIndex()es with ZERO fit jobs — bounded driver
-  // reads (meta row, ≤c centroid rows, m·k codebook rows, the rotation)
-  // plus lazy parquet plans for homes/codes — and serves every search
-  // overload unchanged. writeIndex is itself the compaction: it
+  // reads (meta row, ≤c centroid rows, m·k codebook rows, the rotation),
+  // one collect job each under a declared schema, plus lazy parquet
+  // plans for homes/codes — and serves every search overload
+  // unchanged. writeIndex is itself the compaction: it
   // snapshots the CALLER's index (typically readIndex + appendToIndex's
   // result) as the next generation covering all committed increments,
   // so read-plan fan-in stays (1 generation + tail) at any append count.
@@ -968,30 +971,34 @@ object Pq {
   // parquet reads WITHOUT a user schema pay one footer-inference job
   // per relation build, a per-micro-batch tax in the ingest sinks; the
   // parts are homogeneous by the store invariant, so the schema is
-  // static). StoreSchemaSpec pins each against a freshly-written
-  // store's inferred schema, so a writer change fails loud here.
-  private[graft] val homesSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("c_id",
-        org.apache.spark.sql.types.LongType)))
-  private[graft] val codesSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("b",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("code",
-        org.apache.spark.sql.types.LongType)))
-  private[graft] val momentSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("b",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("code",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cnt",
-        org.apache.spark.sql.types.LongType)))
+  // static). The generation model's datasets (meta, cents, codebooks,
+  // the rotated coding's rot) are declared too, so a cold model load
+  // runs its collects and nothing else. StoreSchemaSpec pins each
+  // against a freshly-written store's inferred schema, so a writer
+  // change fails loud here.
+  private[graft] val homesSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("c_id", LongType)))
+  private[graft] val codesSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("b", IntegerType),
+    StructField("code", LongType)))
+  private[graft] val momentSchema: StructType = StructType(Seq(
+    StructField("b", IntegerType), StructField("code", LongType),
+    StructField("cnt", LongType)))
+  /** `family` is declared too: a meta written before the tag existed
+    * has no such column and reads it as null (the residual coding). */
+  private[graft] val metaSchema: StructType = StructType(Seq(
+    StructField("m", IntegerType), StructField("k", IntegerType),
+    StructField("sub", IntegerType), StructField("family", StringType)))
+  private val doubles = ArrayType(DoubleType, containsNull = true)
+  private[graft] val centsSchema: StructType = StructType(Seq(
+    StructField("c_id", LongType), StructField("centv", doubles)))
+  private[graft] val codebooksSchema: StructType = StructType(Seq(
+    StructField("b", IntegerType), StructField("code", LongType),
+    StructField("cv", doubles)))
+  private[graft] val rotSchema: StructType = StructType(Seq(
+    StructField("mean", doubles), StructField("eigenvalues", doubles),
+    StructField("perm", ArrayType(IntegerType, containsNull = true)),
+    StructField("loadings", ArrayType(doubles, containsNull = true))))
 
   /** The moment SIDECAR of an encoded relation: per-(b, code) row
     * counts — ≤ m·k rows, model-independent, and sufficient to
@@ -1056,12 +1063,13 @@ object Pq {
   }
 
   /** Load a persisted index of any coding: the live generation's model
-    * (bounded driver reads — never a fit, never a corpus scan; cached
-    * per generation) plus homes/codes as the lazy union of the
-    * generation and every committed increment above its cover. The
-    * returned [[IvfPqIndex]] is NOT persisted to executor storage —
-    * callers with a repeated-query workload may .persist() homes/codes
-    * themselves (or writeIndex after appends, which re-snapshots). */
+    * ([[loadModel]]'s bounded driver reads — never a fit, a corpus scan
+    * or a footer-inference job; cached per generation) plus homes/codes
+    * as the lazy union of the generation and every committed increment
+    * above its cover. The returned [[IvfPqIndex]] is NOT persisted to
+    * executor storage — callers with a repeated-query workload may
+    * .persist() homes/codes themselves (or writeIndex after appends,
+    * which re-snapshots). */
   def readIndex(spark: SparkSession, dir: String): IvfPqIndex = {
     ApAggs.register(spark)
     VectorExprs.register(spark)
@@ -1092,7 +1100,7 @@ object Pq {
     // Round 21: the EXPLICIT schema kills the remaining footer
     // inference job per relation build (the parts are homogeneous by
     // the store invariant; StoreSchemaSpec pins schema ≡ written).
-    def unionOf(name: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
+    def unionOf(name: String, schema: StructType): DataFrame =
       spark.read.schema(schema).parquet(
         (Seq(s"$genDir/$name") ++ tail.map(i => s"$dir/inc=$i/$name")): _*)
     IvfPqIndex(model, unionOf("homes", homesSchema), unionOf("codes", codesSchema))
@@ -1112,18 +1120,20 @@ object Pq {
   private[graft] val loadedModels =
     graft.SessionResources.slot[String, (Long, Long, IvfPqModel)]("pq.loadedModel")
 
+  /** Generation `g`'s model: one collect job each for meta, cents and
+    * codebooks (plus `rot` for the rotated coding), every read under
+    * its declared schema, so a cold load pays no footer inference. */
   private def loadModel(spark: SparkSession, dir: String, g: Long): IvfPqModel = {
     val genDir = s"$dir/gen=$g"
-    val metaDf = spark.read.parquet(s"$genDir/meta")
-    val meta = metaDf.head()
-    val family =
-      if (metaDf.columns.contains("family")) Some(meta.getAs[String]("family")) else None
+    def read(name: String, schema: StructType) =
+      spark.read.schema(schema).parquet(s"$genDir/$name")
+    val meta = read("meta", metaSchema).head()
     val (m, k, sub) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val coding = Coding.load(spark, genDir, family)
-    val cents = spark.read.parquet(s"$genDir/cents")
+    val coding = Coding.load(spark, genDir, Option(meta.getString(3)))
+    val cents = read("cents", centsSchema)
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1).toSeq
-    val cbRows = spark.read.parquet(s"$genDir/codebooks")
+    val cbRows = read("codebooks", codebooksSchema)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2).toArray))
     val codebooks = Array.tabulate(m)(b =>
       cbRows.filter(_._1 == b).sortBy(_._2).map(_._3))

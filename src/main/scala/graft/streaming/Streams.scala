@@ -486,9 +486,8 @@ object Streams {
       val last = store.finish(landed, n, batchId)
       spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(batchId,
           nBatch, n, nCorpusDup, nBatch - n - nCorpusDup, nPairs, last)),
-          StructType(Seq("batch_id", "n_batch", "n_kept", "n_dropped_corpus_dup",
-            "n_dropped_within_batch", "n_pairs")
-            .map(StructField(_, LongType, nullable = false)) :+ store.statField))
+          StructType(statCounters.map(StructField(_, LongType, nullable = false)) :+
+            store.statField))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$t/_stats/$batchId")
       commitMarker(spark, t, batchId)
@@ -531,8 +530,7 @@ object Streams {
     * their files. */
   private final class LexicalStore(spark: SparkSession, targetDir: String,
       threshold: Double) extends IngestStore(targetDir, "applyDedupBatch",
-        "dedup corpus", "initDedupCorpus", "text",
-        StructField("n_hot_shingles", LongType, nullable = false),
+        "dedup corpus", "initDedupCorpus", "text", lexStatField,
         backAqeOff = false) {
     private var shB: DataFrame = _
     private var hot: Seq[Long] = Nil
@@ -663,7 +661,7 @@ object Streams {
     * order-sensitive comparison. */
   def readDedupAttribution(spark: SparkSession, targetDir: String): DataFrame =
     readCorpusStore(spark, targetDir, "dups", id => s"$targetDir/_dups/inc=$id",
-      Some(dupsSchema))
+      dupsSchema)
 
   /** Seed the append-only dedup corpus: the initial kept relation
     * becomes increment −1 (streaming batchIds start at 0), with its
@@ -673,10 +671,10 @@ object Streams {
     val spark = initial.sparkSession
     initial.select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .write.mode("overwrite").parquet(s"$targetDir/inc=-1")
-    val landed = spark.read.parquet(s"$targetDir/inc=-1")
+    val landed = spark.read.schema(lexDocsSchema).parquet(s"$targetDir/inc=-1")
     graft.queries.Dedup.hashedShinglePlan(spark, landed)
       .write.mode("overwrite").parquet(s"$targetDir/_shingles/inc=-1")
-    spark.read.parquet(s"$targetDir/_shingles/inc=-1")
+    spark.read.schema(shingleStoreSchema).parquet(s"$targetDir/_shingles/inc=-1")
       .groupBy("shingle").agg(count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(s"$targetDir/_dfs/inc=-1")
     emptyDups(spark).write.mode("overwrite").parquet(s"$targetDir/_dups/inc=-1")
@@ -689,7 +687,7 @@ object Streams {
     * crash orphan is invisible, exactly as in the upsert target). */
   def readDedupCorpus(spark: SparkSession, targetDir: String): DataFrame =
     readCorpusStore(spark, targetDir, "docs", id => s"$targetDir/inc=$id",
-      Some(lexDocsSchema))
+      lexDocsSchema)
 
   /** Per-batch ingest stats rows — the sink's operational surface:
     * batch size, kept/dropped breakdown, plus the pair/hot-shingle
@@ -718,9 +716,10 @@ object Streams {
   }
 
   // Explicit schemas of the corpus-store datasets — exactly what the
-  // writers land (round-21 optimization: a parquet read without a user
-  // schema pays one footer-inference job per relation build, and the
-  // sinks build several relations per micro-batch; the parts are
+  // writers land. Every store read passes one (the sinks' batches, the
+  // stored search's corpus, vacuum, redaction and their stats folds): a
+  // parquet read without a user schema pays one footer-inference job
+  // per relation build, per part on the per-part reads; the parts are
   // homogeneous by the store invariant — StoreSchemaSpec pins each
   // schema against a freshly-written store, so a writer change fails
   // loud, which keeps the ADVICE-r20 "silent schema drift" concern at
@@ -734,12 +733,23 @@ object Streams {
     StructField("shingle", LongType), StructField("df", LongType)))
   private[graft] val dupsSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("dup_of", LongType)))
+  /** The `_stats` row's counters, then one column of the sink's own:
+    * the lexical sink's hot-shingle count, the semantic sink's index op. */
+  private val statCounters = Seq("batch_id", "n_batch", "n_kept",
+    "n_dropped_corpus_dup", "n_dropped_within_batch", "n_pairs")
+  private[graft] val lexStatField = StructField("n_hot_shingles", LongType, nullable = false)
+  private[graft] val semStatField = StructField("index_op", StringType)
+  /** A `_stats` log as it reads back (every parquet column surfaces
+    * nullable). */
+  private[graft] def statsSchema(statField: StructField): StructType =
+    StructType(statCounters.map(StructField(_, LongType)) :+
+      statField.copy(nullable = true))
   /** Semantic docs parts: (doc_id, embedding) data columns plus the
     * home-cell layout's partition columns. The embedding ELEMENT type
     * is the caller's (float for the fixture tables, double in several
-    * suites), so the per-batch hot path takes it from one stored part's
-    * footer ([[storedEmbeddingType]]) and rejects a batch of another
-    * type, while the offline readers keep inference. One schema covers EVERY
+    * suites), so every reader takes it from one stored part's footer
+    * ([[storedEmbeddingType]], a driver read, no job); the per-batch
+    * path also rejects a batch of another type. One schema covers EVERY
     * part shape: partitioned parts bind ig/c_id from the directory
     * layout; flat parts (the zero-row fallbacks — writeSemanticDocs
     * only ever writes flat when empty) surface them as null data
@@ -761,13 +771,13 @@ object Streams {
     * materialized store. */
   private def readShingleStore(spark: SparkSession, targetDir: String): DataFrame =
     readCorpusStore(spark, targetDir, "shingles",
-      id => s"$targetDir/_shingles/inc=$id", Some(shingleStoreSchema))
+      id => s"$targetDir/_shingles/inc=$id", shingleStoreSchema)
 
   /** Corpus-side shingle-df PARTIAL counts (shingle, df) — one relation
     * per increment plus one per generation; consumers merge by sum. */
   private def readDfStore(spark: SparkSession, targetDir: String): DataFrame =
     readCorpusStore(spark, targetDir, "dfs", id => s"$targetDir/_dfs/inc=$id",
-      Some(dfStoreSchema))
+      dfStoreSchema)
 
   /** Committed part directories of one corpus dataset: `gen=<g>/<name>`
     * (live generation, if any) plus `incPath(id)` for every committed
@@ -783,8 +793,8 @@ object Streams {
   }
 
   /** Generation-aware read of one corpus dataset as ONE multi-path
-    * parquet relation — a single file listing + schema inference for
-    * the whole store, so the read plan stays ONE leaf (and the
+    * parquet relation under its declared schema — a single file
+    * listing for the whole store, so the read plan stays ONE leaf (and the
     * per-batch job count stays flat) at any tail length. Requires
     * every part to share one schema and flat layout — the invariant of
     * the lexical store and the sidecars; the semantic DOCS store,
@@ -795,25 +805,20 @@ object Streams {
     * increment per store per batch — measured 68–77 jobs/batch at 4
     * increments, growing +3 per increment.) */
   private def readCorpusStore(spark: SparkSession, targetDir: String,
-      name: String, incPath: Long => String,
-      schema: Option[StructType] = None): DataFrame = {
-    val r = schema.map(spark.read.schema).getOrElse(spark.read)
-    r.parquet(storeParts(spark, targetDir, name, incPath): _*)
-  }
+      name: String, incPath: Long => String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(storeParts(spark, targetDir, name, incPath): _*)
 
-  /** Per-part read of one corpus dataset: `project` runs on EACH part
-    * before the union — the hook partitioned layouts use to prune and
-    * to drop their partition columns (parts may disagree on those
-    * columns, so the union must see the projected shape). */
+  /** Per-part read of one corpus dataset, each part under the declared
+    * `schema` (no footer-inference job, so the read costs no job at any
+    * tail length): `project` runs on EACH part before the union — the
+    * hook partitioned layouts use to prune and to drop their partition
+    * columns (partitioned and flat parts cannot share one relation's
+    * partition discovery, so each part is its own leaf). */
   private def readCorpusStoreParts(spark: SparkSession, targetDir: String,
       name: String, incPath: Long => String,
-      project: DataFrame => DataFrame,
-      schema: Option[StructType] = None): DataFrame = {
-    def read(p: String): DataFrame =
-      schema.map(spark.read.schema).getOrElse(spark.read).parquet(p)
+      project: DataFrame => DataFrame, schema: StructType): DataFrame =
     storeParts(spark, targetDir, name, incPath)
-      .map(p => project(read(p))).reduce(_.unionByName(_))
-  }
+      .map(p => project(spark.read.schema(schema).parquet(p))).reduce(_.unionByName(_))
 
   // ---- SEMANTIC streaming ingest-dedup sink (round 19) -----------------
 
@@ -913,7 +918,7 @@ object Streams {
   private final class SemanticStore(spark: SparkSession, targetDir: String,
       threshold: Double, nprobe: Int) extends IngestStore(targetDir,
         "applySemanticDedupBatch", "semantic dedup corpus",
-        "initSemanticDedupCorpus", "embedding", StructField("index_op", StringType),
+        "initSemanticDedupCorpus", "embedding", semStatField,
         backAqeOff = true) {
     import graft.functions.Pq
     private val indexDir = s"$targetDir/_index"
@@ -1155,7 +1160,8 @@ object Streams {
 
   /** The accumulated semantic corpus: the live compaction generation
     * (when one exists) plus committed tail (doc_id, embedding)
-    * increments — the layout's partition columns are dropped. */
+    * increments — the layout's partition columns are dropped. Every
+    * part reads under [[semDocsSchema]], so the read runs no job. */
   def readSemanticCorpus(spark: SparkSession, targetDir: String): DataFrame =
     readSemanticVectors(spark, targetDir, None)
 
@@ -1170,31 +1176,28 @@ object Streams {
     * fallbacks (no partition columns) read whole — pruning them against
     * the CURRENT index's cells would lose candidates homed elsewhere.
     * Compaction re-homes stale layouts ([[vacuumSemanticCorpus]]), so
-    * the unpruned tail is bounded by the vacuum cadence. */
+    * the unpruned tail is bounded by the vacuum cadence. `schema` is
+    * the store's [[semDocsSchema]] when the caller already has it,
+    * else it is read from a stored footer. */
   private[graft] def readSemanticVectors(spark: SparkSession,
       targetDir: String, prune: Option[(Long, Seq[Long])],
-      schemaHint: Option[StructType] = None): DataFrame =
+      schema: Option[StructType] = None): DataFrame =
     readCorpusStoreParts(spark, targetDir, "docs", id => s"$targetDir/inc=$id",
       df => {
-        // with a schemaHint, ig/c_id surface on EVERY part: partitioned
-        // parts bind them from the layout (the prune below resolves at
-        // file-listing time exactly as before); flat parts — always the
-        // zero-row fallback — read them as null data columns, which
-        // the filter touches zero rows through
+        // ig/c_id surface on EVERY part: partitioned parts bind them
+        // from the layout (the prune below resolves at file-listing
+        // time); flat parts — always the zero-row fallback — read them
+        // as null data columns, which the filter touches zero rows
+        // through (isNull keeps them read-whole)
         val pruned = prune match {
-          case Some((ig, cells))
-              if df.columns.contains("ig") && df.columns.contains("c_id") =>
-            // isNull keeps the pre-layout/flat case read-whole (under a
-            // schemaHint its ig is a null data column, never a
-            // partition value — the partition-only prune on laid-out
-            // parts is unaffected)
+          case Some((ig, cells)) =>
             df.filter(col("ig").isNull ||
               col("ig").cast("long") =!= lit(ig) ||
               col("c_id").cast("long").isInCollection(cells))
-          case _ => df
+          case None => df
         }
         pruned.select("doc_id", "embedding")
-      }, schema = schemaHint)
+      }, schema.getOrElse(semDocsSchema(storedEmbeddingType(spark, targetDir))))
 
   /** Write one semantic docs dataset HOME-CELL PARTITIONED:
     * `ig=<indexGen>/c_id=<homeCell>` subdirectories, where `ig` is the
@@ -1286,11 +1289,12 @@ object Streams {
     Pq.vacuumIndex(spark, indexDir, preGen)
     val idx = Pq.readIndex(spark, indexDir)
     val ig = graft.MarkerStore.liveGen(spark, indexDir).get._1
-    vacuumCorpusStore(spark, targetDir, Seq(
+    vacuumCorpusStore(spark, targetDir, semStatField, Seq(
       CorpusDataset("docs", id => s"$targetDir/inc=$id",
+        semDocsSchema(storedEmbeddingType(spark, targetDir)),
         project = df => df.select("doc_id", "embedding"),
         write = (df, dst) => writeSemanticDocs(df, idx.homes, ig, dst)),
-      CorpusDataset("dups", id => s"$targetDir/_dups/inc=$id")))
+      CorpusDataset("dups", id => s"$targetDir/_dups/inc=$id", dupsSchema)))
   }
 
   /** The ingest sinks' shared D6 keep rule over a batch-touching pair
@@ -1393,23 +1397,26 @@ object Streams {
     *
     * Returns the increment ids whose data directories were retired. */
   def vacuumDedupCorpus(spark: SparkSession, targetDir: String): Seq[Long] =
-    vacuumCorpusStore(spark, targetDir, Seq(
-      CorpusDataset("docs", id => s"$targetDir/inc=$id"),
-      CorpusDataset("shingles", id => s"$targetDir/_shingles/inc=$id"),
+    vacuumCorpusStore(spark, targetDir, lexStatField, Seq(
+      CorpusDataset("docs", id => s"$targetDir/inc=$id", lexDocsSchema),
+      CorpusDataset("shingles", id => s"$targetDir/_shingles/inc=$id",
+        shingleStoreSchema),
       // df partials MERGE on compaction: one row per shingle
-      CorpusDataset("dfs", id => s"$targetDir/_dfs/inc=$id",
+      CorpusDataset("dfs", id => s"$targetDir/_dfs/inc=$id", dfStoreSchema,
         compact = df => df.groupBy("shingle").agg(sum(col("df")).as("df"))),
-      CorpusDataset("dups", id => s"$targetDir/_dups/inc=$id")))
+      CorpusDataset("dups", id => s"$targetDir/_dups/inc=$id", dupsSchema)))
 
   /** One per-increment dataset of a versioned corpus store, as the
-    * vacuum core sees it: `project` normalizes each part before the
-    * union (partitioned layouts drop/prune their partition columns
-    * here), `compact` transforms the unioned relation (e.g. the
-    * df-partial merge), `write` lands the generation dataset (the
-    * semantic docs override writes home-cell partitioned). */
+    * vacuum core sees it: every part reads under the declared `schema`,
+    * `project` normalizes each part before the union (partitioned
+    * layouts drop/prune their partition columns here), `compact`
+    * transforms the unioned relation (e.g. the df-partial merge),
+    * `write` lands the generation dataset (the semantic docs override
+    * writes home-cell partitioned). */
   private final case class CorpusDataset(
       name: String,
       incPath: Long => String,
+      schema: StructType,
       project: DataFrame => DataFrame = identity,
       compact: DataFrame => DataFrame = identity,
       write: (DataFrame, String) => Unit =
@@ -1434,7 +1441,7 @@ object Streams {
       ids: DataFrame): Long = {
     def keepDoc(df: DataFrame, del: DataFrame): DataFrame =
       df.join(del, Seq("doc_id"), "left_anti")
-    redactCorpusStore(spark, targetDir, ids, Seq(
+    redactCorpusStore(spark, targetDir, ids, lexStatField, Seq(
       RedactDataset("docs", () => readDedupCorpus(spark, targetDir), keepDoc),
       RedactDataset("shingles", () => readShingleStore(spark, targetDir), keepDoc),
       // NOT a filter of the partials: the generation's df relation
@@ -1484,7 +1491,7 @@ object Streams {
     Pq.vacuumIndex(spark, indexDir, preGen)
     val idxAfter = Pq.readIndex(spark, indexDir)
     val ig = graft.MarkerStore.liveGen(spark, indexDir).get._1
-    redactCorpusStore(spark, targetDir, del, Seq(
+    redactCorpusStore(spark, targetDir, del, semStatField, Seq(
       RedactDataset("docs", () => readSemanticCorpus(spark, targetDir),
         (df, d) => df.join(d, Seq("doc_id"), "left_anti"),
         (df, dst) => writeSemanticDocs(df, idxAfter.homes, ig, dst)),
@@ -1527,7 +1534,7 @@ object Streams {
     * increment; marker LAST. Old bytes retire through the regular
     * vacuum's one-cycle rule. Returns removed-document count. */
   private def redactCorpusStore(spark: SparkSession, targetDir: String,
-      ids: DataFrame, datasets: Seq[RedactDataset]): Long = {
+      ids: DataFrame, statField: StructField, datasets: Seq[RedactDataset]): Long = {
     val del = normalizeRedactIds(ids).localCheckpoint(true)
     try {
       val (gen0, _) = graft.MarkerStore.resolve(spark, targetDir)
@@ -1542,15 +1549,20 @@ object Streams {
       }
       // the operational log carries forward unredacted — its rows are
       // per-batch aggregates with no document content or ids
-      statsParts(spark, targetDir) match {
-        case ps if ps.nonEmpty =>
-          spark.read.parquet(ps: _*)
-            .write.mode("overwrite").parquet(s"$targetDir/gen=$g/stats")
-        case _ => ()
-      }
+      foldStats(spark, targetDir, statField, g)
       graft.MarkerStore.commitGen(spark, targetDir, g, committed.max)
       removed
     } finally graft.Checkpoints.release(del)
+  }
+
+  /** Fold the live `_stats` log (the store's last column `statField`)
+    * into generation `g`'s `stats`, when there is one. */
+  private def foldStats(spark: SparkSession, targetDir: String,
+      statField: StructField, g: Long): Unit = {
+    val ps = statsParts(spark, targetDir)
+    if (ps.nonEmpty)
+      spark.read.schema(statsSchema(statField)).parquet(ps: _*)
+        .write.mode("overwrite").parquet(s"$targetDir/gen=$g/stats")
   }
 
   /** The generation compact + one-cycle retire core shared by the
@@ -1561,7 +1573,7 @@ object Streams {
     * marker LAST, retire only what the PRE-vacuum live generation
     * covered, increment `_commits` markers never retire. */
   private def vacuumCorpusStore(spark: SparkSession, targetDir: String,
-      datasets: Seq[CorpusDataset]): Seq[Long] = {
+      statField: StructField, datasets: Seq[CorpusDataset]): Seq[Long] = {
     val fs = fsOf(spark, targetDir)
     def path(s: String) = new org.apache.hadoop.fs.Path(s)
     val (gen0, tail) = graft.MarkerStore.resolve(spark, targetDir)
@@ -1575,17 +1587,12 @@ object Streams {
         datasets.foreach { ds =>
           ds.write(
             ds.compact(readCorpusStoreParts(spark, targetDir, ds.name,
-              ds.incPath, ds.project)),
+              ds.incPath, ds.project, ds.schema)),
             s"$targetDir/gen=$g/${ds.name}")
         }
         // the operational log folds forward too (its per-batch files
         // retire below; without this the history would truncate)
-        statsParts(spark, targetDir) match {
-          case ps if ps.nonEmpty =>
-            spark.read.parquet(ps: _*)
-              .write.mode("overwrite").parquet(s"$targetDir/gen=$g/stats")
-          case _ => ()
-        }
+        foldStats(spark, targetDir, statField, g)
         graft.MarkerStore.commitGen(spark, targetDir, g, tail.max)
         Some(g)
       }

@@ -631,6 +631,33 @@ class ApSpec extends SparkSuite {
       s"regimes disagree: local=${loc.exemplars} dist=${dist.exemplars}")
   }
 
+  test("driver median by selection is bit-identical to the sorted array's median") {
+    def bySort(v: Array[Double]): Double = {
+      val w = v.clone()
+      java.util.Arrays.sort(w)
+      val h = w.length / 2
+      if (w.isEmpty) 0.0 else if (w.length % 2 == 1) w(h) else 0.5 * w(h - 1) + 0.5 * w(h)
+    }
+    val rng = new scala.util.Random(11)
+    val specials = Array(-0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.NaN, 1.0, -1.0)
+    val cases: Seq[Array[Double]] =
+      Seq(Array.empty[Double], Array(2.5), Array(0.0, -0.0), Array(-0.0, 0.0),
+        Array(Double.NaN, 1.0), Array(3.0, 1.0, 2.0), Array.fill(1000)(-0.0)) ++
+      Seq(1, 2, 5, 6, 101, 1000, 1001, 4096).flatMap { n =>
+        Seq(Array.fill(n)(rng.nextGaussian()),
+          Array.fill(n)(rng.nextInt(3).toDouble - 1.0),
+          Array.fill(n)(specials(rng.nextInt(specials.length))),
+          Array.tabulate(n)(j => j.toDouble), Array.tabulate(n)(j => -j.toDouble))
+      }
+    cases.foreach { v =>
+      val want = bySort(v)
+      val got = AffinityPropagation.median(v.clone())
+      assert(java.lang.Double.doubleToLongBits(got) == java.lang.Double.doubleToLongBits(want),
+        s"median $got != sort's $want on n = ${v.length}: ${v.take(12).mkString(",")}")
+    }
+  }
+
   test("ap_dist_exemplars fixture has a comfortable diagonal margin (no near-tie flake)") {
     // round-8 ADVICE: the ap_dist_exemplars query REQUIRES exact
     // exemplar-set equality between the distributed loop and the local

@@ -131,6 +131,43 @@ class StoreSchemaSpec extends SparkSuite {
     assert(inferred(s"$t/gen=1/moment") === Pq.momentSchema)
   }
 
+  test("index store: declared meta/cents/codebooks/rot schemas equal a fresh store's inferred schemas") {
+    val vecs = vecsOf((i, j) => (i + j).toDouble)
+    val t = tempDir("graft-schema-ix-model")
+    Pq.writeIndex(residualIndex(vecs), t)
+    assert(inferred(s"$t/gen=1/meta") === Pq.metaSchema)
+    assert(inferred(s"$t/gen=1/cents") === Pq.centsSchema)
+    assert(inferred(s"$t/gen=1/codebooks") === Pq.codebooksSchema)
+    val opq = tempDir("graft-schema-ix-rot")
+    Pq.writeIndex(Pq.indexOf(vecs, "embedding", Pq.fitIvfPqRotated(vecs, "embedding")), opq)
+    assert(inferred(s"$opq/gen=1/meta") === Pq.metaSchema)
+    assert(inferred(s"$opq/gen=1/rot") === Pq.rotSchema)
+  }
+
+  test("sink stats logs: declared schemas equal a fresh store's inferred schemas, live and folded by compaction") {
+    import spark.implicits._
+    import graft.streaming.Streams
+    val lex = tempDir("graft-schema-stats-lex")
+    Streams.initDedupCorpus(
+      Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma epsilon")).toDF("doc_id", "text"),
+      lex)
+    Streams.applyDedupBatch(Seq((10L, "zeta eta theta iota")).toDF("doc_id", "text"), 0L, lex)
+    val sem = tempDir("graft-schema-stats-sem")
+    Streams.initSemanticDedupCorpus((0 until 40)
+      .map(i => (i.toLong, Seq.tabulate(8)(j => (i * 8 + j).toDouble)))
+      .toDF("doc_id", "embedding"), sem)
+    Streams.applySemanticDedupBatch((100 until 110)
+      .map(i => (i.toLong, Seq.tabulate(8)(j => (i * 8 - j).toDouble)))
+      .toDF("doc_id", "embedding"), 0L, sem)
+    Seq(lex -> Streams.lexStatField, sem -> Streams.semStatField).foreach { case (t, f) =>
+      val declared = Streams.statsSchema(f)
+      assert(inferred(s"$t/_stats/0") === declared)
+      if (t == lex) Streams.vacuumDedupCorpus(spark, t)
+      else Streams.vacuumSemanticCorpus(spark, t)
+      assert(inferred(s"$t/gen=1/stats") === declared)
+    }
+  }
+
   test("generation-model cache: a new generation reloads; an unknown family tag fails loud through the cache") {
     val t = tempDir("graft-schema-cache")
     try {

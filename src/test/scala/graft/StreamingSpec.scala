@@ -917,7 +917,42 @@ class StreamingSpec extends SparkSuite {
       emb.filter(col("doc_id") % 3 === 1), one.unionByName(one),
       Streams.applySemanticDedupBatch(_, _, _))
     info(s"semantic batch: kept $n, (SQL executions, jobs) = $cost")
-    assert(cost == ((22, 47)), s"semantic per-batch budget moved: $cost")
+    // the batch's cold index load reads meta, cents and codebooks under
+    // declared schemas: one collect job each, no footer-inference job
+    assert(cost == ((22, 44)), s"semantic per-batch budget moved: $cost")
+  }
+
+  test("stored search over a semantic store runs a fixed action budget at 1, 2 and 3 docs parts; a compaction runs a fixed budget") {
+    // every docs part reads under the store's declared schema, so the
+    // search's job count does not grow with the increment tail
+    import spark.implicits._
+    import graft.functions.Pq
+    val emb = Tables.embeddings(spark, sf001)
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    val target = tempDir("graft-sem-search-pin")
+    val indexDir = s"$target/_index"
+    Streams.initSemanticDedupCorpus(emb.filter(col("doc_id") % 4 === 0), target)
+    val qids = emb.filter(col("doc_id") % 4 === 0).select("doc_id").orderBy("doc_id")
+      .limit(16).collect().map(_.getLong(0)).toSeq.toDF("vec_id")
+    def searchCost(): (Int, Int) = {
+      Pq.readIndex(spark, indexDir) // the generation model is cached
+      actionsDuring {
+        Pq.ivfAdcTopk(Streams.readSemanticCorpus(spark, target), "embedding",
+          Pq.readIndex(spark, indexDir), 5, 8, "doc_id", Some(qids)).collect()
+        ()
+      }
+    }
+    val costs = Seq(searchCost()) ++ (1 to 2).map { i =>
+      assert(Streams.applySemanticDedupBatch(
+        emb.filter(col("doc_id") % 4 === i), i.toLong, target) >= 0)
+      searchCost()
+    }
+    info(s"search (SQL executions, jobs) at 1, 2, 3 docs parts: $costs")
+    assert(costs.distinct.size == 1, s"the search budget grows with the docs parts: $costs")
+    assert(costs.head == ((1, 7)), s"stored search budget moved: ${costs.head}")
+    val compact = actionsDuring { Streams.vacuumSemanticCorpus(spark, target); () }
+    info(s"compaction (SQL executions, jobs) = $compact")
+    assert(compact == ((12, 14)), s"compaction budget moved: $compact")
   }
 
   test("semantic ingest-dedup sink: IVF candidates + exact rerank, keep ≡ same-pair replay, recall floor, drift refit") {
