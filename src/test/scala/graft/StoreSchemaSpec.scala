@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-21 optimization pins: the store readers now pass EXPLICIT
-  * schemas (killing the per-relation footer-inference job the ingest
-  * sinks paid per micro-batch), which silently trusts the writers. This
+/** Declared-schema pins: every store reader passes an EXPLICIT schema
+  * (the corpus datasets, their sidecars and stats logs, the index's
+  * homes/codes/moments and its generation model), killing the
+  * per-relation footer-inference job a schema-less read runs, which
+  * silently trusts the writers. This
   * suite keeps that trust honest — each declared schema must equal the
   * schema a freshly-written store INFERS, so any writer change that
   * would drift the layout fails here instead of surfacing as null
@@ -159,13 +161,14 @@ class StoreSchemaSpec extends SparkSuite {
     Streams.applySemanticDedupBatch((100 until 110)
       .map(i => (i.toLong, Seq.tabulate(8)(j => (i * 8 - j).toDouble)))
       .toDF("doc_id", "embedding"), 0L, sem)
-    Seq(lex -> Streams.lexStatField, sem -> Streams.semStatField).foreach { case (t, f) =>
-      val declared = Streams.statsSchema(f)
-      assert(inferred(s"$t/_stats/0") === declared)
-      if (t == lex) Streams.vacuumDedupCorpus(spark, t)
-      else Streams.vacuumSemanticCorpus(spark, t)
-      assert(inferred(s"$t/gen=1/stats") === declared)
-    }
+    Seq((lex, Streams.lexStatField, () => Streams.vacuumDedupCorpus(spark, lex)),
+        (sem, Streams.semStatField, () => Streams.vacuumSemanticCorpus(spark, sem)))
+      .foreach { case (t, f, vacuum) =>
+        val declared = Streams.statsSchema(f)
+        assert(inferred(s"$t/_stats/0") === declared)
+        vacuum()
+        assert(inferred(s"$t/gen=1/stats") === declared)
+      }
   }
 
   test("generation-model cache: a new generation reloads; an unknown family tag fails loud through the cache") {
