@@ -106,6 +106,15 @@ class BpeSpec extends SparkSuite {
     }
   }
 
+  test("batched trainer runs a pinned action budget and leaves nothing persisted") {
+    val d = Tables.documents(spark, sf001).limit(200)
+    d.schema // the fixture's footer read happens before the measured call
+    val before = persistedIds
+    val cost = actionsDuring { Bpe.trainBatched(d, 24, batch = 8); () }
+    assert(persistedIds == before)
+    assert(cost == ((8, 13)), s"(SQL executions, jobs) per call: $cost")
+  }
+
   test("applyMergesFast is bit-identical to the replace chain (16 and 64-merge vocabs)") {
     val d = Tables.documents(spark, sf001)
     for (vocab <- Seq(queries.TextOps.pinnedBpeVocab,

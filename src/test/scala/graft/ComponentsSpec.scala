@@ -465,6 +465,86 @@ class ComponentsSpec extends SparkSuite {
     assert(all((200L, 201L)) == ((2L, 100000L)))
   }
 
+  test("iterative graph loops run a pinned action budget and keep persisted only what the result reads") {
+    // Each call runs on a fresh session (its last-run slots start
+    // empty) over the fixtures of the tests above; after a normal
+    // return the persisted RDDs are the ones found plus the checkpoints
+    // the result reads, nothing else.
+    def budget(name: String)(f: org.apache.spark.sql.SparkSession => DataFrame): (String, (Int, Int)) = {
+      val s = spark.newSession()
+      val before = persistedIds
+      var out: DataFrame = null
+      val cost = actionsDuring { out = f(s); () }
+      val reads = Checkpoints.checkpointRdds(out).map(_.id).toSet
+      assert(persistedIds == before ++ reads,
+        s"$name left persisted ${persistedIds -- before -- reads} beyond what its result reads")
+      SessionResources.release(s)
+      name -> cost
+    }
+    def chainPairs(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      val nodes = ((1L to 10L) ++ Seq(20L, 21L, 22L, 30L)).toDF("id")
+      val pairs = ((1L to 9L).map(i => (i, i + 1)) ++
+        Seq((20L, 21L), (21L, 22L), (20L, 22L), (41L, 40L))).toDF("id_a", "id_b")
+      (nodes, pairs)
+    }
+    val got = Seq(
+      budget("componentsStars") { s =>
+        val (nodes, pairs) = chainPairs(s)
+        queries.Dedup.componentsStars(nodes, pairs.select(col("id_a").as("u"), col("id_b").as("v")))
+      },
+      budget("connectedComponentsPropagation") { s =>
+        val (nodes, pairs) = chainPairs(s)
+        queries.Dedup.connectedComponentsPropagation(nodes, pairs)
+      },
+      budget("pagerankEdges") { s =>
+        import s.implicits._
+        Graft.pagerank(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 2L)).toDF("src", "dst"),
+          "src", "dst", iters = 64, symmetrize = false, tolNano = 1L)
+      },
+      budget("kcoreNodes") { s =>
+        import s.implicits._
+        Graft.kcore(Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+          (4L, 5L), (5L, 6L)).toDF("a", "b"), "a", "b", k = 2)
+      },
+      budget("hierFlatten") { s =>
+        import s.implicits._
+        Graft.hierFlatten(Seq((1L, 1L), (2L, 1L), (3L, 2L), (4L, 3L), (5L, 4L),
+          (10L, 10L), (11L, 10L), (12L, 10L), (13L, 11L)).toDF("n", "p"), "n", "p")
+      },
+      budget("bfsDistances") { s =>
+        import s.implicits._
+        Graft.bfsDistances(((1L until 10L).map(i => (i, i + 1)) :+ ((100L, 101L))).toDF("s", "d"),
+          "s", "d", Seq(1L).toDF("n"), "n", maxDist = 6)
+      },
+      budget("ssspBounded") { s =>
+        import s.implicits._
+        Graft.shortestPaths(Seq((1L, 2L, 1L), (2L, 4L, 1L), (1L, 4L, 5L), (4L, 5L, 2L),
+          (7L, 8L, 3L)).toDF("s", "d", "w"), "s", "d", "w", Seq(1L).toDF("n"), "n", maxRounds = 4)
+      },
+      budget("randomWalks") { s =>
+        import s.implicits._
+        Graft.randomWalks(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("a", "b"),
+          "a", "b", steps = 64)
+      },
+      budget("node2vecWalks") { s =>
+        import s.implicits._
+        Graft.node2vecWalks(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("a", "b"),
+          "a", "b", steps = 64)
+      }).toMap
+    val pinned = Map(
+      "componentsStars" -> ((16, 47)),
+      "connectedComponentsPropagation" -> ((21, 52)),
+      "pagerankEdges" -> ((18, 166)),
+      "kcoreNodes" -> ((10, 22)),
+      "hierFlatten" -> ((7, 18)),
+      "bfsDistances" -> ((15, 43)),
+      "ssspBounded" -> ((16, 34)),
+      "randomWalks" -> ((9, 23)),
+      "node2vecWalks" -> ((9, 46)))
+    assert(got == pinned, s"(SQL executions, jobs) per call: $got")
+  }
+
   test("union-find regime routes by the edge cap (stars ≡ local above it)") {
     import spark.implicits._
     // Same chain through the public entry with the ids NON-integral

@@ -46,6 +46,10 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   protected def lastRunIds(s: SparkSession, slot: String): Seq[Int] =
     held(s, slot).values.toSeq.flatMap(_.asInstanceOf[Seq[Int]])
 
+  /** The ids of every RDD the SparkContext holds persisted. */
+  protected def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   /** (SQL executions, Spark jobs) started while `f` runs, waiting for
     * the listener bus to quiesce before reading. `onJob` also runs on
     * every job start. */
