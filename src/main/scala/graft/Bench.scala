@@ -456,7 +456,8 @@ object Bench {
     // maxIter=200 — each of the 2000 replica micro-clusters holds a
     // 25-way exemplar election that never sits still for 15 consecutive
     // iterations at λ=0.5 — while λ=0.7 settles it in 29 iterations
-    // (ApConv50Probe, round 11; N=20 k still converges at rung 1).
+    // (a round-11 probe ladder, BENCH_NOTES §18; N=20 k still converges
+    // at rung 1).
     // Returns (result, ladder wall incl. failed rungs, final-run wall,
     // jitter, λ) — two walls so the record can't read as if the
     // CONVERGING run itself cost the failed rungs' iterations.

@@ -517,42 +517,44 @@ object AffinityPropagation {
     // carry; cached Results opt out via autoRelease = false).
     lastRun.release(spark)
 
-    // ONE job materializes the init checkpoint and counts its rows: the
-    // count runs on the checkpoint's own RDD, not as a Dataset action.
-    val init = MessageBlocks.triples(msgs0).localCheckpoint(eager = false)
-    val msgRows = graft.Checkpoints.checkpointRdds(init).map(_.count()).sum
-    // The init relation is materialized — upstream storage (e.g.
-    // solveFromSimilarities' sims cache) can be dropped NOW instead of
-    // after the whole loop (round-9 ADVICE).
-    onInitMaterialized()
-    val dp = sc.defaultParallelism
-    val sizeParts = math.min(dp, (msgRows * 48L / (16L << 20)).toInt + 1)
-    val parts = spark.conf.getOption("spark.graft.ap.loopPartitions")
-      .map(_.toInt)
-      .getOrElse(if (sizeParts <= 1) 1 else math.max(math.min(8, dp), sizeParts))
-    if (parts == 1) {
-      val t = try MessageBlocks.collect(init) finally graft.Checkpoints.release(init)
-      inProcess(t, pref, jitter, damping, maxIter, convergenceIter)
-    } else {
-      val cadence =
-        if (checkEvery > 0) checkEvery
-        else if (msgRows <= CadenceRowCap) 5
-        else 1
-      val rule = new StopRule(convergenceIter)
-      val (it, converged, finalMsgs) =
-        chain(resolved(init, pref, jitter), parts, damping, maxIter, cadence, rule)
-      // finalMsgs is a materialized checkpoint — the one pinned RDD the
-      // Result keeps alive, registered for release at the next run's
-      // start (unless the caller owns its lifetime). The Result holds
-      // the RDD, not a DataFrame: a DataFrame strongly references its
-      // SparkSession, and a cached Result in a session slot must not
-      // (round-8 ADVICE); messages rebuilds on the caller's
-      // active/default session.
-      if (autoRelease) lastRun.record(spark, Seq(finalMsgs))
-      Result(() => sessionForResult().createDataFrame(
-          finalMsgs.flatMap(MessageBlocks.rows), MessageBlocks.schema),
-        rule.exemplars.toSeq.sorted, it, converged, rule.trajectory.toSeq, Seq(finalMsgs.id))
-    }
+    graft.Checkpoints.scoped { cs =>
+      // ONE job materializes the init checkpoint and counts its rows: the
+      // count runs on the checkpoint's own RDD, not as a Dataset action.
+      val init = cs.hold(MessageBlocks.triples(msgs0).localCheckpoint(eager = false))
+      val msgRows = graft.Checkpoints.checkpointRdds(init).map(_.count()).sum
+      // The init relation is materialized — upstream storage (e.g.
+      // solveFromSimilarities' sims cache) can be dropped NOW instead of
+      // after the whole loop (round-9 ADVICE).
+      onInitMaterialized()
+      val dp = sc.defaultParallelism
+      val sizeParts = math.min(dp, (msgRows * 48L / (16L << 20)).toInt + 1)
+      val parts = spark.conf.getOption("spark.graft.ap.loopPartitions")
+        .map(_.toInt)
+        .getOrElse(if (sizeParts <= 1) 1 else math.max(math.min(8, dp), sizeParts))
+      // one partition: the collected triples leave the scope, which
+      // frees the init before the in-process solve
+      if (parts == 1) Left(MessageBlocks.collect(init))
+      else {
+        val cadence =
+          if (checkEvery > 0) checkEvery
+          else if (msgRows <= CadenceRowCap) 5
+          else 1
+        val rule = new StopRule(convergenceIter)
+        val (it, converged, finalMsgs) =
+          chain(resolved(init, pref, jitter), parts, damping, maxIter, cadence, rule)
+        // finalMsgs is a materialized checkpoint — the one pinned RDD the
+        // Result keeps alive, registered for release at the next run's
+        // start (unless the caller owns its lifetime). The Result holds
+        // the RDD, not a DataFrame: a DataFrame strongly references its
+        // SparkSession, and a cached Result in a session slot must not
+        // (round-8 ADVICE); messages rebuilds on the caller's
+        // active/default session.
+        if (autoRelease) lastRun.record(spark, Seq(finalMsgs))
+        Right(Result(() => sessionForResult().createDataFrame(
+            finalMsgs.flatMap(MessageBlocks.rows), MessageBlocks.schema),
+          rule.exemplars.toSeq.sorted, it, converged, rule.trajectory.toSeq, Seq(finalMsgs.id)))
+      }
+    }.fold(inProcess(_, pref, jitter, damping, maxIter, convergenceIter), identity)
   }
 
   /** Opt-in oscillation guard ([FD07]'s noise remedy): s += jitter ·
@@ -742,57 +744,42 @@ object AffinityPropagation {
   private def chain(init: DataFrame, parts: Int, damping: Double, maxIter: Int,
       cadence: Int, rule: StopRule): (Int, Boolean, RDD[MsgBlock]) = {
     val sc = init.sparkSession.sparkContext
-    val (gen0, homes) = MessageBlocks.layout(init, parts)
-    var it = 0
-    var converged = false
-    var msgs = gen0.localCheckpoint()
-
-    while (it < maxIter && !converged) {
-      // Chain up to `cadence` generations, each behind its own LAZY
-      // localCheckpoint, then ONE collect materializes the whole chain:
-      // the job computes every generation's partitions in sequence,
-      // persisting each as it streams by, so the later generations and
-      // the extra union branches read one computation.
-      val step = math.min(cadence, maxIter - it)
-      var cur = msgs
-      val intermediates = scala.collection.mutable.ArrayBuffer.empty[RDD[MsgBlock]]
-      for (_ <- 1 to step) {
-        cur = MessageBlocks.iterate(cur, parts, damping).localCheckpoint()
-        intermediates += cur
+    graft.Checkpoints.scoped { cs =>
+      // Generation 0 holds the init relation and the homes: the first
+      // chunk's landing frees them, as each landing frees every
+      // generation but the kept one — the previous chunk's final AND the
+      // chunk's non-kept intermediates; without this the loop pins up to
+      // maxIter generations of dead checkpoint storage.
+      val (msgs, it, converged) = cs.rounds(maxIter) {
+        cs.hold(init)
+        val (gen0, homes) = MessageBlocks.layout(init, parts)
+        cs.hold(homes)
+        (cs.hold(gen0.localCheckpoint()), 0, false)
+      }(st => st._3 || st._2 >= maxIter) { case ((msgs, it, _), _) =>
+        // Chain up to `cadence` generations, each behind its own LAZY
+        // localCheckpoint, then ONE collect materializes the whole chain:
+        // the job computes every generation's partitions in sequence,
+        // persisting each as it streams by, so the later generations and
+        // the extra union branches read one computation.
+        val step = math.min(cadence, maxIter - it)
+        val intermediates = (1 to step).scanLeft(msgs)((g, _) =>
+          cs.hold(MessageBlocks.iterate(g, parts, damping).localCheckpoint())).tail
+        // The materializing action: every generation's exemplar ids,
+        // tagged by position in the chunk — only those leave the cluster.
+        val byGen: Map[Int, Set[Long]] = sc
+          .union(intermediates.zipWithIndex.map { case (g, j) =>
+            g.flatMap(b => MessageBlocks.exemplars(b).map(k => (j, k)))
+          })
+          .collect()
+          .groupBy(_._1)
+          .map { case (j, ks) => j -> ks.map(_._2).toSet }
+        // Run the rule over the chunk's per-iteration sets; stop at the
+        // exact generation where it fires.
+        val stopAt = (0 until step).find(j => rule.fires(byGen.getOrElse(j, Set.empty[Long])))
+        stopAt.fold((intermediates.last, it + step, false))(j => (intermediates(j), it + j + 1, true))
       }
-      // The materializing action: every generation's exemplar ids,
-      // tagged by position in the chunk — only those leave the cluster.
-      val byGen: Map[Int, Set[Long]] = sc
-        .union(intermediates.zipWithIndex.map { case (g, j) =>
-          g.flatMap(b => MessageBlocks.exemplars(b).map(k => (j, k)))
-        }.toSeq)
-        .collect()
-        .groupBy(_._1)
-        .map { case (j, ks) => j -> ks.map(_._2).toSet }
-      // Run the rule over the chunk's per-iteration sets; stop at the
-      // exact generation where it fires.
-      var stopAt = -1
-      var j = 0
-      while (j < step && stopAt < 0) {
-        if (rule.fires(byGen.getOrElse(j, Set.empty[Long]))) stopAt = j
-        j += 1
-      }
-      converged = stopAt >= 0
-      it += (if (converged) stopAt + 1 else step)
-      val keep = if (converged) intermediates(stopAt) else intermediates.last
-      // Every other generation is superseded — the previous chunk's
-      // final AND the chunk's non-kept intermediates (same discipline
-      // as Dedup's fixpoints, graft.Checkpoints): without this the loop
-      // pins up to maxIter generations of dead checkpoint storage. The
-      // init relation and the homes are read only by generation 0.
-      // Must happen AFTER the collect above: that job reads the old
-      // generations to compute the new ones.
-      if (msgs eq gen0) { graft.Checkpoints.release(init); homes.unpersist(false) }
-      msgs.unpersist(false)
-      intermediates.foreach(g => if (!(g eq keep)) g.unpersist(false))
-      msgs = keep
+      (it, converged, msgs)
     }
-    (it, converged, msgs)
   }
 
   /** Assignment given an exemplar set: label(i) = argmax_{k∈E} s(i,k),

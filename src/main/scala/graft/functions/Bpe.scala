@@ -150,53 +150,45 @@ object Bpe {
       batch: Int = 16, textCol: String = "text"): Seq[Seq[(String, String)]] = {
     require(merges > 0, s"Bpe.trainBatched: merges must be positive, got $merges")
     require(batch > 0, s"Bpe.trainBatched: batch must be positive, got $batch")
-    val base = wordFreq(docs, textCol)
-      .withColumn("rep", wrapChars(col("w")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-    var prevCk: Option[DataFrame] = None
-    try {
-      var cur = base
+    graft.Checkpoints.scoped { s =>
+      val base = s.persist(wordFreq(docs, textCol)
+        .withColumn("rep", wrapChars(col("w"))),
+        org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       val table = Seq.newBuilder[Seq[(String, String)]]
-      var total = 0
-      var done = false
-      while (total < merges && !done) {
-        val want = math.min(batch, merges - total)
-        val cand = pairCounts(cur)
-          .orderBy(desc("c"), asc("l"), asc("r"))
-          .limit(want * 4).collect()
-        if (cand.isEmpty) done = true
-        else {
-          val used = scala.collection.mutable.Set.empty[String]
-          val picked = Seq.newBuilder[(String, String)]
-          var i = 0
-          var n = 0
-          while (i < cand.length && n < want) {
-            val (l, r) = (cand(i).getString(0), cand(i).getString(1))
-            if (!used(l) && !used(r)) {
-              // the merged OUTPUT symbol is reserved too (review round
-              // 15): a later same-round pick reading l+r as its own l
-              // or r would merge occurrences the earlier pick CREATES
-              // after counting — e.g. picks (a,bc) then (abc,x) — so
-              // its count would no longer be true within the round
-              picked += ((l, r)); used += l; used += r; used += l + r; n += 1
+      // state: (representation, merges so far, corpus exhausted); each
+      // round's checkpoint is freed once the next round's lands
+      s.rounds(merges)((base, 0, false))(st => st._3 || st._2 >= merges) {
+        case ((cur, total, _), _) =>
+          val want = math.min(batch, merges - total)
+          val cand = pairCounts(cur)
+            .orderBy(desc("c"), asc("l"), asc("r"))
+            .limit(want * 4).collect()
+          if (cand.isEmpty) (cur, total, true)
+          else {
+            val used = scala.collection.mutable.Set.empty[String]
+            val picked = Seq.newBuilder[(String, String)]
+            var i = 0
+            var n = 0
+            while (i < cand.length && n < want) {
+              val (l, r) = (cand(i).getString(0), cand(i).getString(1))
+              if (!used(l) && !used(r)) {
+                // the merged OUTPUT symbol is reserved too (review round
+                // 15): a later same-round pick reading l+r as its own l
+                // or r would merge occurrences the earlier pick CREATES
+                // after counting — e.g. picks (a,bc) then (abc,x) — so
+                // its count would no longer be true within the round
+                picked += ((l, r)); used += l; used += r; used += l + r; n += 1
+              }
+              i += 1
             }
-            i += 1
+            val sel = picked.result() // never empty: the first candidate always selects
+            table += sel
+            (s.pin(cur.withColumn("rep", sel.foldLeft(col("rep")) {
+              case (c, (l, r)) => applyOne(c, l, r)
+            })), total + sel.size, false)
           }
-          val sel = picked.result() // never empty: the first candidate always selects
-          table += sel
-          total += sel.size
-          val next = cur.withColumn("rep", sel.foldLeft(col("rep")) {
-            case (c, (l, r)) => applyOne(c, l, r)
-          }).localCheckpoint(true)
-          prevCk.foreach(graft.Checkpoints.release)
-          prevCk = Some(next)
-          cur = next
-        }
       }
       table.result()
-    } finally {
-      base.unpersist(false)
-      prevCk.foreach(graft.Checkpoints.release)
     }
   }
 

@@ -44,36 +44,7 @@ object Ivf {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
     require(sample.nonEmpty, "Ivf.seeds: empty input")
-
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
-      s
-    }
-
-    val chosen = scala.collection.mutable.ArrayBuffer(sample.minBy(_._1))
-    val minD = Array.fill(sample.length)(Double.PositiveInfinity)
-    var exhausted = false
-    while (chosen.length < math.min(k, sample.length) && !exhausted) {
-      var bi = -1; var bd = -1.0
-      var i = 0
-      while (i < sample.length) {
-        val dd = math.min(minD(i), d2(sample(i)._2, chosen.last._2))
-        minD(i) = dd
-        // strict > with ascending scan ⇒ ties resolve to the smallest
-        // sample index — deterministic
-        if (dd > bd) { bd = dd; bi = i }
-        i += 1
-      }
-      // bd == 0 ⇒ every remaining sample point coincides with a chosen
-      // seed (duplicate embeddings — plausible in a dedup corpus). Stop
-      // rather than emit duplicate seeds: downstream bucket assignment
-      // has no distinct, and a duplicated centroid would let the same
-      // neighbor fill two of the top-k rank slots (round-2 ADVICE).
-      if (bd <= 0.0) exhausted = true
-      else chosen += sample(bi)
-    }
-    chosen.map { case (id, v) => (id, v.toSeq) }.toSeq
+    farthestPicks(sample.toIndexedSeq, k).map { p => (sample(p)._1, sample(p)._2.toSeq) }
   }
 
   /** Bounded-sample Lloyd refinement of [[seeds]] — engaged on the
@@ -291,31 +262,11 @@ object Ivf {
       treeAssignments(vecs, cents, nprobe, dist, sprobe, branch, flat)
     else {
       // driver-side second level over the (small) centroid set
-      def d2(a: Seq[Double], b: Seq[Double]): Double = {
-        var s = 0.0; var i = 0
-        while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
-        s
-      }
       val superK = math.max(2, math.ceil(math.sqrt(c.toDouble)).toInt)
       // farthest-point over the centroid vectors themselves (ids 0..)
-      val centVecs = cents.map { case (id, v) => (id, v) }
-      val supers = {
-        val chosen = scala.collection.mutable.ArrayBuffer(centVecs.minBy(_._1))
-        val minD = Array.fill(centVecs.length)(Double.PositiveInfinity)
-        var exhausted = false
-        while (chosen.length < math.min(superK, centVecs.length) && !exhausted) {
-          var bi = -1; var bd = -1.0
-          var i = 0
-          while (i < centVecs.length) {
-            val dd = math.min(minD(i), d2(centVecs(i)._2, chosen.last._2))
-            minD(i) = dd
-            if (dd > bd) { bd = dd; bi = i }
-            i += 1
-          }
-          if (bd <= 0.0) exhausted = true else chosen += centVecs(bi)
-        }
-        chosen.zipWithIndex.map { case ((_, v), si) => (si.toLong, v) }.toSeq
-      }
+      val centVecs = cents.map { case (id, v) => (id, v.toArray) }.toIndexedSeq
+      val supers = farthestPicks(centVecs, superK).zipWithIndex
+        .map { case (p, si) => (si.toLong, centVecs(p)._2) }
       // membership: each centroid under its euclidean-nearest super
       // (ties → smallest super id — deterministic)
       val members = centVecs.map { case (cid, cv) =>
@@ -329,7 +280,7 @@ object Ivf {
       val sample = vecs.select(col("vec_id"), col("v"))
         .orderBy(xxhash64(col("vec_id")), col("vec_id"))
         .limit(AgreementProbeSample)
-        .collect().map(_.getSeq[Double](1).toArray.toSeq)
+        .collect().map(_.getSeq[Double](1).toArray)
       val agreed = sample.count { q =>
         val flatHome = centVecs.minBy { case (cid, cv) => (d2(q, cv), cid) }._1
         val nearSupers = supers.sortBy { case (sid, sv) => (d2(q, sv), sid) }
@@ -352,7 +303,8 @@ object Ivf {
       // the distance projections in WholeStageCodegen.
       graft.functions.ApAggs.register(spark)
       val vecSlim = vecs.select(col("vec_id"), col("v"))
-      val probed = vecSlim.crossJoin(broadcast(supers.toDF("s_id", "sv")))
+      val probed = vecSlim.crossJoin(broadcast(
+          supers.map { case (sid, sv) => (sid, sv.toSeq) }.toDF("s_id", "sv")))
         .select(col("vec_id"), col("s_id"),
           (-dist(col("v"), col("sv"))).as("negd"))
         .groupBy("vec_id")
@@ -361,7 +313,8 @@ object Ivf {
         .select(col("vec_id"), explode(col("keep.k")).as("s_id"))
       probed
         .join(vecSlim, "vec_id")
-        .join(broadcast(members.toDF("c_id", "s_id", "cv")), "s_id")
+        .join(broadcast(
+          members.map { case (cid, sid, cv) => (cid, sid, cv.toSeq) }.toDF("c_id", "s_id", "cv")), "s_id")
         .select(col("vec_id"), col("c_id"),
           (-dist(col("v"), col("cv"))).as("negd"))
         .groupBy("vec_id")
@@ -383,31 +336,41 @@ object Ivf {
       top: Seq[(Long, Array[Double])],
       down: List[Seq[(Long, Long, Array[Double])]])
 
-  @inline private def d2a(a: Array[Double], b: Array[Double]): Double = {
+  /** Squared euclidean distance, summed left to right. */
+  @inline private[functions] def d2(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
     s
   }
 
-  /** Greedy farthest-point pick of ≤ k vectors from a bounded sample —
-    * the same k-center 2-approximation (and the same smallest-id start,
-    * strict-> tie-break, and duplicate-stop) as [[seeds]], over
-    * driver-resident rows. */
-  private def farthestPicks(
-      sample: IndexedSeq[(Long, Array[Double])], k: Int): IndexedSeq[Array[Double]] = {
-    val chosen = scala.collection.mutable.ArrayBuffer(sample.minBy(_._1)._2)
-    val minD = Array.fill(sample.length)(Double.PositiveInfinity)
+  /** Greedy farthest-point pick (the k-center 2-approximation) of ≤ k
+    * rows of a non-empty driver-resident sample, as indices into it —
+    * the seeds, the two-level supers, the tree's parents and the PQ
+    * codebook init. The smallest id starts; each next pick is the row
+    * farthest from every pick so far, by a strict `>` over an ascending
+    * scan, so ties resolve to the smallest index — deterministic. When
+    * the farthest distance is 0, every remaining row coincides with a
+    * pick (duplicate embeddings — plausible in a dedup corpus): picking
+    * stops rather than emit duplicates, since downstream bucket
+    * assignment has no distinct and a duplicated centroid would let the
+    * same neighbor fill two of the top-k rank slots (round-2 ADVICE). */
+  private[functions] def farthestPicks(
+      sample: IndexedSeq[(Long, Array[Double])], k: Int): IndexedSeq[Int] = {
+    val vs = sample.iterator.map(_._2).toArray
+    val chosen = scala.collection.mutable.ArrayBuffer(sample.indices.minBy(sample(_)._1))
+    val minD = Array.fill(vs.length)(Double.PositiveInfinity)
     var exhausted = false
-    while (chosen.length < math.min(k, sample.length) && !exhausted) {
+    while (chosen.length < math.min(k, vs.length) && !exhausted) {
       var bi = -1; var bd = -1.0
+      val last = vs(chosen.last)
       var i = 0
-      while (i < sample.length) {
-        val dd = math.min(minD(i), d2a(sample(i)._2, chosen.last))
+      while (i < vs.length) {
+        val dd = math.min(minD(i), d2(vs(i), last))
         minD(i) = dd
         if (dd > bd) { bd = dd; bi = i }
         i += 1
       }
-      if (bd <= 0.0) exhausted = true else chosen += sample(bi)._2
+      if (bd <= 0.0) exhausted = true else chosen += bi
     }
     chosen.toIndexedSeq
   }
@@ -436,7 +399,7 @@ object Ivf {
           (scala.util.hashing.byteswap64(id), id)
         }.take(2 * k).toIndexedSeq
       val parents: Seq[(Long, Array[Double])] =
-        farthestPicks(sample, k).zipWithIndex.map { case (v, i) => (i.toLong, v) }
+        farthestPicks(sample, k).zipWithIndex.map { case (p, i) => (i.toLong, sample(p)._2) }
       val upper = buildTree(parents, branch, sprobe)
       val maps = levelMaps(upper.down)
       val lvl = nodes.map { case (id, v) =>
@@ -444,7 +407,7 @@ object Ivf {
           // every probed branch childless (rare): exact scan of the k
           // parents for THIS node — no child may be left unreachable,
           // or its whole subtree would silently drop from the index
-          case -1L => parents.minBy { case (pid, pv) => (d2a(v, pv), pid) }._1
+          case -1L => parents.minBy { case (pid, pv) => (d2(v, pv), pid) }._1
           case p0 => p0
         }
         (id, p, v)
@@ -500,12 +463,12 @@ object Ivf {
       q: Array[Double], sprobe: Int): Long = {
     var cand: Seq[(Long, Array[Double])] = tree.top
     maps.foreach { m =>
-      val kept = cand.sortBy { case (id, v) => (d2a(q, v), id) }
+      val kept = cand.sortBy { case (id, v) => (d2(q, v), id) }
         .take(sprobe).map(_._1)
       cand = kept.flatMap(id => m.getOrElse(id, Nil))
     }
     if (cand.isEmpty) -1L
-    else cand.minBy { case (id, v) => (d2a(q, v), id) }._1
+    else cand.minBy { case (id, v) => (d2(q, v), id) }._1
   }
 
   /** MULTI-LEVEL assignment (c > [[MultiLevelThreshold]]) — the declared
@@ -548,7 +511,7 @@ object Ivf {
       .limit(TreeAgreementProbeSample)
       .collect().map(_.getSeq[Double](1).toArray)
     val agreed = sample.count { q =>
-      val flatHome = centArr.minBy { case (id, v) => (d2a(q, v), id) }._1
+      val flatHome = centArr.minBy { case (id, v) => (d2(q, v), id) }._1
       descend(tree, maps, q, sprobe) == flatHome
     }
     if (sample.nonEmpty &&

@@ -43,12 +43,6 @@ object Pq {
   final case class Model(m: Int, k: Int, sub: Int,
       codebooks: Array[Array[Array[Double]]])
 
-  @inline private def d2(a: Array[Double], b: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
-    s
-  }
-
   /** THE engine-normalized (vec_id, v) projection — one definition for
     * the ten call sites that each hand-rolled it (round-13 review). */
   private def normalize(vecs: DataFrame, vecCol: String,
@@ -127,24 +121,8 @@ object Pq {
           (id, java.util.Arrays.copyOfRange(x, b * sub, (b + 1) * sub))
         }.toIndexedSeq
       // farthest-point init (the Ivf discipline), then bounded Lloyd
-      var cents: IndexedSeq[Array[Double]] = {
-        val chosen = scala.collection.mutable.ArrayBuffer(
-          blockSample.minBy(_._1)._2)
-        val minD = Array.fill(blockSample.length)(Double.PositiveInfinity)
-        var exhausted = false
-        while (chosen.length < math.min(k, blockSample.length) && !exhausted) {
-          var bi = -1; var bd = -1.0
-          var i = 0
-          while (i < blockSample.length) {
-            val dd = math.min(minD(i), d2(blockSample(i)._2, chosen.last))
-            minD(i) = dd
-            if (dd > bd) { bd = dd; bi = i }
-            i += 1
-          }
-          if (bd <= 0.0) exhausted = true else chosen += blockSample(bi)._2
-        }
-        chosen.toIndexedSeq
-      }
+      var cents: IndexedSeq[Array[Double]] =
+        Ivf.farthestPicks(blockSample, k).map(blockSample(_)._2)
       var it = 0
       while (it < lloydIters) {
         val sums = Array.fill(cents.length)(new Array[Double](sub))
@@ -153,7 +131,7 @@ object Pq {
           var best = 0; var bd = Double.PositiveInfinity
           var c = 0
           while (c < cents.length) {
-            val dd = d2(x, cents(c))
+            val dd = Ivf.d2(x, cents(c))
             if (dd < bd) { bd = dd; best = c }
             c += 1
           }

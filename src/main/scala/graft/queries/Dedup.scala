@@ -1113,10 +1113,6 @@ object Dedup extends QueryGroup {
       .select("doc_a", "doc_b", "hamming").distinct()
   }
 
-  /** Unpersist the RDD behind a localCheckpoint'd DataFrame (shared
-    * release discipline — see [[graft.Checkpoints]]). */
-  private def releaseCheckpoint(df: DataFrame): Unit = graft.Checkpoints.release(df)
-
   /** Final-generation checkpoint of the LAST distributed components run
     * per session, released at the next run's start: the returned
     * DataFrame depends on its checkpoint (a localCheckpoint'd plan is
@@ -1341,37 +1337,29 @@ object Dedup extends QueryGroup {
     * step 0 = the start itself. */
   private[graft] def randomWalks(edges: DataFrame, steps: Int): DataFrame = {
     require(steps >= 1 && steps <= 64, s"randomWalks: steps in 1..64, got $steps")
-    val adj = edges.distinct()
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("u").orderBy("v")))
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy("u")))
-      .localCheckpoint(true)
-    var frontier = adj.select(col("u").as("start")).distinct()
-      .withColumn("step", lit(0L)).withColumn("cur", col("start"))
-    var out = frontier
-    // the pagerank checkpoint cadence (round-16 VERDICT #4): without it
-    // a 64-step caller's last frontier chains 64 joins of lineage and
-    // pays 64-deep Catalyst re-analysis per downstream branch; cutting
-    // every 8 hops bounds every union branch's plan depth at 8 joins.
-    // Interim checkpoints stay referenced by the later branches, so
-    // they release only after the output materializes (outCk below).
-    val interim = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (t <- 1 to steps) {
-      frontier = frontier
-        .join(adj, col("cur") === col("u"))
-        .filter(col("rn") === expr(s"${walkHashSql("start", t, "cur")} % deg + 1"))
-        .select(col("start"), lit(t.toLong).as("step"), col("v").as("cur"))
-      if (t % walkCheckpointEvery == 0 && t < steps) {
-        frontier = frontier.localCheckpoint(true)
-        interim += frontier
+    graft.Checkpoints.scoped { s =>
+      val adj = s.pin(edges.distinct()
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("u").orderBy("v")))
+        .withColumn("deg", count(lit(1)).over(Window.partitionBy("u"))))
+      val start = adj.select(col("u").as("start")).distinct()
+        .withColumn("step", lit(0L)).withColumn("cur", col("start"))
+      // the pagerank checkpoint cadence (round-16 VERDICT #4): without it
+      // a 64-step caller's last frontier chains 64 joins of lineage and
+      // pays 64-deep Catalyst re-analysis per downstream branch; cutting
+      // every 8 hops bounds every union branch's plan depth at 8 joins.
+      // Interim checkpoints stay referenced by the later branches, so
+      // they are freed only after the output materializes.
+      val (_, out) = (1 to steps).foldLeft((start, start)) { case ((frontier, out), t) =>
+        val next = frontier
+          .join(adj, col("cur") === col("u"))
+          .filter(col("rn") === expr(s"${walkHashSql("start", t, "cur")} % deg + 1"))
+          .select(col("start"), lit(t.toLong).as("step"), col("v").as("cur"))
+        val f = if (t % walkCheckpointEvery == 0 && t < steps) s.pin(next) else next
+        (f, out.unionByName(f))
       }
-      out = out.unionByName(frontier)
+      s.pin(out.select(col("start"), col("step"), col("cur").as("node")))
     }
-    val outCk = out.select(col("start"), col("step"), col("cur").as("node"))
-      .localCheckpoint(true)
-    releaseCheckpoint(adj)
-    interim.foreach(releaseCheckpoint)
-    outCk
   }
 
   /** Checkpoint cadence for the walk frontier — 8 hops ≈ the pagerank
@@ -1407,51 +1395,44 @@ object Dedup extends QueryGroup {
     require(wReturn >= 0 && wNear >= 0 && wFar >= 0 &&
       (wReturn max wNear max wFar) > 0,
       "node2vecWalks: weights must be non-negative, at least one positive")
-    val adj = edges.distinct()
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("u").orderBy("v")))
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy("u")))
-      .localCheckpoint(true)
-    val prevAdj = adj.select(col("u").as("pu"), col("v").as("pv"))
-    val start0 = adj.select(col("u").as("start")).distinct()
-      .withColumn("step", lit(0L))
-      .withColumn("prev", col("start")).withColumn("cur", col("start"))
-    var frontier = start0
-      .join(adj, col("cur") === col("u"))
-      .filter(col("rn") === expr(s"${walkHashSql("start", 1, "cur")} % deg + 1"))
-      .select(col("start"), lit(1L).as("step"),
-        col("cur").as("prev"), col("v").as("cur"))
-    var out = start0.select(col("start"), col("step"), col("cur"))
-      .unionByName(frontier.select(col("start"), col("step"), col("cur")))
-    val interim = scala.collection.mutable.Buffer.empty[DataFrame]
-    for (t <- 2 to steps) {
-      val scored = frontier
+    graft.Checkpoints.scoped { s =>
+      val adj = s.pin(edges.distinct()
+        .withColumn("rn", row_number().over(
+          Window.partitionBy("u").orderBy("v")))
+        .withColumn("deg", count(lit(1)).over(Window.partitionBy("u"))))
+      val prevAdj = adj.select(col("u").as("pu"), col("v").as("pv"))
+      val start0 = adj.select(col("u").as("start")).distinct()
+        .withColumn("step", lit(0L))
+        .withColumn("prev", col("start")).withColumn("cur", col("start"))
+      val first = start0
         .join(adj, col("cur") === col("u"))
-        .join(prevAdj, col("pu") === col("prev") && col("pv") === col("v"), "left")
-        .withColumn("w", when(col("v") === col("prev"), lit(wReturn.toLong))
-          .when(col("pv").isNotNull, lit(wNear.toLong))
-          .otherwise(lit(wFar.toLong)))
-        .withColumn("cw", sum(col("w")).over(
-          Window.partitionBy("start").orderBy("rn")))
-        .withColumn("tw", sum(col("w")).over(Window.partitionBy("start")))
-        .withColumn("h", expr(walkHashSql("start", t, "cur")))
-        .withColumn("r", col("h") % greatest(col("tw"), lit(1L)))
-      frontier = scored.filter(
-        (col("r") >= col("cw") - col("w") && col("r") < col("cw")) ||
-          (col("tw") === 0L && col("rn") === col("h") % col("deg") + 1L))
-        .select(col("start"), lit(t.toLong).as("step"),
+        .filter(col("rn") === expr(s"${walkHashSql("start", 1, "cur")} % deg + 1"))
+        .select(col("start"), lit(1L).as("step"),
           col("cur").as("prev"), col("v").as("cur"))
-      if (t % walkCheckpointEvery == 0 && t < steps) {
-        frontier = frontier.localCheckpoint(true)
-        interim += frontier
+      val out0 = start0.select(col("start"), col("step"), col("cur"))
+        .unionByName(first.select(col("start"), col("step"), col("cur")))
+      val (_, out) = (2 to steps).foldLeft((first, out0)) { case ((frontier, out), t) =>
+        val scored = frontier
+          .join(adj, col("cur") === col("u"))
+          .join(prevAdj, col("pu") === col("prev") && col("pv") === col("v"), "left")
+          .withColumn("w", when(col("v") === col("prev"), lit(wReturn.toLong))
+            .when(col("pv").isNotNull, lit(wNear.toLong))
+            .otherwise(lit(wFar.toLong)))
+          .withColumn("cw", sum(col("w")).over(
+            Window.partitionBy("start").orderBy("rn")))
+          .withColumn("tw", sum(col("w")).over(Window.partitionBy("start")))
+          .withColumn("h", expr(walkHashSql("start", t, "cur")))
+          .withColumn("r", col("h") % greatest(col("tw"), lit(1L)))
+        val next = scored.filter(
+          (col("r") >= col("cw") - col("w") && col("r") < col("cw")) ||
+            (col("tw") === 0L && col("rn") === col("h") % col("deg") + 1L))
+          .select(col("start"), lit(t.toLong).as("step"),
+            col("cur").as("prev"), col("v").as("cur"))
+        val f = if (t % walkCheckpointEvery == 0 && t < steps) s.pin(next) else next
+        (f, out.unionByName(f.select(col("start"), col("step"), col("cur"))))
       }
-      out = out.unionByName(frontier.select(col("start"), col("step"), col("cur")))
+      s.pin(out.select(col("start"), col("step"), col("cur").as("node")))
     }
-    val outCk = out.select(col("start"), col("step"), col("cur").as("node"))
-      .localCheckpoint(true)
-    releaseCheckpoint(adj)
-    interim.foreach(releaseCheckpoint)
-    outCk
   }
 
   /** graph_node2vec_walk's pinned parameters — weights (1, 2, 4) are
@@ -1530,92 +1511,82 @@ object Dedup extends QueryGroup {
         s"checkpointEvery=$checkpointEvery - lower checkpointEvery below " +
         "iters (boundaries are its multiples) or drop tolNano")
     val longLoop = iters > checkpointEvery
-    def pin(df: DataFrame): DataFrame =
-      if (longLoop) df.localCheckpoint(true) else df
-    val deg = pin(edges.groupBy("u").agg(count(lit(1)).as("d")))
-    val degE = pin(edges.join(deg, "u"))
-    val srcNodes = deg.select(col("u").as("node"))
-    // Sinks exist ⇔ some destination never sources an edge. One bounded
-    // probe (count of a left-anti join) decides whether the dangling
-    // machinery is planned at all — pure-source-set graphs (and every
-    // symmetrized graph) skip it entirely.
-    val sinks =
-      if (includeSinks)
-        pin(edges.select(col("v").as("node")).distinct()
-          .join(srcNodes, Seq("node"), "left_anti"))
-      else null
-    val haveSinks = includeSinks && sinks.limit(1).count() > 0
-    val nodes = pin(
-      if (haveSinks) srcNodes.unionByName(sinks) else srcNodes)
-    val fill = fillSourceless || haveSinks
-    // N rides a broadcast one-row relation (the corpus-total discipline)
-    val nRel = nodes.agg(count(lit(1)).as("cnt"))
-    var r = nodes.crossJoin(broadcast(nRel))
-      .select(col("node"), expr("1000000000 div cnt").as("r"))
-    var rAtBoundary = r
-    var prevCk: Option[DataFrame] = None
-    var i = 0
-    var converged = false
-    while (i < iters && !converged) {
-      i += 1
-      val agg = degE.join(r.withColumnRenamed("node", "u"), "u")
-        .select(col("v"), expr("r div d").as("share"))
-        .groupBy("v")
-        .agg(sum(col("share")).as("s"))
-        .withColumnRenamed("v", "node")
-      val filled = (if (fill) nodes.join(agg, Seq("node"), "left") else agg)
-        .crossJoin(broadcast(nRel))
-      r =
-        if (haveSinks) {
-          // dangling term: D div N extra inbound for every node, damped
-          // with the shares — Σ rank stays ≈ 10⁹ on any directed graph
-          val dRel = r.join(sinks, Seq("node"), "left_semi")
-            .agg(coalesce(sum(col("r")), lit(0L)).as("dmass"))
-          filled.crossJoin(broadcast(dRel))
-            .select(col("node"),
-              expr("(150000000 div cnt) + (85 * (coalesce(s, CAST(0 AS BIGINT))" +
-                " + dmass div cnt)) div 100").as("r"))
-        } else filled
-          .select(col("node"),
-            expr("(150000000 div cnt) + (85 * coalesce(s, CAST(0 AS BIGINT))) div 100").as("r"))
-      if (longLoop && i % checkpointEvery == 0 && i < iters) {
-        r = r.localCheckpoint(true)
-        if (tolNano > 0) {
-          val delta = r.join(
-            rAtBoundary.withColumnRenamed("r", "r_prev"), "node")
-            .agg(max(abs(col("r") - col("r_prev"))).as("d"))
-            .head().getLong(0)
-          converged = delta <= tolNano
-          rAtBoundary = r
-        }
-        // the superseded boundary checkpoint is read by nothing later —
-        // release it now (the componentsStars per-generation discipline)
-        prevCk.foreach(releaseCheckpoint)
-        prevCk = Some(r)
+    graft.Checkpoints.scoped { s =>
+      def pin(df: DataFrame): DataFrame = if (longLoop) s.pin(df) else df
+      val deg = pin(edges.groupBy("u").agg(count(lit(1)).as("d")))
+      val degE = pin(edges.join(deg, "u"))
+      val srcNodes = deg.select(col("u").as("node"))
+      // Sinks exist ⇔ some destination never sources an edge. One bounded
+      // probe (count of a left-anti join) decides whether the dangling
+      // machinery is planned at all — pure-source-set graphs (and every
+      // symmetrized graph) skip it entirely.
+      val sinks =
+        if (includeSinks)
+          pin(edges.select(col("v").as("node")).distinct()
+            .join(srcNodes, Seq("node"), "left_anti"))
+        else null
+      val haveSinks = includeSinks && sinks.limit(1).count() > 0
+      val nodes = pin(
+        if (haveSinks) srcNodes.unionByName(sinks) else srcNodes)
+      val fill = fillSourceless || haveSinks
+      // N rides a broadcast one-row relation (the corpus-total discipline)
+      val nRel = nodes.agg(count(lit(1)).as("cnt"))
+      val r0 = nodes.crossJoin(broadcast(nRel))
+        .select(col("node"), expr("1000000000 div cnt").as("r"))
+      // state: (ranks, ranks at the last boundary, converged); a boundary
+      // checkpoint is freed once the next one lands
+      val (r, _, _) = s.rounds(iters)((r0, r0, false))(_._3) {
+        case ((r, rAtBoundary, _), i) =>
+          val agg = degE.join(r.withColumnRenamed("node", "u"), "u")
+            .select(col("v"), expr("r div d").as("share"))
+            .groupBy("v")
+            .agg(sum(col("share")).as("s"))
+            .withColumnRenamed("v", "node")
+          val filled = (if (fill) nodes.join(agg, Seq("node"), "left") else agg)
+            .crossJoin(broadcast(nRel))
+          val next =
+            if (haveSinks) {
+              // dangling term: D div N extra inbound for every node, damped
+              // with the shares — Σ rank stays ≈ 10⁹ on any directed graph
+              val dRel = r.join(sinks, Seq("node"), "left_semi")
+                .agg(coalesce(sum(col("r")), lit(0L)).as("dmass"))
+              filled.crossJoin(broadcast(dRel))
+                .select(col("node"),
+                  expr("(150000000 div cnt) + (85 * (coalesce(s, CAST(0 AS BIGINT))" +
+                    " + dmass div cnt)) div 100").as("r"))
+            } else filled
+              .select(col("node"),
+                expr("(150000000 div cnt) + (85 * coalesce(s, CAST(0 AS BIGINT))) div 100").as("r"))
+          if (!(longLoop && i % checkpointEvery == 0 && i < iters)) (next, rAtBoundary, false)
+          else if (tolNano == 0) (s.pin(next), rAtBoundary, false)
+          else {
+            val ck = s.pin(next)
+            val delta = ck.join(
+              rAtBoundary.withColumnRenamed("r", "r_prev"), "node")
+              .agg(max(abs(col("r") - col("r_prev"))).as("d"))
+              .head().getLong(0)
+            (ck, ck, delta <= tolNano)
+          }
       }
-    }
-    val out = r.select(col("node"), col("r").as("rank_nano"))
-    if (!longLoop) out
-    else {
-      // Checkpoint the final plan FIRST, then drop its inputs (the
-      // componentsStars discipline): once `outCk` is materialized the
-      // pinned loop invariants and the last boundary checkpoint are
-      // read by nothing, and the final checkpoint itself is registered
-      // for release at the NEXT pagerank call on this session (consume
-      // a result before calling again).
-      val spark = edges.sparkSession
-      val outCk = out.localCheckpoint(true)
-      // Release the PREVIOUS call's final checkpoint only AFTER the new
-      // output is materialized (round-15 ADVICE): if the caller fed the
-      // previous pagerank result (or a plan derived from it) back in as
-      // this call's edges, releasing first would unpersist blocks this
-      // run's input checkpoints were themselves built from mid-query.
-      lastPagerank.release(spark)
-      prevCk.foreach(releaseCheckpoint)
-      Seq(deg, degE, nodes).foreach(releaseCheckpoint)
-      if (sinks != null) releaseCheckpoint(sinks)
-      lastPagerank.record(spark, graft.Checkpoints.checkpointRdds(outCk))
-      outCk
+      val out = r.select(col("node"), col("r").as("rank_nano"))
+      if (!longLoop) out
+      else {
+        // Checkpoint the final plan; the scope then frees its inputs —
+        // the pinned loop invariants and the last boundary checkpoint —
+        // and this final checkpoint is registered for release at the
+        // NEXT pagerank call on this session (consume a result before
+        // calling again).
+        val spark = edges.sparkSession
+        val outCk = s.pin(out)
+        // Release the PREVIOUS call's final checkpoint only AFTER the new
+        // output is materialized (round-15 ADVICE): if the caller fed the
+        // previous pagerank result (or a plan derived from it) back in as
+        // this call's edges, releasing first would unpersist blocks this
+        // run's input checkpoints were themselves built from mid-query.
+        lastPagerank.release(spark)
+        lastPagerank.record(spark, graft.Checkpoints.checkpointRdds(outCk))
+        outCk
+      }
     }
   }
 
@@ -1674,44 +1645,27 @@ object Dedup extends QueryGroup {
       maxRounds: Int = 100): DataFrame = {
     require(k >= 1, s"kcore: k must be >= 1, got $k")
     require(maxRounds >= 1, s"kcore: maxRounds must be >= 1, got $maxRounds")
-    var e = edges.localCheckpoint(true)
-    var nPrev = -1L // node count after the previous round (none yet)
-    var converged = false
-    var r = 0
-    while (!converged && r < maxRounds) {
-      r += 1
-      val keep = e.groupBy("u").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select("u")
-        .localCheckpoint(true)
-      val nKeep = keep.count()
-      if (nKeep == nPrev) {
-        converged = true
-        releaseCheckpoint(keep)
-      } else {
-        nPrev = nKeep
-        val e2 = e.join(keep, "u")
-          .join(keep.withColumnRenamed("u", "v"), "v")
-          .select("u", "v")
-          .localCheckpoint(true)
-        releaseCheckpoint(e)
-        releaseCheckpoint(keep)
-        e = e2
+    graft.Checkpoints.scoped { s =>
+      // state: (edges, node count after the previous round, converged)
+      val (e, _, converged) = s.rounds(maxRounds)((s.pin(edges), -1L, false))(_._3) {
+        case ((e, nPrev, _), _) =>
+          val keep = s.pin(e.groupBy("u").agg(count(lit(1)).as("d"))
+            .filter(col("d") >= k).select("u"))
+          val nKeep = keep.count()
+          if (nKeep == nPrev) (e, nPrev, true)
+          else (s.pin(e.join(keep, "u")
+            .join(keep.withColumnRenamed("u", "v"), "v")
+            .select("u", "v")), nKeep, false)
       }
+      if (!converged)
+        throw new IllegalStateException(
+          s"kcore: no fixpoint within $maxRounds rounds - a truncated peel " +
+            "would ship a SUPERSET of the core; raise maxRounds")
+      // materialize the result; the scope then frees the loop's final
+      // edge checkpoint (the result is readable without it)
+      s.pin(e.groupBy("u").agg(count(lit(1)).as("deg"))
+        .select(col("u").as("node"), col("deg")))
     }
-    if (!converged) {
-      releaseCheckpoint(e)
-      throw new IllegalStateException(
-        s"kcore: no fixpoint within $maxRounds rounds - a truncated peel " +
-          "would ship a SUPERSET of the core; raise maxRounds")
-    }
-    // materialize the result, then drop the loop's final edge checkpoint
-    // (the pagerank outCk discipline: release inputs only after the
-    // output is readable without them)
-    val out = e.groupBy("u").agg(count(lit(1)).as("deg"))
-      .select(col("u").as("node"), col("deg"))
-      .localCheckpoint(true)
-    releaseCheckpoint(e)
-    out
   }
 
   /** The graph_kcore fixture graph: the thinned supplier↔part bipartite
@@ -1776,33 +1730,32 @@ object Dedup extends QueryGroup {
       nodesComplete: Boolean = false): DataFrame = {
     val spark = nodes.sparkSession
     lastComponents.release(spark)
-    var e = p.filter(col("u").isNotNull && col("v").isNotNull)
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    // carry each generation's count forward — re-counting the previous
-    // checkpoint every round was one redundant full pass per star round
-    // (round-12 review)
-    var eCount = e.count()
-    var stable = false
-    while (!stable) {
-      val next = smallStar(largeStar(e)).localCheckpoint()
-      val nextCount = next.count()
-      // Exact set-equality convergence check: both sides are distinct, so
-      // equal counts + empty difference ⇔ equal sets.
-      stable = nextCount == eCount && next.except(e).isEmpty
-      releaseCheckpoint(e)
-      e = next
-      eCount = nextCount
+    graft.Checkpoints.scoped { s =>
+      // state: (edge set, its count, stable). Each generation's count
+      // carries forward — re-counting the previous checkpoint every
+      // round was one redundant full pass per star round (round-12 review)
+      val (e, _, _) = s.rounds(Int.MaxValue) {
+        val e0 = s.pin(p.filter(col("u").isNotNull && col("v").isNotNull)
+          .filter(col("u") =!= col("v")).distinct())
+        (e0, e0.count(), false)
+      }(_._3) { case ((e, eCount, _), _) =>
+        val next = s.pin(smallStar(largeStar(e)))
+        val nextCount = next.count()
+        // Exact set-equality convergence check: both sides are distinct, so
+        // equal counts + empty difference ⇔ equal sets.
+        (next, nextCount, nextCount == eCount && next.except(e).isEmpty)
+      }
+      lastComponents.record(spark, graft.Checkpoints.checkpointRdds(e))
+      val base =
+        if (nodesComplete) nodes.select(col("id"))
+        else nodes.select(col("id"))
+          .unionByName(e.select(col("u").as("id")))
+          .unionByName(e.select(col("v").as("id")))
+          .distinct()
+      base
+        .join(e.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left")
+        .select(col("id"), coalesce(col("comp"), col("id")).as("component"))
     }
-    lastComponents.record(spark, graft.Checkpoints.checkpointRdds(e))
-    val base =
-      if (nodesComplete) nodes.select(col("id"))
-      else nodes.select(col("id"))
-        .unionByName(e.select(col("u").as("id")))
-        .unionByName(e.select(col("v").as("id")))
-        .distinct()
-    base
-      .join(e.select(col("u").as("id"), col("v").as("comp")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("component"))
   }
 
   /** Plain distributed min-label propagation — the textbook O(diameter)
@@ -1816,42 +1769,39 @@ object Dedup extends QueryGroup {
   private[graft] def connectedComponentsPropagation(nodes: DataFrame, pairs: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
     lastComponents.release(spark)
-    // Materialize the pair-generation pipeline ONCE: the edge list is
-    // consumed forward + reversed and then on every iteration — without
-    // the checkpoint the union would execute the (expensive) upstream
-    // pipeline twice in a single plan.
-    val p = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      .filter(col("id_a").isNotNull && col("id_b").isNotNull).localCheckpoint()
-    val adj = p.unionByName(p.select(col("v").as("u"), col("u").as("v")))
-    var labels = nodes.select(col("id").as("u"))
-      .unionByName(adj.select(col("u")))
-      .distinct()
-      .select(col("u"), col("u").as("lbl"))
-    val lblType = labels.schema("lbl").dataType
-    var prev: Option[DataFrame] = None
-    var changed = 1L
-    while (changed > 0) {
-      // One pass computes BOTH the new labels and the convergence signal:
-      // self rows carry their current label in `own` (null on propagated
-      // rows), so after the min-label aggregate `lbl < own` on the
-      // materialized checkpoint IS the per-node change flag — no second
-      // join against the previous generation per iteration.
-      val nbr = adj.join(labels.withColumnRenamed("u", "v"), "v")
-        .select(col("u"), col("lbl"), lit(null).cast(lblType).as("own"))
-      val next = labels.select(col("u"), col("lbl"), col("lbl").as("own"))
-        .unionByName(nbr)
-        .groupBy("u").agg(min(col("lbl")).as("lbl"), min(col("own")).as("own"))
-        .localCheckpoint()
-      changed = next.filter(col("lbl") < col("own")).count()
-      prev.foreach(releaseCheckpoint)
-      prev = Some(next)
-      labels = next.select("u", "lbl")
+    graft.Checkpoints.scoped { s =>
+      // Materialize the pair-generation pipeline ONCE: the edge list is
+      // consumed forward + reversed and then on every iteration — without
+      // the checkpoint the union would execute the (expensive) upstream
+      // pipeline twice in a single plan.
+      val p = s.pin(pairs.select(col("id_a").as("u"), col("id_b").as("v"))
+        .filter(col("id_a").isNotNull && col("id_b").isNotNull))
+      val adj = p.unionByName(p.select(col("v").as("u"), col("u").as("v")))
+      val labels0 = nodes.select(col("id").as("u"))
+        .unionByName(adj.select(col("u")))
+        .distinct()
+        .select(col("u"), col("u").as("lbl"))
+      val lblType = labels0.schema("lbl").dataType
+      // state: (labels, nodes changed by the last iteration)
+      val (labels, _) = s.rounds(Int.MaxValue)((labels0, 1L))(_._2 == 0) {
+        case ((labels, _), _) =>
+          // One pass computes BOTH the new labels and the convergence signal:
+          // self rows carry their current label in `own` (null on propagated
+          // rows), so after the min-label aggregate `lbl < own` on the
+          // materialized checkpoint IS the per-node change flag — no second
+          // join against the previous generation per iteration.
+          val nbr = adj.join(labels.withColumnRenamed("u", "v"), "v")
+            .select(col("u"), col("lbl"), lit(null).cast(lblType).as("own"))
+          val next = s.pin(labels.select(col("u"), col("lbl"), col("lbl").as("own"))
+            .unionByName(nbr)
+            .groupBy("u").agg(min(col("lbl")).as("lbl"), min(col("own")).as("own")))
+          (next.select("u", "lbl"), next.filter(col("lbl") < col("own")).count())
+      }
+      // The result reads only the final generation's checkpoint; the
+      // edge list is freed on exit.
+      lastComponents.record(spark, graft.Checkpoints.checkpointRdds(labels))
+      labels.select(col("u").as("id"), col("lbl").as("component"))
     }
-    // The result depends only on the final generation's checkpoint; the
-    // edge list can be released as soon as the loop exits.
-    releaseCheckpoint(p)
-    prev.foreach(g => lastComponents.record(spark, graft.Checkpoints.checkpointRdds(g)))
-    labels.select(col("u").as("id"), col("lbl").as("component"))
   }
 
   /** SUBSTRING-level dedup statistics (round-17; the Lee et al. 2022
@@ -2690,35 +2640,32 @@ object Dedup extends QueryGroup {
     }
     val roots = parents.filter(col("parent") === col("node"))
       .select(col("node").as("anc"))
-    var st = parents.select(col("node"), col("parent").as("anc"),
-        when(col("parent") === col("node"), lit(0L)).otherwise(lit(1L)).as("d"))
-      .localCheckpoint(true)
-    var r = 0
-    // short-circuit once every pointer sits on a root (the bfsDistances
-    // frontier-exhaustion discipline) — a depth-3 chart resolves in 2
-    // rounds, not maxRounds
-    var unresolved = st.join(roots, Seq("anc"), "left_anti")
-      .limit(1).collect()
-    while (unresolved.nonEmpty && r < maxRounds) {
-      r += 1
-      val up = st.select(col("node").as("anc"), col("anc").as("anc2"),
-        col("d").as("d2"))
-      val st2 = st.join(up, "anc")
-        .select(col("node"), col("anc2").as("anc"),
-          (col("d") + col("d2")).as("d"))
-        .localCheckpoint(true)
-      releaseCheckpoint(st)
-      st = st2
-      unresolved = st.join(roots, Seq("anc"), "left_anti").limit(1).collect()
+    graft.Checkpoints.scoped { s =>
+      // short-circuit once every pointer sits on a root (the bfsDistances
+      // frontier-exhaustion discipline) — a depth-3 chart resolves in 2
+      // rounds, not maxRounds
+      def unresolved(st: DataFrame) =
+        st.join(roots, Seq("anc"), "left_anti").limit(1).collect()
+      // state: (node, anc, d) rows, an unresolved row if any
+      val (st, open) = s.rounds(maxRounds) {
+        val st0 = s.pin(parents.select(col("node"), col("parent").as("anc"),
+          when(col("parent") === col("node"), lit(0L)).otherwise(lit(1L)).as("d")))
+        (st0, unresolved(st0))
+      }(_._2.isEmpty) { case ((st, _), _) =>
+        val up = st.select(col("node").as("anc"), col("anc").as("anc2"),
+          col("d").as("d2"))
+        val st2 = s.pin(st.join(up, "anc")
+          .select(col("node"), col("anc2").as("anc"),
+            (col("d") + col("d2")).as("d")))
+        (st2, unresolved(st2))
+      }
+      if (open.nonEmpty)
+        throw new IllegalStateException(
+          s"hierFlatten: node ${open(0).getAs[Any]("node")} did not reach " +
+            s"a root in $maxRounds doubling rounds (depth > ${1L << maxRounds} " +
+            "or a parent cycle) - raise maxRounds or break the cycle")
+      st.select(col("node"), col("anc").as("root"), col("d").as("depth"))
     }
-    if (unresolved.nonEmpty) {
-      releaseCheckpoint(st)
-      throw new IllegalStateException(
-        s"hierFlatten: node ${unresolved(0).getAs[Any]("node")} did not reach " +
-          s"a root in $maxRounds doubling rounds (depth > ${1L << maxRounds} " +
-          "or a parent cycle) - raise maxRounds or break the cycle")
-    }
-    st.select(col("node"), col("anc").as("root"), col("d").as("depth"))
   }
 
   /** Exact embedding near-dup pairs (cosine ≥ 0.4, id_a < id_b, with
@@ -2782,38 +2729,29 @@ object Dedup extends QueryGroup {
     // per-wave anti-join semantics; nothing is released mid-loop
     // because every part is a slice of the returned result (the live
     // storage total equals the old final checkpoint's rows).
-    val seed = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    var parts = List(seed)
-    var settled = seed
-    var frontier = seed
-    var d = 0L
-    var live = frontier.count() > 0
-    // the edge relation is LOOP-INVARIANT and referenced once per wave
-    // — un-materialized, every wave's job re-derived it from source
-    // (scan + distinct + union per wave, round 22); checkpoint it once
-    // and release before returning (the result parts are independent
-    // checkpoints)
-    val e = if (live && maxDist > 0) edges.localCheckpoint(true) else edges
-    try {
-      while (live && d < maxDist) {
-        d += 1
-        val nxt = frontier.select("node").join(e, col("node") === e("u"))
-          .select(col("v").as("node")).distinct()
-          .join(settled, Seq("node"), "left_anti")
-          .withColumn("dist", lit(d))
-          .localCheckpoint(true)
-        live = nxt.count() > 0
-        if (live) {
-          parts ::= nxt
-          settled = settled.unionByName(nxt)
-          frontier = nxt
-        } else releaseCheckpoint(nxt)
+    graft.Checkpoints.scoped { s =>
+      val seed = s.pin(seeds.select(col("node")).distinct()
+        .withColumn("dist", lit(0L)))
+      val live = seed.count() > 0
+      // the edge relation is LOOP-INVARIANT and referenced once per wave
+      // — un-materialized, every wave's job re-derived it from source
+      // (scan + distinct + union per wave, round 22); checkpoint it once
+      // (the scope frees it on exit: the result parts are independent
+      // checkpoints)
+      val e = if (live && maxDist > 0) s.pin(edges) else edges
+      // state: (the waves' parts, newest first; their union; the last
+      // wave was non-empty) — an empty wave is read by nothing and freed
+      val (parts, _, _) = s.rounds(maxDist)((List(seed), seed, live))(!_._3) {
+        case ((parts, settled, _), d) =>
+          val nxt = s.pin(parts.head.select("node").join(e, col("node") === e("u"))
+            .select(col("v").as("node")).distinct()
+            .join(settled, Seq("node"), "left_anti")
+            .withColumn("dist", lit(d.toLong)))
+          if (nxt.count() > 0) (nxt :: parts, settled.unionByName(nxt), true)
+          else (parts, settled, false)
       }
-    } finally {
-      if (!(e eq edges)) releaseCheckpoint(e)
+      parts.reverse.reduce(_ unionByName _)
     }
-    parts.reverse.reduce(_ unionByName _)
   }
 
   /** Bounded-round single/multi-source shortest paths — frontier
@@ -2844,41 +2782,31 @@ object Dedup extends QueryGroup {
       s"ssspBounded: negative edge weight ${neg.headOption.map(_.get(2)).orNull} " +
         "- bounded Bellman-Ford over negative weights silently diverges from " +
         "the shortest-path answer (negative cycles); reweight the graph")
-    var settled = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint(true)
-    var frontier = settled
-    var r = 0
-    var live = frontier.count() > 0
-    // loop-invariant edges checkpointed once (the bfsDistances round-22
-    // discipline — the un-materialized relation re-derived from source
-    // inside every round's job); frontier needs no checkpoint of its
-    // own — it IS the round's improvement checkpoint (the seed round
-    // reuses the settled checkpoint).
-    val e = if (live && maxRounds > 0) edges.localCheckpoint(true) else edges
-    try {
-      while (live && r < maxRounds) {
-        r += 1
-        val imp = frontier.join(e, frontier("node") === e("u"))
-          .select(col("v").as("node"), (col("dist") + col("w")).as("nd"))
-          .groupBy("node").agg(min(col("nd")).as("nd"))
-          .join(settled.withColumnRenamed("dist", "cur"), Seq("node"), "left")
-          .filter(col("cur").isNull || col("nd") < col("cur"))
-          .select(col("node"), col("nd").as("dist"))
-          .localCheckpoint(true)
-        val s2 = settled.unionByName(imp)
-          .groupBy("node").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
-        live = imp.count() > 0
-        if (!(frontier eq settled)) releaseCheckpoint(frontier)
-        releaseCheckpoint(settled)
-        settled = s2
-        frontier = imp
+    graft.Checkpoints.scoped { s =>
+      val seed = s.pin(seeds.select(col("node")).distinct()
+        .withColumn("dist", lit(0L)))
+      val live = seed.count() > 0
+      // loop-invariant edges checkpointed once (the bfsDistances round-22
+      // discipline — the un-materialized relation re-derived from source
+      // inside every round's job); frontier needs no checkpoint of its
+      // own — it IS the round's improvement checkpoint (the seed round
+      // reuses the settled checkpoint).
+      val e = if (live && maxRounds > 0) s.pin(edges) else edges
+      // state: (settled, frontier, the frontier is non-empty)
+      val (settled, _, _) = s.rounds(maxRounds)((seed, seed, live))(!_._3) {
+        case ((settled, frontier, _), _) =>
+          val imp = s.pin(frontier.join(e, frontier("node") === e("u"))
+            .select(col("v").as("node"), (col("dist") + col("w")).as("nd"))
+            .groupBy("node").agg(min(col("nd")).as("nd"))
+            .join(settled.withColumnRenamed("dist", "cur"), Seq("node"), "left")
+            .filter(col("cur").isNull || col("nd") < col("cur"))
+            .select(col("node"), col("nd").as("dist")))
+          val s2 = s.pin(settled.unionByName(imp)
+            .groupBy("node").agg(min(col("dist")).as("dist")))
+          (s2, imp, imp.count() > 0)
       }
-    } finally {
-      if (!(e eq edges)) releaseCheckpoint(e)
+      settled
     }
-    if (!(frontier eq settled)) releaseCheckpoint(frontier)
-    settled
   }
 
   /** Link-prediction intermediate cap: wedges route only through nodes

@@ -409,9 +409,9 @@ object Streams {
     *     after-landing step and its last `_stats` column;
     *  7. the `_stats` row, then the `_commits/<batchId>` marker LAST.
     *
-    * Every checkpoint the transaction takes goes into ONE pin list,
-    * released in the one finally: a failure at any step releases
-    * exactly what already landed. */
+    * Every checkpoint the transaction takes is pinned in ONE
+    * [[graft.Checkpoints.Scope]], freed on every exit path: a failure
+    * at any step frees exactly what already landed. */
   private def applyIngestBatch(batch: DataFrame, batchId: Long,
       store: IngestStore): Long = {
     val spark = batch.sparkSession
@@ -423,13 +423,7 @@ object Streams {
     val b = batch.select(col("doc_id").cast("long").as("doc_id"),
       col(store.payload))
     val bIds = b.select("doc_id")
-    val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val cp = df.localCheckpoint(true)
-      pins.synchronized { pins += cp }
-      cp
-    }
-    try {
+    graft.Checkpoints.scoped { s =>
       val corpusIds = store.open(b, batchId).select("doc_id")
       // id hygiene, ONE bounded probe (the hierFlatten union-probe
       // discipline): a batch id already in the corpus — or repeated
@@ -449,7 +443,7 @@ object Streams {
               .select(col("doc_id"),
                 lit("repeated within the batch").as("kind")))
             .agg(min(struct(col("doc_id"), col("kind"))).as("w"))
-            .head()) +: store.front(b, pin))
+            .head()) +: store.front(b, s))
       }
       val bad = front.head.asInstanceOf[org.apache.spark.sql.Row]
       if (!bad.isNullAt(0)) {
@@ -458,10 +452,10 @@ object Streams {
           s"${store.sink}: doc_id ${r.get(0)} is ${r.getString(1)} - " +
             "ingest ids must be globally unique")
       }
-      val pairs = pin(store.pairs(b))
+      val pairs = s.pin(store.pairs(b))
       val (keepDerived, comp, compCorpus) =
-        dedupKeepParts(bIds, corpusIds, pairs, pin)
-      val keep = store.keep(bIds, keepDerived, pin)
+        dedupKeepParts(bIds, corpusIds, pairs, s)
+      val keep = store.keep(bIds, keepDerived, s)
       def back(): Unit = inParallel(Seq(
         // keep is checkpointed (no size stats for AQE) and batch-bounded:
         // broadcast it so the survivor projection never shuffles the batch
@@ -492,7 +486,7 @@ object Streams {
         .write.mode("overwrite").parquet(s"$t/_stats/$batchId")
       commitMarker(spark, t, batchId)
       n
-    } finally pins.foreach(graft.Checkpoints.release)
+    }
   }
 
   /** What one ingest sink does differently inside [[applyIngestBatch]].
@@ -506,19 +500,26 @@ object Streams {
       val statField: StructField, val backAqeOff: Boolean) {
     /** Driver-side setup after the high-water check; the corpus (doc_id, …). */
     def open(b: DataFrame, batchId: Long): DataFrame
-    /** Front-overlap work beside the id-hygiene probe (AQE off). */
-    def front(b: DataFrame, pin: DataFrame => DataFrame): Seq[() => Unit]
+    /** Front-overlap work beside the id-hygiene probe (AQE off); its
+      * checkpoints pin in the transaction's scope `s`. */
+    def front(b: DataFrame, s: graft.Checkpoints.Scope): Seq[() => Unit]
     /** Batch-touching candidate pairs (id_a, id_b). */
     def pairs(b: DataFrame): DataFrame
     /** The keep set to land, given the D6 rule's. */
     def keep(bIds: DataFrame, derived: DataFrame,
-        pin: DataFrame => DataFrame): DataFrame = derived
+        s: graft.Checkpoints.Scope): DataFrame = derived
     /** Write the survivors' docs increment and the store's derived data. */
     def land(survivors: DataFrame, batchId: Long): Unit
     /** The written docs increment. */
     def landed(batchId: Long): DataFrame
     /** Work after the counts; returns the last `_stats` column's value. */
     def finish(landed: DataFrame, n: Long, batchId: Long): Any
+    /** The per-increment datasets a vacuum compacts, after any store
+      * step that must run first. */
+    def vacuumDatasets(): Seq[CorpusDataset]
+    /** The live datasets a redaction of `del` rewrites, after any store
+      * step that must run first. */
+    def redactDatasets(del: DataFrame): Seq[RedactDataset]
   }
 
   /** The lexical store: batch shingles checkpointed in the front
@@ -529,15 +530,15 @@ object Streams {
     * shingle/df store writes shuffle, and adaptive coalescing sizes
     * their files. */
   private final class LexicalStore(spark: SparkSession, targetDir: String,
-      threshold: Double) extends IngestStore(targetDir, "applyDedupBatch",
+      threshold: Double = 0.2) extends IngestStore(targetDir, "applyDedupBatch",
         "dedup corpus", "initDedupCorpus", "text", lexStatField,
         backAqeOff = false) {
     private var shB: DataFrame = _
     private var hot: Seq[Long] = Nil
     def open(b: DataFrame, batchId: Long): DataFrame =
       readDedupCorpus(spark, targetDir)
-    def front(b: DataFrame, pin: DataFrame => DataFrame): Seq[() => Unit] =
-      Seq(() => shB = pin(graft.queries.Dedup.hashedShinglePlan(spark, b)))
+    def front(b: DataFrame, s: graft.Checkpoints.Scope): Seq[() => Unit] =
+      Seq(() => shB = s.pin(graft.queries.Dedup.hashedShinglePlan(spark, b)))
     def pairs(b: DataFrame): DataFrame = {
       // hot-shingle probe from MERGED df partials: per-increment counts
       // plus the batch's own sum to exactly the df of a full recount,
@@ -565,6 +566,29 @@ object Streams {
     def landed(batchId: Long): DataFrame =
       spark.read.schema(lexDocsSchema).parquet(s"$targetDir/inc=$batchId")
     def finish(landed: DataFrame, n: Long, batchId: Long): Any = hot.length.toLong
+
+    def vacuumDatasets(): Seq[CorpusDataset] = Seq(
+      CorpusDataset("docs", id => s"$targetDir/inc=$id", lexDocsSchema),
+      CorpusDataset("shingles", id => s"$targetDir/_shingles/inc=$id",
+        shingleStoreSchema),
+      // df partials MERGE on compaction: one row per shingle
+      CorpusDataset("dfs", id => s"$targetDir/_dfs/inc=$id", dfStoreSchema,
+        compact = df => df.groupBy("shingle").agg(sum(col("df")).as("df"))),
+      CorpusDataset("dups", id => s"$targetDir/_dups/inc=$id", dupsSchema))
+
+    /** Documents and stored shingle rows drop the ids; the df partials
+      * are NOT filtered but RECOUNT from the filtered shingle store (a
+      * decrement of the old partials would drift under retries; the
+      * recount is exact, one pass over stored longs, no text). */
+    def redactDatasets(del: DataFrame): Seq[RedactDataset] = {
+      def keepDoc(df: DataFrame): DataFrame = df.join(del, Seq("doc_id"), "left_anti")
+      Seq(
+        RedactDataset("docs", () => readDedupCorpus(spark, targetDir), keepDoc),
+        RedactDataset("shingles", () => readShingleStore(spark, targetDir), keepDoc),
+        RedactDataset("dfs", () => readShingleStore(spark, targetDir),
+          df => keepDoc(df).groupBy("shingle").agg(count(lit(1)).as("df"))),
+        dupsRedaction(spark, targetDir, del))
+    }
   }
 
   /** (dropped doc_id → dup_of) for one batch: the smallest
@@ -916,7 +940,7 @@ object Streams {
     * coalescing has nothing to coalesce. After the counts, the index
     * append (or the drift refit) runs serially. */
   private final class SemanticStore(spark: SparkSession, targetDir: String,
-      threshold: Double, nprobe: Int) extends IngestStore(targetDir,
+      threshold: Double = 0.4, nprobe: Int = 16) extends IngestStore(targetDir,
         "applySemanticDedupBatch", "semantic dedup corpus",
         "initSemanticDedupCorpus", "embedding", semStatField,
         backAqeOff = true) {
@@ -955,7 +979,7 @@ object Streams {
       corpus
     }
 
-    def front(b: DataFrame, pin: DataFrame => DataFrame): Seq[() => Unit] = Seq(
+    def front(b: DataFrame, s: graft.Checkpoints.Scope): Seq[() => Unit] = Seq(
       // replay detection (the replay contract above): homes side
       // streams, batch ids broadcast, ONE count job — the no-replay hot
       // path must scan every homes partition to find nothing either way
@@ -964,7 +988,7 @@ object Streams {
           .join(broadcast(b.select(col("doc_id").as("vec_id"))),
             Seq("vec_id"), "left_semi")
           .agg(count(lit(1))).head().getLong(0) > 0,
-      () => assigned = pin(graft.functions.Ivf.assignments(
+      () => assigned = s.pin(graft.functions.Ivf.assignments(
         b.select(col("doc_id").as("vec_id"),
           transform(col("embedding"), _.cast("double")).as("v")),
         idx.model.cents, nprobe,
@@ -985,7 +1009,7 @@ object Streams {
       * pass — [[graft.functions.Pq.homesOf]]'s contract), checkpointed
       * so the layout write and the index append read the same rows. */
     override def keep(bIds: DataFrame, derived: DataFrame,
-        pin: DataFrame => DataFrame): DataFrame =
+        s: graft.Checkpoints.Scope): DataFrame =
       if (indexHasBatch) {
         survHomes = idx.homes.join(bIds.select(col("doc_id").as("vec_id")),
           Seq("vec_id"), "left_semi")
@@ -993,7 +1017,7 @@ object Streams {
           Seq("doc_id"), "left_semi")
       } else {
         survHomes = graft.Checkpoints.withAqeOff(spark) {
-          pin(assigned.filter(col("crnk") === 1)
+          s.pin(assigned.filter(col("crnk") === 1)
             .select(col("vec_id"), col("c_id"))
             .join(broadcast(derived.select(col("doc_id").as("vec_id"))),
               Seq("vec_id"), "left_semi"))
@@ -1059,6 +1083,68 @@ object Streams {
           app.incCodes.foreach(_.unpersist(false))
         }
       }
+
+    /** The index joins the compaction: a drift-free run never writes an
+      * index generation on its own, so without this the `_index` read
+      * plan grows one increment per batch. The vacuum snapshots the
+      * CURRENT index as the next generation
+      * ([[graft.functions.Pq.writeIndex]] — a bounded N·(m+2) write) and
+      * retires what was superseded AT ENTRY — the pre-call live
+      * generation's cover, passed as vacuumIndex's `asOf` (round-19
+      * ADVICE #2: retiring against the just-written snapshot would be
+      * zero-cycle — a reader that resolved moments before the new
+      * marker would lose its files mid-scan; what THIS call superseded
+      * retires on the NEXT vacuum, the corpus store's own one-cycle
+      * rule). The compacted docs generation is RE-HOMED: rows re-join
+      * the live index's homes and the layout is written under the
+      * current index generation, so increments a refit left stale
+      * become prunable again. */
+    def vacuumDatasets(): Seq[CorpusDataset] = {
+      val preGen = graft.MarkerStore.liveGen(spark, indexDir)
+      // snapshot only when appended increments exist above the live
+      // generation's cover — an idle vacuum must not mint identical
+      // generations forever
+      if (graft.MarkerStore.resolve(spark, indexDir)._2.nonEmpty)
+        Pq.writeIndex(Pq.readIndex(spark, indexDir), indexDir)
+      Pq.vacuumIndex(spark, indexDir, preGen)
+      val homes = Pq.readIndex(spark, indexDir).homes
+      val ig = graft.MarkerStore.liveGen(spark, indexDir).get._1
+      Seq(
+        CorpusDataset("docs", id => s"$targetDir/inc=$id",
+          semDocsSchema(storedEmbeddingType(spark, targetDir)),
+          project = df => df.select("doc_id", "embedding"),
+          write = (df, dst) => writeSemanticDocs(df, homes, ig, dst)),
+        CorpusDataset("dups", id => s"$targetDir/_dups/inc=$id", dupsSchema))
+    }
+
+    /** The INDEX redacts FIRST, without a refit — homes and codes are
+      * per-vector rows, so the filtered index is exact — snapshotted as
+      * the next index generation ([[graft.functions.Pq.writeIndex]]): a
+      * crash between the two stores then leaves redacted docs invisible
+      * to search (no ghosts — the direction a deletion request cares
+      * about) while the corpus side completes on retry (both steps are
+      * idempotent filters; the retry's extra generation is harmless).
+      * The index vacuum runs against the generation live at ENTRY,
+      * never the one this call just wrote. The redacted docs generation
+      * is written home-cell partitioned against the redacted index (the
+      * homes join doubles as the filter check — a doc without a
+      * post-redaction home fails loud). */
+    def redactDatasets(del: DataFrame): Seq[RedactDataset] = {
+      val preGen = graft.MarkerStore.liveGen(spark, indexDir)
+      val live = Pq.readIndex(spark, indexDir)
+      val delVec = del.select(col("doc_id").as("vec_id"))
+      Pq.writeIndex(Pq.IvfPqIndex(live.model,
+        live.homes.join(delVec, Seq("vec_id"), "left_anti"),
+        live.codes.join(delVec, Seq("vec_id"), "left_anti")), indexDir)
+      Pq.vacuumIndex(spark, indexDir, preGen)
+      val homes = Pq.readIndex(spark, indexDir).homes
+      val ig = graft.MarkerStore.liveGen(spark, indexDir).get._1
+      Seq(
+        RedactDataset("docs", () => readSemanticCorpus(spark, targetDir),
+          df => df.join(del, Seq("doc_id"), "left_anti"),
+          (df, dst) => writeSemanticDocs(df, homes, ig, dst)),
+        dupsRedaction(spark, targetDir, del))
+    }
   }
 
   /** Empty index-increment relations (the refit path's bookkeeping
@@ -1260,43 +1346,6 @@ object Streams {
     finally reader.close()
   }
 
-  /** COMPACTION for the semantic target — the corpus generation
-    * discipline ([[vacuumDedupCorpus]]'s core) over its docs and
-    * provenance sidecars, PLUS the index store: a drift-free run never
-    * writes an index generation on its own, so without this the
-    * `_index` read plan grows one increment per batch. The vacuum
-    * snapshots the CURRENT index as the next generation
-    * ([[graft.functions.Pq.writeIndex]] — a bounded N·(m+2) write) and
-    * retires what was superseded AT ENTRY — the pre-call live
-    * generation's cover, passed as vacuumIndex's `asOf` (round-19
-    * ADVICE #2: retiring against the just-written snapshot would be
-    * zero-cycle — a reader that resolved moments before the new marker
-    * would lose its files mid-scan; what THIS call superseded retires
-    * on the NEXT vacuum, the corpus store's own one-cycle rule). The
-    * compacted docs generation is RE-HOMED: rows re-join the live
-    * index's homes and the layout is written under the current index
-    * generation, so increments a refit left stale become prunable
-    * again. Returns the retired corpus increment ids. */
-  def vacuumSemanticCorpus(spark: SparkSession, targetDir: String): Seq[Long] = {
-    import graft.functions.Pq
-    val indexDir = s"$targetDir/_index"
-    val preGen = graft.MarkerStore.liveGen(spark, indexDir)
-    // snapshot only when appended increments exist above the live
-    // generation's cover — an idle vacuum must not mint identical
-    // generations forever
-    if (graft.MarkerStore.resolve(spark, indexDir)._2.nonEmpty)
-      Pq.writeIndex(Pq.readIndex(spark, indexDir), indexDir)
-    Pq.vacuumIndex(spark, indexDir, preGen)
-    val idx = Pq.readIndex(spark, indexDir)
-    val ig = graft.MarkerStore.liveGen(spark, indexDir).get._1
-    vacuumCorpusStore(spark, targetDir, semStatField, Seq(
-      CorpusDataset("docs", id => s"$targetDir/inc=$id",
-        semDocsSchema(storedEmbeddingType(spark, targetDir)),
-        project = df => df.select("doc_id", "embedding"),
-        write = (df, dst) => writeSemanticDocs(df, idx.homes, ig, dst)),
-      CorpusDataset("dups", id => s"$targetDir/_dups/inc=$id", dupsSchema)))
-  }
-
   /** The ingest sinks' shared D6 keep rule over a batch-touching pair
     * graph: connected components over the pairs — nodes are the pair
     * endpoints plus the batch (an isolated batch doc must survive);
@@ -1306,8 +1355,8 @@ object Streams {
     * relation, the corpus-touching component ids) so callers can also
     * derive the drop breakdown for their stats row.
     *
-    * `comp`, `keep` and `compCorpus` come back EAGER-CHECKPOINTED
-    * through `pin`, each added to the caller's pin list as it lands
+    * `comp`, `keep` and `compCorpus` come back EAGER-CHECKPOINTED,
+    * each pinned in the caller's scope `s` as it lands
     * (round-21 measurement: each sink transaction consumes them from
     * 3–4 separate actions — survivor write, provenance write,
     * drop-count stat — and the un-checkpointed subtrees re-executed
@@ -1318,7 +1367,7 @@ object Streams {
     * derive the corpus-touching component set and the canon relation
     * from it without touching the corpus again. */
   private def dedupKeepParts(bIds: DataFrame, corpusIds: DataFrame,
-      pairs: DataFrame, pin: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame) = {
+      pairs: DataFrame, s: graft.Checkpoints.Scope): (DataFrame, DataFrame, DataFrame) = {
     val spark = bIds.sparkSession
     val nodes = bIds.select(col("doc_id").as("id"))
       .unionByName(pairs.select(col("id_a").as("id")))
@@ -1329,7 +1378,7 @@ object Streams {
     // plan's corpus side is a single column-pruned id scan whose join
     // is batch-bounded)
     val comp = graft.Checkpoints.withAqeOff(spark) {
-      pin(graft.queries.Dedup.connectedComponents(nodes, pairs,
+      s.pin(graft.queries.Dedup.connectedComponents(nodes, pairs,
         nodesComplete = true))
     }
     // corpus ids are UNIQUE (the sinks' id-hygiene invariant), so the
@@ -1338,7 +1387,7 @@ object Streams {
     // a broadcast hash join instead of being shuffled (the semi form
     // could only broadcast its corpus side)
     val compCorpus = graft.Checkpoints.withAqeOff(spark) {
-      pin(corpusIds.select(col("doc_id").as("id"))
+      s.pin(corpusIds.select(col("doc_id").as("id"))
         .join(broadcast(comp), "id")
         .select(col("id"), col("component")))
     }
@@ -1346,7 +1395,7 @@ object Streams {
     // under withAqeOff the bounded shuffle joins fold into the
     // checkpoint's one job
     val keep = graft.Checkpoints.withAqeOff(spark) {
-      pin(comp
+      s.pin(comp
         .join(bIds.select(col("doc_id").as("id")), Seq("id"), "left_semi")
         .join(compCorpus.select(col("component")), Seq("component"), "left_anti")
         .groupBy("component").agg(min(col("id")).as("doc_id"))
@@ -1397,14 +1446,14 @@ object Streams {
     *
     * Returns the increment ids whose data directories were retired. */
   def vacuumDedupCorpus(spark: SparkSession, targetDir: String): Seq[Long] =
-    vacuumCorpusStore(spark, targetDir, lexStatField, Seq(
-      CorpusDataset("docs", id => s"$targetDir/inc=$id", lexDocsSchema),
-      CorpusDataset("shingles", id => s"$targetDir/_shingles/inc=$id",
-        shingleStoreSchema),
-      // df partials MERGE on compaction: one row per shingle
-      CorpusDataset("dfs", id => s"$targetDir/_dfs/inc=$id", dfStoreSchema,
-        compact = df => df.groupBy("shingle").agg(sum(col("df")).as("df"))),
-      CorpusDataset("dups", id => s"$targetDir/_dups/inc=$id", dupsSchema)))
+    vacuumCorpus(spark, new LexicalStore(spark, targetDir))
+
+  /** [[vacuumDedupCorpus]] for the semantic target: the same generation
+    * discipline over its docs and provenance sidecars, after the index
+    * store's own compaction (`SemanticStore.vacuumDatasets`). Returns the
+    * retired corpus increment ids. */
+  def vacuumSemanticCorpus(spark: SparkSession, targetDir: String): Seq[Long] =
+    vacuumCorpus(spark, new SemanticStore(spark, targetDir))
 
   /** One per-increment dataset of a versioned corpus store, as the
     * vacuum core sees it: every part reads under the declared `schema`,
@@ -1424,84 +1473,39 @@ object Streams {
 
   /** REDACTION (the GDPR / right-to-be-forgotten delete) for the
     * lexical ingest-dedup corpus: remove `ids` from every live dataset
-    * by writing the next GENERATION with them filtered out — documents
-    * and stored shingle rows drop the ids, the df partials RECOUNT
-    * exactly from the filtered shingle store (a decrement would drift
-    * under retries; the recount is one pass over stored longs, no text),
-    * and the provenance log drops every row that mentions a redacted id
-    * on either side. The generation marker commits LAST, so readers see
-    * pre- or post-redaction state atomically, and a re-ingest of a
-    * redacted document is KEPT (its content owner is gone — the exact
-    * contract a deletion request implies). PHYSICAL bytes of the
-    * pre-redaction state follow the vacuum's one-cycle retention:
-    * run [[vacuumDedupCorpus]] twice after redacting to retire them
-    * from disk (the Delta DELETE-then-VACUUM discipline). Returns the
-    * number of documents actually removed. */
+    * by writing the next GENERATION with them filtered out
+    * (`LexicalStore.redactDatasets`), and the provenance log drops every
+    * row that mentions a redacted id on either side. The generation
+    * marker commits LAST, so readers see pre- or post-redaction state
+    * atomically, and a re-ingest of a redacted document is KEPT (its
+    * content owner is gone — the exact contract a deletion request
+    * implies). PHYSICAL bytes of the pre-redaction state follow the
+    * vacuum's one-cycle retention: run [[vacuumDedupCorpus]] twice after
+    * redacting to retire them from disk (the Delta DELETE-then-VACUUM
+    * discipline). Returns the number of documents actually removed. */
   def redactDedupCorpus(spark: SparkSession, targetDir: String,
-      ids: DataFrame): Long = {
-    def keepDoc(df: DataFrame, del: DataFrame): DataFrame =
-      df.join(del, Seq("doc_id"), "left_anti")
-    redactCorpusStore(spark, targetDir, ids, lexStatField, Seq(
-      RedactDataset("docs", () => readDedupCorpus(spark, targetDir), keepDoc),
-      RedactDataset("shingles", () => readShingleStore(spark, targetDir), keepDoc),
-      // NOT a filter of the partials: the generation's df relation
-      // RECOUNTS from the filtered shingle store (a decrement of the
-      // old partials would drift under retries; this is exact and
-      // never touches text)
-      RedactDataset("dfs", () => readShingleStore(spark, targetDir),
-        (df, del) =>
-          keepDoc(df, del).groupBy("shingle").agg(count(lit(1)).as("df"))),
-      RedactDataset("dups", () => readDedupAttribution(spark, targetDir),
-        (df, del) =>
-          keepDoc(df, del)
-            .join(del.select(col("doc_id").as("dup_of")),
-              Seq("dup_of"), "left_anti")
-            .select("doc_id", "dup_of"))))
-  }
+      ids: DataFrame): Long =
+    redactCorpus(spark, new LexicalStore(spark, targetDir), ids)
 
   /** [[redactDedupCorpus]] for the SEMANTIC target: documents and
-    * provenance redact through the same generation write, and the
-    * INDEX drops the ids WITHOUT a refit — homes and codes are
-    * per-vector rows, so the filtered index is exact — snapshotted as
-    * the next index generation ([[graft.functions.Pq.writeIndex]]).
-    * The INDEX redacts FIRST: a crash between the two stores then
-    * leaves redacted docs invisible to search (no ghosts — the
-    * direction a deletion request cares about) while the corpus side
-    * completes on retry (both steps are idempotent filters; the retry's
-    * extra generation is harmless). Retention: search-visible state
-    * flips at each marker, and PHYSICAL pre-redaction bytes — index and
-    * corpus alike — follow the one-cycle rule (the index vacuum runs
-    * against the generation live at ENTRY, never the one this call just
-    * wrote): two [[vacuumSemanticCorpus]] calls retire them from disk,
-    * the Delta DELETE-then-VACUUM discipline. The redacted docs
-    * generation is written home-cell partitioned against the redacted
-    * index (the homes join doubles as the filter check — a doc without
-    * a post-redaction home fails loud). */
+    * provenance redact through the same generation write, after the
+    * INDEX drops the ids (`SemanticStore.redactDatasets`). Retention:
+    * search-visible state flips at each marker, and PHYSICAL
+    * pre-redaction bytes — index and corpus alike — follow the
+    * one-cycle rule: two [[vacuumSemanticCorpus]] calls retire them
+    * from disk. */
   def redactSemanticCorpus(spark: SparkSession, targetDir: String,
-      ids: DataFrame): Long = {
-    import graft.functions.Pq
-    val del = normalizeRedactIds(ids)
-    val indexDir = s"$targetDir/_index"
-    val preGen = graft.MarkerStore.liveGen(spark, indexDir)
-    val idx = Pq.readIndex(spark, indexDir)
-    val delVec = del.select(col("doc_id").as("vec_id"))
-    Pq.writeIndex(Pq.IvfPqIndex(idx.model,
-      idx.homes.join(delVec, Seq("vec_id"), "left_anti"),
-      idx.codes.join(delVec, Seq("vec_id"), "left_anti")), indexDir)
-    Pq.vacuumIndex(spark, indexDir, preGen)
-    val idxAfter = Pq.readIndex(spark, indexDir)
-    val ig = graft.MarkerStore.liveGen(spark, indexDir).get._1
-    redactCorpusStore(spark, targetDir, del, semStatField, Seq(
-      RedactDataset("docs", () => readSemanticCorpus(spark, targetDir),
-        (df, d) => df.join(d, Seq("doc_id"), "left_anti"),
-        (df, dst) => writeSemanticDocs(df, idxAfter.homes, ig, dst)),
-      RedactDataset("dups", () => readDedupAttribution(spark, targetDir),
-        (df, d) =>
-          df.join(d, Seq("doc_id"), "left_anti")
-            .join(d.select(col("doc_id").as("dup_of")),
-              Seq("dup_of"), "left_anti")
-            .select("doc_id", "dup_of"))))
-  }
+      ids: DataFrame): Long =
+    redactCorpus(spark, new SemanticStore(spark, targetDir), ids)
+
+  /** The provenance log's redaction, both stores: every row that
+    * mentions a redacted id on either side drops. */
+  private def dupsRedaction(spark: SparkSession, targetDir: String,
+      del: DataFrame): RedactDataset =
+    RedactDataset("dups", () => readDedupAttribution(spark, targetDir), df =>
+      df.join(del, Seq("doc_id"), "left_anti")
+        .join(del.select(col("doc_id").as("dup_of")), Seq("dup_of"), "left_anti")
+        .select("doc_id", "dup_of"))
 
   /** Single-column long-castable id normalization for the redaction
     * entries (the workloadIds contract: loud on nulls, duplicates
@@ -1525,34 +1529,32 @@ object Streams {
   private final case class RedactDataset(
       name: String,
       reader: () => DataFrame,
-      filter: (DataFrame, DataFrame) => DataFrame,
+      filter: DataFrame => DataFrame,
       write: (DataFrame, String) => Unit =
         (df, dst) => df.write.mode("overwrite").parquet(dst))
 
-  /** The redaction core: write generation g+1 with each dataset's
-    * filter applied to the CURRENT live state, covering every committed
-    * increment; marker LAST. Old bytes retire through the regular
-    * vacuum's one-cycle rule. Returns removed-document count. */
-  private def redactCorpusStore(spark: SparkSession, targetDir: String,
-      ids: DataFrame, statField: StructField, datasets: Seq[RedactDataset]): Long = {
-    val del = normalizeRedactIds(ids).localCheckpoint(true)
-    try {
-      val (gen0, _) = graft.MarkerStore.resolve(spark, targetDir)
-      val committed = committedIds(spark, targetDir)
-      require(committed.nonEmpty,
-        s"dedup corpus $targetDir has no committed increment")
-      val removed = datasets.head.reader()
-        .join(del, Seq("doc_id"), "left_semi").count()
-      val g = gen0.map(_._1).getOrElse(0L) + 1
-      datasets.foreach { ds =>
-        ds.write(ds.filter(ds.reader(), del), s"$targetDir/gen=$g/${ds.name}")
-      }
-      // the operational log carries forward unredacted — its rows are
-      // per-batch aggregates with no document content or ids
-      foldStats(spark, targetDir, statField, g)
-      graft.MarkerStore.commitGen(spark, targetDir, g, committed.max)
-      removed
-    } finally graft.Checkpoints.release(del)
+  /** The redaction core: write generation g+1 with each of the
+    * store's datasets filtered from the CURRENT live state, covering
+    * every committed increment; marker LAST. Old bytes retire through
+    * the regular vacuum's one-cycle rule. Returns removed-document
+    * count. */
+  private def redactCorpus(spark: SparkSession, store: IngestStore,
+      ids: DataFrame): Long = graft.Checkpoints.scoped { s =>
+    val t = store.targetDir
+    val del = s.pin(normalizeRedactIds(ids))
+    val (gen0, _) = graft.MarkerStore.resolve(spark, t)
+    val committed = committedIds(spark, t)
+    require(committed.nonEmpty, s"dedup corpus $t has no committed increment")
+    val datasets = store.redactDatasets(del)
+    val removed = datasets.head.reader()
+      .join(del, Seq("doc_id"), "left_semi").count()
+    val g = gen0.map(_._1).getOrElse(0L) + 1
+    datasets.foreach(ds => ds.write(ds.filter(ds.reader()), s"$t/gen=$g/${ds.name}"))
+    // the operational log carries forward unredacted — its rows are
+    // per-batch aggregates with no document content or ids
+    foldStats(spark, t, store.statField, g)
+    graft.MarkerStore.commitGen(spark, t, g, committed.max)
+    removed
   }
 
   /** Fold the live `_stats` log (the store's last column `statField`)
@@ -1565,15 +1567,15 @@ object Streams {
         .write.mode("overwrite").parquet(s"$targetDir/gen=$g/stats")
   }
 
-  /** The generation compact + one-cycle retire core shared by the
-    * lexical and semantic corpus vacuums. `datasets` lists each
-    * per-increment dataset as (generation name, increment path,
-    * compaction transform — identity, or a merge like the df-partial
-    * sum). Protocol per the [[vacuumDedupCorpus]] scaladoc: compact
-    * marker LAST, retire only what the PRE-vacuum live generation
-    * covered, increment `_commits` markers never retire. */
-  private def vacuumCorpusStore(spark: SparkSession, targetDir: String,
-      statField: StructField, datasets: Seq[CorpusDataset]): Seq[Long] = {
+  /** The generation compact + one-cycle retire core of both corpus
+    * vacuums, over the store's per-increment datasets (generation name,
+    * increment path, compaction transform — identity, or a merge like
+    * the df-partial sum). Protocol per the [[vacuumDedupCorpus]]
+    * scaladoc: compact marker LAST, retire only what the PRE-vacuum live
+    * generation covered, increment `_commits` markers never retire. */
+  private def vacuumCorpus(spark: SparkSession, store: IngestStore): Seq[Long] = {
+    val datasets = store.vacuumDatasets()
+    val targetDir = store.targetDir
     val fs = fsOf(spark, targetDir)
     def path(s: String) = new org.apache.hadoop.fs.Path(s)
     val (gen0, tail) = graft.MarkerStore.resolve(spark, targetDir)
@@ -1592,7 +1594,7 @@ object Streams {
         }
         // the operational log folds forward too (its per-batch files
         // retire below; without this the history would truncate)
-        foldStats(spark, targetDir, statField, g)
+        foldStats(spark, targetDir, store.statField, g)
         graft.MarkerStore.commitGen(spark, targetDir, g, tail.max)
         Some(g)
       }

@@ -584,25 +584,13 @@ class ApSpec extends SparkSuite {
     val triples = (for { i <- 1L to 12L; k <- 1L to 12L
       if i != k && (i <= 6) == (k <= 6) }
       yield (i, k, -1.0 + 0.01 * i - 0.003 * k)).toDF("i", "k", "s")
-    val execs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            execs.incrementAndGet(); ()
-          case _ => ()
-        }
+    var res: AffinityPropagation.Result = null
+    val (execs, _) = actionsDuring {
+      res = AffinityPropagation.solveFromSimilarities(spark, triples, maxIter = 60)
     }
-    spark.sparkContext.addSparkListener(l)
-    val res = try {
-      val r = AffinityPropagation.solveFromSimilarities(spark, triples, maxIter = 60)
-      var last = -1; var cur = execs.get
-      while (cur != last) { Thread.sleep(150); last = cur; cur = execs.get }
-      r
-    } finally spark.sparkContext.removeSparkListener(l)
     assert(res.exemplars.nonEmpty)
-    assert(execs.get <= 2,
-      s"local-regime facade call ran ${execs.get} executions, expected ≤2")
+    assert(execs <= 2,
+      s"local-regime facade call ran $execs executions, expected ≤2")
   }
 
   test("local regime preference comes from SUPPLIED off-diagonal triples (sparse input)") {

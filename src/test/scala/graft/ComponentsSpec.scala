@@ -355,30 +355,17 @@ class ComponentsSpec extends SparkSuite {
     // run its empty dangling probe first, i.e. two executions.
     import spark.implicits._
     Thread.sleep(300) // let prior tests' listener events drain
-    val execs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(
-          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
-        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-          execs.incrementAndGet(); ()
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (execs, _) = actionsDuring {
       val boom = intercept[IllegalArgumentException] {
         Graft.hierFlatten(Seq((1L, 1L), (2L, 1L), (2L, 1L)).toDF("n", "p"),
           "n", "p")
       }
       assert(boom.getMessage.contains("more than once"))
-      val deadline = System.currentTimeMillis() + 5000
-      while (System.currentTimeMillis() < deadline && execs.get() < 1)
-        Thread.sleep(50)
       Thread.sleep(250) // let a stray second execution surface before asserting
-      assert(execs.get() == 1,
-        s"guard ran ${execs.get()} SQL executions - the dangling+duplicate " +
-          "probes must be one union job")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(execs == 1,
+      s"guard ran $execs SQL executions - the dangling+duplicate " +
+        "probes must be one union job")
   }
 
   test("sssp bounded: cost beats hops, round bound truncates, negatives fail loud") {

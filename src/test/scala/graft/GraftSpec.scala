@@ -650,15 +650,7 @@ class GraftSpec extends SparkSuite {
       // its cache entry regardless of suite ordering
       .filter(col("vec_id") % 2 === 0)
     val m1 = graft.functions.Pq.fitIvfPqCached(emb, "embedding", centroids = 16)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = actionsDuring {
       val m2 = graft.functions.Pq.fitIvfPqCached(emb, "embedding", centroids = 16)
       assert(m2 eq m1, "second fit rebuilt the index instead of hitting the cache")
       // the residual query over a cached index constructs LAZILY too
@@ -667,9 +659,9 @@ class GraftSpec extends SparkSuite {
       graft.functions.Pq.ivfAdcTopk(emb, "embedding", m2, 5,
         nprobe = 8, idCol = "vec_id", queryIds = None)
       Thread.sleep(1500) // let any stray async job-start events land
-      assert(jobs.get() == 0,
-        s"cached fit + lazy query construction ran ${jobs.get()} jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0,
+      s"cached fit + lazy query construction ran $jobs jobs")
     // a renamed-column route to the same data still hits (the key is
     // the canonicalized NORMALIZED plan)
     val renamed = emb.select(col("vec_id").as("item_id"), col("embedding").as("vec"))
