@@ -922,6 +922,51 @@ class StreamingSpec extends SparkSuite {
     assert(cost == ((22, 44)), s"semantic per-batch budget moved: $cost")
   }
 
+  test("a lexical batch, a semantic batch's index append and a local components call leave the caller's session conf untouched") {
+    // Read on every job start of each call: a bounded plan that runs
+    // non-adaptive must not get there by flipping the caller's session,
+    // where concurrent queries would plan under the flip.
+    import spark.implicits._
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.limit.initialNumPartitions")
+    def conf() = keys.map(k => k -> spark.conf.getOption(k)).toMap
+    val caller = conf()
+    val changed = Seq.newBuilder[String]
+    def untouched(what: String)(f: => Unit): Unit = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Option[String]]]()
+      val (_, jobs) = actionsDuring(f, () => { seen.add(conf()); () })
+      assert(jobs > 0 && seen.size == jobs, s"$what: $jobs jobs, ${seen.size} reads")
+      seen.forEach(c => if (c != caller) changed += s"$what: $c")
+    }
+    val docs = Tables.documents(spark, sf001).select("doc_id", "text")
+    val lex = tempDir("graft-conf-lex")
+    Streams.initDedupCorpus(docs.filter(col("doc_id") % 4 === 0), lex)
+    untouched("lexical batch") {
+      assert(Streams.applyDedupBatch(docs.filter(col("doc_id") % 4 === 1), 0L, lex) >= 0); ()
+    }
+    val emb = Tables.embeddings(spark, sf001)
+      .select(col("vec_id").as("doc_id"), col("embedding"))
+    val sem = tempDir("graft-conf-sem")
+    Streams.initSemanticDedupCorpus(emb.filter(col("doc_id") % 3 === 0), sem)
+    untouched("semantic batch") {
+      assert(Streams.applySemanticDedupBatch(emb.filter(col("doc_id") % 3 === 1), 0L, sem) > 0); ()
+    }
+    assert(Streams.readDedupStats(spark, sem).filter(col("batch_id") === 0)
+      .collect()(0).getAs[String]("index_op") == "appended",
+      "the semantic batch did not append to the index")
+    // a slow edge source keeps the probe's job running while its start
+    // event is read (listener events arrive asynchronously)
+    val slow = udf((x: Long) => { Thread.sleep(300); x })
+    untouched("local components") {
+      queries.Dedup.connectedComponents((1L to 6L).toDF("id"),
+        spark.range(0, 3, 1, 3).select(slow(col("id") * 2 + 1).as("id_a"),
+          (col("id") * 2 + 2).as("id_b"))).collect(); ()
+    }
+    assert(spark.conf.getOption(keys.head) == caller(keys.head))
+    val seen = changed.result()
+    assert(seen.isEmpty, s"the caller's conf changed at ${seen.size} job starts " +
+      s"(caller $caller): ${seen.distinct.mkString("; ")}")
+  }
+
   test("stored search over a semantic store runs a fixed action budget at 1, 2 and 3 docs parts; a compaction runs a fixed budget") {
     // every docs part reads under the store's declared schema, so the
     // search's job count does not grow with the increment tail
