@@ -3,7 +3,8 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession, classic}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
 /** Release discipline for the checkpoints of iterative calls (Dedup's
@@ -14,7 +15,9 @@ import org.apache.spark.storage.StorageLevel
   * that pressure evicts the warmed table caches and, at distributed-AP
   * scale, is up to generations × N² rows of dead storage. Every such
   * call runs in one [[Scope]] ([[scoped]]), which frees its pins on
-  * every exit path. */
+  * every exit path. The batch-bounded actions of those calls run
+  * non-adaptive in a child session ([[bounded]]), never by changing the
+  * caller's conf. */
 private[graft] object Checkpoints {
 
   /** The checkpoint RDD(s) behind a localCheckpoint'd DataFrame — what
@@ -128,22 +131,59 @@ private[graft] object Checkpoints {
     }
   }
 
-  /** Run one action with AQE disabled — for plans that are BOUNDED by
-    * construction (a micro-batch transaction's batch-graph relations:
-    * every input is batch-sized or a checkpoint of one, at ANY corpus
-    * scale). On such plans AQE's re-optimization buys nothing — the
-    * coalesce/skew decisions are size-invariant — while its per-stage
-    * materialization turns one action into 3–8 jobs, pure dispatch
-    * overhead (the AP loop's round-8 finding, applied to the ingest
-    * sinks in round 22; measured there: 3 jobs/iter → 1). NOT for
-    * corpus-sized plans (store scans, pair kernels, generation writes),
-    * where adaptive coalescing and skew handling are load-bearing.
-    * Restores the previous setting in finally; the flip is
-    * session-visible for the action's duration. */
-  def withAqeOff[T](spark: org.apache.spark.sql.SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val before = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try f finally spark.conf.set(key, before)
+  /** Runs `run` on `df`'s plan in a NON-ADAPTIVE child of `df`'s
+    * session — for plans BOUNDED by construction (a micro-batch
+    * transaction's batch-graph relations: every input is batch-sized or
+    * a checkpoint of one, at ANY corpus scale). On such plans AQE's
+    * re-optimization buys nothing — the coalesce/skew decisions are
+    * size-invariant — while its per-stage materialization turns one
+    * action into 3–8 jobs, pure dispatch overhead (the AP loop's round-8
+    * finding, applied to the ingest sinks in round 22; measured there:
+    * 3 jobs/iter → 1). NOT for corpus-sized plans (store scans, pair
+    * kernels, generation writes), where adaptive coalescing and skew
+    * handling are load-bearing. Non-adaptive is a property of this one
+    * execution: the caller's session conf is never touched, so its
+    * concurrent queries plan as they would without the call. */
+  def bounded[T](df: DataFrame)(run: DataFrame => T): T =
+    bounded(df.sparkSession)(in => run(in(df)))
+
+  /** [[bounded]] over several inputs: `in` re-roots each one in the
+    * non-adaptive child, and plans built on them there run in it. */
+  def bounded[T](spark: SparkSession)(run: (DataFrame => DataFrame) => T): T =
+    inChild(spark, Map(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false"))(run)
+
+  /** One child session per (session, overrides), created once — Spark
+    * pins every session that has run a query, so a child per call would
+    * leak one per call. Releasing the session releases its children. */
+  private val children = SessionResources.slot[Map[String, String], SparkSession](
+    "checkpoints.children", (_, c) => SessionResources.release(c))
+
+  /** Runs `run` in a child of `spark` whose conf is `spark`'s CURRENT
+    * modifiable conf with `overrides` on top (re-synced at every call,
+    * so a setting the caller changed since the last call holds here
+    * too). `in` re-roots a DataFrame's analyzed plan in the child; a DataFrame
+    * `run` returns (a pinned checkpoint) comes back rooted in `spark` —
+    * a join is planned in its left operand's session, so a result left
+    * in the child would silently plan later corpus-sized work under the
+    * overrides. A child of a child carries both sets of overrides. */
+  private[graft] def inChild[T](spark: SparkSession, overrides: Map[String, String])(
+      run: (DataFrame => DataFrame) => T): T = {
+    val child = children(spark, overrides)(spark.newSession())
+    def modifiable(s: SparkSession) = s.conf.getAll.filter(kv => s.conf.isModifiable(kv._1))
+    child.synchronized {
+      val want = modifiable(spark) ++ overrides
+      val have = modifiable(child)
+      (have.keySet -- want.keySet).foreach(child.conf.unset)
+      want.foreach { case (k, v) => if (!have.get(k).contains(v)) child.conf.set(k, v) }
+    }
+    run(rooted(child, _)) match {
+      case d: Dataset[_] => rooted(spark, d.toDF()).asInstanceOf[T]
+      case r => r
+    }
   }
+
+  private def rooted(s: SparkSession, df: DataFrame): DataFrame =
+    if (df.sparkSession eq s) df
+    else new classic.Dataset[Row](s.asInstanceOf[classic.SparkSession],
+      df.queryExecution.analyzed, df.encoder)
 }

@@ -863,14 +863,12 @@ object Pq {
     // corpus side from the caller's sidecar-merged value when it has
     // one (the persisted-index hot path — see [[indexMoment]]); the
     // batch side is always a batch-sized scan, so its materializing
-    // action runs with AQE off (graft.Checkpoints.withAqeOff — the
-    // encode plan is batch-bounded at any corpus scale). Both sides'
-    // moments are read from codes of the same coding, so a rotation
-    // cancels like the quantization bias does
+    // action runs bounded (graft.Checkpoints.bounded — the encode plan
+    // is batch-bounded at any corpus scale). Both sides' moments are
+    // read from codes of the same coding, so a rotation cancels like
+    // the quantization bias does
     val mOld = corpusMoment.getOrElse(codeMoment(idx.codes, model.pq))
-    val mNew = graft.Checkpoints.withAqeOff(spark) {
-      codeMoment(codesNew, model.pq)
-    }
+    val mNew = graft.Checkpoints.bounded(codesNew)(codeMoment(_, model.pq))
     val drift =
       if (mOld > 0) math.abs(mNew - mOld) / mOld
       else if (mNew > 0) Double.PositiveInfinity
@@ -1002,12 +1000,11 @@ object Pq {
     val fs = graft.MarkerStore.fs(spark, dir)
     if (!parts.forall(p => fs.exists(new org.apache.hadoop.fs.Path(p))))
       return None
-    // ≤ m·k rows per part by construction — a bounded action, AQE off
-    val counts = graft.Checkpoints.withAqeOff(spark) {
-      spark.read.schema(momentSchema).parquet(parts: _*)
-        .groupBy("b", "code").agg(sum(col("cnt")).as("cnt"))
-        .collect()
-    }.map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+    // ≤ m·k rows per part by construction — a bounded action
+    val counts = graft.Checkpoints.bounded(spark.read.schema(momentSchema)
+        .parquet(parts: _*).groupBy("b", "code").agg(sum(col("cnt")).as("cnt")))(
+        _.collect())
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
       .sortBy(r => (r._1, r._2))
     val total = counts.map(_._3).sum
     if (total == 0) return Some(0.0)

@@ -4,6 +4,7 @@ import graft.{QueryGroup, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** SURVEY §2.K (part 1) — deduplication + similarity search, the
   * training-data-pipeline operators. Exact methods (hash-group, shingle
@@ -1153,11 +1154,10 @@ object Dedup extends QueryGroup {
     *   getLong would otherwise unbox null to 0 and silently attach the
     *   edge to node 0, merging unrelated components); isolated nodes
     *   self-label regardless.
-    * @note NOT safe for concurrent calls on one SparkSession: the bounded
-    *   probe temporarily sets spark.sql.limit.initialNumPartitions
-    *   session-wide (restored in a finally). The single-threaded
-    *   bench/verify drivers are fine; a shared-session service should
-    *   scope calls via spark.newSession.
+    * @note the bounded probe runs in a child of the nodes' session
+    *   ([[graft.Checkpoints.inChild]]) with spark.sql.limit.initialNumPartitions
+    *   raised; the caller's session conf is never touched, so concurrent
+    *   calls on one session are safe.
     * @param nodesComplete caller's guarantee that `nodes` is DISTINCT and
     *   covers every edge endpoint (true for dedup_cluster: doc_id is the
     *   documents primary key and both endpoints of every jaccard pair are
@@ -1183,19 +1183,13 @@ object Dedup extends QueryGroup {
       //     spark.sql.limit.initialNumPartitions=1 runs incremental
       //     executeTake batches (1 partition, then 4×, …) — several
       //     sequential final-stage jobs.
-      // Raising initialNumPartitions for just this probe makes the take
-      // one job over all partitions, reusing the one pipeline execution.
-      val key = "spark.sql.limit.initialNumPartitions"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "4096")
-      val rows = try {
-        p.select(col("u").cast("long"), col("v").cast("long"))
-          .limit(LocalEdgeCap + 1).collect()
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None => spark.conf.unset(key)
-        }
+      // Raising initialNumPartitions for just this probe, in a child of
+      // the caller's session, makes the take one job over all
+      // partitions, reusing the one pipeline execution.
+      val rows = graft.Checkpoints.inChild(spark,
+          Map(SQLConf.LIMIT_INITIAL_NUM_PARTITIONS.key -> "4096")) { in =>
+        in(p.select(col("u").cast("long"), col("v").cast("long"))
+          .limit(LocalEdgeCap + 1)).collect()
       }
       if (rows.length <= LocalEdgeCap)
         Some(rows.map(r => (r.getLong(0), r.getLong(1)))) else None

@@ -392,19 +392,18 @@ object Streams {
     *
     *  1. the high-water check: a `batchId` at or below the mark skips
     *     without touching data;
-    *  2. FRONT OVERLAP (§2.6, round 22) under ONE AQE-off window (a
-    *     per-thunk conf flip would race the other branches' planning):
-    *     the id-hygiene probe beside the store's batch-bounded front
-    *     work. On a bad batch that work is wasted and released; the
-    *     error still precedes every write;
+    *  2. FRONT OVERLAP (§2.6, round 22): the id-hygiene probe beside
+    *     the store's batch-bounded front work, every action
+    *     [[graft.Checkpoints.bounded]]. On a bad batch that work is
+    *     wasted and released; the error still precedes every write;
     *  3. the store's candidate pairs, eager-checkpointed — they feed
     *     the components and the stats row;
     *  4. the shared D6 keep rule ([[dedupKeepParts]]), then the store's
     *     keep decision (the semantic replay rule);
-    *  5. BACK OVERLAP under the store's AQE regime: the store lands the
-    *     survivors beside the `_dups` provenance sidecar (no dependency
-    *     between them once the keep relations are checkpointed);
-    *  6. ONE stats action ([[statCounts]], AQE off: every input is
+    *  5. BACK OVERLAP: the store lands the survivors beside the
+    *     bounded `_dups` provenance sidecar write (no dependency between
+    *     them once the keep relations are checkpointed);
+    *  6. ONE bounded stats action ([[statCounts]]: every input is
     *     batch-bounded or the written increment), then the store's
     *     after-landing step and its last `_stats` column;
     *  7. the `_stats` row, then the `_commits/<batchId>` marker LAST.
@@ -434,17 +433,14 @@ object Streams {
       // ONE global-aggregate job — min(struct) names a deterministic
       // offender. Checked against the COMMITTED corpus: a semantic
       // crash retry finds its batch in the index, not the corpus.
-      val front = graft.Checkpoints.withAqeOff(spark) {
-        inParallel((() => corpusIds
-            .join(broadcast(bIds), Seq("doc_id"), "left_semi")
-            .select(col("doc_id"), lit("already in the corpus").as("kind"))
-            .unionByName(b.groupBy("doc_id").agg(count(lit(1)).as("c"))
-              .filter(col("c") > 1)
-              .select(col("doc_id"),
-                lit("repeated within the batch").as("kind")))
-            .agg(min(struct(col("doc_id"), col("kind"))).as("w"))
-            .head()) +: store.front(b, s))
-      }
+      val front = inParallel((() => graft.Checkpoints.bounded(corpusIds
+          .join(broadcast(bIds), Seq("doc_id"), "left_semi")
+          .select(col("doc_id"), lit("already in the corpus").as("kind"))
+          .unionByName(b.groupBy("doc_id").agg(count(lit(1)).as("c"))
+            .filter(col("c") > 1)
+            .select(col("doc_id"), lit("repeated within the batch").as("kind")))
+          .agg(min(struct(col("doc_id"), col("kind"))).as("w")))(_.head())) +:
+        store.front(b, s))
       val bad = front.head.asInstanceOf[org.apache.spark.sql.Row]
       if (!bad.isNullAt(0)) {
         val r = bad.getStruct(0)
@@ -456,27 +452,24 @@ object Streams {
       val (keepDerived, comp, compCorpus) =
         dedupKeepParts(bIds, corpusIds, pairs, s)
       val keep = store.keep(bIds, keepDerived, s)
-      def back(): Unit = inParallel(Seq(
+      inParallel(Seq(
         // keep is checkpointed (no size stats for AQE) and batch-bounded:
         // broadcast it so the survivor projection never shuffles the batch
         () => store.land(b.join(broadcast(keep), Seq("doc_id"), "left_semi"),
           batchId),
         // dedup PROVENANCE (round 19): every dropped batch doc mapped to
         // the landed/kept document it duplicated; component-sized work,
-        // no corpus scan; coalesce(1) keeps the sidecar a single file
-        () => dupAttribution(bIds, compCorpus, keep, comp)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$t/_dups/inc=$batchId")))
-      if (store.backAqeOff) graft.Checkpoints.withAqeOff(spark)(back()) else back()
+        // no corpus scan; coalesce(1) keeps the sidecar a single file, so
+        // adaptive file sizing has nothing to size
+        () => graft.Checkpoints.bounded(dupAttribution(bIds, compCorpus, keep, comp)
+          .coalesce(1))(_.write.mode("overwrite").parquet(s"$t/_dups/inc=$batchId"))))
       // counts from the WRITTEN increment (store ≡ docs even across a
       // crash retry); the kept count also gates the store's final step
       val landed = store.landed(batchId)
-      val Seq(nBatch, n, nCorpusDup, nPairs) = graft.Checkpoints.withAqeOff(spark) {
-        statCounts(Seq(b, landed,
-          comp.join(bIds.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-            .join(compCorpus.select(col("component")), Seq("component"), "left_semi"),
-          pairs))
-      }
+      val Seq(nBatch, n, nCorpusDup, nPairs) = statCounts(Seq(b, landed,
+        comp.join(bIds.select(col("doc_id").as("id")), Seq("id"), "left_semi")
+          .join(compCorpus.select(col("component")), Seq("component"), "left_semi"),
+        pairs))
       val last = store.finish(landed, n, batchId)
       spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(batchId,
           nBatch, n, nCorpusDup, nBatch - n - nCorpusDup, nPairs, last)),
@@ -492,16 +485,16 @@ object Streams {
   /** What one ingest sink does differently inside [[applyIngestBatch]].
     * A fresh value per call: the transaction calls the hooks in
     * declaration order, and they may keep per-batch state for the later
-    * ones. The AQE
-    * regime of the back overlap (`backAqeOff`) and the last `_stats`
-    * column (`statField`) are constants of the store. */
+    * ones. The last `_stats` column (`statField`) is a constant of the
+    * store. */
   private abstract class IngestStore(val targetDir: String, val sink: String,
       val label: String, val seedCall: String, val payload: String,
-      val statField: StructField, val backAqeOff: Boolean) {
+      val statField: StructField) {
     /** Driver-side setup after the high-water check; the corpus (doc_id, …). */
     def open(b: DataFrame, batchId: Long): DataFrame
-    /** Front-overlap work beside the id-hygiene probe (AQE off); its
-      * checkpoints pin in the transaction's scope `s`. */
+    /** Batch-bounded front-overlap work beside the id-hygiene probe,
+      * its actions [[graft.Checkpoints.bounded]]; its checkpoints pin in
+      * the transaction's scope `s`. */
     def front(b: DataFrame, s: graft.Checkpoints.Scope): Seq[() => Unit]
     /** Batch-touching candidate pairs (id_a, id_b). */
     def pairs(b: DataFrame): DataFrame
@@ -526,19 +519,19 @@ object Streams {
     * overlap (the transaction's only text explode — the pair kernel
     * reads them on both bucket-join sides, plus the df probe); corpus
     * shingles and df partials come from the materialized stores, so
-    * history text is never decoded. The back overlap keeps AQE ON: the
+    * history text is never decoded. Its landing writes run adaptive: the
     * shingle/df store writes shuffle, and adaptive coalescing sizes
     * their files. */
   private final class LexicalStore(spark: SparkSession, targetDir: String,
       threshold: Double = 0.2) extends IngestStore(targetDir, "applyDedupBatch",
-        "dedup corpus", "initDedupCorpus", "text", lexStatField,
-        backAqeOff = false) {
+        "dedup corpus", "initDedupCorpus", "text", lexStatField) {
     private var shB: DataFrame = _
     private var hot: Seq[Long] = Nil
     def open(b: DataFrame, batchId: Long): DataFrame =
       readDedupCorpus(spark, targetDir)
     def front(b: DataFrame, s: graft.Checkpoints.Scope): Seq[() => Unit] =
-      Seq(() => shB = s.pin(graft.queries.Dedup.hashedShinglePlan(spark, b)))
+      Seq(() => shB = graft.Checkpoints.bounded(
+        graft.queries.Dedup.hashedShinglePlan(spark, b))(s.pin))
     def pairs(b: DataFrame): DataFrame = {
       // hot-shingle probe from MERGED df partials: per-increment counts
       // plus the batch's own sum to exactly the df of a full recount,
@@ -602,9 +595,9 @@ object Streams {
   private def dupAttribution(bIds: DataFrame, compCorpus: DataFrame,
       keep: DataFrame, comp: DataFrame): DataFrame = {
     // every relation here is batch-graph-bounded and checkpointed — no
-    // broadcast hints: under the semantic store's AQE-off back overlap
-    // the shuffle joins fold into ONE job (a hint would add a collect
-    // job per side instead)
+    // broadcast hints: the sidecar write runs bounded, where the shuffle
+    // joins fold into ONE job (a hint would add a collect job per side
+    // instead)
     val canon = compCorpus.select(col("id"), col("component"))
       .unionByName(comp.join(keep.select(col("doc_id").as("id")),
         Seq("id"), "left_semi"))
@@ -621,14 +614,15 @@ object Streams {
     * identical; the fold replaces one job dispatch (plus AQE stage
     * jobs) PER relation with one execution for the lot. Used for the
     * sinks' per-batch stats rows, at ONE serial call site in
-    * [[applyIngestBatch]], after the back overlap has joined; that site
-    * wraps it in `Checkpoints.withAqeOff` (every input is batch-bounded
-    * or the written increment — one job). */
+    * [[applyIngestBatch]], after the back overlap has joined. The action
+    * runs [[graft.Checkpoints.bounded]]: every input is batch-bounded or
+    * the written increment — one job. */
   private def statCounts(dfs: Seq[DataFrame]): Seq[Long] = {
     val tagged = dfs.zipWithIndex.map { case (df, i) =>
       df.agg(count(lit(1)).as("v")).select(lit(i).as("i"), col("v"))
     }.reduce(_ unionByName _)
-    val byI = tagged.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val byI = graft.Checkpoints.bounded(tagged)(_.collect())
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
     dfs.indices.map(i => byI(i))
   }
 
@@ -642,9 +636,6 @@ object Streams {
     * cluster scale the second branch additionally back-fills executors
     * idled by the first's task tail). Rules at the call sites:
     *
-    *  - branches must not flip session conf (AQE) while another branch
-    *    may be PLANNING — either every branch runs under the same
-    *    outer `withAqeOff`, or all branches leave AQE on;
     *  - FRESH threads per call (not a pool): SparkContext's
     *    local properties (job description/group — the probe and UI
     *    attribution) are an InheritableThreadLocal, inherited at
@@ -934,16 +925,15 @@ object Streams {
   /** The semantic store. Front overlap: the replay homes probe and the
     * ONE batch×centroid assignment checkpoint of the transaction (the
     * pair stage consumes it twice, the probed-cell list collects it, the
-    * fresh path's survivor homes are its crnk = 1 rows). The back
-    * overlap runs AQE OFF: the layout write is EXCHANGE-FREE (both its
+    * fresh path's survivor homes are its crnk = 1 rows). Its landing
+    * write runs bounded: the layout write is EXCHANGE-FREE (both its
     * joins broadcast, partitionBy sorts within tasks), so adaptive
     * coalescing has nothing to coalesce. After the counts, the index
     * append (or the drift refit) runs serially. */
   private final class SemanticStore(spark: SparkSession, targetDir: String,
       threshold: Double = 0.4, nprobe: Int = 16) extends IngestStore(targetDir,
         "applySemanticDedupBatch", "semantic dedup corpus",
-        "initSemanticDedupCorpus", "embedding", semStatField,
-        backAqeOff = true) {
+        "initSemanticDedupCorpus", "embedding", semStatField) {
     import graft.functions.Pq
     private val indexDir = s"$targetDir/_index"
     private var docSchema: StructType = _
@@ -984,15 +974,15 @@ object Streams {
       // streams, batch ids broadcast, ONE count job — the no-replay hot
       // path must scan every homes partition to find nothing either way
       () => indexHasBatch = indexHasBatch ||
-        idx.homes.select("vec_id")
+        graft.Checkpoints.bounded(idx.homes.select("vec_id")
           .join(broadcast(b.select(col("doc_id").as("vec_id"))),
             Seq("vec_id"), "left_semi")
-          .agg(count(lit(1))).head().getLong(0) > 0,
-      () => assigned = s.pin(graft.functions.Ivf.assignments(
+          .agg(count(lit(1))))(_.head()).getLong(0) > 0,
+      () => assigned = graft.Checkpoints.bounded(graft.functions.Ivf.assignments(
         b.select(col("doc_id").as("vec_id"),
           transform(col("embedding"), _.cast("double")).as("v")),
         idx.model.cents, nprobe,
-        (a, b2) => call_function("vec_sqdist", a, b2))))
+        (a, b2) => call_function("vec_sqdist", a, b2)))(s.pin))
 
     def pairs(b: DataFrame): DataFrame =
       semanticBatchPairs(spark, idx,
@@ -1016,18 +1006,16 @@ object Streams {
         bIds.join(idx.homes.select(col("vec_id").as("doc_id")),
           Seq("doc_id"), "left_semi")
       } else {
-        survHomes = graft.Checkpoints.withAqeOff(spark) {
-          s.pin(assigned.filter(col("crnk") === 1)
-            .select(col("vec_id"), col("c_id"))
-            .join(broadcast(derived.select(col("doc_id").as("vec_id"))),
-              Seq("vec_id"), "left_semi"))
-        }
+        survHomes = graft.Checkpoints.bounded(assigned.filter(col("crnk") === 1)
+          .select(col("vec_id"), col("c_id"))
+          .join(broadcast(derived.select(col("doc_id").as("vec_id"))),
+            Seq("vec_id"), "left_semi"))(s.pin)
         derived
       }
 
     def land(survivors: DataFrame, batchId: Long): Unit =
-      writeSemanticDocs(survivors, survHomes, liveIg,
-        s"$targetDir/inc=$batchId", broadcastHomes = true)
+      graft.Checkpoints.bounded(spark)(in => writeSemanticDocs(in(survivors),
+        in(survHomes), liveIg, s"$targetDir/inc=$batchId", broadcastHomes = true))
 
     def landed(batchId: Long): DataFrame = spark.read.schema(docSchema)
       .parquet(s"$targetDir/inc=$batchId").select("doc_id", "embedding")
@@ -1194,11 +1182,9 @@ object Streams {
         (a, b) => call_function("vec_sqdist", a, b)))
     // the batch's probed-cell list — bounded by the centroid count
     // (≤ c driver rows), the partition-prune key for the corpus-side
-    // vector lookup below; batch-bounded action, AQE off
-    val cells = graft.Checkpoints.withAqeOff(spark) {
-      assigned.select("c_id").distinct()
-        .collect().map(_.getLong(0)).toSeq
-    }
+    // vector lookup below; a batch-bounded action
+    val cells = graft.Checkpoints.bounded(assigned.select("c_id").distinct())(_.collect())
+      .map(_.getLong(0)).toSeq
     val batchHomes = assigned.filter(col("crnk") === 1)
       .select(col("vec_id"), col("c_id"))
     val allHomes = idx.homes.select("vec_id", "c_id").unionByName(batchHomes)
@@ -1373,12 +1359,13 @@ object Streams {
       .unionByName(pairs.select(col("id_a").as("id")))
       .unionByName(pairs.select(col("id_b").as("id")))
       .distinct()
-    // batch-graph-bounded materializations: AQE off for the checkpoint
-    // actions (one job each instead of 2–4 stage jobs; the compCorpus
+    // batch-graph-bounded materializations: the checkpoint actions run
+    // bounded (one job each instead of 2–4 stage jobs; the compCorpus
     // plan's corpus side is a single column-pruned id scan whose join
-    // is batch-bounded)
-    val comp = graft.Checkpoints.withAqeOff(spark) {
-      s.pin(graft.queries.Dedup.connectedComponents(nodes, pairs,
+    // is batch-bounded). The components call runs whole in the bounded
+    // child, so its edge probe plans non-adaptive too
+    val comp = graft.Checkpoints.bounded(spark) { in =>
+      s.pin(graft.queries.Dedup.connectedComponents(in(nodes), in(pairs),
         nodesComplete = true))
     }
     // corpus ids are UNIQUE (the sinks' id-hygiene invariant), so the
@@ -1386,21 +1373,16 @@ object Streams {
     // the semi-join's rows — with the corpus id scan STREAMING through
     // a broadcast hash join instead of being shuffled (the semi form
     // could only broadcast its corpus side)
-    val compCorpus = graft.Checkpoints.withAqeOff(spark) {
-      s.pin(corpusIds.select(col("doc_id").as("id"))
-        .join(broadcast(comp), "id")
-        .select(col("id"), col("component")))
-    }
+    val compCorpus = graft.Checkpoints.bounded(corpusIds.select(col("doc_id").as("id"))
+      .join(broadcast(comp), "id")
+      .select(col("id"), col("component")))(s.pin)
     // anti-join right sides need no distinct (multiplicity is ignored);
-    // under withAqeOff the bounded shuffle joins fold into the
-    // checkpoint's one job
-    val keep = graft.Checkpoints.withAqeOff(spark) {
-      s.pin(comp
-        .join(bIds.select(col("doc_id").as("id")), Seq("id"), "left_semi")
-        .join(compCorpus.select(col("component")), Seq("component"), "left_anti")
-        .groupBy("component").agg(min(col("id")).as("doc_id"))
-        .select("doc_id"))
-    }
+    // run bounded, the shuffle joins fold into the checkpoint's one job
+    val keep = graft.Checkpoints.bounded(comp
+      .join(bIds.select(col("doc_id").as("id")), Seq("id"), "left_semi")
+      .join(compCorpus.select(col("component")), Seq("component"), "left_anti")
+      .groupBy("component").agg(min(col("id")).as("doc_id"))
+      .select("doc_id"))(s.pin)
     (keep, comp, compCorpus)
   }
 

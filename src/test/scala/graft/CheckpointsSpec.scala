@@ -1,11 +1,13 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 /** The checkpoint scope every iterative call runs in
   * ([[Checkpoints.scoped]]): what a call leaves persisted on each exit
-  * path, and when a round's pins are freed. */
+  * path, and when a round's pins are freed; and the non-adaptive child
+  * a bounded plan runs in ([[Checkpoints.bounded]]). */
 class CheckpointsSpec extends SparkSuite {
 
   private def rows(n: Int): DataFrame = spark.range(n).toDF("id")
@@ -81,5 +83,45 @@ class CheckpointsSpec extends SparkSuite {
     assert(total == 1L + 2 + 3 + 4, "the stop signal of round 4 must end the rounds")
     assert(seen.forall(_.isEmpty), s"a landed round's scratch pin outlived it: $seen")
     assert(persistedIds == before)
+  }
+
+  private def agg(df: DataFrame): DataFrame = df.groupBy((col("id") % 3).as("k")).count()
+  private def adaptive(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec]
+
+  test("a bounded aggregate runs non-adaptive while a plan built meanwhile on the caller's session is adaptive") {
+    var meanwhile: Option[Boolean] = None
+    val (bounded, n) = Checkpoints.bounded(agg(rows(30))) { d =>
+      val t = new Thread(() => meanwhile = Some(adaptive(agg(rows(30)))))
+      t.start(); t.join()
+      (adaptive(d), d.collect().length)
+    }
+    assert(!bounded, "the bounded aggregate planned adaptive")
+    assert(n == 3)
+    assert(meanwhile.contains(true), s"the caller's concurrent plan was adaptive: $meanwhile")
+  }
+
+  test("a bounded checkpoint follows the caller's current conf") {
+    val key = "spark.sql.shuffle.partitions"
+    val was = spark.conf.get(key)
+    def parts(s: Checkpoints.Scope) =
+      Checkpoints.checkpointRdds(Checkpoints.bounded(agg(rows(30)))(s.pin)).map(_.getNumPartitions)
+    Checkpoints.scoped { s =>
+      assert(parts(s) == Seq(was.toInt))
+      spark.conf.set(key, "3")
+      try assert(parts(s) == Seq(3), "the child kept a stale copy of the caller's conf")
+      finally spark.conf.set(key, was)
+      assert(parts(s) == Seq(was.toInt))
+    }
+  }
+
+  test("a bounded checkpoint is rooted in the caller's session, where a join on it plans adaptive") {
+    Checkpoints.scoped { s =>
+      val c = Checkpoints.bounded(agg(rows(30)))(s.pin)
+      assert(c.sparkSession eq spark, "the checkpoint is rooted in the child session")
+      val j = c.join(agg(rows(12)).withColumnRenamed("count", "n"), "k")
+      assert(adaptive(j), "a join on the checkpoint planned non-adaptive")
+      assert(j.collect().length == 3)
+    }
   }
 }

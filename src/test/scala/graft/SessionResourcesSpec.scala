@@ -39,10 +39,13 @@ class SessionResourcesSpec extends SparkSuite {
     ix.homes.count(); ix.codes.count()
     Tables.warm(s2, sf001, Seq("region" -> None))
     functions.Pq.readIndex(s2, store)
+    // the local route's edge probe runs in a child session
+    queries.Dedup.connectedComponents((1L to 4L).toDF("id"),
+      Seq((1L, 2L)).toDF("id_a", "id_b")).collect()
 
     assert(SessionResources.held(s2).keySet == Set("ap.lastRun", "dedup.lastComponents",
       "dedup.lastPagerank", "ann.lastIndex", "pq.index", "tables.load",
-      "tables.warmed", "pq.loadedModel"))
+      "tables.warmed", "pq.loadedModel", "checkpoints.children"))
     val added = sc.getPersistentRDDs.keySet -- before
     assert(added.nonEmpty, "the calls persisted nothing to release")
 
@@ -89,5 +92,20 @@ class SessionResourcesSpec extends SparkSuite {
       finally files.close()
     assert(offenders.isEmpty,
       s"per-module session maps belong in SessionResources slots: $offenders")
+  }
+
+  test("src/main/scala has no withAqeOff and sets session conf only in Checkpoints, Tables and Bench") {
+    // Checkpoints syncs its child sessions; Tables sets the events read's
+    // parquet type conf; Bench is the harness
+    val files = Files.walk(Paths.get("src/main/scala"))
+    val sources =
+      try files.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.getFileName.toString -> Files.readString(p)).toList
+      finally files.close()
+    assert(sources.size > 20, "the scan found no sources")
+    assert(sources.filter(_._2.contains("withAqeOff")).isEmpty)
+    val setters = sources.filter(f => """conf\.(set|unset)\b""".r.findFirstIn(f._2).isDefined)
+    assert(setters.map(_._1).toSet == Set("Checkpoints.scala", "Tables.scala", "Bench.scala"),
+      s"session conf changes belong in a child session (Checkpoints.inChild): ${setters.map(_._1)}")
   }
 }

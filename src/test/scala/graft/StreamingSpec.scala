@@ -905,7 +905,8 @@ class StreamingSpec extends SparkSuite {
       docs.filter(col("doc_id") % 4 === 1), one.unionByName(one),
       Streams.applyDedupBatch(_, _, _))
     info(s"lexical batch: kept $n, (SQL executions, jobs) = $cost")
-    assert(cost == ((14, 35)), s"lexical per-batch budget moved: $cost")
+    // the `_dups` sidecar write runs bounded: five jobs fewer than adaptive
+    assert(cost == ((14, 30)), s"lexical per-batch budget moved: $cost")
   }
 
   test("semantic sink: a committed batch runs a fixed action budget; every exit path releases its checkpoints") {
