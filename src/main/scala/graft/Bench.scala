@@ -162,15 +162,14 @@ object Bench {
       cycles += 1
     }
 
-    // Distributed-regime AP row (round-7 VERDICT #1): the ONE headline
-    // row that routes through runLoop — full converged loop on the
+    // AP run() row: the full converged loop on the
     // 200-vec prefix (46 iters at λ=0.5 under the EXACT per-iteration
     // convergence counter; the round-9 "37 iters" was the aliasing
     // cadence-sampled counter firing 9 iterations early — BENCH_NOTES
-    // §16). At 40 k message rows the loop is one partition, stepped
-    // in-process on the driver, so the cost is the solve's fixed
-    // overhead — similarity plan, preference, init checkpoint and
-    // collect — which is exactly the signal. Measured OUTSIDE the round-robin,
+    // §16). At 40 k message rows the loop is one partition, so run()
+    // solves from one bounded collect of the vectors, stepped
+    // in-process on the driver: the cost is that collect plus the
+    // iterations. Measured OUTSIDE the round-robin,
     // where multi-second reps would starve every other query's window
     // sampling. Three reps per pass (min-of-6 across
     // the two widths — round-10 VERDICT #8's min-of-N discipline for

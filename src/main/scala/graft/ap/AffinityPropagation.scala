@@ -17,9 +17,14 @@ import org.apache.spark.sql.functions._
   *     `ap_responsibility` / `ap_availability` oracle keys check;
   *   - every solve iterates [[MessageBlocks]]' one kernel over
   *     primitive blocks. Under one task's worth of data — [[solve]]'s
-  *     and [[solveFromSimilarities]]' local regimes, and a loop
-  *     ([[runLoop]]) of one partition — the rows are one block, stepped
-  *     in place on the driver ([[inProcess]]). A larger relation is laid
+  *     and [[solveFromSimilarities]]' local regimes, a dense [[run]] of
+  *     one loop partition, and a loop ([[runLoop]]) of one partition —
+  *     the rows are one block, stepped in place on the driver
+  *     ([[inProcess]]). The three embedding entries ([[solve]],
+  *     [[runLocal]], [[run]]) feed it from one bounded collect of the
+  *     vectors, s computed on the driver ([[solveVectors]]); only
+  *     [[solveFromSimilarities]] and a sparse [[run]] collect
+  *     similarity rows. A larger relation is laid
   *     out by ONE Catalyst plan per
   *     solve into partition-resident blocks, with two block shuffles
   *     per iteration, the minimum the MapReduce formulation pays;
@@ -259,6 +264,29 @@ object AffinityPropagation {
     * distributed loop. */
   val localThreshold = 4000
 
+  /** The loop's width for `rows` message rows on a master of `dp`
+    * default parallelism: `fixed` (the `spark.graft.ap.loopPartitions`
+    * setting) when set; else one partition while the rows are under one
+    * task's worth of data (16 MiB at 48 B/row, about dense N ≤ 591);
+    * else the task count capped at dp, then floored at min(8, dp) and at
+    * 2 — never 1 above one task's worth, even on a one-core master. */
+  private[graft] def loopWidth(rows: Long, dp: Int, fixed: Option[Int]): Int =
+    fixed.getOrElse {
+      val tasks = rows * 48L / (16L << 20) + 1
+      if (tasks <= 1) 1 else math.max(2, math.max(math.min(8, dp), math.min(dp.toLong, tasks).toInt))
+    }
+
+  /** The largest point count whose dense N² message rows [[loopWidth]]
+    * runs as one partition: None when every count does (`fixed` = 1),
+    * 0 when none does (`fixed` above 1). */
+  private def onePartitionNodes(dp: Int, fixed: Option[Int]): Option[Int] = fixed match {
+    case Some(p) => if (p == 1) None else Some(0)
+    case None => Some(Iterator.from(1).indexWhere(n => loopWidth(n.toLong * n, dp, None) > 1))
+  }
+
+  private def widthOverride(spark: SparkSession): Option[Int] =
+    spark.conf.getOption("spark.graft.ap.loopPartitions").map(_.toInt)
+
   /** Message-row ceiling for the batched convergence-check cadence
     * (checkEvery auto mode): below it, holding 6 generations during a
     * chunk job is cheap and the saved job dispatch dominates; above it
@@ -281,15 +309,12 @@ object AffinityPropagation {
       convergenceIter: Int = 15,
       prefOverride: Option[Double] = None,
       autoRelease: Boolean = true,
-      jitter: Double = 0.0): Result = {
-    val probe = vectors(embeddings).limit(localThreshold + 1).collect()
-    if (probe.length <= localThreshold)
-      solveVectors(probe.map(_.getLong(0)), probe.map(_.getSeq[Double](1).toArray),
-        damping, maxIter, convergenceIter, prefOverride, jitter)
-    else
+      jitter: Double = 0.0): Result =
+    vectorsUpTo(embeddings, Some(localThreshold)).fold(
       run(spark, embeddings, damping, maxIter, convergenceIter,
-        prefOverride, autoRelease = autoRelease, jitter = jitter)
-  }
+        prefOverride, autoRelease = autoRelease, jitter = jitter)) { case (ids, xs) =>
+      solveVectors(ids, xs, damping, maxIter, convergenceIter, prefOverride, jitter)
+    }
 
   /** Small-N path at any N: collect the (id, vector) rows (N×d) and
     * solve in-process ([[solveVectors]]). */
@@ -301,14 +326,26 @@ object AffinityPropagation {
       convergenceIter: Int = 15,
       prefOverride: Option[Double] = None,
       jitter: Double = 0.0): Result = {
-    val rows = vectors(embeddings).collect()
-    solveVectors(rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray),
-      damping, maxIter, convergenceIter, prefOverride, jitter)
+    val (ids, xs) = vectorsUpTo(embeddings, None).get
+    solveVectors(ids, xs, damping, maxIter, convergenceIter, prefOverride, jitter)
   }
 
-  private def vectors(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+  /** The local feeder of [[solve]], [[runLocal]] and [[run]]: the (id,
+    * vector) rows in id order from ONE collect — of at most `cap` + 1
+    * rows when capped — or None when there are more than `cap`. A null
+    * embedding fails loud, naming its vec_id. */
+  private def vectorsUpTo(embeddings: DataFrame,
+      cap: Option[Int]): Option[(Array[Long], Array[Array[Double]])] = {
+    val v = embeddings.select(col("vec_id").cast("long"),
+        transform(col("embedding"), _.cast("double")).as("v"))
       .orderBy("vec_id")
+    val rows = cap.fold(v)(c => v.limit(c + 1)).collect()
+    if (cap.exists(rows.length > _)) None
+    else Some((rows.map(_.getLong(0)), rows.map { r =>
+      require(!r.isNullAt(1), s"AffinityPropagation: null embedding for vec_id ${r.getLong(0)}")
+      r.getSeq[Double](1).toArray
+    }))
+  }
 
   /** The in-process solve over (id, vector) rows, with no Spark: s(i, k)
     * = −‖x_i − x_k‖² by `vec_sqdist`'s left fold (the value
@@ -353,13 +390,20 @@ object AffinityPropagation {
           "calling thread — the Result deliberately does not capture the " +
           "session that ran the solve (weak-registry discipline)"))
 
-  /** Full damped loop ([[runLoop]]): in-process on the driver when the
-    * message relation fits one loop partition, else a checkpointed chain
-    * of partition-resident generations. Stops when the exemplar
-    * indicator set is unchanged for `convergenceIter` consecutive
-    * iterations (and non-empty), or at `maxIter`. `checkEvery` is the
-    * chain's convergence-check cadence (0 = auto); the in-process loop
-    * checks every iteration without a job. */
+  /** Full damped loop: in-process on the driver when the message
+    * relation fits one loop partition, else a checkpointed chain of
+    * partition-resident generations ([[runLoop]]). Dense (`neighbors =
+    * None`), the width is decided before any Dataset is built: when N²
+    * rows would run as one loop partition ([[onePartitionNodes]]: N ≤ 591
+    * by the size rule, any N under `spark.graft.ap.loopPartitions=1`),
+    * one bounded collect of the vectors feeds [[solveVectors]] — no
+    * similarity plan, no init checkpoint, no N²-row collect; a larger N
+    * (the collect then holds cap + 1 rows and is dropped) and a width
+    * override above 1 take [[runLoop]]. Sparse inputs always take
+    * [[runLoop]]. Stops when the exemplar indicator set is unchanged for
+    * `convergenceIter` consecutive iterations (and non-empty), or at
+    * `maxIter`. `checkEvery` is the chain's convergence-check cadence (0
+    * = auto); the in-process loop checks every iteration without a job. */
   def run(
       spark: SparkSession,
       embeddings: DataFrame,
@@ -372,27 +416,37 @@ object AffinityPropagation {
       autoRelease: Boolean = true,
       checkEvery: Int = 0,
       jitter: Double = 0.0): Result = {
-    val offd = neighbors match {
-      case Some(m) if knnExact => sparseSimilaritiesExact(embeddings, m)
-      case Some(m) => sparseSimilarities(embeddings, m)
-      case None => similarities(embeddings)
+    val ss = embeddings.sparkSession
+    val cap = onePartitionNodes(ss.sparkContext.defaultParallelism, widthOverride(ss))
+    val local =
+      if (neighbors.nonEmpty || cap.contains(0)) None
+      else { lastRun.release(ss); vectorsUpTo(embeddings, cap) }
+    local match {
+      case Some((ids, xs)) =>
+        solveVectors(ids, xs, damping, maxIter, convergenceIter, prefOverride, jitter)
+      case None =>
+        val offd = neighbors match {
+          case Some(m) if knnExact => sparseSimilaritiesExact(embeddings, m)
+          case Some(m) => sparseSimilarities(embeddings, m)
+          case None => similarities(embeddings)
+        }
+        // The preference must estimate the median of ALL pairwise
+        // similarities even on the sparse path — the median of only the kept
+        // top-m pairs is far too high and the loop never settles (measured:
+        // kept-median never converges in 200 iters; dense-median converges in
+        // ~52 with the same exemplar count as dense AP). At scale the dense
+        // median is estimated from a bounded pseudo-random sample: TakeOrdered
+        // by xxhash64(vec_id) — an unbiased deterministic pick (the round-1
+        // orderBy(vec_id) prefix was a biased sample), O(N) heap scan, and
+        // the 1000² pair block it feeds stays bounded regardless of N. The
+        // dense default is the median of the init's own off-diagonal rows,
+        // resolved after the init lands, so the similarity plan runs once.
+        val pref = prefOverride.orElse(neighbors.map(_ => preference(similarities(
+          embeddings.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(1000)))))
+        val diag = pending(embeddings.select(col("vec_id").as("i")))
+        runLoop(offd.select("i", "k", "s").unionByName(diag),
+          pref, jitter, damping, maxIter, convergenceIter, autoRelease, checkEvery)
     }
-    // The preference must estimate the median of ALL pairwise
-    // similarities even on the sparse path — the median of only the kept
-    // top-m pairs is far too high and the loop never settles (measured:
-    // kept-median never converges in 200 iters; dense-median converges in
-    // ~52 with the same exemplar count as dense AP). At scale the dense
-    // median is estimated from a bounded pseudo-random sample: TakeOrdered
-    // by xxhash64(vec_id) — an unbiased deterministic pick (the round-1
-    // orderBy(vec_id) prefix was a biased sample), O(N) heap scan, and
-    // the 1000² pair block it feeds stays bounded regardless of N. The
-    // dense default is the median of the init's own off-diagonal rows,
-    // resolved after the init lands, so the similarity plan runs once.
-    val pref = prefOverride.orElse(neighbors.map(_ => preference(similarities(
-      embeddings.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(1000)))))
-    val diag = pending(embeddings.select(col("vec_id").as("i")))
-    runLoop(offd.select("i", "k", "s").unionByName(diag),
-      pref, jitter, damping, maxIter, convergenceIter, autoRelease, checkEvery)
   }
 
   /** A (i, i, NULL) diagonal row per id: a diagonal pending the default
@@ -463,18 +517,19 @@ object AffinityPropagation {
     } finally all.unpersist(false)
   }
 
-  /** The damped iteration shared by [[run]] and [[solveFromSimilarities]]'s
+  /** The damped iteration shared by [[run]]'s similarity path (sparse,
+    * or dense past one loop partition) and [[solveFromSimilarities]]'
     * distributed regime. The init relation — its default-preference
     * diagonal still pending (NULL s) — is checkpointed and counted in
-    * one job, and the count picks the loop width:
+    * one job, and [[loopWidth]] picks the width from the count:
     *   - one partition while the relation is under one task's worth of
-    *     data (~16 MB at 48 B/row, about dense N ≤ 590): one more job
-    *     collects it, and [[inProcess]] resolves and solves it on the
-    *     driver — no further job, checkpoint or rollback;
-    *   - else data-sized, floored at min(8, cluster width) and capped at
-    *     the width: [[resolved]] fills the pending diagonal over the
-    *     checkpoint, [[MessageBlocks.layout]] plans the one Catalyst
-    *     layout per solve, and [[chain]] iterates
+    *     data: one more job collects it, and [[inProcess]] resolves and
+    *     solves it on the driver — no further job, checkpoint or
+    *     rollback (a dense [[run]] of that size never gets here: it
+    *     solves from the vectors);
+    *   - else data-sized, at least 2: [[resolved]] fills the pending
+    *     diagonal over the checkpoint, [[MessageBlocks.layout]] plans the
+    *     one Catalyst layout per solve, and [[chain]] iterates
     *     [[MessageBlocks.iterate]] over checkpointed `RDD[MsgBlock]`
     *     generations.
     * The setting `spark.graft.ap.loopPartitions` overrides the width
@@ -526,11 +581,7 @@ object AffinityPropagation {
       // solveFromSimilarities' sims cache) can be dropped NOW instead of
       // after the whole loop (round-9 ADVICE).
       onInitMaterialized()
-      val dp = sc.defaultParallelism
-      val sizeParts = math.min(dp, (msgRows * 48L / (16L << 20)).toInt + 1)
-      val parts = spark.conf.getOption("spark.graft.ap.loopPartitions")
-        .map(_.toInt)
-        .getOrElse(if (sizeParts <= 1) 1 else math.max(math.min(8, dp), sizeParts))
+      val parts = loopWidth(msgRows, sc.defaultParallelism, widthOverride(spark))
       // one partition: the collected triples leave the scope, which
       // frees the init before the in-process solve
       if (parts == 1) Left(MessageBlocks.collect(init))

@@ -103,17 +103,18 @@ object ApQueries extends QueryGroup {
       AffinityPropagation.assign(offd, ex, s).orderBy("i")
     }),
 
-    // FORCED-distributed damped loop (round-7 VERDICT #1): runLoop under
-    // the driver's hard per-round signal, not just the suite. run() never
-    // takes solve()'s local path, so every call routes through runLoop.
-    // The 200-vec prefix keeps the dense message relation at 40 k rows —
-    // one loop partition, so runLoop checkpoints the init with its
-    // diagonal pending, collects it once and solves it in-process — and
-    // converges in 46 iterations at the default λ=0.5. runLocal on the
-    // IDENTICAL input (similarities and preference computed on the
-    // driver, the same block kernel) must land on the same exemplar set —
-    // checked here so regime divergence fails loudly as a build error,
-    // not as a bare oracle hash mismatch.
+    // run() on the 200-vec prefix under the driver's hard per-round
+    // signal, not just the suite. Its dense message relation is 40 k rows
+    // — one loop partition — so run() takes the vector feeder solve() and
+    // runLocal() share: one bounded collect of the vectors, similarities
+    // and preference computed on the driver, the block kernel stepped
+    // in-process; no similarity plan or init checkpoint. It converges in
+    // 46 iterations at the default λ=0.5. A relation past one loop
+    // partition (or spark.graft.ap.loopPartitions above 1) would take the
+    // checkpointed chain, which ApSpec pins bit for bit against this
+    // path. runLocal on the IDENTICAL input must land on the same
+    // exemplar set — checked here so regime divergence fails loudly as a
+    // build error, not as a bare oracle hash mismatch.
     "ap_dist_exemplars" -> ((s, dir) => {
       import s.implicits._
       val emb200 = Tables.embeddings(s, dir).orderBy("vec_id").limit(200)
@@ -282,7 +283,7 @@ object ApQueries extends QueryGroup {
        "1788,1805,1810,1813,1824,1852,1856,1860,1868,1870,1874,1876,1883," +
        "1894,1902,1913,1920,1922,1932,1934,1935,1946,1958,1988,1991,1992"))
 
-  /** Converged exemplar sets of the FORCED-distributed run on each
+  /** Converged exemplar sets of run() on each
     * fixture's 200-vec prefix — the ap_dist_exemplars oracle literals.
     * Each equals the local regime's set on the same input (the query
     * asserts that every run). Regenerate from the ap_dist_exemplars

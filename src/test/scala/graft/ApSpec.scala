@@ -499,8 +499,8 @@ class ApSpec extends SparkSuite {
 
   test("the in-process loop: SQL executions and jobs do not grow with iterations") {
     // A relation under one task's worth of data runs on the driver: the
-    // init is materialized and collected once, and every iteration after
-    // it is in-process array code, so ten more iterations add no job.
+    // vectors are collected once, and every iteration after it is
+    // in-process array code, so ten more iterations add no job.
     val emb = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(100)
     def actions(iters: Int): (Int, Int) = actionsDuring {
       val r = AffinityPropagation.run(spark, emb, maxIter = iters,
@@ -524,6 +524,68 @@ class ApSpec extends SparkSuite {
     assert(held(spark, "ap.lastRun").isEmpty, "an in-process solve registered a last run")
     assert(res.messages.count() == 100L * 100L) // the final block is still readable
   }
+
+  test("a one-partition run solves from the vectors, bit-identical to the 4-partition chain") {
+    // Under one loop partition a dense run collects the vectors once and
+    // computes s on the driver; the chain plans the similarity join.
+    val emb200 = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(200)
+    val local = AffinityPropagation.run(spark, emb200)
+    val chain = atWidth(4)(AffinityPropagation.run(spark, emb200))
+    assert(local.pinned.isEmpty && chain.pinned.nonEmpty, "expected the two loop forms")
+    assert(local.converged && local.iterations == chain.iterations,
+      s"iterations ${local.iterations} vs ${chain.iterations}")
+    assert(local.trajectory == chain.trajectory, "trajectories differ")
+    assert(local.exemplars == chain.exemplars, "exemplars differ")
+    val (ml, mc) = (messageBits(local), messageBits(chain))
+    assert(ml.size == 200 * 200 && ml == mc, "messages differ from the chain's")
+  }
+
+  test("a one-partition run is one bounded collect at any maxIter") {
+    val emb200 = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(200)
+    def actions(iters: Int): (Int, Int) = actionsDuring {
+      val r = AffinityPropagation.run(spark, emb200, maxIter = iters,
+        convergenceIter = iters + 1)
+      assert(r.iterations == iters && r.pinned.isEmpty)
+    }
+    assert(actions(10) == ((1, 1)), "(SQL executions, jobs) at maxIter 10")
+    assert(actions(20) == ((1, 1)), "(SQL executions, jobs) at maxIter 20")
+  }
+
+  test("a chain run's last-run checkpoint is released when a one-partition run starts") {
+    val emb = Tables.embeddings(spark, sf001).orderBy("vec_id").limit(100)
+    val r1 = atWidth(4)(AffinityPropagation.run(spark, emb, maxIter = 3, convergenceIter = 4))
+    val pinned1 = lastRunIds(spark, "ap.lastRun").flatMap(spark.sparkContext.getPersistentRDDs.get)
+    assert(r1.pinned.nonEmpty && pinned1.nonEmpty)
+    val r2 = AffinityPropagation.run(spark, emb, maxIter = 3, convergenceIter = 4)
+    assert(r2.pinned.isEmpty)
+    assert(pinned1.forall(r => !r.getStorageLevel.useMemory && !r.getStorageLevel.useDisk),
+      "the chain's final checkpoint is still pinned after a one-partition run")
+    assert(held(spark, "ap.lastRun").isEmpty, "the one-partition run left a last run")
+  }
+
+  test("loop width: one partition up to one task's worth, 2 or more above it at any core count") {
+    val (under, over) = (591L * 591L, 592L * 592L)
+    for (dp <- Seq(1, 4, 16))
+      assert(AffinityPropagation.loopWidth(under, dp, None) == 1, s"591² rows at dp = $dp")
+    assert(Seq(1, 4, 16).map(AffinityPropagation.loopWidth(over, _, None)) == Seq(2, 4, 8))
+    assert(AffinityPropagation.loopWidth(4000L * 4000L, 1, None) == 2)
+    assert(AffinityPropagation.loopWidth(4000L * 4000L, 16, None) == 16)
+    for (rows <- Seq(under, over); dp <- Seq(1, 4, 16); fixed <- Seq(1, 3))
+      assert(AffinityPropagation.loopWidth(rows, dp, Some(fixed)) == fixed)
+  }
+
+  for (entry <- Seq("solve", "runLocal", "run"))
+    test(s"a null embedding fails loud in $entry, naming its vec_id") {
+      import spark.implicits._
+      val emb = Seq((1L, Some(Seq(0.5, 1.0))), (7L, None), (9L, Some(Seq(2.0, 0.0))))
+        .toDF("vec_id", "embedding")
+      val e = intercept[IllegalArgumentException](entry match {
+        case "solve" => AffinityPropagation.solve(spark, emb)
+        case "runLocal" => AffinityPropagation.runLocal(spark, emb)
+        case "run" => AffinityPropagation.run(spark, emb)
+      })
+      assert(e.getMessage.contains("null embedding for vec_id 7"), e.getMessage)
+    }
 
   test("trajectory: one exemplar count per iteration, equal at 1 and 4 loop partitions") {
     // the jittered two-clique fixture of the cadence rollback test, which

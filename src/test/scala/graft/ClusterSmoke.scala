@@ -38,11 +38,11 @@ object ClusterSmoke {
       //    df-capped jaccard kernel, two-regime components
       val clusters = SparkEntry.queries("dedup_cluster")(spark, sfDir).count()
       require(clusters > 0, "dedup_cluster returned no rows off-driver")
-      // 3. forced-distributed AP must agree with the local regime.
-      //    At the default width the 200-vec prefix is one loop
-      //    partition: its init relation is built and checkpointed on the
-      //    remote executors, collected once, and the block kernel steps
-      //    in-process on the driver. The prefix is the same fixture
+      // 3. run() must agree with the local regime. At the default
+      //    width the 200-vec prefix is one loop partition: its vectors
+      //    are read on the remote executors and collected once, and the
+      //    block kernel steps in-process on the driver. The prefix is
+      //    the same fixture
       //    ap_dist_exemplars pins (converges with a suite-checked
       //    diagonal margin; smaller prefixes have near-tie diagonals
       //    that legitimately flip on executor-order float jitter).
